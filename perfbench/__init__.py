@@ -1,0 +1,1 @@
+"""Seeded benchmark for the extraction engine; entry point: run.py."""
