@@ -27,6 +27,10 @@ def _table(spark, out_dir):
     }
 
 
+def _bucket_count(spark, out_dir, bucket):
+    return spark.read.parquet(f"{out_dir}/extracted/bucket={bucket}").count()
+
+
 def test_kill_and_resume_equals_single_run(spark, tmp_path):
     pages = generate_pages_df(spark, N, partitions=4)
 
@@ -344,29 +348,205 @@ def test_storage_smoke_scenario(spark, tmp_path, backend):
     assert checks["retention_deleted"] > 0
 
 
-def test_metrics_not_duplicated_across_metrics_manifest_crash(spark, tmp_path):
+METRICS_SCHEMA = (
+    "struct<partition_id:bigint,doc_count:bigint,input_bytes:bigint,"
+    "byte_range_start:bigint,byte_range_end:bigint,failure_count:bigint,"
+    "ocr_count:bigint,extraction_latency:double,run_id:string,"
+    "ts:timestamp,bucket:int>"
+)
+
+
+def _metrics_by_bucket(spark, out_dir):
+    """bucket → set of run_ids in the metrics table, after checking it
+    holds exactly one lineage row per (bucket, partition_id)."""
+    m = spark.read.parquet(f"{out_dir}/metrics")
+    assert m.schema.simpleString() == METRICS_SCHEMA
+    dupes = m.groupBy("bucket", "partition_id").count().filter("count > 1")
+    assert dupes.count() == 0
+    got: dict[int, set] = {}
+    for r in m.select("bucket", "run_id").collect():
+        got.setdefault(r["bucket"], set()).add(r["run_id"])
+    return got
+
+
+def test_metrics_not_duplicated_across_metrics_manifest_crash(
+    spark, tmp_path, monkeypatch
+):
     """r5 review batch 3: publish order is data -> metrics -> manifest;
     a crash between the last two leaves the bucket pending, so it re-runs
-    on resume — its metrics re-publish must REPLACE the orphaned rows
-    (per-bucket dynamic partition overwrite), not append a duplicate set
-    that double-counts the bucket in every consumer forever."""
+    on resume — its metrics re-publish must REPLACE the orphaned rows,
+    not append a duplicate set that double-counts the bucket in every
+    consumer forever. The same holds for a crash inside the metrics
+    publish itself (new rows written but not yet swapped in; live dir
+    retired but the new one not yet promoted): the hidden leftovers are
+    never read, and the bucket's next publish removes them."""
     pages = generate_pages_df(spark, 120, partitions=2)
     out = str(tmp_path / "mmwin")
+    metrics = f"{out}/metrics"
+
+    def run(run_id, **kw):
+        return run_extraction(
+            spark, pages, out, n_buckets=3, num_partitions=2, run_id=run_id, **kw
+        )
+
+    def crash_on_metrics_rename(nth):
+        real, seen = os.rename, []
+
+        def rename(src, dst):
+            if os.fspath(src).startswith(metrics + "/"):
+                seen.append(src)
+                if len(seen) == nth:
+                    raise RuntimeError("injected crash in metrics publish")
+            return real(src, dst)
+
+        return rename
+
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run("a1", fail_after_buckets=1)  # bucket 0 committed
     with pytest.raises(RuntimeError, match="between metrics and manifest"):
+        run("a2", fail_between_metrics_and_manifest=True)  # bucket 1 orphaned
+    assert _metrics_by_bucket(spark, out) == {0: {"a1"}, 1: {"a2"}}
+    # the orphaned bucket re-runs: its re-publish replaces the live rows
+    with pytest.raises(RuntimeError, match="between metrics and manifest"):
+        run("a2b", fail_between_metrics_and_manifest=True)
+    assert _metrics_by_bucket(spark, out) == {0: {"a1"}, 1: {"a2b"}}
+    assert not [e for e in os.listdir(metrics) if e.startswith(".")]
+
+    # crash after the new rows are written, before the swap
+    monkeypatch.setattr(os, "rename", crash_on_metrics_rename(1))
+    with pytest.raises(RuntimeError, match="injected crash in metrics publish"):
+        run("a3")
+    monkeypatch.undo()
+    assert os.path.isdir(f"{metrics}/.tmp-bucket=1")
+    assert _metrics_by_bucket(spark, out) == {0: {"a1"}, 1: {"a2b"}}
+
+    # crash between the renames: bucket 1 has no live dir, only leftovers
+    monkeypatch.setattr(os, "rename", crash_on_metrics_rename(2))
+    with pytest.raises(RuntimeError, match="injected crash in metrics publish"):
+        run("a4")
+    monkeypatch.undo()
+    assert {".tmp-bucket=1", ".old-bucket=1"} <= set(os.listdir(metrics))
+    assert _metrics_by_bucket(spark, out) == {0: {"a1"}}
+
+    r = run("a5")
+    assert r.committed_buckets == [1, 2] and r.skipped_buckets == [0]
+    assert not [e for e in os.listdir(metrics) if e.startswith(".")]
+    assert _metrics_by_bucket(spark, out) == {0: {"a1"}, 1: {"a5"}, 2: {"a5"}}
+    # and doc_count totals reconcile with the actual extracted table
+    m = spark.read.parquet(metrics)
+    total = sum(r["doc_count"] for r in m.collect())
+    assert total == read_extracted(spark, out).count() == 120
+
+
+def test_spark_written_control_tables_resume(spark, tmp_path):
+    """An out_dir whose _manifest and metrics/bucket=* were written as
+    Spark jobs (the earlier layout, with _SUCCESS and .crc side files)
+    resumes under the driver-side publish and reads as one table with the
+    same schema. Retention's delete-all → flat table → re-append path
+    keeps working on it, and a corrupt manifest raises."""
+    import shutil
+
+    import pyarrow as pa
+
+    from universal_text_extractor_spark.plans.pipeline import committed_buckets
+
+    pages = generate_pages_df(spark, 120, partitions=2)
+    out = str(tmp_path / "compat")
+    metrics, manifest = f"{out}/metrics", f"{out}/_manifest"
+
+    def run(**kw):
+        return run_extraction(
+            spark, pages, out, n_buckets=3, num_partitions=2, **kw
+        )
+
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run(fail_after_buckets=1)
+    m = spark.read.parquet(metrics)
+    m_rows, m_schema = m.collect(), m.schema
+    man_rows = spark.read.parquet(manifest).collect()
+    shutil.rmtree(metrics)
+    shutil.rmtree(manifest)
+    spark.createDataFrame(m_rows, m_schema).write.partitionBy("bucket").parquet(
+        metrics
+    )
+    spark.createDataFrame(man_rows, "bucket int, run_id string").write.parquet(
+        manifest
+    )
+    assert "_SUCCESS" in os.listdir(manifest)
+    assert any(e.endswith(".crc") for e in os.listdir(f"{metrics}/bucket=0"))
+    assert committed_buckets(spark, out) == [0]
+
+    # resume one bucket into the mixed layout: one table, schema pinned
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run(fail_after_buckets=1)
+    assert committed_buckets(spark, out) == [0, 1]
+    assert set(_metrics_by_bucket(spark, out)) == {0, 1}
+
+    # delete-all publishes a flat empty table; the next publish clears it
+    n = spark.read.parquet(metrics).count()
+    assert retention_cleanup(spark, out, "2100-01-01 00:00:00") == n
+    r = run()
+    assert r.committed_buckets == [2]
+    assert set(_metrics_by_bucket(spark, out)) == {2}
+    total = spark.read.parquet(metrics).agg(F.sum("doc_count")).collect()[0][0]
+    assert total == r.rows_written == _bucket_count(spark, out, 2)
+    assert read_extracted(spark, out).count() == 120
+
+    # a corrupt manifest raises instead of reading as "nothing committed"
+    with open(f"{manifest}/part-9-corrupt.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(pa.ArrowInvalid):
+        committed_buckets(spark, out)
+
+
+def test_control_plane_launches_no_spark_jobs(spark, tmp_path):
+    """The metrics publish, the manifest publish and the manifest read
+    run on the driver: none of them may launch a Spark job. Jobs are
+    counted per storage call through its job group, and write_bucket's
+    group is the positive control that the counting works."""
+    from universal_text_extractor_spark.plans.storage import ParquetStorage
+
+    sc = spark.sparkContext
+    groups: list[tuple[str, str]] = []
+
+    class Grouped(ParquetStorage):
+        def __getattribute__(self, name):
+            attr = super().__getattribute__(name)
+            if callable(attr) and not name.startswith("_"):
+                def wrapped(*a, **k):
+                    group = f"{tmp_path.name}-{len(groups)}-{name}"
+                    groups.append((name, group))
+                    sc.setJobGroup(group, name)
+                    try:
+                        return attr(*a, **k)
+                    finally:
+                        sc.setLocalProperty("spark.jobGroup.id", None)
+                        sc.setLocalProperty("spark.job.description", None)
+                return wrapped
+            return attr
+
+    pages = generate_pages_df(spark, 100, partitions=2)
+    out = str(tmp_path / "jobs")
+    with pytest.raises(RuntimeError, match="injected failure"):
         run_extraction(
             spark, pages, out, n_buckets=3, num_partitions=2,
-            fail_between_metrics_and_manifest=True,
+            fail_after_buckets=1, storage=Grouped(),
         )
-    run_extraction(spark, pages, out, n_buckets=3, num_partitions=2)
-    m = spark.read.parquet(f"{out}/metrics")
-    # exactly one lineage row per (bucket, partition): no duplicates
-    dupes = (
-        m.groupBy("bucket", "partition_id").count().filter("count > 1").count()
+    r = run_extraction(
+        spark, pages, out, n_buckets=3, num_partitions=2, storage=Grouped()
     )
-    assert dupes == 0
-    # and doc_count totals reconcile with the actual extracted table
-    total = sum(r["doc_count"] for r in m.collect())
-    assert total == read_extracted(spark, out).count()
+    assert r.rows_written + _bucket_count(spark, out, 0) == 100
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
+    jobs: dict[str, int] = {}
+    for name, group in groups:
+        jobs[name] = jobs.get(name, 0) + len(
+            sc.statusTracker().getJobIdsForGroup(group)
+        )
+    assert jobs["write_bucket"] >= 3
+    assert jobs["append_metrics"] == 0
+    assert jobs["append_manifest"] == 0
+    assert jobs["read_manifest_buckets"] == 0
+    assert [n for n, _ in groups].count("append_metrics") == 3
 
 
 def test_unpinned_dir_with_commits_refused(spark, tmp_path):

@@ -33,7 +33,14 @@ table; the _SUCCESS check below is the snapshot-commit check.
 
 Scale: n_buckets bounds the blast radius of a failure (work lost ≤ 1/n of
 the job), and each bucket is itself partition-parallel inside
-``extract_pages``. At 10^12 docs: n_buckets ~ 10^3, bucket ~ 10^9 docs.
+``extract_pages_fused`` (or ``extract_pages`` with ``fused=False``).
+At 10^12 docs: n_buckets ~ 10^3, bucket ~ 10^9 docs.
+
+Per bucket, the Spark jobs are the ones whose cost grows with the data:
+the extraction + bucket write, and the lineage aggregate over the
+read-back. The aggregate is collected to the driver once; the metrics and
+manifest publishes that follow are driver-side file writes of those few
+rows (see ``storage.py``), not further Spark jobs.
 """
 
 from __future__ import annotations
@@ -95,10 +102,6 @@ def _rm_f(path: str) -> None:
         os.remove(path)
     except OSError:
         pass
-
-
-def _manifest_path(out_dir: str) -> str:  # layout documented; tests reference it
-    return f"{out_dir}/_manifest"
 
 
 def committed_buckets(
@@ -259,15 +262,17 @@ def run_extraction(
         # write-then-publish: data, metrics, manifest — in that order
         storage.write_bucket(extracted, out_dir, b)
         written = storage.read_bucket(spark, out_dir, b)
-        metrics = lineage_metrics(written, run_id).withColumn("bucket", F.lit(b))
-        # collect the (≤num_partitions) lineage rows once: the rows both
-        # publish to the metrics table and carry doc_count, so no extra
-        # written.count() action re-reads the bucket output
-        metric_rows = metrics.collect()
-        if metric_rows:
-            storage.append_metrics(
-                spark.createDataFrame(metric_rows, metrics.schema), out_dir
-            )
+        # collect the (≤num_partitions) lineage rows once, as Arrow (``ts``
+        # keeps its UTC timestamp type): the rows both publish to the
+        # metrics table and carry doc_count, so no extra written.count()
+        # action re-reads the bucket output
+        metrics = (
+            lineage_metrics(written, run_id)
+            .withColumn("bucket", F.lit(b))
+            .toArrow()
+        )
+        if metrics.num_rows:
+            storage.append_metrics(spark, metrics, out_dir)
         if fail_between_metrics_and_manifest:
             # crash-injection hook for the metrics-published-but-bucket-
             # not-committed window (r5 review, batch 3): the bucket
@@ -277,7 +282,7 @@ def run_extraction(
                 f"injected failure between metrics and manifest (bucket {b})"
             )
         storage.append_manifest(spark, out_dir, b, run_id)
-        rows_written += sum(r["doc_count"] for r in metric_rows)
+        rows_written += sum(metrics["doc_count"].to_pylist())
         committed.append(b)
 
     # all buckets committed → the stage has served its purpose; drop it so a

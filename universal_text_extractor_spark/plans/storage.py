@@ -6,21 +6,27 @@ The pipeline's data plane goes through exactly these operations; the
 default :class:`ParquetStorage` implements them as plain parquet +
 ``_manifest``/``_staged`` directories (the documented no-Iceberg-runtime
 fallback, SURVEY.md §7.0). An Iceberg backend implements the same
-protocol as:
+protocol:
 
-=====================  ====================================================
-operation              Iceberg form
-=====================  ====================================================
-stage_pages            CTAS / REPLACE a staging table partitioned by bucket
-stage_is_committed     the staging table's snapshot exists in the catalog
-read_stage             SELECT * FROM stage (partition pruning by bucket)
-write_bucket           df.writeTo(tbl).append() — snapshot-atomic
-read_bucket            SELECT ... WHERE bucket = b
-append_metrics         writeTo(metrics).overwritePartitions() on bucket
-append_manifest        writeTo(manifest).append() (or a snapshot summary)
-read_manifest_buckets  SELECT DISTINCT bucket FROM manifest
-drop_stage             DROP TABLE stage
-=====================  ====================================================
+=====================  ==================================  ==========================================
+operation              parquet form                        Iceberg form
+=====================  ==================================  ==========================================
+stage_pages            Spark write, partitionBy bucket     CTAS / REPLACE a staging table by bucket
+stage_is_committed     the stage's ``_SUCCESS`` exists     the staging table exists in the catalog
+read_stage             spark.read (pruned by bucket)       SELECT * FROM stage (pruned by bucket)
+write_bucket           Spark write to ``bucket=b``         writeTo(tbl).overwritePartitions()
+read_bucket            spark.read of ``bucket=b``          SELECT ... WHERE bucket = b
+append_metrics         driver: pyarrow write + dir swap    writeTo(metrics).overwritePartitions()
+append_manifest        driver: one file, write + rename    writeTo(manifest).append()
+read_manifest_buckets  driver: pyarrow read                SELECT DISTINCT bucket FROM manifest
+drop_stage             rm -r ``_staged``                   DROP TABLE stage
+=====================  ==================================  ==========================================
+
+``append_metrics`` takes the lineage rows the pipeline has already
+collected to the driver, as an Arrow table. The parquet backend keeps
+them there: the metrics and manifest rows of a bucket are a handful of
+rows, so they are written with ``pyarrow`` and published by rename, not
+as Spark jobs. The extracted data itself always moves through Spark.
 
 The crash-safety argument is unchanged: each bucket's publish order is
 data → metrics → manifest, and only the manifest row marks a bucket done.
@@ -35,6 +41,9 @@ import os
 import shutil
 from typing import Protocol
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -51,7 +60,9 @@ class StorageBackend(Protocol):
 
     def read_bucket(self, spark: SparkSession, out_dir: str, bucket: int) -> DataFrame: ...
 
-    def append_metrics(self, metrics: DataFrame, out_dir: str) -> None: ...
+    def append_metrics(
+        self, spark: SparkSession, metrics: pa.Table, out_dir: str
+    ) -> None: ...
 
     def append_manifest(
         self, spark: SparkSession, out_dir: str, bucket: int, run_id: str
@@ -64,7 +75,14 @@ class StorageBackend(Protocol):
 
 class ParquetStorage:
     """Default backend: plain parquet + ``_manifest`` + ``_staged``
-    (partitionBy bucket) under ``out_dir`` on the LOCAL filesystem."""
+    (partitionBy bucket) under ``out_dir`` on the LOCAL filesystem.
+
+    The data plane (stage, bucket write and read-back) runs as Spark jobs.
+    The control plane (metrics, manifest) runs on the driver with
+    ``pyarrow``: each publish writes into a ``.``-prefixed path, which
+    Spark's file index and ``pyarrow`` datasets both skip, then renames it
+    into place. A crash mid-publish therefore leaves only hidden
+    leftovers, never a partial visible table."""
 
     @staticmethod
     def _staged(out_dir: str) -> str:
@@ -95,58 +113,85 @@ class ParquetStorage:
     def read_bucket(self, spark: SparkSession, out_dir: str, bucket: int) -> DataFrame:
         return spark.read.parquet(f"{out_dir}/extracted/bucket={bucket}")
 
-    def append_metrics(self, metrics: DataFrame, out_dir: str) -> None:
-        # dynamic partition overwrite on bucket: re-publishing a bucket's
-        # metrics after crash-resume REPLACES its rows instead of appending
-        # a duplicate set. The crash window is real: publish order is
+    def append_metrics(
+        self, spark: SparkSession, metrics: pa.Table, out_dir: str
+    ) -> None:
+        # per-bucket REPLACE, as dynamic partition overwrite did:
+        # re-publishing a bucket's metrics after crash-resume must not
+        # append a duplicate set. The crash window is real: publish order is
         # data → metrics → manifest, so dying between the last two leaves
         # the bucket pending — it re-runs, and a plain append would
         # double-count that bucket in every metrics consumer forever
         # (r5 review, batch 3)
         path = f"{out_dir}/metrics"
-        if os.path.isdir(path) and not any(
-            e.startswith("bucket=") for e in os.listdir(path)
-        ):
+        flat = [
+            os.path.join(path, e)
+            for e in (os.listdir(path) if os.path.isdir(path) else [])
+            if not e.startswith((".", "_", "bucket="))
+        ]
+        if flat:
             # a retention delete-ALL publishes a FLAT schema-bearing empty
             # table (an empty partitioned write has no files and is
             # unreadable) — clear it before re-introducing hive layout,
             # but never silently discard a non-empty flat table
-            spark = metrics.sparkSession
-            if spark.read.parquet(path).isEmpty():
-                shutil.rmtree(path)
-            else:
+            if any(pq.ParquetFile(f).metadata.num_rows for f in flat):
                 raise ValueError(
                     f"{path} holds a non-partitioned, non-empty metrics "
                     "table — refusing to mix layouts"
                 )
-        (
-            metrics.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(path)
-        )
+            shutil.rmtree(path)
+        for b in pc.unique(metrics["bucket"]).to_pylist():
+            rows = metrics.filter(pc.equal(metrics["bucket"], b))
+            live = f"{path}/bucket={b}"
+            tmp, old = f"{path}/.tmp-bucket={b}", f"{path}/.old-bucket={b}"
+            # leftovers of a crash inside an earlier publish of this bucket
+            shutil.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(old, ignore_errors=True)
+            os.makedirs(tmp)
+            # hive layout: the partition value lives in the dir name only
+            pq.write_table(
+                rows.drop_columns(["bucket"]), f"{tmp}/part-00000.snappy.parquet"
+            )
+            # swap: retire the live dir, promote the new one, drop the old.
+            # A crash between the renames leaves no live dir for this
+            # bucket; the bucket is still pending, so its re-run publishes
+            # again
+            if os.path.exists(live):
+                os.rename(live, old)
+            os.rename(tmp, live)
+            shutil.rmtree(old, ignore_errors=True)
 
     def append_manifest(
         self, spark: SparkSession, out_dir: str, bucket: int, run_id: str
     ) -> None:
-        spark.createDataFrame(
-            [(bucket, run_id)], "bucket int, run_id string"
-        ).write.mode("append").parquet(self._manifest(out_dir))
+        d = self._manifest(out_dir)
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{bucket}-{run_id}.parquet"
+        row = pa.table(
+            {
+                "bucket": pa.array([bucket], pa.int32()),
+                "run_id": pa.array([run_id], pa.string()),
+            }
+        )
+        # write-then-rename: the bucket is committed by the rename, so a
+        # crash mid-write leaves only a hidden file and the bucket pending
+        pq.write_table(row, f"{d}/.{name}.tmp")
+        os.replace(f"{d}/.{name}.tmp", f"{d}/{name}")
 
     def read_manifest_buckets(self, spark: SparkSession, out_dir: str) -> list[int]:
         # probe the path instead of swallowing every read error: a corrupt
         # manifest or transient FS failure must RAISE, not masquerade as a
         # fresh run and silently re-extract (and double-append metrics for)
         # the whole job (r5 review, batch 3)
-        if not os.path.exists(self._manifest(out_dir)):
-            return []  # first run: no manifest yet
-        return [
-            r["bucket"]
-            for r in spark.read.parquet(self._manifest(out_dir))
-            .select("bucket")
-            .distinct()
-            .collect()
-        ]
+        d = self._manifest(out_dir)
+        if not os.path.isdir(d) or all(
+            e.startswith((".", "_")) for e in os.listdir(d)
+        ):
+            return []  # first run: no committed bucket yet
+        # the dataset reader skips ``.``/``_`` names: in-flight temp files,
+        # and the _SUCCESS/.crc side files of Spark-written manifests
+        buckets = pq.read_table(d, columns=["bucket"])["bucket"]
+        return sorted(set(buckets.to_pylist()))
 
     def drop_stage(self, out_dir: str) -> None:
         shutil.rmtree(self._staged(out_dir), ignore_errors=True)
@@ -260,11 +305,13 @@ class IcebergStorage:
             .drop("bucket")
         )
 
-    def append_metrics(self, metrics: DataFrame, out_dir: str) -> None:
+    def append_metrics(
+        self, spark: SparkSession, metrics: pa.Table, out_dir: str
+    ) -> None:
         # same idempotence contract as ParquetStorage: per-bucket partition
         # overwrite, so a crash-resume re-publish replaces rather than
         # duplicates the bucket's rows
-        spark = metrics.sparkSession
+        metrics = spark.createDataFrame(metrics)
         self._ensure_ns(spark)
         tbl = self._tbl(out_dir, "metrics")
         if spark.catalog.tableExists(tbl):
@@ -293,10 +340,10 @@ class IcebergStorage:
         tbl = self._tbl(out_dir, "manifest")
         if not spark.catalog.tableExists(tbl):
             return []
-        return [
+        return sorted(
             r["bucket"]
             for r in spark.read.table(tbl).select("bucket").distinct().collect()
-        ]
+        )
 
     def drop_stage(self, out_dir: str) -> None:
         self._active_spark().sql(
