@@ -11,10 +11,13 @@ for N vs 4N executors, task instruction) in separate subprocesses (clean
 JVM per level). Reports docs/sec, MB/sec and scaling efficiency
 ``(thr_hi / thr_lo) / (hi / lo)``; target ≥ 0.8 (north rule).
 
-Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
- "sf": ..., "extraction": {...}}
-and refreshes BENCH/BASELINE.md.
+Phase C: the crawl→corpus pipeline, median wall per near-dup mode.
+
+The full record goes to BENCH/partial.json; the last stdout line is a
+compact summary of it (see :func:`summary`):
+{"metric": ..., "value": total_sec, "unit": "sec", "extraction": {...},
+ "corpus": {...}, "detail": "BENCH/partial.json"}
+The run also refreshes BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -154,7 +157,7 @@ def ensure_corpus_pages(cores: int) -> None:
     _ensure_pages(CORPUS_DATA_DIR, CORPUS_ROWS, cores * 2, cores)
 
 
-def extraction_throughput(cores: int, mode: str = "fused") -> dict:
+def extraction_throughput(cores: int) -> dict:
     """Extraction passes at the given parallelism; returns best-of-REPS
     throughput (host interference on this sandbox is bursty; the best run
     reflects the engine).
@@ -163,39 +166,25 @@ def extraction_throughput(cores: int, mode: str = "fused") -> dict:
     executor-slot count varies, as on a real N vs 4N-executor cluster. A
     small warmup run first so JIT/codegen + the Python worker pool
     (amortized to zero on a long job) don't pollute the measurement.
-
-    ``mode='fused'`` is the production single-pass dispatch; ``'union'``
-    measures the filter+union branch plan for the architecture record
-    (equivalence locked by tests/test_pipeline.py::test_fused_equals_union).
     """
     from pyspark.sql import functions as F
 
     from universal_text_extractor_spark.operators.extract import (
-        extract_pages,
         extract_pages_fused,
     )
 
-    # the union plan is measured at ITS best configuration (persist_base
-    # removes the per-branch shuffle re-read amplification, ~25% faster —
-    # ADVICE.md r01) so the fused-vs-union record compares best against best
-    if mode == "fused":
-        extractor = extract_pages_fused
-    else:
-        import functools
-
-        extractor = functools.partial(extract_pages, persist_base=True)
     spark = _session(cores, shuffle_partitions=EXTRACT_PARTITIONS)
     pages = spark.read.parquet(DATA_DIR)
     total_bytes = pages.agg(F.sum(F.length("html"))).collect()[0][0]
     # warmup: JIT + codegen + python-worker pool
-    extractor(pages.limit(300), num_partitions=cores).agg(
+    extract_pages_fused(pages.limit(300), num_partitions=cores).agg(
         F.sum(F.length("text"))
     ).collect()
     walls = []
     failures = 0
     for _ in range(max(BENCH_REPS, 1)):
         t0 = time.time()
-        ext = extractor(pages, num_partitions=EXTRACT_PARTITIONS)
+        ext = extract_pages_fused(pages, num_partitions=EXTRACT_PARTITIONS)
         out = ext.agg(
             F.count("*").alias("docs"),
             F.sum(F.length("text")).alias("out_chars"),
@@ -204,13 +193,10 @@ def extraction_throughput(cores: int, mode: str = "fused") -> dict:
         walls.append(time.time() - t0)
         failures = out["failures"]
         assert out["docs"] == BENCH_ROWS, f"row loss: {out['docs']} != {BENCH_ROWS}"
-        if mode != "fused":
-            spark.catalog.clearCache()  # drop the rep's persisted base
     spark.stop()
     wall = min(walls)
     return {
         "cores": cores,
-        "mode": mode,
         "wall_sec": round(wall, 3),
         "all_walls": [round(w, 2) for w in walls],
         "docs_per_sec": round(BENCH_ROWS / wall, 1),
@@ -359,9 +345,9 @@ def _subprocess_corpus(cores: int) -> dict:
     )
 
 
-def _subprocess_extract(cores: int, mode: str = "fused") -> dict:
+def _subprocess_extract(cores: int) -> dict:
     return _subprocess_phase(
-        ["--extract-level", str(cores), mode], f"extract_{mode}_{cores}c"
+        ["--extract-level", str(cores)], f"extract_{cores}c"
     )
 
 
@@ -392,8 +378,7 @@ def run_headline(spark, reps: int = 3) -> dict[str, float]:
 def main() -> None:
     if len(sys.argv) >= 3 and sys.argv[1] == "--extract-level":
         ensure_bench_pages()
-        mode = sys.argv[3] if len(sys.argv) >= 4 else "fused"
-        print(json.dumps(extraction_throughput(int(sys.argv[2]), mode)))
+        print(json.dumps(extraction_throughput(int(sys.argv[2]))))
         return
     if len(sys.argv) >= 3 and sys.argv[1] == "--corpus-level":
         print(json.dumps(corpus_throughput(int(sys.argv[2]))))
@@ -440,14 +425,10 @@ def main() -> None:
     # ---- Phase B: extraction scaling (clean JVM per level) ------------
     lo = _subprocess_extract(lo_cores)
     hi = _subprocess_extract(hi_cores)
-    # one filter+union run at the high level: the north-star branch plan's
-    # own number, for the architecture record
-    union_hi = _subprocess_extract(hi_cores, mode="union")
     ex: dict = {
         "rows": BENCH_ROWS,
         "low": lo,
         "high": hi,
-        "union_high": union_hi,
         "scaling_target": 0.8,
     }
     if "error" not in lo and "error" not in hi:
@@ -466,7 +447,62 @@ def main() -> None:
         _write_baseline_md(result)
     except Exception as e:  # noqa: BLE001 — the JSON line still ships
         print(f"[bench] BASELINE.md write failed: {e}", file=sys.stderr)
-    print(json.dumps(result))
+    # the full record is BENCH/partial.json (checkpointed after Phase C);
+    # stdout ends with the compact summary so a tail-keeping reader parses it
+    print(json.dumps(summary(result)))
+
+
+# the last stdout line must survive a reader that keeps only a 2,000-char tail
+SUMMARY_MAX_CHARS = 1500
+
+
+def _error_text(r: dict) -> str:
+    return str(r["error"])[:160]
+
+
+def summary(result: dict) -> dict:
+    """The bench's last stdout line: the headline total plus, per
+    extraction level, docs/s and every rep's wall; the scaling efficiency;
+    and the corpus median wall and spread per near-dup mode. A failed phase
+    keeps a truncated error string, so the line stays under
+    SUMMARY_MAX_CHARS whatever happened."""
+    out: dict = {
+        "metric": result.get("metric"),
+        "value": result.get("value"),
+        "unit": result.get("unit"),
+        "sf": result.get("sf"),
+    }
+    queries = result.get("queries") or {}
+    if "error" in queries:
+        out["queries_error"] = _error_text(queries)
+    ex = result.get("extraction") or {}
+    levels: dict = {}
+    for key in ("low", "high"):
+        r = ex.get(key) or {}
+        if "error" in r:
+            levels[key] = {"error": _error_text(r)}
+        elif r:
+            levels[key] = {
+                "cores": r.get("cores"),
+                "docs_per_sec": r.get("docs_per_sec"),
+                "all_walls": r.get("all_walls"),
+            }
+    levels["scaling_efficiency"] = ex.get("scaling_efficiency")
+    out["extraction"] = levels
+    co = result.get("corpus") or {}
+    if "error" in co:
+        out["corpus"] = {"error": _error_text(co)}
+    else:
+        out["corpus"] = {
+            mode: {
+                "median_sec": co[mode].get("wall_sec"),
+                "spread_pct": co[mode].get("spread_pct"),
+            }
+            for mode in ("verified_pair", "bucket_min")
+            if mode in co
+        }
+    out["detail"] = "BENCH/partial.json"
+    return out
 
 
 def _write_baseline_md(result: dict) -> None:
@@ -474,12 +510,12 @@ def _write_baseline_md(result: dict) -> None:
     bdir.mkdir(exist_ok=True)
     ex = result.get("extraction", {})
 
-    def _exrow(key: str, path: str) -> str:
+    def _exrow(key: str) -> str:
         r = ex.get(key, {})
         if "error" in r:
-            return f"| — | {path} | ERROR: {r['error']} | | | | |"
+            return f"| — | ERROR: {r['error']} | | | | |"
         return (
-            f"| {r['cores']} | {path} | {r['wall_sec']} | {r['all_walls']} "
+            f"| {r['cores']} | {r['wall_sec']} | {r['all_walls']} "
             f"| {r['docs_per_sec']} | {r['mb_per_sec']} | {r['failures']} |"
         )
 
@@ -490,17 +526,16 @@ def _write_baseline_md(result: dict) -> None:
         "",
         "## Extraction throughput (two parallelism levels, same input/code)",
         "",
-        "Production path: `extract_pages_fused` (single-pass mapInPandas "
-        "dispatch; byte-identical to the filter+union branch plan — "
-        "equivalence locked by tests/test_pipeline.py). Best-of-"
+        "Extraction path: `extract_pages_fused` (single-pass mapInPandas "
+        "dispatch; byte-identical to the kernel oracle — locked by "
+        "tests/test_pipeline.py). Best-of-"
         f"{BENCH_REPS} runs per level (host interference on this sandbox is "
         "bursty; all walls recorded below).",
         "",
-        "| cores | path | wall (s) | all walls | docs/sec | MB/sec | failures |",
-        "|---|---|---|---|---|---|---|",
-        _exrow("low", "fused"),
-        _exrow("high", "fused"),
-        _exrow("union_high", "filter+union"),
+        "| cores | wall (s) | all walls | docs/sec | MB/sec | failures |",
+        "|---|---|---|---|---|---|",
+        _exrow("low"),
+        _exrow("high"),
         "",
         f"**Scaling efficiency {LO_CORES}→{HI_CORES} cores: "
         f"{ex.get('scaling_efficiency', 'n/a (a level failed)')}** "
@@ -520,7 +555,6 @@ def _write_baseline_md(result: dict) -> None:
         "one fixed disk while a k-executor cluster has k disks — RAM-backed "
         "shuffle restores the bandwidth-scales-with-executors property the "
         "north rule assumes.",
-        '- The filter+union branch plan (north-star architecture) is measured once at the high level, at ITS best configuration (persist_base=True: the repartitioned base is materialized so the branch fan-out reads node-local cache instead of re-reading the shuffle ~5x). Even so the fused single-pass dispatch wins — one pass, no cache materialization cost — and is the production path at both sandbox and cluster scale.',
         "",
         "## Headline query times (seconds)",
         "",

@@ -9,7 +9,10 @@ round-trips are the oracle."""
 
 from pyspark.sql import Row
 
-from universal_text_extractor_spark.kernels.dispatch import extract_payload
+from universal_text_extractor_spark.kernels.dispatch import (
+    detect_content_type,
+    extract_payload,
+)
 from universal_text_extractor_spark.kernels.legacy_office import (
     extract_doc,
     extract_ppt,
@@ -18,10 +21,7 @@ from universal_text_extractor_spark.kernels.office_kernel import (
     DOC_LEGACY_LITERAL,
     PPT_LEGACY_LITERAL,
 )
-from universal_text_extractor_spark.operators.extract import (
-    extract_pages,
-    extract_pages_fused,
-)
+from universal_text_extractor_spark.operators.extract import extract_pages_fused
 from universal_text_extractor_spark.sources.pages_gen import make_doc, make_ppt
 
 PARAS = [
@@ -80,10 +80,10 @@ def test_flag_swaps_to_real_parse_and_contains_corruption():
     assert t_bad.startswith("[Error extracting text:") and not s_bad and err
 
 
-def test_fused_equals_union_under_legacy_office(spark):
-    """fused ≡ union must hold under the flag too (same invariant as
-    main_content / OCR options); doc/ppt payloads extract for real and
-    every other branch is untouched."""
+def test_fused_matches_oracle_under_legacy_office(spark):
+    """Under the flag the pipeline matches ``extract_payload(...,
+    legacy_office=True)`` row for row: doc/ppt payloads extract for real
+    and every other type is untouched."""
     rows = [
         Row(url="https://x/r.doc", warc_ts=None, html=make_doc(PARAS),
             text="", lang="en"),
@@ -101,18 +101,19 @@ def test_fused_equals_union_under_legacy_office(spark):
                "text string, lang string",
     )
     stable = ["url", "content_type", "text", "ocr_used", "success", "error"]
-    union = {
-        r["url"]: tuple(r)
-        for r in extract_pages(pages, num_partitions=2, legacy_office=True)
-        .select(*stable).collect()
-    }
     fused = {
         r["url"]: tuple(r)
         for r in extract_pages_fused(pages, num_partitions=2, legacy_office=True)
         .select(*stable).collect()
     }
-    assert union == fused
-    by_url = {r[0]: r for r in fused.values()}
-    assert by_url["https://x/r.doc"][2] == "\n".join(PARAS)
-    assert by_url["https://x/r.ppt"][2].startswith("--- Slide 1 ---")
-    assert by_url["https://x/bad.doc"][2].startswith("[Error extracting text:")
+    oracle = {}
+    for r in rows:
+        ct = detect_content_type(r.url, r.html)
+        text, ocr_used, success, error, _ = extract_payload(
+            r.url, r.html, ct, legacy_office=True
+        )
+        oracle[r.url] = (r.url, ct, text, ocr_used, success, error)
+    assert fused == oracle
+    assert fused["https://x/r.doc"][2] == "\n".join(PARAS)
+    assert fused["https://x/r.ppt"][2].startswith("--- Slide 1 ---")
+    assert fused["https://x/bad.doc"][2].startswith("[Error extracting text:")

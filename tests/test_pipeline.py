@@ -1,55 +1,78 @@
 """End-to-end pipeline tests (SURVEY.md §5 item 3): per-url byte-identity of
 the Spark pipeline vs the kernel oracle for 100% of urls, lineage-table
-invariants, and the single-reused-shuffle physical-plan property."""
+invariants, and the single-shuffle physical-plan property."""
 
 from __future__ import annotations
 
-import re
-
 from universal_text_extractor_spark.kernels import detect_content_type, extract_payload
 from universal_text_extractor_spark.operators.extract import (
-    extract_pages,
     extract_pages_fused,
     lineage_metrics,
 )
 from universal_text_extractor_spark.sources.pages_gen import (
+    PAGES_SCHEMA,
     generate_pages_df,
     make_page,
 )
 
 N = 1000
 
+# Rows the generator never emits: missing or empty fetches, whitespace-only
+# bodies and junk under an unknown extension. Each must still match the
+# oracle through the one dispatch path.
+EDGE_ROWS = [
+    ("https://edge.example/null-no-ext", None),
+    ("https://edge.example/null.pdf", None),
+    ("https://edge.example/null.html", None),
+    ("https://edge.example/null.gz", None),
+    ("https://edge.example/empty", b""),
+    ("https://edge.example/blank", b" \t\r\n  \n"),
+    ("https://edge.example/junk.qqq", b"\x00\x01\x02\x7f\x1b junk \x00"),
+]
 
-def _oracle(i: int):
-    p = make_page(i)
-    ct = detect_content_type(p["url"], p["html"])
-    text, ocr_used, success, error, _ = extract_payload(p["url"], p["html"], ct)
-    return p["url"], ct, text, ocr_used, success, error
+
+def _oracle(url: str, html: bytes | None, **options):
+    """(content_type, text, ocr_used, success, error, logs) straight from
+    the kernels — the definition of a correct pipeline row."""
+    ct = detect_content_type(url, html)
+    return (ct, *extract_payload(url, html, ct, **options))
+
+
+def _stable(row) -> tuple:
+    return (
+        row["content_type"], row["text"], row["ocr_used"], row["success"],
+        row["error"], list(row["logs"]),
+    )
 
 
 def test_pipeline_byte_identity(spark):
-    pages = generate_pages_df(spark, N, partitions=4)
-    ext = extract_pages(pages, num_partitions=8)
+    edge = spark.createDataFrame(
+        [(u, None, h, "", "en") for u, h in EDGE_ROWS], schema=PAGES_SCHEMA
+    )
+    pages = generate_pages_df(spark, N, partitions=4).unionByName(edge)
+    ext = extract_pages_fused(pages, num_partitions=8)
     rows = {r["url"]: r for r in ext.collect()}
-    assert len(rows) == N
+    inputs = [(p["url"], p["html"]) for p in map(make_page, range(N))]
+    inputs += EDGE_ROWS
+    assert len(rows) == len(inputs)
     bad = []
-    for i in range(N):
-        url, ct, text, ocr_used, success, error = _oracle(i)
+    for url, html in inputs:
         r = rows[url]
         if (
-            r["content_type"] != ct
-            or r["text"] != text
-            or r["ocr_used"] != ocr_used
-            or r["success"] != success
-            or r["error"] != error
+            _stable(r) != _oracle(url, html)
+            or r["input_bytes"] != len(html or b"")
         ):
             bad.append(url)
     assert not bad, f"{len(bad)} mismatching urls, e.g. {bad[:5]}"
+    # the edge rows reach every failure shape the dispatch has
+    edge_out = {u: rows[u] for u, _ in EDGE_ROWS}
+    assert edge_out["https://edge.example/junk.qqq"]["content_type"] == "unknown"
+    assert not edge_out["https://edge.example/null.gz"]["success"]
 
 
 def test_lineage_invariants(spark):
     pages = generate_pages_df(spark, N, partitions=4)
-    ext = extract_pages(pages, num_partitions=8).cache()
+    ext = extract_pages_fused(pages, num_partitions=8).cache()
     try:
         metrics = lineage_metrics(ext, run_id="testrun").collect()
         # Σ doc_count = input row count (FIXTURES.md §2)
@@ -68,49 +91,6 @@ def test_lineage_invariants(spark):
             assert m["extraction_latency"] >= 0.0
     finally:
         ext.unpersist()
-
-
-def test_single_shuffle_reused(spark):
-    """The branch fan-out must not re-shuffle per branch: exactly one real
-    Exchange for the salted repartition; all other branches see a
-    ReusedExchange (scale property — SURVEY.md §3.1)."""
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        pages = generate_pages_df(spark, 50, partitions=2)
-        ext = extract_pages(pages, num_partitions=4)
-        plan = ext._jdf.queryExecution().executedPlan().toString()
-        n_branches = plan.count("ArrowEvalPython") + 1  # +1 literal branch
-        reused = len(re.findall(r"ReusedExchange", plan))
-        assert reused >= n_branches - 1, (
-            f"expected ≥{n_branches - 1} reused exchanges:\n{plan[:2000]}"
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-
-def test_fused_equals_union(spark):
-    """The single-pass fused dispatch (throughput path) must be
-    byte-identical to the filter+union branch plan (north-star architecture)
-    on every stable column — same kernels, same dispatch rules, so equality
-    holds by construction; this locks it."""
-    pages = generate_pages_df(spark, N, partitions=4)
-    stable = ["url", "content_type", "partition_id", "input_bytes",
-              "text", "ocr_used", "success", "error", "logs"]
-    union_rows = {
-        r["url"]: r
-        for r in extract_pages(pages, num_partitions=8).select(*stable).collect()
-    }
-    fused_rows = {
-        r["url"]: r
-        for r in extract_pages_fused(pages, num_partitions=8).select(*stable).collect()
-    }
-    assert set(union_rows) == set(fused_rows)
-    bad = [
-        u
-        for u, r in union_rows.items()
-        if tuple(r) != tuple(fused_rows[u])
-    ]
-    assert not bad, f"{len(bad)} fused/union mismatches, e.g. {bad[:3]}"
 
 
 def test_fused_single_stage_plan(spark):
@@ -171,10 +151,9 @@ def test_salted_repartition_breaks_host_skew(spark):
 
 
 def test_main_content_mode(spark):
-    """main_content=True (north-star boilerplate removal): the HTML branch
-    emits extract_main_content output, every other branch stays
-    byte-identical to the default mode, and fused ≡ union holds under the
-    flag."""
+    """main_content=True (north-star boilerplate removal): html rows emit
+    extract_main_content output and every other row stays byte-identical
+    to the default mode."""
     from universal_text_extractor_spark.kernels import detect_and_decode
     from universal_text_extractor_spark.kernels.html_kernel import (
         extract_main_content,
@@ -194,15 +173,7 @@ def test_main_content_mode(spark):
         .select(*stable)
         .collect()
     }
-    union = {
-        r["url"]: r
-        for r in extract_pages(pages, num_partitions=8, main_content=True)
-        .select(*stable)
-        .collect()
-    }
-    assert set(plain) == set(fused) == set(union)
-    bad = [u for u in fused if tuple(fused[u]) != tuple(union[u])]
-    assert not bad, f"{len(bad)} fused/union mismatches under main_content"
+    assert set(plain) == set(fused)
 
     payloads = {r["url"]: r["html"] for r in pages.collect()}
     n_html = 0
@@ -215,36 +186,32 @@ def test_main_content_mode(spark):
                 "Extracted main content from HTML (boilerplate removed)"
                 in r["logs"]
             )
-        else:  # every non-html branch is unchanged by the flag
+        else:  # every non-html row is unchanged by the flag
             assert tuple(r) == tuple(plain[u]), u
     assert n_html > 100  # the corpus is html-dominated; the mode was exercised
 
 
-def test_fused_equals_union_under_ocr_options(spark):
-    """r4: the fused ≡ union byte-identity must hold under the new OCR
-    option surface too (language + handwriting_mode thread through both
-    dispatch paths identically), and the options must be visibly live:
-    an unknown language turns every OCR'd image into the no-text
-    literal."""
+def test_fused_matches_oracle_under_ocr_options(spark):
+    """The OCR option surface (language + handwriting_mode) threads
+    through the pipeline exactly as through ``extract_payload``, and the
+    options are visibly live: an unknown language turns every OCR'd image
+    into the no-text literal."""
     from universal_text_extractor_spark.kernels.ocr_kernel import (
         NO_TEXT_LITERAL,
     )
 
     pages = generate_pages_df(spark, 300, partitions=4)
-    stable = ["url", "content_type", "text", "ocr_used", "success", "error"]
-    kw = dict(
-        num_partitions=4, use_ocr=True,
-        ocr_language="fra", handwriting_mode=True,
-    )
-    union_rows = {
-        r["url"]: tuple(r)
-        for r in extract_pages(pages, **kw).select(*stable).collect()
+    options = dict(use_ocr=True, ocr_language="fra", handwriting_mode=True)
+    rows = {
+        r["url"]: _stable(r)
+        for r in extract_pages_fused(pages, num_partitions=4, **options)
+        .collect()
     }
-    fused_rows = {
-        r["url"]: tuple(r)
-        for r in extract_pages_fused(pages, **kw).select(*stable).collect()
-    }
-    assert union_rows == fused_rows
+    payloads = {r["url"]: r["html"] for r in pages.collect()}
+    assert set(rows) == set(payloads)
+    bad = [u for u, h in payloads.items() if rows[u] != _oracle(u, h, **options)]
+    assert not bad, f"{len(bad)} oracle mismatches under OCR options, e.g. {bad[:3]}"
+    assert any(r[2] for r in rows.values())  # OCR actually ran
 
     bad_lang = {
         r["url"]: r["text"]

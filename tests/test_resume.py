@@ -300,14 +300,18 @@ def test_storage_seam_is_honored(spark, tmp_path, backend):
 
 
 def test_export_sinks(spark, tmp_path):
-    from universal_text_extractor_spark.operators.extract import extract_pages
+    from universal_text_extractor_spark.operators.extract import (
+        extract_pages_fused,
+    )
     from universal_text_extractor_spark.sources.sinks import (
         export_csv_lines,
         export_json,
         export_txt,
     )
 
-    ext = extract_pages(generate_pages_df(spark, 50, partitions=2), num_partitions=2)
+    ext = extract_pages_fused(
+        generate_pages_df(spark, 50, partitions=2), num_partitions=2
+    )
     export_txt(ext, str(tmp_path / "txt"))
     export_json(ext, str(tmp_path / "json"))
     export_csv_lines(ext.limit(5), str(tmp_path / "csv"))

@@ -3,7 +3,7 @@ source, exactly-once resume via checkpoint, byte-identity vs batch."""
 
 from __future__ import annotations
 
-from universal_text_extractor_spark.operators.extract import extract_pages
+from universal_text_extractor_spark.operators.extract import extract_pages_fused
 from universal_text_extractor_spark.sources.pages_gen import generate_pages_df
 from universal_text_extractor_spark.streaming import (
     stream_extract_pages,
@@ -26,7 +26,7 @@ def test_stream_matches_batch(spark, tmp_path):
     got = {r["url"]: r["text"] for r in spark.read.parquet(out).collect()}
     want = {
         r["url"]: r["text"]
-        for r in extract_pages(spark.read.parquet(src), num_partitions=4).collect()
+        for r in extract_pages_fused(spark.read.parquet(src), num_partitions=4).collect()
     }
     assert got == want
 

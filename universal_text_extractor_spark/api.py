@@ -25,7 +25,6 @@ import os
 from typing import Any
 
 from .kernels.dispatch import (
-    BRANCH_FAMILIES,
     SUPPORTED_FILE_TYPES,
     detect_content_type,
     extract_payload,
@@ -156,9 +155,8 @@ class TextExtractor:
     def get_supported_formats(self) -> dict[str, Any]:
         """Reference :131-140. ``images`` mirrors the reference's
         SUPPORTED_IMAGE_FORMATS (the extension list), not the dispatch
-        family name — BRANCH_FAMILIES['image'] is the tuple ('image',)
-        and reported the branch label instead of formats (r5 review,
-        batch 4)."""
+        label: every image extension dispatches as the single content
+        type ``'image'``, which names no format."""
         return {
             "documents": list(SUPPORTED_FILE_TYPES.keys()),
             "images": list(SUPPORTED_FILE_TYPES["Images"]),

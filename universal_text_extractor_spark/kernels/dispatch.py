@@ -71,30 +71,6 @@ EXT_TO_TYPE["gz"] = "gzip"
 EXT_TO_TYPE["xz"] = "xz"
 EXT_TO_TYPE["bz2"] = "bzip2"
 
-# Types with a real kernel. Of the legacy OLE formats, xls (BIFF8) and msg
-# (MAPI) now parse for real (kernels/xls_kernel.py, msg_kernel.py); doc/ppt
-# emit the reference's informative literals (reference :601, :769).
-IMPLEMENTED_TYPES = (
-    "html", "xml", "txt", "pdf", "rtf", "csv", "eml", "image",
-    "docx", "pptx", "xlsx", "ods", "odt", "odp", "epub",
-    "doc", "ppt", "xls", "msg", "gzip", "xz", "bzip2",
-)
-
-# Dispatch-branch grouping for the Spark filter+union fan-out: one Arrow UDF
-# branch per *family* (share-weighted: html dominates, pdf next, the rest
-# are tails) — fewer union stages at identical semantics, since the UDF
-# receives the content_type column and routes within the family.
-BRANCH_FAMILIES: dict[str, tuple[str, ...]] = {
-    "html": ("html",),
-    "pdf": ("pdf",),
-    "text": ("txt", "csv", "rtf", "eml", "xml", "gzip", "xz", "bzip2"),
-    "office": (
-        "docx", "pptx", "xlsx", "ods", "odt", "odp", "epub",
-        "doc", "ppt", "xls", "msg",
-    ),
-    "image": ("image",),
-}
-
 # url extension capture: last dot-segment of the path, before ?/#.
 # Mirrored in functions/sniff.py as a regexp_extract — keep in sync.
 URL_EXT_PATTERN = r"^[^?#]*/[^/?#]*\.([A-Za-z0-9]{1,5})(?:[?#].*)?$"

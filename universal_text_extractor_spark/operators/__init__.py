@@ -1,12 +1,10 @@
 from .extract import (
     RESULT_SCHEMA,
-    extract_pages,
     extract_pages_fused,
     lineage_metrics,
 )
 
 __all__ = [
-    "extract_pages",
     "extract_pages_fused",
     "lineage_metrics",
     "RESULT_SCHEMA",

@@ -1,27 +1,23 @@
-"""The extraction pipeline: content-type dispatch via filter + union of
-specialized Arrow pandas-UDF branches (D1 → SURVEY.md §2.2; north-star
-architecture).
+"""The extraction pipeline: one salted shuffle, then a single
+``mapInPandas`` pass that dispatches each row to its content-type kernel
+(D1 → SURVEY.md §2.2).
 
 Dataflow::
 
     pages ──ct col (JVM sniff)──► repartition(salted xxhash64(url))  [1 shuffle]
-          ├─ filter(ct=html)  ─► html-branch pandas UDF  ─┐
-          ├─ filter(ct=pdf)   ─► pdf-branch pandas UDF   ─┤ unionByName
-          ├─ …                                           ─┤
-          └─ filter(other)    ─► literal branch (no UDF) ─┘
+          ──► mapInPandas dispatch (Arrow batches; every content type,
+              unknown included, goes through ``extract_payload``)
           ──► extracted rows (text, ocr_used, success, error, logs, extract_us)
 
 Scale design notes:
-- The salted repartition is a single Exchange; every branch filter reads the
-  *same* shuffle output (Spark ReusedExchange dedups identical exchanges),
-  so the 100 TB scan+shuffle happens once, not once per branch
-  (verified in tests/test_pipeline.py::test_single_shuffle_reused).
-- Branch filters are evaluated post-shuffle (cheap, codegen'd); the Python
-  boundary is crossed only by rows of that branch, in Arrow batches.
+- The salted repartition is the only Exchange, and the dispatch stage reads
+  its output exactly once (locked by
+  tests/test_pipeline.py::test_fused_single_stage_plan). Routing in Python
+  per row, not by a filter per content type + union, is deliberate: such a
+  fan-out re-reads the shuffle once per branch and measured 1.4-4× slower
+  at every scale.
 - ``spark.sql.execution.arrow.maxRecordsPerBatch`` should be lowered for
   large html blobs (SURVEY.md §4.3); see plans/pipeline.py defaults.
-- unknown/stubbed branch is pure Column expressions — no Python at all for
-  the junk tail.
 
 The per-row kernel work happens in ``kernels.dispatch.extract_payload`` —
 the same function the pytest oracle calls, so pipeline output is
@@ -31,7 +27,6 @@ byte-identical to the oracle by construction.
 from __future__ import annotations
 
 import time
-from functools import reduce
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -46,7 +41,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.sniff import content_type_col
-from ..kernels.dispatch import BRANCH_FAMILIES, extract_payload
+from ..kernels.dispatch import extract_payload
 
 DEFAULT_SALT = 0x5EED
 
@@ -67,141 +62,11 @@ EXTRACTED_COLUMNS = (
 )
 
 
-def _branch_udf(
-    use_ocr: bool = False,
-    main_content: bool = False,
-    ocr_language: str = "eng",
-    handwriting_mode: bool = False,
-    legacy_office: bool = False,
-):
-    """The dispatch Arrow UDF shared by every branch of the filter+union
-    plan: the kernel is invoked per element over an Arrow batch
-    (vectorized transfer; pure-Python kernel work is the unavoidable cost
-    — SURVEY.md §2.3), and the content_type column routes each row to its
-    exact kernel. One UDF serves all families — each branch's FILTER
-    restricts which content types reach it, so no per-family
-    specialization exists at UDF-construction time (r5 review: the old
-    ``family`` parameter was dead and implied otherwise)."""
-
-    @F.pandas_udf(RESULT_SCHEMA)
-    def branch(url: pd.Series, html: pd.Series, ctype: pd.Series) -> pd.DataFrame:
-        rows = []
-        for u, payload, ct in zip(url, html, ctype):
-            t0 = time.perf_counter_ns()
-            text, ocr_used, success, error, logs = extract_payload(
-                u, payload, ct, use_ocr=use_ocr, main_content=main_content,
-                ocr_language=ocr_language, handwriting_mode=handwriting_mode,
-                legacy_office=legacy_office,
-            )
-            rows.append(
-                (text, ocr_used, success, error, logs,
-                 (time.perf_counter_ns() - t0) // 1000)
-            )
-        return pd.DataFrame(
-            rows, columns=["text", "ocr_used", "success", "error", "logs", "extract_us"]
-        )
-
-    return branch
-
-
 def salted_url_partition_key(url: Column, salt: int = DEFAULT_SALT) -> Column:
     """xxhash64(url, salt) — breaks host-level skew (Zipfian hosts) because
     the full url + salt is hashed, never the host (north rule; SURVEY.md
     §7.2 skew note)."""
     return F.xxhash64(url, F.lit(salt))
-
-
-def extract_pages(
-    pages: DataFrame,
-    num_partitions: int | None = None,
-    salt: int = DEFAULT_SALT,
-    persist_base: bool | str = False,
-    use_ocr: bool = False,
-    main_content: bool = False,
-    ocr_language: str = "eng",
-    handwriting_mode: bool = False,
-    legacy_office: bool = False,
-) -> DataFrame:
-    """pages(url, warc_ts, html, …) → extracted DataFrame (EXTRACTED_COLUMNS
-    + extracted_at). One shuffle, reused by every branch.
-
-    ``use_ocr=True`` runs the K13 glyph recognizer on image payloads (the
-    D8 consequent — reference extract_text_from_file's use_ocr flag);
-    default False preserves the metadata-only image path and the locked
-    goldens. ``main_content=True`` swaps the HTML branch to Readability-style
-    boilerplate removal (north-star extension; all other branches unchanged).
-
-    ``persist_base=True`` materializes the repartitioned+typed base into the
-    block-store (MEMORY_AND_DISK) before fan-out, so the 8 branch stages
-    read node-local cache instead of re-reading the shuffle output 8 times
-    (~25% faster here; at 100 TB it turns 8× shuffle-read amplification into
-    1 write + 8 local columnar reads). The string ``"disk"`` selects
-    DISK_ONLY instead (bench variant for memory-tight hosts — previously
-    an undocumented mode hidden behind a bool annotation, r5 review).
-    Caller owns unpersisting (or lets it age out)."""
-    spark = pages.sparkSession
-    n_parts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    typed = pages.withColumn(
-        "content_type", content_type_col(F.col("url"), F.col("html"))
-    )
-    base = typed.repartition(n_parts, salted_url_partition_key(F.col("url"), salt))
-    if persist_base:
-        from pyspark.storagelevel import StorageLevel
-
-        level = (
-            StorageLevel.DISK_ONLY
-            if persist_base == "disk"
-            else StorageLevel.MEMORY_AND_DISK
-        )
-        base = base.persist(level)
-    base = base.withColumn("partition_id", F.spark_partition_id()).withColumn(
-        "input_bytes", F.coalesce(F.length("html"), F.lit(0)).cast("long")
-    )
-
-    all_typed = [t for types in BRANCH_FAMILIES.values() for t in types]
-    branches = []
-    udf = _branch_udf(
-        use_ocr=use_ocr, main_content=main_content,
-        ocr_language=ocr_language, handwriting_mode=handwriting_mode,
-        legacy_office=legacy_office,
-    )
-    for family, types in BRANCH_FAMILIES.items():
-        pred = (
-            F.col("content_type") == types[0]
-            if len(types) == 1
-            else F.col("content_type").isin(*types)
-        )
-        b = (
-            base.filter(pred)
-            .withColumn(
-                "res", udf(F.col("url"), F.col("html"), F.col("content_type"))
-            )
-            .select("url", "content_type", "partition_id", "input_bytes", "res.*")
-        )
-        branches.append(b)
-
-    # unknown: pure Column literal branch — the junk tail never crosses into
-    # Python (reference literal, :253).
-    other = base.filter(~F.col("content_type").isin(*all_typed)).select(
-        "url",
-        "content_type",
-        "partition_id",
-        "input_bytes",
-        F.concat(F.lit("[Unsupported file type: "), F.col("content_type"), F.lit("]")).alias("text"),
-        F.lit(False).alias("ocr_used"),
-        F.lit(True).alias("success"),
-        F.lit(None).cast("string").alias("error"),
-        F.array(
-            F.concat(F.lit("Unsupported file type: "), F.col("content_type"))
-        ).alias("logs"),
-        F.lit(0).cast("long").alias("extract_us"),
-    )
-    branches.append(other)
-
-    extracted = reduce(DataFrame.unionByName, branches)
-    return extracted.withColumn("extracted_at", F.current_timestamp())
 
 
 def extract_pages_fused(
@@ -214,21 +79,19 @@ def extract_pages_fused(
     handwriting_mode: bool = False,
     legacy_office: bool = False,
 ) -> DataFrame:
-    """Single-pass variant of :func:`extract_pages`: one ``mapInPandas``
-    stage dispatches each Arrow batch to the same per-family kernels the
-    filter+union branches use, so the output is byte-identical per url
-    (locked by tests/test_pipeline.py::test_fused_equals_union).
+    """pages(url, warc_ts, html, …) → extracted DataFrame
+    (EXTRACTED_COLUMNS + extracted_at). One salted shuffle, then one
+    ``mapInPandas`` stage dispatches each Arrow batch row by row through
+    ``extract_payload``, so every row is byte-identical to the kernel
+    oracle (locked by tests/test_pipeline.py::test_pipeline_byte_identity).
 
-    Why it exists — measured on this box (150k pages, 2.17 GB html,
-    scripts/bench_variants.py): the filter+union plan re-reads the
-    repartitioned base once per branch (5 UDF branches + literal branch →
-    ~5× shuffle-read amplification), 37-80 s at 16 cores; the fused pass
-    reads it once, 15-18 s, and is far less sensitive to host I/O noise.
-    The same amplification argument holds on a real cluster at 100 TB:
-    branch fan-out turns one shuffle read into B of them. The filter+union
-    plan (north-star architecture) remains the reference implementation and
-    the two are equivalence-tested; this is the throughput path used by
-    plans/pipeline.py and bench.py.
+    ``use_ocr=True`` runs the K13 glyph recognizer on image payloads (the
+    D8 consequent — reference extract_text_from_file's use_ocr flag);
+    default False preserves the metadata-only image path and the locked
+    goldens. ``main_content=True`` swaps the HTML kernel to Readability-style
+    boilerplate removal (north-star extension; all other types unchanged).
+    ``ocr_language``, ``handwriting_mode`` and ``legacy_office`` pass
+    through to ``extract_payload`` unchanged.
 
     Column pruning matters here: only (url, html, content_type) cross the
     shuffle and the Arrow boundary; everything else is recomputed or

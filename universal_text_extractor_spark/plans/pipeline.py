@@ -33,7 +33,7 @@ table; the _SUCCESS check below is the snapshot-commit check.
 
 Scale: n_buckets bounds the blast radius of a failure (work lost ≤ 1/n of
 the job), and each bucket is itself partition-parallel inside
-``extract_pages_fused`` (or ``extract_pages`` with ``fused=False``).
+``extract_pages_fused``.
 At 10^12 docs: n_buckets ~ 10^3, bucket ~ 10^9 docs.
 
 Per bucket, the Spark jobs are the ones whose cost grows with the data:
@@ -54,7 +54,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import extract_pages, extract_pages_fused, lineage_metrics
+from ..operators.extract import extract_pages_fused, lineage_metrics
 from .storage import DEFAULT_STORAGE, StorageBackend
 
 BUCKET_SALT = 0xC0FFEE
@@ -119,7 +119,6 @@ def run_extraction(
     run_id: str | None = None,
     fail_after_buckets: int | None = None,
     fail_between_metrics_and_manifest: bool = False,
-    fused: bool = True,
     use_ocr: bool = False,
     main_content: bool = False,
     legacy_office: bool = False,
@@ -132,9 +131,7 @@ def run_extraction(
     continues from the last committed bucket; completed runs are no-ops.
 
     ``fail_after_buckets`` injects a crash after N commits (resume tests).
-    ``fused=True`` (default) runs the single-pass dispatch
-    (:func:`extract_pages_fused` — measured 2-4× faster, byte-identical
-    output); ``fused=False`` runs the filter+union branch plan.
+    Each bucket runs :func:`extract_pages_fused`.
     """
     t0 = time.time()
     _require_local_out_dir(out_dir)
@@ -253,8 +250,7 @@ def run_extraction(
             )
         # partition-pruned: only the bucket=b directory of the stage is read
         chunk = staged.filter(F.col("bucket") == b).drop("bucket")
-        extractor = extract_pages_fused if fused else extract_pages
-        extracted = extractor(
+        extracted = extract_pages_fused(
             chunk, num_partitions=num_partitions, use_ocr=use_ocr,
             main_content=main_content, ocr_language=ocr_language,
             handwriting_mode=handwriting_mode, legacy_office=legacy_office,

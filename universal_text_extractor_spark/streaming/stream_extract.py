@@ -3,8 +3,8 @@
 The reference is strictly batch (SURVEY.md §2.5) and the north star keeps
 batch + snapshot resume as the primary design; this module is the
 *incremental-arrival* complement: a parquet file-source stream of pages →
-the same dispatch kernels (fused single-pass variant; byte-identical to
-the filter+union branch plan) → checkpointed parquet sink.
+the same single-pass dispatch as batch extraction (``extract_pages_fused``)
+→ checkpointed parquet sink.
 ``trigger(availableNow=True)`` gives exactly-once, restartable batch-over-
 stream semantics (the streaming twin of plans/pipeline.py's manifest).
 
@@ -36,9 +36,6 @@ def stream_extract_pages(
         .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
     )
-    # fused single-pass dispatch: per micro-batch, the union plan's branch
-    # fan-out would re-read the (small) batch once per branch — the fused
-    # pass keeps each trigger at one shuffle + one Python stage
     extracted = extract_pages_fused(pages, num_partitions=num_partitions)
     writer = (
         extracted.writeStream.format("parquet")
