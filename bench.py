@@ -526,7 +526,7 @@ def _write_baseline_md(result: dict) -> None:
         "",
         "## Extraction throughput (two parallelism levels, same input/code)",
         "",
-        "Extraction path: `extract_pages_fused` (single-pass mapInPandas "
+        "Extraction path: `extract_pages_fused` (single-pass mapInArrow "
         "dispatch; byte-identical to the kernel oracle — locked by "
         "tests/test_pipeline.py). Best-of-"
         f"{BENCH_REPS} runs per level (host interference on this sandbox is "

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from universal_text_extractor_spark.kernels import detect_content_type, extract_payload
 from universal_text_extractor_spark.operators.extract import (
+    PartitionStatsParam,
     extract_pages_fused,
     lineage_metrics,
 )
@@ -93,19 +94,48 @@ def test_lineage_invariants(spark):
         ext.unpersist()
 
 
+def test_partition_stats_merge_overwrites():
+    """A partition reported twice (a retried, speculative or recomputed
+    task attempt) keeps one copy of its stats, not their sum; distinct
+    partitions are all kept."""
+    param = PartitionStatsParam()
+    acc = param.zero({})
+    first = [3, 30, 5, 15, 1, 0, 900]
+    for update in ({0: first}, {1: [1, 7, 7, 7, 0, 0, 40]}, {0: list(first)}):
+        acc = param.addInPlace(acc, update)
+    assert acc == {0: first, 1: [1, 7, 7, 7, 0, 0, 40]}
+
+
+def _exchange_inputs(node) -> list[list[str]]:
+    """Column names each Exchange in a physical plan reads from its child."""
+    found = []
+    if node.nodeName().endswith("Exchange"):
+        out = node.child().output()
+        found.append([out.apply(i).name() for i in range(out.size())])
+    children = node.children()
+    for i in range(children.size()):
+        found += _exchange_inputs(children.apply(i))
+    return found
+
+
 def test_fused_single_stage_plan(spark):
-    """The fused path must be exactly one shuffle + one Python stage."""
+    """The fused path must be exactly one shuffle of (url, html) + one
+    Arrow-native Python stage."""
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         pages = generate_pages_df(spark, 50, partitions=2)
-        plan = (
+        executed = (
             extract_pages_fused(pages, num_partitions=4)
-            ._jdf.queryExecution().executedPlan().toString()
+            ._jdf.queryExecution().executedPlan()
         )
+        plan = executed.toString()
         # exactly one dispatch stage (the generator contributes its own
         # MapInPandas gen(...) below the exchange) and one shuffle
-        assert plan.count("MapInPandas dispatch") == 1, plan
+        assert plan.count("MapInArrow dispatch") == 1, plan
+        assert plan.count("MapInPandas dispatch") == 0, plan
         assert plan.count("Exchange") == 1, plan
+        # the sniff runs in the dispatch: only url and html cross the shuffle
+        assert _exchange_inputs(executed) == [["url", "html"]], plan
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 

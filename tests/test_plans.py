@@ -198,7 +198,11 @@ def test_registry_wide_no_python_in_hot_paths(spark):
         if "BatchEvalPython" in plan:
             offenders.append((name, "BatchEvalPython"))
         if name not in arrow_ok and any(
-            k in plan for k in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
+            k in plan
+            for k in (
+                "ArrowEvalPython", "MapInPandas", "MapInArrow",
+                "FlatMapGroupsInPandas",
+            )
         ):
             offenders.append((name, "python-node"))
     assert not offenders, offenders
@@ -261,6 +265,7 @@ def test_registry_plan_lint_no_scale_killers(spark):
         if name not in python_ok:
             assert "ArrowEvalPython" not in plan, name
             assert "MapInPandas" not in plan, name
+            assert "MapInArrow" not in plan, name
             assert "FlatMapGroupsInPandas" not in plan, name
 
 
@@ -362,7 +367,10 @@ def test_composed_pipeline_plan_lint(spark, tmp_path):
         assert "CartesianProduct" not in plan, (name, plan)
         assert "BatchEvalPython" not in plan, (name, plan)
         if not python_ok:
-            for node in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
+            for node in (
+                "ArrowEvalPython", "MapInPandas", "MapInArrow",
+                "FlatMapGroupsInPandas",
+            ):
                 assert node not in plan, (name, node, plan)
         if max_exchanges is not None:
             n = plan.count("Exchange")

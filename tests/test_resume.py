@@ -281,10 +281,12 @@ def test_storage_seam_is_honored(spark, tmp_path, backend):
     assert r.rows_written == 100
     assert {
         "read_manifest_buckets", "stage_is_committed", "stage_pages",
-        "read_stage", "write_bucket", "read_bucket", "append_metrics",
+        "read_stage", "write_bucket", "append_metrics",
         "append_manifest", "drop_stage",
     } <= set(calls)
     assert calls.count("append_manifest") == 3  # one commit per bucket
+    # the lineage rows come from the extraction job, not a read-back
+    assert "read_bucket" not in calls
     base = str(tmp_path / "seam_base")
     run_extraction(spark, pages, base, n_buckets=3, num_partitions=2)
     if backend == "parquet":
@@ -504,13 +506,17 @@ def test_spark_written_control_tables_resume(spark, tmp_path):
 
 
 def test_control_plane_launches_no_spark_jobs(spark, tmp_path):
-    """The metrics publish, the manifest publish and the manifest read
-    run on the driver: none of them may launch a Spark job. Jobs are
-    counted per storage call through its job group, and write_bucket's
-    group is the positive control that the counting works."""
+    """A bucket commit is one Spark job family: the extraction write. The
+    lineage rows come from that job, and the metrics publish, the manifest
+    publish and the manifest read run on the driver, so a crashed run and
+    its resume launch no Spark job outside the stage_pages, read_stage and
+    write_bucket calls. Jobs are counted per storage call through its job
+    group, every other job lands in the runs' outer group, and
+    write_bucket's group is the positive control that the counting works."""
     from universal_text_extractor_spark.plans.storage import ParquetStorage
 
     sc = spark.sparkContext
+    outer = f"{tmp_path.name}-outside-storage"
     groups: list[tuple[str, str]] = []
 
     class Grouped(ParquetStorage):
@@ -524,21 +530,25 @@ def test_control_plane_launches_no_spark_jobs(spark, tmp_path):
                     try:
                         return attr(*a, **k)
                     finally:
-                        sc.setLocalProperty("spark.jobGroup.id", None)
-                        sc.setLocalProperty("spark.job.description", None)
+                        sc.setJobGroup(outer, "outside storage calls")
                 return wrapped
             return attr
 
     pages = generate_pages_df(spark, 100, partitions=2)
     out = str(tmp_path / "jobs")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_extraction(
-            spark, pages, out, n_buckets=3, num_partitions=2,
-            fail_after_buckets=1, storage=Grouped(),
+    sc.setJobGroup(outer, "outside storage calls")
+    try:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_extraction(
+                spark, pages, out, n_buckets=3, num_partitions=2,
+                fail_after_buckets=1, storage=Grouped(),
+            )
+        r = run_extraction(
+            spark, pages, out, n_buckets=3, num_partitions=2, storage=Grouped()
         )
-    r = run_extraction(
-        spark, pages, out, n_buckets=3, num_partitions=2, storage=Grouped()
-    )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert r.rows_written + _bucket_count(spark, out, 0) == 100
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
     jobs: dict[str, int] = {}
@@ -547,10 +557,44 @@ def test_control_plane_launches_no_spark_jobs(spark, tmp_path):
             sc.statusTracker().getJobIdsForGroup(group)
         )
     assert jobs["write_bucket"] >= 3
-    assert jobs["append_metrics"] == 0
-    assert jobs["append_manifest"] == 0
-    assert jobs["read_manifest_buckets"] == 0
+    assert list(sc.statusTracker().getJobIdsForGroup(outer)) == []
+    data_plane = {"stage_pages", "read_stage", "write_bucket"}
+    assert {n: c for n, c in jobs.items() if n not in data_plane and c} == {}
     assert [n for n, _ in groups].count("append_metrics") == 3
+
+
+def test_published_lineage_equals_spark_aggregate(spark, tmp_path):
+    """Each bucket's metrics rows come from its extraction tasks, not from
+    an aggregate over the written bucket: they must equal
+    ``lineage_metrics(read_bucket(b))`` on every column but ``ts`` (the
+    latency too — both sum the same ``extract_us``), including having no
+    row for a partition that received no pages."""
+    from universal_text_extractor_spark.operators.extract import (
+        lineage_metrics,
+    )
+    from universal_text_extractor_spark.plans.storage import DEFAULT_STORAGE
+
+    pages = generate_pages_df(spark, 60, partitions=2)
+    out = str(tmp_path / "lineage")
+    r = run_extraction(spark, pages, out, n_buckets=3, num_partitions=16)
+    m = spark.read.parquet(f"{out}/metrics")
+    assert m.schema.simpleString() == METRICS_SCHEMA
+    cols = [c for c in m.columns if c != "ts"]
+    got = sorted(tuple(row) for row in m.select(*cols).collect())
+    want = sorted(
+        tuple(row)
+        for b in range(3)
+        for row in lineage_metrics(
+            DEFAULT_STORAGE.read_bucket(spark, out, b), r.run_id
+        )
+        .withColumn("bucket", F.lit(b))
+        .select(*cols)
+        .collect()
+    )
+    assert got == want
+    # ~20 pages per bucket over 16 partitions: some partitions stay empty
+    assert len(got) < 3 * 16
+    assert r.rows_written == sum(row[1] for row in got) == 60
 
 
 def test_unpinned_dir_with_commits_refused(spark, tmp_path):

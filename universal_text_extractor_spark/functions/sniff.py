@@ -15,8 +15,10 @@ locks it over the full synthetic corpus):
    bytes (expressed as a regexp over hex pairs — stays in WholeStageCodegen)
 5. default: unknown
 
-Everything here is JVM-side — the detection column costs no Python round
-trip at 100 TB scale.
+Everything here is JVM-side. The extraction path no longer uses it: its
+``mapInArrow`` dispatch runs ``detect_content_type`` per row in the worker,
+which avoids building this expression (~40 py4j calls) on the driver for
+every plan. It stays for the benchmark's sniff probe and the parity test.
 """
 
 from __future__ import annotations

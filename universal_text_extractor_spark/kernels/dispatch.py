@@ -7,11 +7,13 @@ reference's ``mimetypes.guess_type`` fallback (our input is a binary column,
 not a file path, so the sniff reads magic bytes instead of guessing from the
 path — BASELINE.json input_hint).
 
-IMPORTANT PARITY CONTRACT: every rule here is *also* implemented as a pure
-Spark Column expression in ``functions/sniff.py`` (JVM-side, no Python).
-The two are kept byte-for-byte rule-identical and locked by a parity test
-over the full synthetic corpus (tests/test_dispatch.py). Change both or
-neither.
+``detect_content_type`` is the sniff the extraction path runs: the
+``mapInArrow`` dispatch (operators/extract.py) calls it per row. Its rules
+are *also* implemented as a pure Spark Column expression in
+``functions/sniff.py``, which now serves only the benchmark's sniff probe
+and the parity test that keeps the two rule-identical over the full
+synthetic corpus (tests/test_dispatch.py). Change both or neither until
+that twin is deleted.
 
 ``extract_payload`` is the 12-way dispatcher + error-containment wrapper
 (reference utils/file_handlers.py:174-259): any kernel exception becomes the

@@ -36,11 +36,16 @@ the job), and each bucket is itself partition-parallel inside
 ``extract_pages_fused``.
 At 10^12 docs: n_buckets ~ 10^3, bucket ~ 10^9 docs.
 
-Per bucket, the Spark jobs are the ones whose cost grows with the data:
-the extraction + bucket write, and the lineage aggregate over the
-read-back. The aggregate is collected to the driver once; the metrics and
-manifest publishes that follow are driver-side file writes of those few
-rows (see ``storage.py``), not further Spark jobs.
+Per bucket, the only Spark job is the one whose cost grows with the
+data: the extraction + bucket write. Its tasks also report each
+partition's lineage stats into an accumulator (``extract_pages_fused``'s
+``lineage``), merged by partition id with overwrite so a retried or
+recomputed task attempt cannot count twice. The driver builds the
+bucket's metrics rows from those stats — the rows ``lineage_metrics``
+would aggregate over the written bucket — and the metrics and manifest
+publishes that follow are driver-side file writes of those few rows (see
+``storage.py``), not further Spark jobs. Accumulators need a classic
+(py4j) session; Spark Connect has none.
 """
 
 from __future__ import annotations
@@ -50,14 +55,38 @@ import os
 import shutil
 import time
 import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import extract_pages_fused, lineage_metrics
+from ..operators.extract import (
+    LINEAGE_STATS,
+    PartitionStatsParam,
+    extract_pages_fused,
+)
 from .storage import DEFAULT_STORAGE, StorageBackend
 
 BUCKET_SALT = 0xC0FFEE
+
+# the metrics table's rows: lineage_metrics' columns plus the bucket, with
+# the types and nullability its Spark aggregate gives them
+_METRICS_SCHEMA = pa.schema(
+    [
+        pa.field("partition_id", pa.int64()),
+        pa.field("doc_count", pa.int64(), nullable=False),
+        pa.field("input_bytes", pa.int64()),
+        pa.field("byte_range_start", pa.int64()),
+        pa.field("byte_range_end", pa.int64()),
+        pa.field("failure_count", pa.int64()),
+        pa.field("ocr_count", pa.int64()),
+        pa.field("extraction_latency", pa.float64()),
+        pa.field("run_id", pa.string(), nullable=False),
+        pa.field("ts", pa.timestamp("us", tz="UTC"), nullable=False),
+        pa.field("bucket", pa.int32(), nullable=False),
+    ]
+)
 
 
 def _require_local_out_dir(out_dir: str) -> None:
@@ -104,6 +133,28 @@ def _rm_f(path: str) -> None:
         pass
 
 
+def _metrics_table(stats: dict, run_id: str, bucket: int) -> pa.Table:
+    """One bucket's metrics rows, built on the driver from the
+    ``{partition_id: [LINEAGE_STATS values]}`` its extraction tasks
+    reported: the rows ``lineage_metrics`` aggregates from the written
+    bucket, ``ts`` aside."""
+    ts = datetime.now(timezone.utc)
+    return pa.Table.from_pylist(
+        [
+            {
+                "partition_id": pid,
+                **dict(zip(LINEAGE_STATS[:-1], values[:-1])),
+                "extraction_latency": values[-1] / 1_000_000.0,
+                "run_id": run_id,
+                "ts": ts,
+                "bucket": bucket,
+            }
+            for pid, values in sorted(stats.items())
+        ],
+        schema=_METRICS_SCHEMA,
+    )
+
+
 def committed_buckets(
     spark: SparkSession, out_dir: str, storage: StorageBackend = DEFAULT_STORAGE
 ) -> list[int]:
@@ -131,7 +182,9 @@ def run_extraction(
     continues from the last committed bucket; completed runs are no-ops.
 
     ``fail_after_buckets`` injects a crash after N commits (resume tests).
-    Each bucket runs :func:`extract_pages_fused`.
+    Each bucket runs :func:`extract_pages_fused` with a ``lineage``
+    accumulator, so ``spark`` must be a classic (py4j) session:
+    accumulators do not exist under Spark Connect.
     """
     t0 = time.time()
     _require_local_out_dir(out_dir)
@@ -250,23 +303,18 @@ def run_extraction(
             )
         # partition-pruned: only the bucket=b directory of the stage is read
         chunk = staged.filter(F.col("bucket") == b).drop("bucket")
+        # the extraction tasks report their partitions' lineage stats into
+        # this accumulator, so the bucket write is the commit's only job
+        lineage = spark.sparkContext.accumulator({}, PartitionStatsParam())
         extracted = extract_pages_fused(
             chunk, num_partitions=num_partitions, use_ocr=use_ocr,
             main_content=main_content, ocr_language=ocr_language,
             handwriting_mode=handwriting_mode, legacy_office=legacy_office,
+            lineage=lineage,
         )
         # write-then-publish: data, metrics, manifest — in that order
         storage.write_bucket(extracted, out_dir, b)
-        written = storage.read_bucket(spark, out_dir, b)
-        # collect the (≤num_partitions) lineage rows once, as Arrow (``ts``
-        # keeps its UTC timestamp type): the rows both publish to the
-        # metrics table and carry doc_count, so no extra written.count()
-        # action re-reads the bucket output
-        metrics = (
-            lineage_metrics(written, run_id)
-            .withColumn("bucket", F.lit(b))
-            .toArrow()
-        )
+        metrics = _metrics_table(lineage.value, run_id, b)
         if metrics.num_rows:
             storage.append_metrics(spark, metrics, out_dir)
         if fail_between_metrics_and_manifest:

@@ -22,8 +22,13 @@ read_manifest_buckets  driver: pyarrow read                SELECT DISTINCT bucke
 drop_stage             rm -r ``_staged``                   DROP TABLE stage
 =====================  ==================================  ==========================================
 
+``read_bucket`` is not on the commit path: the pipeline takes each
+bucket's lineage rows from its extraction job, not from a read-back. It
+stays on the protocol for readers of one bucket (``storage_smoke``, the
+resume tests, the benchmark's timing proxy).
+
 ``append_metrics`` takes the lineage rows the pipeline has already
-collected to the driver, as an Arrow table. The parquet backend keeps
+built on the driver, as an Arrow table. The parquet backend keeps
 them there: the metrics and manifest rows of a bucket are a handful of
 rows, so they are written with ``pyarrow`` and published by rename, not
 as Spark jobs. The extracted data itself always moves through Spark.
@@ -77,7 +82,7 @@ class ParquetStorage:
     """Default backend: plain parquet + ``_manifest`` + ``_staged``
     (partitionBy bucket) under ``out_dir`` on the LOCAL filesystem.
 
-    The data plane (stage, bucket write and read-back) runs as Spark jobs.
+    The data plane (stage, bucket write and read) runs as Spark jobs.
     The control plane (metrics, manifest) runs on the driver with
     ``pyarrow``: each publish writes into a ``.``-prefixed path, which
     Spark's file index and ``pyarrow`` datasets both skip, then renames it
