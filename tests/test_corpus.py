@@ -385,10 +385,10 @@ def test_minhash_pairs_from_staged_flat_equals_pure_operator(spark, tmp_path):
 
 
 def test_bucket_min_from_flat_equals_document_fed(spark, tmp_path):
-    """The flat-fed bucket-min arm of near_dup_purged (bands derived from
-    a staged hashed-shingle relation) must keep exactly the same survivor
-    set as the document-fed arm — the two sources feed one shared
-    bucket-min block, and this locks that they stay interchangeable."""
+    """Bucket-min near_dup_purged fed a STAGED hashed-shingle relation
+    must keep exactly the same survivor set as near_dup_purged deriving
+    the flat shingles from the documents itself — the staging is a
+    physical choice, not a semantic one."""
     import random
 
     from pyspark.sql import Row

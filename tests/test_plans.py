@@ -270,19 +270,22 @@ def test_registry_plan_lint_no_scale_killers(spark):
 
 
 def test_corpus_pipeline_plan_shapes(spark):
-    """plans/corpus.py stage plans (design-for-100-TB audit): the quality
-    purge is a pure scan+filter (zero Exchange, no Python); the exact
-    purge is a map-side-combinable key aggregate + LEFT SEMI join; the
-    bucket-min near-dup fast path is partial_min + LEFT ANTI — no pair
+    """plans/corpus.py stage plans (design-for-100-TB audit), built by the
+    functions build_training_corpus runs: the quality purge is a pure
+    scan+filter (zero Exchange, no Python); the exact purge is a
+    map-side-combinable key aggregate + LEFT SEMI join; the bucket-min
+    near-dup fast path is partial_min + LEFT ANTI — no pair
     materialization and no Python anywhere."""
     from pyspark.sql import Row
-    from pyspark.sql import functions as F
 
-    from universal_text_extractor_spark.functions.text_funcs import (
-        normalized_text_col,
-        token_count_col,
+    from universal_text_extractor_spark.plans.corpus import (
+        exact_unique,
+        near_dup_purged,
+        quality_filter,
     )
-    from universal_text_extractor_spark.operators.dedup import lsh_bands, md5_long
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
 
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
@@ -293,44 +296,13 @@ def test_corpus_pipeline_plan_shapes(spark):
                 for i in range(50)
             ]
         )
-        alpha = F.length(F.regexp_replace(F.col("text"), r"[^\p{L}]", ""))
-        q = docs.filter(
-            (token_count_col(F.col("text")) >= 15)
-            & (alpha / F.greatest(F.col("n_chars"), F.lit(1)) >= 0.5)
-        )
-        p = q._jdf.queryExecution().executedPlan().toString()
+        p = plan(quality_filter(docs, min_alpha_ratio=0.5))
         assert p.count("Exchange") == 0 and "Python" not in p
 
-        kept = (
-            docs.select(
-                "doc_id", md5_long(normalized_text_col(F.col("text"))).alias("k")
-            )
-            .groupBy("k")
-            .agg(F.min("doc_id").alias("doc_id"))
-            .select("doc_id")
-        )
-        p = (
-            docs.join(kept, "doc_id", "left_semi")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        p = plan(exact_unique(docs))
         assert "partial_min" in p and "LeftSemi" in p and "Python" not in p
 
-        bands = lsh_bands(docs)
-        bm = bands.groupBy("band", "bucket").agg(F.min("doc_id").alias("min_id"))
-        doomed = (
-            bands.join(bm, ["band", "bucket"])
-            .filter(F.col("doc_id") != F.col("min_id"))
-            .select("doc_id")
-            .distinct()
-        )
-        p = (
-            docs.join(doomed, "doc_id", "left_anti")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        p = plan(near_dup_purged(docs, verify_jaccard=False))
         assert "partial_min" in p and "LeftAnti" in p and "Python" not in p
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -342,7 +314,8 @@ def test_composed_pipeline_plan_lint(spark, tmp_path):
     extraction, lineage), every build_training_corpus stage builder (all
     three near-dup variants, exactly the compositions production runs),
     and read_warc. No CartesianProduct, no BatchEvalPython anywhere;
-    Exchange counts pinned where the design pins them."""
+    Exchange counts pinned where the design pins them; no lambda
+    higher-order function in the quality, exact or near-dup plans."""
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
@@ -362,10 +335,15 @@ def test_composed_pipeline_plan_lint(spark, tmp_path):
     )
     from universal_text_extractor_spark.sources.warc import make_warc, read_warc
 
-    def lint(df, name, python_ok=True, max_exchanges=None):
+    def lint(df, name, python_ok=True, max_exchanges=None, lambda_ok=True):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, (name, plan)
         assert "BatchEvalPython" not in plan, (name, plan)
+        if not lambda_ok:
+            # higher-order array functions (transform/filter/aggregate)
+            # evaluate interpreted per element; the text-signal plans stay
+            # flat (explode -> plain columns -> hash aggregate)
+            assert "lambdafunction" not in plan, (name, plan)
         if not python_ok:
             for node in (
                 "ArrowEvalPython", "MapInPandas", "MapInArrow",
@@ -392,20 +370,25 @@ def test_composed_pipeline_plan_lint(spark, tmp_path):
 
         # --- corpus stage builders over a framed-docs shape
         docs = frame_documents(extracted)
+        # frame_documents is exempt from the lambda lint: its lang_id_col
+        # still scores with an F.filter lambda until the flat lang-ID
+        # scorer replaces it (ROADMAP direction 2)
         lint(docs, "frame_documents")
         q = quality_filter(spark.createDataFrame(
             [Row(doc_id=i, url=f"https://h{i}.ex/a", source="s", lang="en",
                  text="plan lint words " * 8, n_chars=120) for i in range(40)]
         ))
-        lint(q, "quality_filter", python_ok=False, max_exchanges=0)
+        lint(q, "quality_filter", python_ok=False, max_exchanges=0,
+             lambda_ok=False)
         e = exact_unique(q)
-        lint(e, "exact_unique", python_ok=False)
+        lint(e, "exact_unique", python_ok=False, lambda_ok=False)
         for kw, nm in (
             (dict(verify_jaccard=True), "near_dup_keep_first"),
             (dict(verify_jaccard=True, closure=True), "near_dup_closure"),
             (dict(verify_jaccard=False), "near_dup_bucket_min"),
         ):
-            lint(near_dup_purged(q, **kw), nm, python_ok=False)
+            lint(near_dup_purged(q, **kw), nm, python_ok=False,
+                 lambda_ok=False)
 
         # --- read_warc: path listing + task-side streaming parse; no
         # shuffle between the listing and the parser

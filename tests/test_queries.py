@@ -109,15 +109,26 @@ def test_entry_runs(spark):
     assert df.columns == ["lang", "source", "n_docs", "avg_chars", "avg_tokens", "max_chars"]
 
 
-def test_dedup_flat_equals_array(spark):
-    """_shingles_flat (narrow regex-lookahead formulation) must produce the
-    same shingle set per doc as the array expression shingles_col — both
-    over the NORMALIZED word basis, including text that leads/trails with
-    non-space whitespace (trim removes only spaces; the r5 audit caught
-    the pre-normalization basis emitting junk shingles like ' b c' for
-    3,266 leading-newline docs in the 20k bench corpus)."""
-    from pyspark.sql import functions as F
+def _py_shingles(text: str) -> set[str]:
+    """Independent pure-Python shingle oracle: lowercase, split on any
+    whitespace run (str.split drops leading/trailing whitespace of every
+    kind), distinct word-SHINGLE_K-grams."""
+    from universal_text_extractor_spark.operators.dedup import SHINGLE_K
 
+    words = text.lower().split()
+    return {
+        " ".join(words[j : j + SHINGLE_K])
+        for j in range(len(words) - SHINGLE_K + 1)
+    }
+
+
+def test_shingles_flat_matches_python_oracle(spark):
+    """_shingles_flat (narrow regex-lookahead formulation) must produce the
+    same shingle set per doc as the pure-Python oracle over 500 corpus docs
+    plus text that leads/trails with non-space whitespace (trim removes
+    only spaces; the r5 audit caught the pre-normalization basis emitting
+    junk shingles like ' b c' for 3,266 leading-newline docs in the 20k
+    bench corpus)."""
     from universal_text_extractor_spark.operators import dedup as D
 
     edge = spark.createDataFrame(
@@ -128,12 +139,15 @@ def test_dedup_flat_equals_array(spark):
         ],
         "doc_id long, text string",
     )
-    docs = (
+    # one collect feeds both sides, so the limit's row choice cannot differ
+    rows = (
         spark.read.parquet(f"{SF_DIR}/documents.parquet")
         .limit(500)
         .select("doc_id", "text")
         .unionByName(edge)
+        .collect()
     )
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
     # the edge docs must shingle cleanly: no empty-token artifacts
     got = {
         r["shingle"]
@@ -146,19 +160,15 @@ def test_dedup_flat_equals_array(spark):
         (r["doc_id"], r["shingle"])
         for r in D._shingles_flat(docs).collect()
     }
-    arr = {
-        (r["doc_id"], s)
-        for r in D._shingled(docs).collect()
-        for s in r["shingles"]
-    }
-    assert flat == arr
+    want = {(r["doc_id"], s) for r in rows for s in _py_shingles(r["text"])}
+    assert flat == want
 
 
 def test_shingles_fuzz_vs_python_oracle(spark):
     """300 random whitespace-laden texts (tabs, newlines, runs, unicode
-    words, leading/trailing junk) → _shingles_flat must equal an
-    INDEPENDENT pure-Python oracle: normalize whitespace, split on single
-    spaces, distinct k-grams. One Spark job for the whole batch."""
+    words, leading/trailing junk) → _shingles_flat must equal the
+    independent pure-Python oracle (:func:`_py_shingles`). One Spark job
+    for the whole batch."""
     import random
 
     from universal_text_extractor_spark.operators import dedup as D
@@ -175,19 +185,12 @@ def test_shingles_fuzz_vs_python_oracle(spark):
         text = rng.choice(["", " ", "\n", "\t "]) + body
         rows.append((i, text))
 
-    def oracle(text: str) -> set[str]:
-        words = text.lower().split()  # str.split collapses all whitespace
-        k = D.SHINGLE_K
-        return {
-            " ".join(words[j : j + k]) for j in range(len(words) - k + 1)
-        }
-
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got: dict[int, set] = {}
     for r in D._shingles_flat(docs).collect():
         got.setdefault(r["doc_id"], set()).add(r["shingle"])
     for i, text in rows:
-        assert got.get(i, set()) == oracle(text), (i, repr(text))
+        assert got.get(i, set()) == _py_shingles(text), (i, repr(text))
 
 
 def test_exact_purge_with_real_duplicates(spark, duck):

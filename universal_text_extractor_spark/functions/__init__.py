@@ -1,15 +1,8 @@
 from .sniff import content_type_col
-from .text_funcs import (
-    token_count_col,
-    quality_score_cols,
-    normalized_text_col,
-    shingles_col,
-)
+from .text_funcs import normalized_text_col, token_count_col
 
 __all__ = [
     "content_type_col",
     "token_count_col",
-    "quality_score_cols",
     "normalized_text_col",
-    "shingles_col",
 ]

@@ -1,8 +1,8 @@
 """Text-analysis Column expressions for training-data pipelines.
 
-All JVM-side (whole-stage-codegen-friendly): token counting, quality
-scoring, normalization, and word-shingling for MinHash. Each has an ANSI-SQL
-twin used as the DuckDB oracle in __spark_entry__.py — keep rule-identical.
+All JVM-side (whole-stage-codegen-friendly): normalization, token
+counting and word lists. Each has an ANSI-SQL twin used as the DuckDB oracle
+in __spark_entry__.py — keep rule-identical.
 """
 
 from __future__ import annotations
@@ -10,8 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# fixed stopword list — part of the quality-score contract (mirrored in the
-# oracle SQL; do not reorder/change without updating both)
+# fixed stopword list — part of the quality_summary contract (mirrored in
+# the oracle SQL; do not reorder/change without updating both)
 STOPWORDS = (
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "that", "this", "for", "on", "with", "as", "was", "are", "be", "at",
@@ -42,70 +42,4 @@ def words_col(text: Column) -> Column:
     t = normalized_text_col(text)
     return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
         F.split(t, " ")
-    )
-
-
-def quality_score_cols(text: Column) -> dict[str, Column]:
-    """Length / punctuation / stopword heuristics (quality scoring for a
-    training-data pipeline). Deterministic, SQL-expressible."""
-    n_chars = F.length(text)
-    # \p{L} (any Unicode letter), not [A-Za-z]: the ratio claims to be
-    # language-agnostic, and an ASCII class systematically under-scores
-    # accented/non-Latin documents (r5 review finding). Java and RE2
-    # (DuckDB) agree on the class, so the oracle twin moves in lockstep.
-    alpha = F.length(F.regexp_replace(text, r"[^\p{L}]", ""))
-    punct = F.length(F.regexp_replace(text, r"[^.,;:!?'\"()\[\]-]", ""))
-    toks = words_col(text)
-    n_tok = F.size(toks)
-    stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda w: F.array_contains(stop_arr, w)))
-    safe_tok = F.greatest(n_tok, F.lit(1))
-    safe_chars = F.greatest(n_chars, F.lit(1))
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tok,
-        "alpha_ratio": F.round(alpha / safe_chars, 4),
-        "punct_ratio": F.round(punct / safe_chars, 4),
-        "stopword_ratio": F.round(n_stop / safe_tok, 4),
-        "mean_token_len": F.round(
-            (F.length(F.regexp_replace(F.trim(text), _WS, ""))) / safe_tok, 4
-        ),
-    }
-
-
-def shingles_col(text: Column, k: int = 3) -> Column:
-    """Distinct word k-shingles (space-joined); empty array when fewer than
-    k tokens. Basis for MinHash / Jaccard dedup.
-
-    Words come from the NORMALIZED text (whitespace collapsed, then
-    trimmed), not ``words_col``: ``trim`` removes only ASCII spaces, so
-    text leading/trailing with a newline or tab gave ``words_col`` an
-    empty first/last token and this column a junk shingle like ``" b c"``
-    (r5 finding — 3,266 such docs in the 20k bench corpus). The dedup
-    operators' flat formulation and the DuckDB oracle share this
-    normalized basis."""
-    norm = normalized_text_col(text)
-    w = F.when(F.length(norm) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(norm, " ")
-    )
-    n = F.size(w)
-    idx = F.sequence(F.lit(1), n - F.lit(k - 1))
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i, k)))
-    return F.when(n < F.lit(k), F.array().cast("array<string>")).otherwise(
-        F.array_distinct(sh)
-    )
-
-
-def minhash_sig_col(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as array<long>, cross-engine reproducible: hash_j =
-    min over shingles of int(md5(j ':' shingle)[:15], 16). md5 is identical
-    in Spark and DuckDB, so the oracle can recompute signatures exactly."""
-    def _seeded(j: int):  # factory — a default-arg lambda would make pyspark
-        # pass the element index as the second lambda variable
-        return lambda s: F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{j}:"), s)), 1, 15), 16, 10
-        ).cast("long")
-
-    return F.array(
-        *[F.array_min(F.transform(shingles, _seeded(j))) for j in range(num_hashes)]
     )

@@ -1,8 +1,9 @@
 """Pure-Python extraction kernels. NO Spark imports allowed here.
 
 These functions are the byte-identity oracle (locked by tests/goldens) AND
-the body of the Arrow pandas UDFs — shared verbatim so the pipeline is
-byte-identical to the oracle by construction (SURVEY.md §5, §7.2).
+the body of the `mapInArrow` extraction dispatch — shared verbatim so the
+pipeline is byte-identical to the oracle by construction (SURVEY.md §5,
+§7.2).
 """
 
 from .charset import decode_utf8_replace, detect_and_decode

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text_funcs import normalized_text_col, shingles_col
+from ..functions.text_funcs import normalized_text_col
 
 NUM_MINHASHES = 16
 LSH_BANDS = 4  # 4 bands × 4 rows
@@ -81,29 +81,29 @@ def exact_dedup_keep(documents: DataFrame) -> DataFrame:
     return kept.agg(F.count("*").alias("kept_count"))
 
 
-def exact_dedup_purge(documents: DataFrame) -> DataFrame:
-    """The purge itself (the operator a pipeline consumer actually runs):
-    the corpus minus non-canonical exact duplicates — every document whose
-    doc_id is the min of its normalized-text group. One hash aggregate on
-    the 8-byte key plus a LEFT SEMI join back (no row multiplication, no
-    document bytes through the second shuffle). Companion to the
-    report-side dd1/dd2."""
-    key = md5_long(normalized_text_col(F.col("text")))
+def exact_unique(quality: DataFrame) -> DataFrame:
+    """The purge itself (the operator a pipeline consumer actually runs;
+    plans/corpus.py runs it on the quality-purged docs): the corpus minus
+    non-canonical exact duplicates — every document whose doc_id is the
+    min of its normalized-text group, all columns kept. One
+    map-combinable hash aggregate on the 8-byte key plus a LEFT SEMI join
+    back (no row multiplication, no document bytes through the second
+    shuffle)."""
     kept_ids = (
-        documents.select("doc_id", key.alias("text_key"))
-        .groupBy("text_key")
+        quality.select(
+            "doc_id", md5_long(normalized_text_col(F.col("text"))).alias("k")
+        )
+        .groupBy("k")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    return documents.join(kept_ids, "doc_id", "left_semi").select(
-        "doc_id", "lang", "source", "n_chars"
-    )
+    return quality.join(kept_ids, "doc_id", "left_semi")
 
 
-def _shingled(documents: DataFrame) -> DataFrame:
-    return documents.select(
-        "doc_id", shingles_col(F.col("text"), SHINGLE_K).alias("shingles")
-    ).withColumn("n_shingles", F.size("shingles"))
+def exact_dedup_purge(documents: DataFrame) -> DataFrame:
+    """dd7: :func:`exact_unique` projected to the graded columns.
+    Companion to the report-side dd1/dd2."""
+    return exact_unique(documents).select("doc_id", "lang", "source", "n_chars")
 
 
 # Overlapping word-SHINGLE_K-grams in ONE regex pass over the normalized
@@ -121,16 +121,17 @@ def _shingles_flat(documents: DataFrame) -> DataFrame:
     pass forms every overlapping shingle JVM-side, ``array_distinct``
     dedupes per doc BEFORE the explode (a doc's rows never leave its input
     partition, so per-doc distinct needs no exchange), then a plain
-    explode. Same shingle *set* per doc as the array expression
-    ``shingles_col`` (locked by test_dedup_flat_equals_array). Two earlier
-    formulations measured worse: ``transform``+``slice`` evaluates
-    interpreted per element (~10× slower on the sf0.1 corpus), and the
-    posexplode→window-``lead`` pipeline paid an exchange+sort over every
-    token row plus a distinct over 25M shingle STRINGS (the r5 profile
-    measured it 35-96 s vs 7-15 s for this form at 20k docs). At 100 TB
-    the flat shape feeds the inverted-index join / min-aggregation without
-    materializing per-doc arrays — and without this stage shuffling at
-    all."""
+    explode. The shingle set per doc is locked against an independent
+    pure-Python oracle (normalize whitespace, split, distinct k-grams) in
+    tests/test_queries.py, and the dd3/dd4 DuckDB twins form the same set.
+    Two earlier formulations measured worse: ``transform``+``slice``
+    evaluates interpreted per element (~10× slower on the sf0.1 corpus),
+    and the posexplode→window-``lead`` pipeline paid an exchange+sort over
+    every token row plus a distinct over 25M shingle STRINGS (the r5
+    profile measured it 35-96 s vs 7-15 s for this form at 20k docs). At
+    100 TB the flat shape feeds the inverted-index join / min-aggregation
+    without materializing per-doc arrays — and without this stage
+    shuffling at all."""
     norm = normalized_text_col(F.col("text"))
     return documents.select(
         "doc_id",
@@ -235,13 +236,20 @@ def ngram_jaccard_pairs(
 def minhash_signatures_from_flat(flat: DataFrame) -> DataFrame:
     """(doc_id, sig array<long>[NUM_MINHASHES]) from a precomputed flat
     (doc_id, h) HASHED-shingle relation (:func:`_shingle_hashes_flat`) —
-    the shape :func:`minhash_signatures` wraps, exposed so pipelines that
-    MATERIALIZE the flat shingles once (plans/corpus.py stages them to
-    parquet, r4 verdict item #2) can derive signatures, bands, and the
-    Jaccard verify from the same staged rows instead of re-deriving the
-    shingle subtree per consumer. The min-aggregate combines map-side, and
-    a doc's shingle rows never span partitions (narrow formation), so the
-    exchange carries one partial row per doc."""
+    md5-seeded MinHash (h XOR XOR_SEEDS[j]), reproducible in the DuckDB
+    oracle. Taking the flat relation lets pipelines that MATERIALIZE the
+    flat shingles once (plans/corpus.py stages them to parquet, r4 verdict
+    item #2) derive signatures, bands, and the Jaccard verify from the same
+    staged rows instead of re-deriving the shingle subtree per consumer.
+
+    Plan shape: 16 min-aggregates over ONE flat hash column in a single
+    hash aggregate, then pack the array. Higher-order array functions
+    (``transform``/``array_min``) evaluate interpreted per element — an
+    earlier 16-``transform`` formulation spent ~6 s on 5k docs; this one
+    stays inside whole-stage codegen (measured ~4× faster). The
+    min-aggregate combines map-side, and a doc's shingle rows never span
+    partitions (narrow formation), so the exchange carries one partial row
+    per doc."""
     mins = flat.groupBy("doc_id").agg(
         *[
             F.min(F.col("h").bitwiseXOR(F.lit(seed))).alias(f"m{j}")
@@ -252,23 +260,12 @@ def minhash_signatures_from_flat(flat: DataFrame) -> DataFrame:
     return mins.select("doc_id", sig.alias("sig"))
 
 
-def minhash_signatures(documents: DataFrame) -> DataFrame:
-    """(doc_id, sig array<long>[NUM_MINHASHES]) — md5-seeded MinHash,
-    reproducible in the DuckDB oracle.
-
-    Plan shape: explode shingles → ONE flat md5 column → 16 min-aggregates
-    in a single hash aggregate, then pack the array. Higher-order array
-    functions (``transform``/``array_min``) evaluate interpreted per
-    element in Spark — the earlier 16-``transform`` formulation spent ~6 s
-    on 5k docs; the exploded flat pipeline stays inside whole-stage
-    codegen end-to-end (measured ~4× faster) and, at 100 TB, lets the
-    min-aggregation combine map-side before any shuffle."""
-    return minhash_signatures_from_flat(_shingle_hashes_flat(documents))
-
-
 def lsh_bands_from_sigs(sigs: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) from a precomputed signatures relation —
-    see :func:`minhash_signatures_from_flat` for why this is split out."""
+    """(doc_id, band, bucket) — the banded MinHash signature rows
+    (LSH_BANDS bands × NUM_MINHASHES/LSH_BANDS rows per bucket key) from a
+    signatures relation (:func:`minhash_signatures_from_flat`). Shared by
+    the pair-generating path below and the pair-free bucket-min purge in
+    plans/corpus.py."""
     rows_per_band = NUM_MINHASHES // LSH_BANDS
     return sigs.select(
         "doc_id",
@@ -290,14 +287,6 @@ def lsh_bands_from_sigs(sigs: DataFrame) -> DataFrame:
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
-
-
-def lsh_bands(documents: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) — the banded MinHash signature rows
-    (LSH_BANDS bands × NUM_MINHASHES/LSH_BANDS rows per bucket key).
-    Shared by the pair-generating path below and the pair-free
-    bucket-min purge in plans/corpus.py."""
-    return lsh_bands_from_sigs(minhash_signatures(documents))
 
 
 def minhash_lsh_pairs_from_flat(
@@ -367,57 +356,22 @@ def _simhash_bit_value(bb: int) -> int:
     return -(1 << 63) if bb == 63 else (1 << bb)
 
 
-def simhash_col(text: Column, bits: int = 16) -> Column:
-    """SimHash over whitespace tokens: bit b of the fingerprint is the sign
-    of Σ_tokens (±1 by bit b of md5_long(token)). ``bits`` kept small so
-    the oracle SQL (which expands per bit) stays tractable; the Spark shape
-    is identical at 64 bits (fingerprint bits ≥ 60 draw from a SECOND
-    prefixed md5 — md5_long yields only 60 bits, so bits 60-63 of one
-    hash are constant zero; see :func:`simhash_fingerprints`).
-
-    Token basis = the NORMALIZED text (same r5 rule as shingles): a
-    space-only ``trim`` over raw text left docs with leading/trailing
-    ``\\n``/``\\t`` a phantom empty token whose md5 contributed ±1 to
-    every bit sum, pushing near-identical docs several hamming bits
-    apart (r5 review finding)."""
-    toks = F.filter(
-        F.split(normalized_text_col(text), " "), lambda t: t != ""
-    )
-    hashes = F.transform(toks, lambda t: md5_long(t))
-    hashes_hi = (
-        F.transform(toks, lambda t: md5_long(t, prefix="hi:"))
-        if bits > 60
-        else None
-    )
-
-    def _bit_merge(sh: int):  # factory — see _seeded note in minhash_signatures
-        return lambda acc, h: acc + (
-            F.shiftright(h, sh).bitwiseAND(F.lit(1)) * 2 - 1
-        )
-
-    bit_cols = []
-    for bb in range(bits):
-        src, sh = (hashes, bb) if bb < 60 else (hashes_hi, bb - 60)
-        contrib = F.aggregate(src, F.lit(0).cast("long"), _bit_merge(sh))
-        bit_cols.append(
-            F.when(contrib > 0, F.lit(_simhash_bit_value(bb)).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out + c
-    return out
-
-
 def simhash_fingerprints(documents: DataFrame, bits: int = 16) -> DataFrame:
-    """(doc_id, simhash) — flat formulation of :func:`simhash_col`: explode
-    tokens, hash the flat column, take the 16 per-bit sign-sums in ONE hash
-    aggregate (map-side combinable; the per-token ``aggregate`` lambda in
-    simhash_col evaluates interpreted). Same fingerprints, locked by the
-    dd5 oracle. Tokens derive from the NORMALIZED text with empties
-    dropped (see :func:`simhash_col` — the phantom-empty-token fix);
-    blank documents therefore carry no fingerprint row (they are exact
-    dups of each other and die in exact dedup upstream)."""
+    """(doc_id, simhash) — SimHash over whitespace tokens: bit b of the
+    fingerprint is the sign of Σ_tokens (±1 by bit b of md5_long(token)).
+    Flat formulation: explode tokens, hash the flat column, take the
+    per-bit sign-sums in ONE hash aggregate (map-side combinable; a
+    per-token ``aggregate`` lambda over a token array evaluates
+    interpreted). Locked by the dd5/dd6 oracles and, at 64 bits, by a
+    brute-force pure-Python test.
+
+    Token basis = the NORMALIZED text with empties dropped (same r5 rule
+    as shingles): a space-only ``trim`` over raw text left docs with
+    leading/trailing ``\\n``/``\\t`` a phantom empty token whose md5
+    contributed ±1 to every bit sum, pushing near-identical docs several
+    hamming bits apart (r5 review finding). Blank documents therefore
+    carry no fingerprint row (they are exact dups of each other and die
+    in exact dedup upstream)."""
     toks = documents.select(
         "doc_id",
         F.explode(

@@ -1,5 +1,6 @@
-"""Text-analysis operators over ``documents``: language-ID, quality scores,
-token counts, fingerprinting (task brief: first-class alongside SURVEY §2).
+"""Text-analysis operators over ``documents``: language-ID, quality purge
+and summary, token counts, fingerprinting (task brief: first-class
+alongside SURVEY §2).
 
 Everything is JVM Column expressions — no Python UDFs in any of these.
 """
@@ -9,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text_funcs import quality_score_cols, token_count_col, words_col
+from ..functions.text_funcs import token_count_col, words_col
 from .dedup import md5_long
 
 # tiny per-language function-word lists for the n-gram/stopword heuristic
@@ -90,14 +91,6 @@ def language_id(documents: DataFrame) -> DataFrame:
     )
 
 
-def quality_scores(documents: DataFrame) -> DataFrame:
-    """Per-document quality heuristics (length/punct/stopword ratios)."""
-    cols = quality_score_cols(F.col("text"))
-    return documents.select(
-        "doc_id", *[c.alias(name) for name, c in cols.items()]
-    )
-
-
 def quality_filter(
     documents: DataFrame,
     min_alpha_ratio: float = 0.81,
@@ -128,9 +121,9 @@ def quality_filter(
 
 def quality_summary(documents: DataFrame) -> DataFrame:
     """Corpus-level quality profile per lang. Stopword counting is the flat
-    explode+InSet formulation (see language_id) instead of
-    quality_score_cols' interpreted array filter; scalar ratios (length /
-    alpha) stay plain column expressions."""
+    explode+InSet formulation (see language_id), not an interpreted array
+    filter; scalar ratios (length / alpha) stay plain column
+    expressions."""
     from ..functions.text_funcs import STOPWORDS, token_count_col
 
     stops = (
