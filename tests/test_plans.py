@@ -315,7 +315,8 @@ def test_composed_pipeline_plan_lint(spark, tmp_path):
     three near-dup variants, exactly the compositions production runs),
     and read_warc. No CartesianProduct, no BatchEvalPython anywhere;
     Exchange counts pinned where the design pins them; no lambda
-    higher-order function in the quality, exact or near-dup plans."""
+    higher-order function in the framing, t5 language-ID, quality, exact
+    or near-dup plans."""
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
@@ -368,12 +369,18 @@ def test_composed_pipeline_plan_lint(spark, tmp_path):
         lint(extracted, "bucket_extract", max_exchanges=1)
         lint(lineage_metrics(extracted, "lint"), "lineage", max_exchanges=2)
 
-        # --- corpus stage builders over a framed-docs shape
-        docs = frame_documents(extracted)
-        # frame_documents is exempt from the lambda lint: its lang_id_col
-        # still scores with an F.filter lambda until the flat lang-ID
-        # scorer replaces it (ROADMAP direction 2)
-        lint(docs, "frame_documents")
+        # --- corpus stage builders. Framing over committed extraction
+        # rows (build_training_corpus's extracted= path): its one Exchange
+        # is the dropDuplicates on doc_id, and lang-ID is lambda-free
+        committed = spark.createDataFrame(
+            [Row(url=f"https://h{i}.ex/a", success=True,
+                 text="the plan lint words " * 4) for i in range(20)]
+        )
+        p = lint(frame_documents(committed), "frame_documents",
+                 max_exchanges=1, lambda_ok=False)
+        assert p.count("Exchange") == 1, p
+        lint(entry_mod.queries()["t5_language_id"](spark, SF_DIR),
+             "t5_language_id", python_ok=False, lambda_ok=False)
         q = quality_filter(spark.createDataFrame(
             [Row(doc_id=i, url=f"https://h{i}.ex/a", source="s", lang="en",
                  text="plan lint words " * 8, n_chars=120) for i in range(40)]

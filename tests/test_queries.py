@@ -193,6 +193,117 @@ def test_shingles_fuzz_vs_python_oracle(spark):
         assert got.get(i, set()) == _py_shingles(text), (i, repr(text))
 
 
+def _py_lang_id(text: str) -> str:
+    r"""Independent pure-Python language-ID oracle: Java-``\s`` runs
+    collapse to one space, lowercase, trim spaces, split; each language
+    scores hits / max(tokens, 1) rounded HALF_UP at 4 dp (Spark's
+    ``round`` on the double's decimal form); the strictly greater score
+    wins in code order, 'unknown' when every score is 0."""
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from universal_text_extractor_spark.operators.textstats import LANG_MARKERS
+
+    norm = re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower()).strip(" ")
+    toks = norm.split(" ") if norm else []
+    best, pred = Decimal(0), "unknown"
+    for lang in sorted(LANG_MARKERS):
+        hits = sum(t in LANG_MARKERS[lang] for t in toks)
+        score = Decimal(repr(hits / max(len(toks), 1))).quantize(
+            Decimal("0.0001"), rounding=ROUND_HALF_UP
+        )
+        if score > best:
+            best, pred = score, lang
+    return pred
+
+
+def test_lang_id_fuzz_vs_python_oracle(spark):
+    """lang_id_col's whole-token regexp counts must label 20,000 seeded
+    adversarial docs exactly as the pure-Python oracle does: markers
+    glued to punctuation (``the,``), superstrings on either side
+    (``thee``, ``bathe``), mixed case, tab/newline/CR runs, NBSP inside
+    and around tokens, and empty or blank docs. One Spark job."""
+    import random
+
+    from universal_text_extractor_spark.operators.textstats import (
+        LANG_MARKERS,
+        lang_id_col,
+    )
+
+    rng = random.Random(8)
+    markers = sorted({w for ws in LANG_MARKERS.values() for w in ws})
+    filler = ["fox", "data", "über", "ação", "x1", "-", "ã"]
+    seps = [" ", "  ", "\t", "\n", "\t\n", "\r\n", " \n\t ", "\x0b", "\f"]
+
+    def token() -> str:
+        w = rng.choice(markers)
+        return rng.choice([
+            w, w, w, w.upper(), w.capitalize(), rng.choice(filler),
+            w + rng.choice(",.;:!?)"), "(" + w,
+            w + rng.choice(["e", "s", "x", "ã"]), rng.choice(["ba", "x", "s"]) + w,
+            w + " " + rng.choice(markers), " " + w, w + " ",
+        ])
+
+    rows = []
+    for i in range(20_000):
+        if i % 40 == 0:
+            rows.append((i, rng.choice(["", " ", "\t", "\n\n", " \t\r\n "])))
+            continue
+        body = "".join(
+            token() + rng.choice(seps) for _ in range(rng.randint(1, 14))
+        )
+        rows.append((i, rng.choice(["", " ", "\n", "\t "]) + body))
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = dict(
+        docs.select("doc_id", lang_id_col(docs.text).alias("l")).collect()
+    )
+    bad = [(i, t, got[i], _py_lang_id(t)) for i, t in rows
+           if got[i] != _py_lang_id(t)]
+    assert not bad, (len(bad), bad[:5])
+    # the corpus is adversarial, not degenerate: every label occurs
+    assert set(got.values()) == set(LANG_MARKERS) | {"unknown"}
+
+
+def test_quality_purges_agree_on_rounded_boundary(spark, duck):
+    """The corpus purge, t6 and t6's DuckDB twin keep the same docs on
+    the 4-dp alpha-ratio boundary: 80,996 letters in 100,000 chars is
+    0.80996, which rounds to 0.81 and clears the default; 80,994 rounds
+    to 0.8099 and does not; a letter-only doc of 14 tokens fails the
+    token floor."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from universal_text_extractor_spark.operators import textstats as T
+    from universal_text_extractor_spark.plans import corpus as C
+
+    def doc(letters: int) -> str:
+        # 20 tokens joined by 19 spaces; the other non-letters are digits
+        toks = ["a" * 4000 + "1" * 950] * 19
+        toks.append("a" * (letters - 76_000) + "1" * (81_931 - letters))
+        text = " ".join(toks)
+        assert len(text) == 100_000 and text.count("a") == letters
+        return text
+
+    rows = [
+        (1, "en", doc(80_996)),
+        (2, "en", doc(80_994)),
+        (3, "en", " ".join(["word"] * 14)),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
+    df = df.withColumn("n_chars", F.length("text"))  # the framed shape
+    corpus = sorted(r["doc_id"] for r in C.quality_filter(df).collect())
+    t6 = sorted(r["doc_id"] for r in T.quality_filter(df).collect())
+    duck.register("_q_docs", pa.table({
+        "doc_id": [r[0] for r in rows],
+        "lang": [r[1] for r in rows],
+        "text": [r[2] for r in rows],
+    }))
+    sql = ORACLES["t6_quality_filter"].replace("FROM documents", "FROM _q_docs")
+    oracle = sorted(r[0] for r in duck.execute(sql).fetchall())
+    assert corpus == t6 == oracle == [1]
+
+
 def test_exact_purge_with_real_duplicates(spark, duck):
     """dd7 on data that actually CONTAINS duplicates (the sf corpus has
     none, which would make the oracle check vacuous for the grouping key):

@@ -1,8 +1,9 @@
 """Text-analysis Column expressions for training-data pipelines.
 
 All JVM-side (whole-stage-codegen-friendly): normalization, token
-counting and word lists. Each has an ANSI-SQL twin used as the DuckDB oracle
-in __spark_entry__.py — keep rule-identical.
+counting, word lists and the quality-purge signals. Each has an ANSI-SQL
+twin used as the DuckDB oracle in __spark_entry__.py — keep
+rule-identical.
 """
 
 from __future__ import annotations
@@ -42,4 +43,23 @@ def words_col(text: Column) -> Column:
     t = normalized_text_col(text)
     return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
         F.split(t, " ")
+    )
+
+
+def alpha_ratio_col(text: Column) -> Column:
+    """Share of characters that are letters, rounded to 4 dp. ``\\p{L}``
+    (any Unicode letter), not ``[A-Za-z]``: the ratio claims to be
+    language-agnostic, and an ASCII class under-scores accented and
+    non-Latin documents. Java and RE2 (DuckDB) agree on the class."""
+    alpha = F.length(F.regexp_replace(text, r"[^\p{L}]", ""))
+    return F.round(alpha / F.greatest(F.length(text), F.lit(1)), 4)
+
+
+def quality_keep_col(
+    text: Column, min_alpha_ratio: float, min_tokens: int
+) -> Column:
+    """The quality-purge predicate: the rounded alpha ratio and the token
+    count both clear their thresholds."""
+    return (alpha_ratio_col(text) >= min_alpha_ratio) & (
+        token_count_col(text) >= min_tokens
     )

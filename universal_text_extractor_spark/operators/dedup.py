@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text_funcs import normalized_text_col
+from ..functions.text_funcs import normalized_text_col, words_col
 
 NUM_MINHASHES = 16
 LSH_BANDS = 4  # 4 bands × 4 rows
@@ -365,19 +365,16 @@ def simhash_fingerprints(documents: DataFrame, bits: int = 16) -> DataFrame:
     interpreted). Locked by the dd5/dd6 oracles and, at 64 bits, by a
     brute-force pure-Python test.
 
-    Token basis = the NORMALIZED text with empties dropped (same r5 rule
-    as shingles): a space-only ``trim`` over raw text left docs with
-    leading/trailing ``\\n``/``\\t`` a phantom empty token whose md5
-    contributed ±1 to every bit sum, pushing near-identical docs several
-    hamming bits apart (r5 review finding). Blank documents therefore
-    carry no fingerprint row (they are exact dups of each other and die
-    in exact dedup upstream)."""
+    Token basis = ``words_col``, the NORMALIZED text's tokens (same r5
+    rule as shingles and token counts): a space-only ``trim`` over raw
+    text left docs with leading/trailing ``\\n``/``\\t`` a phantom
+    empty token whose md5 contributed ±1 to every bit sum, pushing
+    near-identical docs several hamming bits apart (r5 review finding).
+    Blank documents therefore carry no fingerprint row (they are exact
+    dups of each other and die in exact dedup upstream)."""
     toks = documents.select(
-        "doc_id",
-        F.explode(
-            F.split(normalized_text_col(F.col("text")), " ")
-        ).alias("t"),
-    ).filter(F.col("t") != "")
+        "doc_id", F.explode(words_col(F.col("text"))).alias("t")
+    )
     # md5_long carries 60 bits (15 hex chars, DuckDB-BIGINT-safe);
     # fingerprint bits ≥ 60 draw from a second, prefix-seeded md5 so the
     # full 64-bit production width has live bits end to end

@@ -65,11 +65,6 @@ RESULT_SCHEMA = StructType(
     ]
 )
 
-EXTRACTED_COLUMNS = (
-    "url", "content_type", "partition_id", "input_bytes",
-    "text", "ocr_used", "success", "error", "logs", "extract_us",
-)
-
 _OUT_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -125,7 +120,7 @@ def extract_pages_fused(
     lineage: Accumulator | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, …) → extracted DataFrame
-    (EXTRACTED_COLUMNS + extracted_at). One salted shuffle, then one
+    (_OUT_SCHEMA's columns + extracted_at). One salted shuffle, then one
     ``mapInArrow`` stage sniffs and dispatches each Arrow batch row by row
     through ``detect_content_type`` and ``extract_payload``, so every row
     is byte-identical to the kernel oracle (locked by

@@ -7,10 +7,19 @@ Everything is JVM Column expressions — no Python UDFs in any of these.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text_funcs import token_count_col, words_col
+from ..functions.text_funcs import (
+    STOPWORDS,
+    alpha_ratio_col,
+    normalized_text_col,
+    quality_keep_col,
+    token_count_col,
+    words_col,
+)
 from .dedup import md5_long
 
 # tiny per-language function-word lists for the n-gram/stopword heuristic
@@ -24,18 +33,23 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def lang_score_col(text: Column, lang: str) -> Column:
-    """Share of tokens that are function words of ``lang`` (4 dp)."""
-    toks = words_col(text)
-    markers = F.array(*[F.lit(w) for w in LANG_MARKERS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(markers, t)))
-    return F.round(hits / F.greatest(F.size(toks), F.lit(1)), 4)
-
-
 def lang_id_col(text: Column) -> Column:
-    """argmax over language scores; ties broken by language-code order;
-    'unknown' when no marker hits at all."""
-    scores = [(lang, lang_score_col(text, lang)) for lang in sorted(LANG_MARKERS)]
+    """Language of ``text``: each language scores the share of its marker
+    tokens among the whitespace tokens (4 dp); the argmax wins, ties go to
+    the first language in code order, and 'unknown' when no marker hits.
+
+    Lambda-free: one ``regexp_count`` per language over the normalized
+    text counts whole-token hits (the normalized text is single-space
+    separated, so a token is bounded by a space or the string's ends);
+    an array ``filter`` lambda would evaluate interpreted per token and
+    per language. The t5 oracle and a pure-Python fuzz test lock it."""
+    norm = normalized_text_col(text)
+    n_tok = F.greatest(token_count_col(text), F.lit(1))
+    scores = []
+    for lang in sorted(LANG_MARKERS):
+        words = "|".join(re.escape(w) for w in LANG_MARKERS[lang])
+        hits = F.regexp_count(norm, F.lit(f"(?<![^ ])(?:{words})(?![^ ])"))
+        scores.append((lang, F.round(hits / n_tok, 4)))
     best = F.greatest(*[s for _, s in scores])
     pred = F.lit("unknown")
     # build reverse WHEN chain so the FIRST lang in sorted order wins ties
@@ -45,46 +59,10 @@ def lang_id_col(text: Column) -> Column:
 
 
 def language_id(documents: DataFrame) -> DataFrame:
-    """Predicted language per doc + agreement with the ground-truth lang
-    column, aggregated per (lang, predicted).
-
-    Flat formulation: one token explode, all per-language marker hits in a
-    single hash aggregate (``isin`` over each small marker set compiles to
-    an InSet — whole-stage codegen; the ``F.filter`` array lambda in
-    lang_score_col evaluates interpreted per token × per language). Same
-    scores/argmax as lang_id_col; the t5 oracle locks it."""
-    langs = sorted(LANG_MARKERS)
-    ex = documents.select(
-        "doc_id", F.explode(words_col(F.col("text"))).alias("w")
-    )
-    hits = ex.groupBy("doc_id").agg(
-        F.count("*").alias("n_tok"),
-        *[
-            F.sum(
-                F.when(F.col("w").isin(*LANG_MARKERS[lang]), 1).otherwise(0)
-            ).alias(f"hits_{lang}")
-            for lang in langs
-        ],
-    )
-    # empty-token docs drop out of the explode → left join back, zero hits
-    base = documents.select("doc_id", "lang").join(hits, "doc_id", "left")
-    safe_tok = F.greatest(F.coalesce(F.col("n_tok"), F.lit(0)), F.lit(1))
-    scored = base.select(
-        "doc_id",
-        "lang",
-        *[
-            F.round(
-                F.coalesce(F.col(f"hits_{lang}"), F.lit(0)) / safe_tok, 4
-            ).alias(f"s_{lang}")
-            for lang in langs
-        ],
-    )
-    best = F.greatest(*[F.col(f"s_{lang}") for lang in langs])
-    pred = F.lit("unknown")
-    for lang in reversed(langs):  # first lang in sorted order wins ties
-        pred = F.when((F.col(f"s_{lang}") == best) & (best > 0), F.lit(lang)).otherwise(pred)
+    """Predicted language per doc (:func:`lang_id_col`) against the
+    ground-truth lang column, counted per (lang, predicted)."""
     return (
-        scored.select("lang", pred.alias("predicted"))
+        documents.select("lang", lang_id_col(F.col("text")).alias("predicted"))
         .groupBy("lang", "predicted")
         .agg(F.count("*").alias("cnt"))
         .orderBy("lang", "predicted")
@@ -98,34 +76,28 @@ def quality_filter(
 ) -> DataFrame:
     """The quality PURGE (companion to the t3 report — the operator a
     training-data pipeline actually runs): keep documents whose
-    alphabetic-character ratio and token count clear the thresholds.
+    alphabetic-character ratio and token count clear the thresholds
+    (:func:`quality_keep_col`, the predicate the corpus purge runs too).
     Language-agnostic signals only (length/punctuation class); the
     stopword ratio stays a report metric because its list is
     English-biased. Pure scan+filter — pushes to the source, no shuffle.
     Returns (doc_id, lang, n_tokens, alpha_ratio)."""
-    alpha = F.length(F.regexp_replace(F.col("text"), r"[^\p{L}]", ""))
-    ratio = F.round(
-        alpha / F.greatest(F.length("text"), F.lit(1)), 4
-    )
-    n_tok = token_count_col(F.col("text"))
-    return (
-        documents.select(
-            "doc_id", "lang", n_tok.alias("n_tokens"), ratio.alias("alpha_ratio")
-        )
-        .filter(
-            (F.col("alpha_ratio") >= min_alpha_ratio)
-            & (F.col("n_tokens") >= min_tokens)
-        )
+    text = F.col("text")
+    return documents.filter(
+        quality_keep_col(text, min_alpha_ratio, min_tokens)
+    ).select(
+        "doc_id",
+        "lang",
+        token_count_col(text).alias("n_tokens"),
+        alpha_ratio_col(text).alias("alpha_ratio"),
     )
 
 
 def quality_summary(documents: DataFrame) -> DataFrame:
-    """Corpus-level quality profile per lang. Stopword counting is the flat
-    explode+InSet formulation (see language_id), not an interpreted array
-    filter; scalar ratios (length / alpha) stay plain column
-    expressions."""
-    from ..functions.text_funcs import STOPWORDS, token_count_col
-
+    """Corpus-level quality profile per lang. Stopword counting is a flat
+    token explode + InSet aggregate, not an interpreted array filter;
+    the scalar signals (length, :func:`alpha_ratio_col`, token count) stay
+    plain column expressions."""
     stops = (
         documents.select(
             "doc_id", F.explode(words_col(F.col("text"))).alias("w")
@@ -134,22 +106,17 @@ def quality_summary(documents: DataFrame) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_stop"))
     )
-    n_chars = F.length("text")
-    alpha = F.length(F.regexp_replace(F.col("text"), r"[^\p{L}]", ""))
-    n_tok = token_count_col(F.col("text"))
     base = documents.select(
         "doc_id", "lang",
-        n_chars.alias("n_chars"),
-        alpha.alias("alpha"),
-        n_tok.alias("n_tokens"),
+        F.length("text").alias("n_chars"),
+        alpha_ratio_col(F.col("text")).alias("alpha_ratio"),
+        token_count_col(F.col("text")).alias("n_tokens"),
     ).join(stops, "doc_id", "left")
     scored = base.select(
         "lang",
         "n_chars",
         "n_tokens",
-        F.round(F.col("alpha") / F.greatest(F.col("n_chars"), F.lit(1)), 4).alias(
-            "alpha_ratio"
-        ),
+        "alpha_ratio",
         F.round(
             F.coalesce(F.col("n_stop"), F.lit(0))
             / F.greatest(F.col("n_tokens"), F.lit(1)),
@@ -194,7 +161,7 @@ def fingerprints(documents: DataFrame, k: int = 5) -> DataFrame:
     text (rolling-hash family; the stride is the cheap cousin of winnowing's
     per-window min — 4× fewer hashes, same near-dup detection power; md5
     bridge keeps the DuckDB oracle exact)."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = normalized_text_col(F.col("text"))
     n = F.length(norm)
     # flat formulation: explode the sampled positions, hash each gram as a
     # plain column, min-aggregate per doc. The array version (transform +

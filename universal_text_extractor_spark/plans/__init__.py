@@ -1,3 +1,3 @@
-from .pipeline import ExtractionRun, run_extraction, resume_or_run
+from .pipeline import ExtractionRun, run_extraction
 
-__all__ = ["ExtractionRun", "run_extraction", "resume_or_run"]
+__all__ = ["ExtractionRun", "run_extraction"]

@@ -4,8 +4,8 @@ engine's existing scale-shaped operators.
 
     pages (parquet / read_warc)
       → extract_pages_fused            (1 salted shuffle, Arrow batches)
-      → success filter + doc framing   (doc_id = xxhash-free md5 of url)
-      → language ID                    (flat explode + InSet aggregate)
+      → success filter + doc framing   (doc_id = md5 of url ‖ md5(text))
+      → language ID                    (one regexp_count column per language)
       → quality purge                  (scan+filter, no shuffle)
       → exact dedup purge              (8-byte-key hash agg + semi join)
       → MinHash near-dup purge         (banded LSH + candidate-verify)
@@ -46,7 +46,7 @@ from ..operators.dedup import (
 )
 from ..operators.extract import extract_pages_fused
 from ..operators.textstats import lang_id_col
-from ..functions.text_funcs import token_count_col
+from ..functions.text_funcs import quality_keep_col
 
 
 def frame_documents(extracted: DataFrame) -> DataFrame:
@@ -86,15 +86,10 @@ def frame_documents(extracted: DataFrame) -> DataFrame:
 def quality_filter(
     docs: DataFrame, min_alpha_ratio: float = 0.81, min_tokens: int = 15
 ) -> DataFrame:
-    """Quality purge (t6 semantics, text retained): pure scan+filter —
-    zero Exchange, no Python (plan-linted)."""
-    # \p{L} (any Unicode letter), not [A-Za-z]: the ratio claims to be
-    # language-agnostic, and an ASCII class under-scores accented and
-    # non-Latin documents. Java and RE2 (DuckDB) agree on the class.
-    alpha = F.length(F.regexp_replace(F.col("text"), r"[^\p{L}]", ""))
+    """Quality purge with t6's predicate (:func:`quality_keep_col`), text
+    retained: pure scan+filter — zero Exchange, no Python (plan-linted)."""
     return docs.filter(
-        (token_count_col(F.col("text")) >= min_tokens)
-        & (alpha / F.greatest(F.col("n_chars"), F.lit(1)) >= min_alpha_ratio)
+        quality_keep_col(F.col("text"), min_alpha_ratio, min_tokens)
     )
 
 

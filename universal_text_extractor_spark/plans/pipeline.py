@@ -343,11 +343,6 @@ def run_extraction(
     )
 
 
-def resume_or_run(spark: SparkSession, pages: DataFrame, out_dir: str, **kw) -> ExtractionRun:
-    """Alias that makes call sites read as intent."""
-    return run_extraction(spark, pages, out_dir, **kw)
-
-
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/extracted")
 
