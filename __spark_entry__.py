@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
+from universal_text_extractor_spark.functions.text_funcs import WS_CHARS
 from universal_text_extractor_spark.operators import analytics as A
 from universal_text_extractor_spark.operators import clustering as C
 from universal_text_extractor_spark.operators import dedup as D
@@ -209,6 +210,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 _H = "('0x'||substr(md5({x}),1,15))::BIGINT"
 
 
+def _ws_trim(texpr: str) -> str:
+    """Whitespace runs collapsed to one space, then trimmed — the twin of
+    ``functions.text_funcs``' whitespace rule, with its spelled-out class
+    (RE2's ``\\s`` lacks \\x0B, which Java's has)."""
+    return f"trim(regexp_replace({texpr}, '[{WS_CHARS}]+', ' ', 'g'))"
+
+
 def _words(texpr: str = "text") -> str:
     """Same normalized basis as ``_words_norm`` (r5 review batch 3: the
     space-only-trim form gave leading-``\\n`` docs a phantom empty token;
@@ -222,7 +230,7 @@ def _words_norm(texpr: str = "text") -> str:
     trims only spaces, so leading/trailing newlines gave it an empty
     first/last token; shingles must not carry that junk (rule-identical
     to operators.dedup._shingles_flat)."""
-    n = f"trim(regexp_replace(lower({texpr}), '\\s+', ' ', 'g'))"
+    n = _ws_trim(f"lower({texpr})")
     return f"CASE WHEN {n} = '' THEN []::VARCHAR[] ELSE string_split({n}, ' ') END"
 
 
@@ -289,7 +297,7 @@ def _simhash_fp_cte(bits: int = 16) -> str:
     )
     return (
         "WITH tok AS (SELECT doc_id, t FROM (SELECT doc_id, "
-        "unnest(regexp_split_to_array(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS t "
+        f"unnest(regexp_split_to_array({_ws_trim('lower(text)')}, ' ')) AS t "
         "FROM documents) WHERE t <> ''), "
         f"h AS (SELECT doc_id, {_H.format(x='t')} AS hv FROM tok), "
         f"fp AS (SELECT doc_id, ({bit_terms})::BIGINT AS simhash FROM h GROUP BY doc_id)"
@@ -894,16 +902,17 @@ def oracle_sql() -> dict[str, str]:
         "t1_doc_profile": (
             "SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS n_docs, "
             "round(avg(n_chars), 2) AS avg_chars, "
-            "round(avg(CASE WHEN trim(regexp_replace(text, '\\s+', ' ', 'g')) = '' THEN 0 "
-            "ELSE len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) END), 2) AS avg_tokens, "
+            f"round(avg(CASE WHEN {_ws_trim('text')} = '' THEN 0 "
+            f"ELSE len(string_split({_ws_trim('text')}, ' ')) END), 2) AS avg_tokens, "
             "MAX(n_chars) AS max_chars "
             "FROM documents GROUP BY lang, source ORDER BY lang, source"
         ),
         "t2_token_counts": (
             "SELECT doc_id, "
-            "CAST(CASE WHEN trim(regexp_replace(text, '\\s+', ' ', 'g')) = '' THEN 0 "
-            "ELSE len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) END AS INT) AS ws_tokens, "
-            "CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS INT) AS bpe_ish_tokens, "
+            f"CAST(CASE WHEN {_ws_trim('text')} = '' THEN 0 "
+            f"ELSE len(string_split({_ws_trim('text')}, ' ')) END AS INT) AS ws_tokens, "
+            "CAST(len(regexp_extract_all(text, "
+            f"'[A-Za-z]+|[0-9]+|[^A-Za-z0-9{WS_CHARS}]')) AS INT) AS bpe_ish_tokens, "
             "CAST(length(text) AS INT) AS n_chars "
             "FROM documents"
         ),
@@ -917,7 +926,7 @@ def oracle_sql() -> dict[str, str]:
             "FROM sc WHERE alpha_ratio >= 0.81 AND n_tokens >= 15"
         ),
         "t4_fingerprints": (
-            "WITH n AS (SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS nt FROM documents), "
+            f"WITH n AS (SELECT doc_id, {_ws_trim('lower(text)')} AS nt FROM documents), "
             "g AS (SELECT doc_id, list_transform(generate_series(1, greatest(length(nt) - 4, 1), "
             f"{T.FINGERPRINT_STRIDE}), "
             "i -> substr(nt, i, 5)) AS grams FROM n) "
@@ -928,7 +937,7 @@ def oracle_sql() -> dict[str, str]:
         "t5_language_id": _lang_id_sql(),
         "dd1_exact_dedup_groups": (
             "WITH k AS (SELECT doc_id, "
-            + _H.format(x="trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))")
+            + _H.format(x=_ws_trim("lower(text)"))
             + " AS text_key FROM documents) "
             "SELECT text_key, CAST(COUNT(*) AS BIGINT) AS group_size, "
             "MIN(doc_id) AS canonical_doc_id FROM k GROUP BY text_key "
@@ -936,7 +945,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "dd2_exact_kept_count": (
             "WITH k AS (SELECT doc_id, "
-            + _H.format(x="trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))")
+            + _H.format(x=_ws_trim("lower(text)"))
             + " AS text_key FROM documents), "
             "kept AS (SELECT text_key, MIN(doc_id) FROM k GROUP BY text_key) "
             "SELECT CAST(COUNT(*) AS BIGINT) AS kept_count FROM kept"
@@ -968,9 +977,7 @@ def oracle_sql() -> dict[str, str]:
         # remains the twin used by tests/test_queries.py's parity lock
         "dd7_exact_purge": (
             "WITH k AS (SELECT doc_id, "
-            + _H.format(
-                x="trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-            )
+            + _H.format(x=_ws_trim("lower(text)"))
             + " AS text_key FROM documents), "
             "m AS (SELECT MIN(doc_id) AS doc_id FROM k GROUP BY text_key) "
             "SELECT d.doc_id, d.lang, d.source, d.n_chars FROM documents d "

@@ -5,14 +5,22 @@ document)."""
 
 from __future__ import annotations
 
+import bz2
+import gzip
 import json
+import lzma
+import random
 
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from conftest import FIXTURES
 from universal_text_extractor_spark.functions.sniff import content_type_col
 from universal_text_extractor_spark.kernels import detect_content_type
-from universal_text_extractor_spark.sources.pages_gen import make_page
+from universal_text_extractor_spark.kernels.dispatch import extract_payload
+from universal_text_extractor_spark.kernels.limits import CODEC_BY_TYPE
+from universal_text_extractor_spark.operators.extract import extract_pages_fused
+from universal_text_extractor_spark.sources.pages_gen import _pdf_doc_pages, make_page
 
 
 def test_sniff_parity_corpus(spark):
@@ -57,202 +65,146 @@ def test_sniff_parity_corpus(spark):
     assert not mismatches, mismatches[:10]
 
 
-def test_gzip_transparent_decompression(spark):
-    """gzip payloads (.gz extension or 1F 8B magic) decompress and
-    re-dispatch transparently — north-star crawl extension. JVM/Python
-    detector parity, inner-type routing, bomb/nesting/corruption guards,
-    and fused-pipeline integration."""
-    import gzip as _g
-    import random
+# Transparent decompression (north-star crawl extension): one body per
+# contract, run for each row of the codec table (kernels/limits.CODECS).
+# The wordings below are literals on purpose — the pipeline byte-identity
+# test compares against extract_payload itself, so only these asserts pin
+# the log and error strings.
+_COMPRESS = {
+    "gzip": lambda b: gzip.compress(b, mtime=0),
+    "xz": lzma.compress,
+    "bzip2": bz2.compress,
+}
+_TAIL_LOG = {
+    "gzip": "trailing non-gzip bytes after gzip member",
+    "xz": "trailing non-xz bytes after xz stream",
+    "bzip2": "trailing non-bz2 bytes after bzip2 stream",
+}
+_CORRUPT_AT = {"gzip": 12, "xz": 20, "bzip2": 20}
+_SHORT_PREFIX = {"gzip": 10, "xz": 12, "bzip2": 8}
 
-    from pyspark.sql import Row
 
-    from universal_text_extractor_spark.kernels.dispatch import extract_payload
-    from universal_text_extractor_spark.operators.extract import extract_pages_fused
-    from universal_text_extractor_spark.sources.pages_gen import _pdf_doc_pages
-
-    html = b"<html><head><title>T</title></head><body><p>Hello gz</p></body></html>"
-    gz = _g.compress(html, mtime=0)
+def _assert_transparent(spark, type_name):
+    """Payloads with the codec's extension or magic decompress and
+    re-dispatch: JVM/Python detector parity, inner-type routing, one
+    nesting level whichever codec is inside, corruption containment, and
+    the fused pipeline."""
+    comp, ext = _COMPRESS[type_name], CODEC_BY_TYPE[type_name].ext
+    html = (
+        "<html><head><title>T</title></head>"
+        f"<body><p>{type_name} body</p></body></html>"
+    ).encode()
+    z = comp(html)
     pdf = _pdf_doc_pages(random.Random(2), 2, True)
 
     # detector parity (extension and magic-only)
     rows = [
-        ("https://x/a.html.gz", gz),
-        ("https://x/stream", gz),
-        ("https://x/doc.pdf.gz", _g.compress(pdf, mtime=0)),
+        (f"https://x/a.html.{ext}", z),
+        ("https://x/blob", z),
+        (f"https://x/doc.pdf.{ext}", comp(pdf)),
     ]
     df = spark.createDataFrame(
         [Row(url=u, html=p) for u, p in rows]
     ).withColumn("ct", content_type_col(F.col("url"), F.col("html")))
     got = {r["url"]: r["ct"] for r in df.collect()}
     for u, p in rows:
-        assert got[u] == detect_content_type(u, p) == "gzip", u
+        assert got[u] == detect_content_type(u, p) == type_name, u
 
     # inner routing equals direct extraction of the decompressed twin
-    t, _, s, _, logs = extract_payload("https://x/a.html.gz", gz, "gzip")
+    t, _, s, _, logs = extract_payload(f"https://x/a.html.{ext}", z, type_name)
     assert t == extract_payload("https://x/a.html", html, "html")[0] and s
-    assert any("Decompressed gzip payload" in l for l in logs)
-    t2 = extract_payload("https://x/doc.pdf.gz", _g.compress(pdf, mtime=0), "gzip")[0]
+    assert f"Decompressed {type_name} payload ({len(z)} -> {len(html)} bytes)" in logs
+    t2 = extract_payload(f"https://x/doc.pdf.{ext}", comp(pdf), type_name)[0]
     assert t2 == extract_payload("https://x/doc.pdf", pdf, "pdf")[0]
 
-    # nesting stops at one level; corruption/truncation contained
-    gz2 = _g.compress(gz, mtime=0)
-    assert "[Unsupported file type: unknown]" in extract_payload("https://x/a.gz", gz2, "gzip")[0]
-    bad = bytearray(gz)
-    bad[12] ^= 0xFF
-    t3, _, s3, _, _ = extract_payload("https://x/a.html.gz", bytes(bad), "gzip")
+    # nesting stops at one level, in every direction
+    for inner in _COMPRESS.values():
+        assert "[Unsupported file type: unknown]" in extract_payload(
+            f"https://x/a.{ext}", comp(inner(html)), type_name
+        )[0]
+    # corruption/truncation contained
+    bad = bytearray(z)
+    bad[_CORRUPT_AT[type_name]] ^= 0xFF
+    t3, _, s3, _, _ = extract_payload(f"https://x/a.html.{ext}", bytes(bad), type_name)
     assert t3.startswith("[Error extracting text:") and not s3
-    assert isinstance(extract_payload("https://x/a.html.gz", gz[:10], "gzip")[0], str)
+    short = z[: _SHORT_PREFIX[type_name]]
+    assert isinstance(extract_payload(f"https://x/a.html.{ext}", short, type_name)[0], str)
 
-    # through the fused pipeline (text family routes the gzip branch)
+    # through the fused pipeline
     pages = spark.createDataFrame(
-        [Row(url="https://x/a.html.gz", warc_ts=None, html=gz, text="", lang="en")],
+        [Row(url=f"https://x/a.html.{ext}", warc_ts=None, html=z, text="", lang="en")],
         schema="url string, warc_ts timestamp, html binary, text string, lang string",
     )
     out = extract_pages_fused(pages, num_partitions=2).collect()
-    assert len(out) == 1 and out[0]["content_type"] == "gzip"
+    assert len(out) == 1 and out[0]["content_type"] == type_name
     assert out[0]["text"] == extract_payload("https://x/a.html", html, "html")[0]
 
 
+def _assert_streams(type_name):
+    """The full (text, ocr_used, success, error, logs) tuple for: (a)
+    concatenated streams, which must ALL decode — crawl payloads are often
+    member-concatenated like .warc.gz, and pbzip2/wiki dumps are one bz2
+    stream per block; (b) a truncated stream, which must hit D2
+    containment (error literal), never enter the corpus as clean partial
+    text; (c) a non-codec tail after a complete stream, discarded with a
+    log line; (d) spec-legal zero padding, silent; (e) a nested codec,
+    which is not decompressed a second time."""
+    comp, ext = _COMPRESS[type_name], CODEC_BY_TYPE[type_name].ext
+    url = f"https://x/a.txt.{ext}"
+    txt_log = "Extracted text from TXT file"
+
+    def decompressed(z, n):
+        return f"Decompressed {type_name} payload ({len(z)} -> {n} bytes)"
+
+    two = comp(b"hello ") + comp(b"world")
+    assert extract_payload(url, two, type_name) == (
+        "hello world", False, True, None, [decompressed(two, 11), txt_log],
+    )
+
+    whole = comp(b"complete text body here")
+    err = f"{type_name} stream truncated or corrupt"
+    assert extract_payload(url, whole[:-5], type_name) == (
+        f"[Error extracting text: {err}]", False, False, err,
+        [f"Error extracting text: {err}"],
+    )
+
+    tailed = whole + b"not-a-codec-tail"
+    assert extract_payload(url, tailed, type_name) == (
+        "complete text body here", False, True, None,
+        [f"Discarded 16 {_TAIL_LOG[type_name]}", decompressed(tailed, 23), txt_log],
+    )
+
+    padded = whole + b"\x00" * 8
+    assert extract_payload(url, padded, type_name) == (
+        "complete text body here", False, True, None,
+        [decompressed(padded, 23), txt_log],
+    )
+
+    for inner_comp in _COMPRESS.values():
+        inner = inner_comp(b"inner body")
+        nested = comp(inner)
+        assert extract_payload(f"https://x/a.{ext}", nested, type_name) == (
+            "[Unsupported file type: unknown]", False, True, None,
+            [decompressed(nested, len(inner)), "Unsupported file type: unknown"],
+        )
+
+
+def test_gzip_transparent_decompression(spark):
+    _assert_transparent(spark, "gzip")
+
+
 def test_xz_transparent_decompression(spark):
-    """xz payloads (.xz extension or the FD 37 7A 58 5A 00 magic) follow
-    the same transparent-decompression contract as gzip: detector-twin
-    parity, inner re-dispatch, one nesting level (in both directions),
-    bomb cap, corruption containment."""
-    import gzip as _g
-    import lzma
-
-    from pyspark.sql import Row
-
-    from universal_text_extractor_spark.kernels.dispatch import extract_payload
-
-    html = b"<html><head><title>T</title></head><body><p>xz body</p></body></html>"
-    xz = lzma.compress(html)
-    rows = [("https://x/a.html.xz", xz), ("https://x/blob", xz)]
-    df = spark.createDataFrame(
-        [Row(url=u, html=p) for u, p in rows]
-    ).withColumn("ct", content_type_col(F.col("url"), F.col("html")))
-    got = {r["url"]: r["ct"] for r in df.collect()}
-    for u, p in rows:
-        assert got[u] == detect_content_type(u, p) == "xz", u
-
-    t, _, s, _, logs = extract_payload("https://x/a.html.xz", xz, "xz")
-    assert t == extract_payload("https://x/a.html", html, "html")[0] and s
-    assert any("Decompressed xz payload" in l for l in logs)
-    # nesting stops at one level in both directions
-    assert "[Unsupported file type: unknown]" in extract_payload(
-        "https://x/a.xz", lzma.compress(_g.compress(html, mtime=0)), "xz"
-    )[0]
-    assert "[Unsupported file type: unknown]" in extract_payload(
-        "https://x/a.gz", _g.compress(xz, mtime=0), "gzip"
-    )[0]
-    bad = bytearray(xz)
-    bad[20] ^= 0xFF
-    t3, _, s3, _, _ = extract_payload("https://x/a.html.xz", bytes(bad), "xz")
-    assert t3.startswith("[Error extracting text:") and not s3
-    assert isinstance(extract_payload("https://x/a.html.xz", xz[:12], "xz")[0], str)
-
-
-def test_gzip_multimember_truncation_and_tail():
-    """ADVICE r3: (a) concatenated gzip members must ALL decode — crawl
-    payloads are often member-concatenated like .warc.gz; (b) a truncated
-    stream must hit D2 containment (error literal), never enter the corpus
-    as clean partial text; (c) non-gzip trailing bytes after a complete
-    member are discarded with a log line."""
-    import gzip as _g
-
-    from universal_text_extractor_spark.kernels.dispatch import extract_payload
-
-    two = _g.compress(b"hello ", mtime=0) + _g.compress(b"world", mtime=0)
-    t, _, s, _, _ = extract_payload("https://x/a.txt.gz", two, "gzip")
-    assert t == "hello world" and s
-
-    gz = _g.compress(b"complete text body here", mtime=0)
-    t2, _, s2, err2, _ = extract_payload("https://x/a.txt.gz", gz[:-5], "gzip")
-    assert t2.startswith("[Error extracting text:") and not s2
-    assert "truncated" in (err2 or "")
-
-    t3, _, s3, _, logs3 = extract_payload(
-        "https://x/a.txt.gz", gz + b"not-gzip-tail", "gzip"
-    )
-    assert t3 == "complete text body here" and s3
-    assert any("trailing non-gzip bytes" in l for l in logs3)
-    # spec-legal zero padding stays silent
-    t4, _, s4, _, logs4 = extract_payload(
-        "https://x/a.txt.gz", gz + b"\x00" * 8, "gzip"
-    )
-    assert t4 == "complete text body here" and s4
-    assert not any("trailing" in l for l in logs4)
-
-
-def test_xz_multistream_and_truncation():
-    """xz twin of the gzip contract: concatenated streams all decode,
-    truncation raises into the error literal."""
-    import lzma
-
-    from universal_text_extractor_spark.kernels.dispatch import extract_payload
-
-    two = lzma.compress(b"alpha ") + lzma.compress(b"beta")
-    t, _, s, _, _ = extract_payload("https://x/a.txt.xz", two, "xz")
-    assert t == "alpha beta" and s
-
-    xz = lzma.compress(b"complete xz body")
-    t2, _, s2, err2, _ = extract_payload("https://x/a.txt.xz", xz[:-4], "xz")
-    assert t2.startswith("[Error extracting text:") and not s2
-    assert "truncated" in (err2 or "")
+    _assert_transparent(spark, "xz")
 
 
 def test_bzip2_transparent_decompression(spark):
-    """bzip2 payloads (.bz2 extension or the 42 5A 68 'BZh' magic) follow
-    the same transparent-decompression contract as gzip/xz: detector-twin
-    parity, inner re-dispatch, one nesting level (in both directions),
-    concatenated-stream decode, truncation containment, tail logging."""
-    import bz2
-    import gzip as _g
+    _assert_transparent(spark, "bzip2")
+    _assert_streams("bzip2")
 
-    from pyspark.sql import Row
 
-    from universal_text_extractor_spark.kernels.dispatch import extract_payload
+def test_gzip_multimember_truncation_and_tail():
+    _assert_streams("gzip")
 
-    html = b"<html><head><title>T</title></head><body><p>bz2 body</p></body></html>"
-    bz = bz2.compress(html)
-    rows = [("https://x/a.html.bz2", bz), ("https://x/blob", bz)]
-    df = spark.createDataFrame(
-        [Row(url=u, html=p) for u, p in rows]
-    ).withColumn("ct", content_type_col(F.col("url"), F.col("html")))
-    got = {r["url"]: r["ct"] for r in df.collect()}
-    for u, p in rows:
-        assert got[u] == detect_content_type(u, p) == "bzip2", u
 
-    t, _, s, _, logs = extract_payload("https://x/a.html.bz2", bz, "bzip2")
-    assert t == extract_payload("https://x/a.html", html, "html")[0] and s
-    assert any("Decompressed bzip2 payload" in l for l in logs)
-    # nesting stops at one level in both directions
-    assert "[Unsupported file type: unknown]" in extract_payload(
-        "https://x/a.bz2", bz2.compress(_g.compress(html, mtime=0)), "bzip2"
-    )[0]
-    assert "[Unsupported file type: unknown]" in extract_payload(
-        "https://x/a.gz", _g.compress(bz, mtime=0), "gzip"
-    )[0]
-    bad = bytearray(bz)
-    bad[20] ^= 0xFF
-    t3, _, s3, _, _ = extract_payload("https://x/a.html.bz2", bytes(bad), "bzip2")
-    assert t3.startswith("[Error extracting text:") and not s3
-    assert isinstance(extract_payload("https://x/a.html.bz2", bz[:8], "bzip2")[0], str)
-
-    # concatenated streams (pbzip2/wiki-dump layout) all decode;
-    # truncation raises into the error literal; non-bz2 tail is logged
-    two = bz2.compress(b"alpha ") + bz2.compress(b"beta")
-    t4, _, s4, _, _ = extract_payload("https://x/a.txt.bz2", two, "bzip2")
-    assert t4 == "alpha beta" and s4
-
-    whole = bz2.compress(b"complete bz2 body")
-    t5, _, s5, err5, _ = extract_payload("https://x/a.txt.bz2", whole[:-4], "bzip2")
-    assert t5.startswith("[Error extracting text:") and not s5
-    assert "truncated" in (err5 or "")
-
-    t6, _, s6, _, logs6 = extract_payload(
-        "https://x/a.txt.bz2", whole + b"not-bz2-tail", "bzip2"
-    )
-    assert t6 == "complete bz2 body" and s6
-    assert any("trailing non-bz2 bytes" in l for l in logs6)
+def test_xz_multistream_and_truncation():
+    _assert_streams("xz")

@@ -15,6 +15,7 @@ from universal_text_extractor_spark.plans.pipeline import (
     retention_cleanup,
     run_extraction,
 )
+from universal_text_extractor_spark.plans.storage import ParquetStorage
 from universal_text_extractor_spark.sources.pages_gen import generate_pages_df
 
 N = 400
@@ -29,6 +30,20 @@ def _table(spark, out_dir):
 
 def _bucket_count(spark, out_dir, bucket):
     return spark.read.parquet(f"{out_dir}/extracted/bucket={bucket}").count()
+
+
+def _crash_retention_before_publish(monkeypatch, out_dir):
+    """Make ``retention_cleanup``'s first publish rename (live metrics →
+    retired copy) crash: the scratch is fully written, the live table not
+    yet touched."""
+    real = os.rename
+
+    def rename(src, dst):
+        if os.fspath(dst) == f"{out_dir}/metrics_old":
+            raise RuntimeError("injected crash before retention publish")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
 
 
 def test_kill_and_resume_equals_single_run(spark, tmp_path):
@@ -102,7 +117,7 @@ def test_metrics_and_retention(spark, tmp_path):
     assert retention_cleanup(spark, out, "2100-01-01 00:00:00") == n
 
 
-def test_retention_crash_is_safe(spark, tmp_path):
+def test_retention_crash_is_safe(spark, tmp_path, monkeypatch):
     """Write-then-publish: a crash after the scratch write but before the
     publish leaves the live metrics table fully intact, and the retried
     cleanup completes. A crash BETWEEN the publish renames (live path
@@ -113,8 +128,9 @@ def test_retention_crash_is_safe(spark, tmp_path):
     out = str(tmp_path / "retcrash")
     run_extraction(spark, pages, out, n_buckets=2, num_partitions=2)
     before = spark.read.parquet(f"{out}/metrics").count()
-    with pytest.raises(RuntimeError, match="injected crash"):
-        retention_cleanup(spark, out, "2100-01-01 00:00:00", fail_before_publish=True)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected crash"):
+        _crash_retention_before_publish(m, out)
+        retention_cleanup(spark, out, "2100-01-01 00:00:00")
     assert spark.read.parquet(f"{out}/metrics").count() == before  # untouched
 
     # simulate the worst crash point: metrics renamed away, scratch not yet
@@ -196,15 +212,16 @@ def test_resume_with_different_input_warns(spark, tmp_path):
     assert not any("staged input snapshot" in str(w.message) for w in caught)
 
 
-def test_retention_noop_clears_stale_scratch(spark, tmp_path):
+def test_retention_noop_clears_stale_scratch(spark, tmp_path, monkeypatch):
     """A committed scratch left by an earlier crash must not survive a
     deleted==0 early return — a stale post-delete snapshot lingering on
     disk could later be wrongly promoted over newer data (ADVICE r2 #3)."""
     pages = generate_pages_df(spark, 100, partitions=2)
     out = str(tmp_path / "staletmp")
     run_extraction(spark, pages, out, n_buckets=2, num_partitions=2)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        retention_cleanup(spark, out, "2100-01-01 00:00:00", fail_before_publish=True)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected crash"):
+        _crash_retention_before_publish(m, out)
+        retention_cleanup(spark, out, "2100-01-01 00:00:00")
     assert os.path.exists(f"{out}/metrics_tmp/_SUCCESS")  # committed scratch
     assert retention_cleanup(spark, out, "2000-01-01 00:00:00") == 0  # no-op
     assert not os.path.exists(f"{out}/metrics_tmp")  # scratch cleared
@@ -395,6 +412,10 @@ def test_metrics_not_duplicated_across_metrics_manifest_crash(
             spark, pages, out, n_buckets=3, num_partitions=2, run_id=run_id, **kw
         )
 
+    class CrashBeforeManifest(ParquetStorage):
+        def append_manifest(self, *args, **kwargs):
+            raise RuntimeError("injected failure between metrics and manifest")
+
     def crash_on_metrics_rename(nth):
         real, seen = os.rename, []
 
@@ -410,11 +431,11 @@ def test_metrics_not_duplicated_across_metrics_manifest_crash(
     with pytest.raises(RuntimeError, match="injected failure"):
         run("a1", fail_after_buckets=1)  # bucket 0 committed
     with pytest.raises(RuntimeError, match="between metrics and manifest"):
-        run("a2", fail_between_metrics_and_manifest=True)  # bucket 1 orphaned
+        run("a2", storage=CrashBeforeManifest())  # bucket 1 orphaned
     assert _metrics_by_bucket(spark, out) == {0: {"a1"}, 1: {"a2"}}
     # the orphaned bucket re-runs: its re-publish replaces the live rows
     with pytest.raises(RuntimeError, match="between metrics and manifest"):
-        run("a2b", fail_between_metrics_and_manifest=True)
+        run("a2b", storage=CrashBeforeManifest())
     assert _metrics_by_bucket(spark, out) == {0: {"a1"}, 1: {"a2b"}}
     assert not [e for e in os.listdir(metrics) if e.startswith(".")]
 
@@ -513,8 +534,6 @@ def test_control_plane_launches_no_spark_jobs(spark, tmp_path):
     write_bucket calls. Jobs are counted per storage call through its job
     group, every other job lands in the runs' outer group, and
     write_bucket's group is the positive control that the counting works."""
-    from universal_text_extractor_spark.plans.storage import ParquetStorage
-
     sc = spark.sparkContext
     outer = f"{tmp_path.name}-outside-storage"
     groups: list[tuple[str, str]] = []

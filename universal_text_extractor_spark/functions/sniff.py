@@ -8,7 +8,7 @@ locks it over the full synthetic corpus):
 1. url extension lookup against the reference taxonomy
    (reference utils/file_handlers.py:94-145)
 2. magic bytes: %PDF / PNG / GIF / JPEG / BMP / RIFF-WebP / ftyp-HEIC-HEIF
-   / {\\rtf / gzip (1F 8B) / xz (FD 37 7A 58 5A 00) / bzip2 (42 5A 68)
+   / {\\rtf / the gzip, xz and bzip2 magics of ``kernels/limits.CODECS``
 3. markup prefix (first 256 bytes, leading-ws-stripped, lowercased):
    <?xml → xml; <!doctype html | <html | <head | <body → html
 4. plain-text byte rule: no control byte besides tab/LF/CR in the first 256
@@ -27,6 +27,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..kernels.dispatch import EXT_TO_TYPE, URL_EXT_PATTERN
+from ..kernels.limits import CODECS
 
 # any hex pair 00-08, 0B, 0C, 0E, 0F, 10-1F at an even offset
 _CONTROL_PAIR_RE = "^(?:[0-9A-F]{2})*(?:0[0-8BCEF]|1[0-9A-F])"
@@ -82,10 +83,11 @@ def content_type_col(url: Column, html: Column) -> Column:
         F.when(_magic(html, b"%PDF"), "pdf")
         .when(is_image, "image")
         .when(_magic(html, b"{\\rtf"), "rtf")
-        .when(_magic(html, b"\x1f\x8b"), "gzip")
-        .when(_magic(html, b"\xfd7zXZ\x00"), "xz")
-        .when(_magic(html, b"BZh"), "bzip2")
-        .when(is_xml_markup, "xml")
+    )
+    for c in CODECS:
+        sniffed = sniffed.when(_magic(html, c.magic), c.type_name)
+    sniffed = (
+        sniffed.when(is_xml_markup, "xml")
         .when(is_html_markup, "html")
         .when(is_texty, "txt")
         .otherwise("unknown")

@@ -19,7 +19,11 @@ STOPWORDS = (
     "by", "from", "has", "have", "not",
 )
 
-_WS = r"\s+"
+# the whitespace class, spelled out: it is exactly Java's ``\s`` (what
+# Spark's regexps see), while RE2's ``\s`` (DuckDB) lacks \x0B — the
+# oracle SQL uses this same class
+WS_CHARS = r" \t\n\x0B\f\r"
+_WS = f"[{WS_CHARS}]+"
 
 
 def normalized_text_col(text: Column) -> Column:

@@ -30,6 +30,7 @@ from .csv_kernel import extract_csv
 from .eml_kernel import extract_eml
 from .html_kernel import extract_html
 from .image_kernel import extract_image_metadata
+from .limits import CODEC_BY_TYPE, CODECS, decompress_streams
 from .office_kernel import (
     DOC_LEGACY_LITERAL,
     PPT_LEGACY_LITERAL,
@@ -67,103 +68,16 @@ for _e in ("htm",):
 for _e in ("jpg", "jpeg", "png", "tiff", "tif", "bmp", "gif", "webp", "heic", "heif"):
     EXT_TO_TYPE[_e] = "image"
 # north-star extension beyond the reference taxonomy: crawls store
-# gzip-compressed bodies; the payload decompresses transparently and
-# re-dispatches (mirrored in functions/sniff.py — keep in sync)
-EXT_TO_TYPE["gz"] = "gzip"
-EXT_TO_TYPE["xz"] = "xz"
-EXT_TO_TYPE["bz2"] = "bzip2"
+# compressed bodies; the payload decompresses transparently and
+# re-dispatches (kernels/limits.py CODECS)
+for _c in CODECS:
+    EXT_TO_TYPE[_c.ext] = _c.type_name
 
 # url extension capture: last dot-segment of the path, before ?/#.
 # Mirrored in functions/sniff.py as a regexp_extract — keep in sync.
 URL_EXT_PATTERN = r"^[^?#]*/[^/?#]*\.([A-Za-z0-9]{1,5})(?:[?#].*)?$"
 _URL_EXT_RE = re.compile(URL_EXT_PATTERN)
 _LEADING_WS_RE = re.compile(r"^[ \t\r\n\f]+")
-
-# gzip decompression bomb cap (bytes of decompressed output per payload)
-_GZIP_CAP = 128 * 1024 * 1024
-
-
-def _gunzip_members(payload: bytes, logs: list[str]) -> bytes:
-    """Decompress ALL concatenated gzip members under the shared bomb cap
-    (crawl payloads are often member-concatenated, like .warc.gz — the
-    single-member decompress silently dropped everything after member 1).
-    A TRUNCATED stream raises (D2 containment → error literal): at crawl
-    scale a cut-off document must not enter the corpus flagged clean with
-    partial text. Non-gzip trailing bytes after a complete member are
-    discarded with a log line (zero padding is spec-legal and silent)."""
-    import zlib as _zlib
-
-    out = bytearray()
-    data = payload
-    while True:
-        dobj = _zlib.decompressobj(wbits=31)
-        budget = _GZIP_CAP - len(out)
-        out += dobj.decompress(data, budget + 1)
-        if len(out) > _GZIP_CAP or dobj.unconsumed_tail:
-            raise ValueError("gzip payload exceeds decompression cap")
-        if not dobj.eof:
-            raise ValueError("gzip stream truncated or corrupt")
-        data = dobj.unused_data.lstrip(b"\x00")
-        if not data:
-            return bytes(out)
-        if not data.startswith(b"\x1f\x8b"):
-            logs.append(
-                f"Discarded {len(data)} trailing non-gzip bytes after "
-                "gzip member"
-            )
-            return bytes(out)
-
-
-def _unxz_streams(payload: bytes, logs: list[str]) -> bytes:
-    """xz twin of :func:`_gunzip_members`: all concatenated xz streams,
-    shared cap, truncation raises, non-xz tail discarded with a log."""
-    import lzma as _lzma
-
-    out = bytearray()
-    data = payload
-    while True:
-        dobj = _lzma.LZMADecompressor(format=_lzma.FORMAT_XZ)
-        budget = _GZIP_CAP - len(out)
-        out += dobj.decompress(data, budget + 1)
-        if len(out) > _GZIP_CAP:
-            raise ValueError("xz payload exceeds decompression cap")
-        if not dobj.eof:
-            raise ValueError("xz stream truncated or corrupt")
-        data = dobj.unused_data.lstrip(b"\x00")
-        if not data:
-            return bytes(out)
-        if not data.startswith(b"\xfd7zXZ\x00"):
-            logs.append(
-                f"Discarded {len(data)} trailing non-xz bytes after xz stream"
-            )
-            return bytes(out)
-
-
-def _unbz2_streams(payload: bytes, logs: list[str]) -> bytes:
-    """bzip2 twin of :func:`_gunzip_members`: all concatenated bz2 streams
-    (the pbzip2/wiki-dump layout is one stream per block), shared cap,
-    truncation raises, non-bz2 tail discarded with a log."""
-    import bz2 as _bz2
-
-    out = bytearray()
-    data = payload
-    while True:
-        dobj = _bz2.BZ2Decompressor()
-        budget = _GZIP_CAP - len(out)
-        out += dobj.decompress(data, budget + 1)
-        if len(out) > _GZIP_CAP:
-            raise ValueError("bzip2 payload exceeds decompression cap")
-        if not dobj.eof:
-            raise ValueError("bzip2 stream truncated or corrupt")
-        data = dobj.unused_data.lstrip(b"\x00")
-        if not data:
-            return bytes(out)
-        if not data.startswith(b"BZh"):
-            logs.append(
-                f"Discarded {len(data)} trailing non-bz2 bytes after "
-                "bzip2 stream"
-            )
-            return bytes(out)
 
 
 def url_extension(url: str) -> str | None:
@@ -190,12 +104,9 @@ def _sniff_magic(payload: bytes) -> str | None:
         return "image"
     if payload.startswith(b"{\\rtf"):
         return "rtf"
-    if payload.startswith(b"\x1f\x8b"):
-        return "gzip"
-    if payload.startswith(b"\xfd7zXZ\x00"):
-        return "xz"
-    if payload.startswith(b"BZh"):
-        return "bzip2"
+    for c in CODECS:
+        if payload.startswith(c.magic):
+            return c.type_name
     return None
 
 
@@ -373,56 +284,21 @@ def extract_payload(
 
             text, k_logs = extract_xls(payload or b"")
             logs.extend(k_logs)
-        elif file_type == "xz":
-            # same transparent-decompression contract as gzip: all
-            # concatenated streams, shared bomb cap, truncation raises
-            inner = _unxz_streams(payload or b"", logs)
-            inner_url = url[:-3] if (url or "").lower().endswith(".xz") else url
-            inner_ct = detect_content_type(inner_url, inner)
-            if inner_ct in ("gzip", "xz", "bzip2"):
-                inner_ct = "unknown"  # one level only
-            logs.append(
-                f"Decompressed xz payload "
-                f"({len(payload or b'')} -> {len(inner)} bytes)"
-            )
-            text, ocr_used, _s, error, k_logs = extract_payload(
-                inner_url, inner, inner_ct,
-                use_ocr=use_ocr, main_content=main_content,
-                ocr_language=ocr_language, handwriting_mode=handwriting_mode,
-                legacy_office=legacy_office,
-            )
-            logs.extend(k_logs)
-        elif file_type == "gzip":
+        elif file_type in CODEC_BY_TYPE:
             # transparent crawl-payload decompression (north-star
-            # extension; the reference has no gzip path): gunzip ALL
-            # members with a bomb cap, strip the .gz suffix, re-detect,
-            # dispatch once (no nested gzip recursion)
-            inner = _gunzip_members(payload or b"", logs)
-            inner_url = url[:-3] if (url or "").lower().endswith(".gz") else url
+            # extension; the reference has none): all concatenated
+            # streams under the bomb cap, truncation raises, strip the
+            # codec suffix, re-detect, dispatch once (one level only)
+            codec = CODEC_BY_TYPE[file_type]
+            inner = decompress_streams(codec, payload or b"", logs)
+            inner_url = url
+            if (url or "").lower().endswith("." + codec.ext):
+                inner_url = url[: -len(codec.ext) - 1]
             inner_ct = detect_content_type(inner_url, inner)
-            if inner_ct in ("gzip", "xz", "bzip2"):
+            if inner_ct in CODEC_BY_TYPE:
                 inner_ct = "unknown"  # one level only
             logs.append(
-                f"Decompressed gzip payload "
-                f"({len(payload or b'')} -> {len(inner)} bytes)"
-            )
-            text, ocr_used, _s, error, k_logs = extract_payload(
-                inner_url, inner, inner_ct,
-                use_ocr=use_ocr, main_content=main_content,
-                ocr_language=ocr_language, handwriting_mode=handwriting_mode,
-                legacy_office=legacy_office,
-            )
-            logs.extend(k_logs)
-        elif file_type == "bzip2":
-            # same transparent-decompression contract as gzip/xz: all
-            # concatenated streams, shared bomb cap, truncation raises
-            inner = _unbz2_streams(payload or b"", logs)
-            inner_url = url[:-4] if (url or "").lower().endswith(".bz2") else url
-            inner_ct = detect_content_type(inner_url, inner)
-            if inner_ct in ("gzip", "xz", "bzip2"):
-                inner_ct = "unknown"  # one level only
-            logs.append(
-                f"Decompressed bzip2 payload "
+                f"Decompressed {file_type} payload "
                 f"({len(payload or b'')} -> {len(inner)} bytes)"
             )
             text, ocr_used, _s, error, k_logs = extract_payload(

@@ -27,6 +27,8 @@ from collections.abc import Iterator
 
 import numpy as np
 
+from . import limits
+
 
 class GifError(Exception):
     """Raised inside the frame iterator on a malformed stream; converted
@@ -92,7 +94,7 @@ def open_gif(payload: bytes) -> tuple[int, int, Iterator[tuple[int, np.ndarray]]
         if len(b) < 13 or b[:6] not in (b"GIF87a", b"GIF89a"):
             return None
         w, h = struct.unpack_from("<HH", b, 6)
-        if w <= 0 or h <= 0:
+        if w <= 0 or h <= 0 or w * h > limits.MAX_PIXELS:
             return None
         flags = b[10]
         pos = 13
@@ -133,6 +135,8 @@ def open_gif(payload: bytes) -> tuple[int, int, Iterator[tuple[int, np.ndarray]]
                     pos += 1
                 elif block == 0x2C:  # image descriptor
                     left, top, iw, ih = struct.unpack_from("<HHHH", b, pos)
+                    if iw * ih > limits.MAX_PIXELS:
+                        raise GifError("frame exceeds the pixel bound")
                     iflags = b[pos + 8]
                     pos += 9
                     interlaced = bool(iflags & 0x40)

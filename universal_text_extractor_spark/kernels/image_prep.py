@@ -30,9 +30,10 @@ Failures return None / defaults — never raise (D2 containment).
 from __future__ import annotations
 
 import struct
-import zlib
 
 import numpy as np
+
+from . import limits
 
 
 # ---------------------------------------------------------------- decode
@@ -114,7 +115,7 @@ def _decode_bmp(b: bytes) -> np.ndarray | None:
     w, h = struct.unpack_from("<ii", b, 18)
     planes, bpp = struct.unpack_from("<HH", b, 26)
     compression = struct.unpack_from("<I", b, 30)[0]
-    if w <= 0 or h == 0 or w * abs(h) > 48_000_000:
+    if w <= 0 or h == 0 or w * abs(h) > limits.MAX_PIXELS:
         return None
     top_down = h < 0
     h = abs(h)
@@ -285,6 +286,8 @@ def _decode_png(b: bytes) -> np.ndarray | None:
                 plte = np.frombuffer(data, dtype=np.uint8)
         if not w or not h or interlace not in (0, 1):
             return None
+        if w * h > limits.MAX_PIXELS:
+            return None  # header-claimed dims beyond the sanity bound
         channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color)
         if channels is None:
             return None
@@ -296,7 +299,7 @@ def _decode_png(b: bytes) -> np.ndarray | None:
             return None
         if color == 3 and (plte is None or plte.size % 3 or plte.size == 0):
             return None
-        raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8)
+        raw = np.frombuffer(limits.inflate(idat), dtype=np.uint8)
         if interlace == 0:
             px, _used = _png_subimage(raw, w, h, channels, depth)
         else:

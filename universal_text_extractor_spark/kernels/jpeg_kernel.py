@@ -48,6 +48,8 @@ import struct
 
 import numpy as np
 
+from . import limits
+
 # Zigzag scan order: index k in the coded stream → natural (row-major)
 # position in the 8×8 coefficient block (row = vertical frequency).
 ZIGZAG = np.array(
@@ -75,14 +77,6 @@ for _u in range(8):
 
 class JpegError(Exception):
     pass
-
-
-# Containment bound: reject header-claimed dimensions whose pixel count
-# exceeds this BEFORE allocating coefficient stores. Progressive EOB
-# runs cover thousands of blocks in a few bytes, so without this cap a
-# few-KB crafted SOF2 payload could drive multi-GB allocations in the
-# finish pass (a 600-dpi letter scan is ~34M pixels — well inside).
-MAX_PIXELS = 48_000_000
 
 
 class _Huffman:
@@ -311,7 +305,9 @@ def _parse_sof(seg: bytes, progressive: bool) -> dict | None:
     ncomp = seg[5]
     if precision != 8 or ncomp not in (1, 3) or not h or not w:
         return None
-    if int(h) * int(w) > MAX_PIXELS:
+    if int(h) * int(w) > limits.MAX_PIXELS:
+        # checked before the coefficient stores: progressive EOB runs
+        # cover thousands of blocks in a few bytes
         return None  # header-claimed dims beyond the sanity bound
     comps = []
     for ci in range(ncomp):
@@ -357,7 +353,7 @@ def _parse_sof3(seg: bytes) -> dict | None:
     ncomp = seg[5]
     if precision != 8 or ncomp not in (1, 3) or not h or not w:
         return None
-    if int(h) * int(w) > MAX_PIXELS:
+    if int(h) * int(w) > limits.MAX_PIXELS:
         return None  # header-claimed dims beyond the sanity bound
     comps = []
     for ci in range(ncomp):

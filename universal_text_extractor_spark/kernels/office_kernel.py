@@ -31,6 +31,7 @@ import re
 import xml.etree.ElementTree as ET
 import zipfile
 
+from . import limits
 from .html_kernel import _walk as _html_walk
 
 
@@ -53,7 +54,7 @@ def _text_of(elem: ET.Element, text_tag: str) -> str:
 
 def _zip_xml(zf: zipfile.ZipFile, name: str) -> ET.Element | None:
     try:
-        return ET.fromstring(zf.read(name))
+        return ET.fromstring(limits.read_member(zf, name))
     except Exception:
         return None
 
@@ -466,7 +467,7 @@ def extract_epub(payload: bytes) -> tuple[str, list[str]]:
                 continue
             path = posixpath.normpath(posixpath.join(base, href)) if base else href
             try:
-                html_content = zf.read(path).decode("utf-8")
+                html_content = limits.read_member(zf, path).decode("utf-8")
             except Exception:
                 continue
             _, texts = _html_walk(html_content)  # script/style already dropped

@@ -29,7 +29,8 @@ page IS its image; arbitrary vector rasterization remains out of scope).
 from __future__ import annotations
 
 import re
-import zlib
+
+from . import limits
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b", re.S)
 _ROOT_RE = re.compile(rb"/Root\s+(\d+)\s+\d+\s+R")
@@ -406,7 +407,7 @@ def _stream_bytes(payload: bytes, objs, num: int, crypt=None) -> bytes | None:
         parm = _resolve(objs, parms_list[fi]) if fi < len(parms_list) else None
         if f == "/FlateDecode":
             try:
-                raw = zlib.decompress(raw)
+                raw = limits.inflate(raw)
             except Exception:
                 return None
         elif f == "/LZWDecode":
@@ -420,7 +421,7 @@ def _stream_bytes(payload: bytes, objs, num: int, crypt=None) -> bytes | None:
             from .tiff_kernel import _lzw
 
             try:
-                raw = _lzw(raw, 1 << 26)  # bomb-contained output cap
+                raw = _lzw(raw, limits.MAX_INFLATE_BYTES)
             except Exception:
                 return None
         elif f == "/ASCIIHexDecode":

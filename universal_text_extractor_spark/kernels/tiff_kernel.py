@@ -12,7 +12,7 @@ differencing), both byte orders (II/MM). Everything else — planar=2,
 other bit depths, JPEG-in-TIFF, CCITT fax codings, reversed FillOrder,
 non-default Orientation — returns None: containment, not a crash (D2).
 Decompression is budget-capped per strip and header dims are bounded by
-``MAX_PIXELS``, so crafted payloads can't balloon memory either.
+``limits.MAX_PIXELS``, so crafted payloads can't balloon memory either.
 
 TIFF is lossless, so the writer-pixel round-trip oracle is BYTE-EXACT
 (tests/test_tiff.py) against the INDEPENDENT spec-based writer
@@ -35,16 +35,11 @@ import struct
 
 import numpy as np
 
+from . import limits
+
 
 class TiffError(Exception):
     pass
-
-
-# Containment bound: reject header-claimed dimensions whose pixel count
-# exceeds this before allocating anything (a 600-dpi letter scan is ~34M
-# pixels; a crafted header claiming 65535x65535 would otherwise drive
-# multi-GB allocations from a few-KB payload).
-MAX_PIXELS = 48_000_000
 
 
 _TYPE_FMT = {1: "B", 3: "H", 4: "I"}  # BYTE / SHORT / LONG
@@ -216,7 +211,7 @@ def _decode(b: bytes) -> np.ndarray | None:
     w, h = tags[256][0], tags[257][0]
     if not w or not h:
         return None
-    if w * h > MAX_PIXELS:
+    if w * h > limits.MAX_PIXELS:
         return None  # header-claimed dims beyond the sanity bound
     spp = tags.get(277, [1])[0]
     photo = tags.get(262, [1])[0]
@@ -255,7 +250,7 @@ def _decode(b: bytes) -> np.ndarray | None:
             raise TiffError("bad tile layout")
         across = (w + tw - 1) // tw
         down = (h + tl - 1) // tl
-        if across * down != len(offsets) or down * tl * across * tw > 4 * MAX_PIXELS:
+        if across * down != len(offsets) or down * tl * across * tw > 4 * limits.MAX_PIXELS:
             raise TiffError("tile count mismatch")
         canvas = np.zeros((down * tl, across * tw, spp), dtype=np.uint8)
         need = tl * tw * spp  # edge tiles are written FULL-SIZE (spec)

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text_funcs import (
     STOPWORDS,
+    WS_CHARS,
     alpha_ratio_col,
     normalized_text_col,
     quality_keep_col,
@@ -141,7 +142,7 @@ def token_counts(documents: DataFrame) -> DataFrame:
     numbers, and punctuation runs counted separately)."""
     bpe_ish = F.size(
         F.regexp_extract_all(
-            F.col("text"), F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0)
+            F.col("text"), F.lit(f"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{WS_CHARS}]"), F.lit(0)
         )
     )
     return documents.select(

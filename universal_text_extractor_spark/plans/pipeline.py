@@ -169,7 +169,6 @@ def run_extraction(
     num_partitions: int | None = None,
     run_id: str | None = None,
     fail_after_buckets: int | None = None,
-    fail_between_metrics_and_manifest: bool = False,
     use_ocr: bool = False,
     main_content: bool = False,
     legacy_office: bool = False,
@@ -317,14 +316,6 @@ def run_extraction(
         metrics = _metrics_table(lineage.value, run_id, b)
         if metrics.num_rows:
             storage.append_metrics(spark, metrics, out_dir)
-        if fail_between_metrics_and_manifest:
-            # crash-injection hook for the metrics-published-but-bucket-
-            # not-committed window (r5 review, batch 3): the bucket
-            # re-runs on resume and its metrics re-publish must REPLACE,
-            # not duplicate
-            raise RuntimeError(
-                f"injected failure between metrics and manifest (bucket {b})"
-            )
         storage.append_manifest(spark, out_dir, b, run_id)
         rows_written += sum(metrics["doc_count"].to_pylist())
         committed.append(b)
@@ -351,7 +342,6 @@ def retention_cleanup(
     spark: SparkSession,
     out_dir: str,
     cutoff_ts: str,
-    fail_before_publish: bool = False,
 ) -> int:
     """D7/A10 retention delete (reference utils/database.py:583-621) on the
     metrics table. With Iceberg this is ``DELETE FROM metrics WHERE ts <
@@ -404,8 +394,6 @@ def retention_cleanup(
         kept_df.write.mode("overwrite").parquet(tmp)
     else:
         kept_df.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    if fail_before_publish:  # crash-injection hook for tests
-        raise RuntimeError("injected crash before retention publish")
     # publish: retire old, promote new, then drop the retired copy
     shutil.rmtree(old, ignore_errors=True)
     os.rename(path, old)
