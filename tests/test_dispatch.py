@@ -1,24 +1,30 @@
-"""Parity test: the JVM Column-expression sniff (functions/sniff.py) must
-agree with the Python kernel detector (kernels/dispatch.py) on EVERY row of
-the synthetic corpus + all fixtures (the rule-parity contract both modules
-document)."""
+"""Sniff tests: ``content_type_col`` (functions/sniff.py, the package's
+one sniffer ``detect_content_type`` behind an Arrow UDF) must agree with
+``kernels.dispatch.detect_content_type`` on EVERY row of the synthetic
+corpus + all fixtures + NULL url/html rows, and the codec branches of the
+dispatch decompress transparently through both the sniff column and the
+fused extraction."""
 
 from __future__ import annotations
 
+import ast
 import bz2
 import gzip
 import json
 import lzma
+import pathlib
 import random
+import re
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+import universal_text_extractor_spark
 from conftest import FIXTURES
 from universal_text_extractor_spark.functions.sniff import content_type_col
 from universal_text_extractor_spark.kernels import detect_content_type
-from universal_text_extractor_spark.kernels.dispatch import extract_payload
-from universal_text_extractor_spark.kernels.limits import CODEC_BY_TYPE
+from universal_text_extractor_spark.kernels.dispatch import EXT_TO_TYPE, extract_payload
+from universal_text_extractor_spark.kernels.limits import CODEC_BY_TYPE, CODECS
 from universal_text_extractor_spark.operators.extract import extract_pages_fused
 from universal_text_extractor_spark.sources.pages_gen import _pdf_doc_pages, make_page
 
@@ -46,6 +52,8 @@ def test_sniff_parity_corpus(spark):
         ("https://a.example.com/", b"<html><body>x</body></html>"),
         ("https://a.example.com/x.verylongext", b"text"),
         ("https://a.example.com/x.tar.gz", b"\x1f\x8b\x08junk\x00\x01"),
+        (None, b"%PDF-1.4 no url"),
+        ("https://a.example.com/null-html", None),
     ]
     for u, b in extra:
         pages.append({"url": u, "warc_ts": None, "html": b, "text": "", "lang": "en"})
@@ -63,6 +71,66 @@ def test_sniff_parity_corpus(spark):
         if got[p["url"]] != want:
             mismatches.append((p["url"], got[p["url"]], want))
     assert not mismatches, mismatches[:10]
+
+
+_PKG = pathlib.Path(universal_text_extractor_spark.__file__).parent
+_CONTENT_TYPES = set(EXT_TO_TYPE.values()) | {"txt", "unknown"}
+_MAGICS = (
+    b"%PDF", b"\x89PNG", b"GIF87a", b"GIF89a", b"\xff\xd8\xff", b"BM",
+    b"RIFF", b"WEBP", b"ftyp", b"{\\rtf",
+) + tuple(c.magic for c in CODECS)
+
+
+def _content_type_rule(node: ast.AST) -> bool:
+    """A ``return "<type>"`` or a ``when(…, "<type>")``/``otherwise("<type>")``
+    that yields a content-type name."""
+    if isinstance(node, ast.Return):
+        values = [node.value]
+    elif isinstance(node, ast.Call) and getattr(
+        node.func, "attr", getattr(node.func, "id", None)
+    ) in ("when", "otherwise"):
+        values = node.args
+    else:
+        return False
+    return any(
+        isinstance(v, ast.Constant) and v.value in _CONTENT_TYPES for v in values
+    )
+
+
+def test_one_sniffer_one_arrow_boundary():
+    """Source lint: kernels/dispatch.py holds the package's only
+    content-type rules, and the Spark-facing modules (functions/,
+    operators/) import no pandas and reference no sniff table
+    (EXT_TO_TYPE, CODECS) or magic-byte literal: they reach the sniffer by
+    calling detect_content_type and cross into Python through Arrow."""
+    offenders = []
+    for p in sorted(_PKG.rglob("*.py")):
+        rel = p.relative_to(_PKG).as_posix()
+        src = p.read_text()
+        spark_facing = rel.startswith(("functions/", "operators/"))
+        if spark_facing:
+            offenders += [
+                f"{rel}: {m}" for m in re.findall(r"\b(?:EXT_TO_TYPE|CODECS)\b", src)
+            ]
+        for node in ast.walk(ast.parse(src)):
+            where = f"{rel}:{getattr(node, 'lineno', 0)}"
+            if rel != "kernels/dispatch.py" and _content_type_rule(node):
+                offenders.append(f"{where}: content-type rule")
+            if not spark_facing:
+                continue
+            if isinstance(node, ast.Import):
+                modules = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                modules = [node.module or ""]
+            else:
+                modules = []
+            if any(m.split(".")[0] == "pandas" for m in modules):
+                offenders.append(f"{where}: imports pandas")
+            if isinstance(node, ast.Constant) and isinstance(node.value, bytes) and (
+                node.value.startswith(_MAGICS)
+            ):
+                offenders.append(f"{where}: magic literal {node.value!r}")
+    assert not offenders, offenders
 
 
 # Transparent decompression (north-star crawl extension): one body per
@@ -86,7 +154,7 @@ _SHORT_PREFIX = {"gzip": 10, "xz": 12, "bzip2": 8}
 
 def _assert_transparent(spark, type_name):
     """Payloads with the codec's extension or magic decompress and
-    re-dispatch: JVM/Python detector parity, inner-type routing, one
+    re-dispatch: sniff-column/detector parity, inner-type routing, one
     nesting level whichever codec is inside, corruption containment, and
     the fused pipeline."""
     comp, ext = _COMPRESS[type_name], CODEC_BY_TYPE[type_name].ext

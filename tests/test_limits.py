@@ -94,12 +94,17 @@ def _docx_bomb() -> bytes:
     )
 
 
-def _xlsx(sheet_xml: bytes) -> bytes:
+def _xlsx(*sheets: bytes) -> bytes:
+    names = "".join(
+        f'<sheet name="S{i}" sheetId="{i}"/>' for i in range(1, len(sheets) + 1)
+    )
     return _zip({
         "xl/workbook.xml":
-            f'<workbook {_X_NS}><sheets><sheet name="S1" sheetId="1"/>'
-            "</sheets></workbook>".encode(),
-        "xl/worksheets/sheet1.xml": sheet_xml,
+            f"<workbook {_X_NS}><sheets>{names}</sheets></workbook>".encode(),
+        **{
+            f"xl/worksheets/sheet{i}.xml": sheet
+            for i, sheet in enumerate(sheets, start=1)
+        },
     })
 
 
@@ -108,6 +113,22 @@ def _xlsx_bomb() -> bytes:
     return _xlsx(
         f"<worksheet {_X_NS}><sheetData>".encode()
         + row * (8 * CAP // len(row))
+        + b"</sheetData></worksheet>"
+    )
+
+
+# 16 sheets of 0.6 × CAP: one fits the archive budget, two do not, and all
+# 16 inflate ~10× past it. Long text cells keep the one sheet that is
+# parsed within the memory bound (an ElementTree of tiny cells costs ~17×
+# its XML bytes)
+_SHEETS = 16
+
+
+def _xlsx_sheet() -> bytes:
+    row = b'<row><c t="inlineStr"><is><t>' + b"bomb " * 800 + b"</t></is></c></row>"
+    return (
+        f"<worksheet {_X_NS}><sheetData>".encode()
+        + row * (6 * CAP // 10 // len(row))
         + b"</sheetData></worksheet>"
     )
 
@@ -190,6 +211,11 @@ CASES = [
     ),
     (
         "xlsx-member", "inflate", _xlsx_bomb, lambda: _xlsx(b"<not xml"),
+        lambda b: extract_payload("https://x/bomb.xlsx", b),
+    ),
+    (
+        "xlsx-archive", "inflate", lambda: _xlsx(*[_xlsx_sheet()] * _SHEETS),
+        lambda: _xlsx(_xlsx_sheet(), *[b"<not xml"] * (_SHEETS - 1)),
         lambda b: extract_payload("https://x/bomb.xlsx", b),
     ),
     (
@@ -288,12 +314,12 @@ def test_codec_payload_cap(monkeypatch, codec):
 # ---------------------------------------------------------------- lint
 
 _KERNELS = pathlib.Path(limits.__file__).parent
-# a decompressor, a zip-member read, or a second definition of a bound or
-# a codec's extension/magic
+# a decompressor, a zip archive opened or a member read, or a second
+# definition of a bound or a codec's extension/magic
 _STRAY = re.compile(
     r"^\s*(?:import|from)\s+(?:zlib|lzma|bz2)\b"
     r"|zlib\.decompress|lzma\.LZMADecompressor|bz2\.BZ2Decompressor"
-    r"|zf\.read\("
+    r"|zf\.read\(|zipfile\.ZipFile\("
     r"|MAX_PIXELS\s*=|MAX_INFLATE_BYTES\s*=|48_000_000|1 << 26"
     r"|\\x1f\\x8b|\\xfd7zXZ|b\"BZh\"|\"\.?(?:gz|bz2|xz)\"",
     re.M,
@@ -301,9 +327,10 @@ _STRAY = re.compile(
 
 
 def test_bounds_have_one_home():
-    """No kernel (nor the Spark sniff twin) decompresses, reads a zip
-    member or defines a bound, codec extension or codec magic except
-    through kernels/limits.py, which defines each exactly once."""
+    """No kernel (nor functions/sniff.py) decompresses, opens a zip
+    archive, reads a zip member or defines a bound, codec extension or
+    codec magic except through kernels/limits.py, which defines each
+    exactly once."""
     files = sorted(_KERNELS.glob("*.py")) + [_KERNELS.parent / "functions" / "sniff.py"]
     stray = [
         f"{p.name}: {m.group(0).strip()}"

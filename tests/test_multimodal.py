@@ -363,3 +363,70 @@ def test_avi_top_down_frames_not_mirrored():
         return [arr.tolist() for _, arr in it]
 
     assert decode(top_down) == decode(bottom_up)
+
+
+# The six operators' outputs on an empty input and on a NULL payload
+# (read as b""): (schema, rows). A NULL payload is no image, so
+# image_resize drops it; the rest emit their undecodable-payload row.
+_FRAME0 = bytes.fromhex(
+    "51bfcee268426c9bc3dff4f1c548e4f76e50aa0f1b3cb3a5664fc655f20e47b1"
+)
+_EDGE_ROWS = {
+    "media_metadata": (
+        "url:string,format:string,width:int,height:int,n_bytes:bigint",
+        [("u/null", "unknown", None, None, 0)],
+    ),
+    "image_features": (
+        "url:string,decoded:boolean,features:array<float>",
+        [("u/null", False, [
+            -0.5543212890625, -0.582733154296875, 0.193267822265625,
+            0.547821044921875, -0.46356201171875, -0.244842529296875,
+            -0.720245361328125, 0.51702880859375,
+        ])],
+    ),
+    "audio_features": (
+        "url:string,decoded:boolean,features:array<float>",
+        [("u/null", False, [
+            0.510345458984375, -0.269775390625, 0.538330078125,
+            -0.61053466796875, 0.292938232421875, -0.609161376953125,
+            0.093902587890625, -0.2374267578125, -0.33660888671875,
+            0.02471923828125, 0.059295654296875, 0.2396240234375,
+            -0.472137451171875, -0.900665283203125, -0.18328857421875,
+            0.501861572265625, 0.59088134765625, -0.312957763671875,
+            -0.767364501953125, -0.65570068359375,
+        ])],
+    ),
+    "image_resize": (
+        "url:string,src_width:int,src_height:int,width:int,height:int,"
+        "thumb:binary,decoded:boolean",
+        [],
+    ),
+    "frame_sample": (
+        "url:string,decoded:boolean,frame_no:int,ts_ms:bigint,width:int,"
+        "height:int,frame:binary",
+        [("u/null", False, 0, 0, None, None, _FRAME0 * 8)],
+    ),
+    "image_prep_profile": (
+        "url:string,decoded:boolean,width:int,height:int,n_pix:bigint,"
+        "sum_gray:bigint,ink0:bigint,edge_cnt:bigint,is_scanned:boolean,"
+        "orientation:int",
+        [("u/null", False, None, None, None, None, None, None, False, 0)],
+    ),
+}
+
+
+def test_edge_rows_cross_the_arrow_boundary(spark):
+    """Every operator keeps its schema on a zero-row input (and emits no
+    rows), and turns a NULL payload into its literal undecodable row."""
+    empty = spark.createDataFrame([], "url string, payload binary")
+    null = spark.createDataFrame([("u/null", None)], "url string, payload binary")
+    for name, (schema, rows) in _EDGE_ROWS.items():
+        op = getattr(M, name)
+        out = op(empty)
+        assert out.schema.simpleString() == f"struct<{schema}>", name
+        assert out.collect() == [], name
+        got = [
+            tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in op(null).collect()
+        ]
+        assert got == rows, name

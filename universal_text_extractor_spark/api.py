@@ -91,7 +91,7 @@ class TextExtractor:
         with open(file_path, "rb") as f:
             payload = f.read()
         # full path, not basename: the shared extension rule anchors on a
-        # preceding '/' (URL_EXT_PATTERN), and a filesystem path satisfies
+        # preceding '/' (dispatch._URL_EXT_RE), and a filesystem path satisfies
         # it the same way a url does
         return self.extract_from_bytes(os.path.abspath(file_path), payload)
 

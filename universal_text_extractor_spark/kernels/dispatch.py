@@ -7,13 +7,9 @@ reference's ``mimetypes.guess_type`` fallback (our input is a binary column,
 not a file path, so the sniff reads magic bytes instead of guessing from the
 path — BASELINE.json input_hint).
 
-``detect_content_type`` is the sniff the extraction path runs: the
-``mapInArrow`` dispatch (operators/extract.py) calls it per row. Its rules
-are *also* implemented as a pure Spark Column expression in
-``functions/sniff.py``, which now serves only the benchmark's sniff probe
-and the parity test that keeps the two rule-identical over the full
-synthetic corpus (tests/test_dispatch.py). Change both or neither until
-that twin is deleted.
+``detect_content_type`` is the package's one content sniffer: the
+``mapInArrow`` dispatch (operators/extract.py) calls it per row, and
+``functions/sniff.py`` maps it over Arrow batches as a Column.
 
 ``extract_payload`` is the 12-way dispatcher + error-containment wrapper
 (reference utils/file_handlers.py:174-259): any kernel exception becomes the
@@ -57,8 +53,8 @@ SUPPORTED_FILE_TYPES = {
     "Ebooks": ["epub"],
 }
 
-# extension -> dispatch branch. html/htm collapse to "html"; all image
-# extensions collapse to "image" (one UDF branch each).
+# extension -> content type. html/htm collapse to "html"; all image
+# extensions collapse to "image".
 EXT_TO_TYPE: dict[str, str] = {}
 for _cat, _exts in SUPPORTED_FILE_TYPES.items():
     for _e in _exts:
@@ -73,10 +69,8 @@ for _e in ("jpg", "jpeg", "png", "tiff", "tif", "bmp", "gif", "webp", "heic", "h
 for _c in CODECS:
     EXT_TO_TYPE[_c.ext] = _c.type_name
 
-# url extension capture: last dot-segment of the path, before ?/#.
-# Mirrored in functions/sniff.py as a regexp_extract — keep in sync.
-URL_EXT_PATTERN = r"^[^?#]*/[^/?#]*\.([A-Za-z0-9]{1,5})(?:[?#].*)?$"
-_URL_EXT_RE = re.compile(URL_EXT_PATTERN)
+# url extension capture: last dot-segment of the path, before ?/#
+_URL_EXT_RE = re.compile(r"^[^?#]*/[^/?#]*\.([A-Za-z0-9]{1,5})(?:[?#].*)?$")
 _LEADING_WS_RE = re.compile(r"^[ \t\r\n\f]+")
 
 
@@ -86,7 +80,7 @@ def url_extension(url: str) -> str | None:
 
 
 def _sniff_magic(payload: bytes) -> str | None:
-    """Byte-level magic sniff. Rule-identical to functions/sniff.py."""
+    """Byte-level magic sniff."""
     if payload.startswith(b"%PDF"):
         return "pdf"
     if (
@@ -112,8 +106,7 @@ def _sniff_magic(payload: bytes) -> str | None:
 
 def _sniff_markup(payload: bytes) -> str | None:
     """Prefix sniff on the first 256 bytes, interpreted as UTF-8 with
-    replacement (same result as Spark's binary→string cast for the ASCII
-    prefixes this rule matches)."""
+    replacement."""
     prefix = payload[:256].decode("utf-8", errors="replace")
     prefix = _LEADING_WS_RE.sub("", prefix).lower()
     if prefix.startswith("<?xml"):
@@ -125,8 +118,7 @@ def _sniff_markup(payload: bytes) -> str | None:
 
 def _sniff_text(payload: bytes) -> bool:
     """True iff the first 256 bytes contain no control byte other than
-    tab/LF/CR — the byte-level plain-text rule (mirrored in sniff.py as a
-    regexp over hex pairs)."""
+    tab/LF/CR — the byte-level plain-text rule."""
     return all(b in (9, 10, 13) or b >= 32 for b in payload[:256])
 
 

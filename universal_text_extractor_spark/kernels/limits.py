@@ -16,13 +16,14 @@ imported, so a test can shrink a cap with ``monkeypatch.setattr``.
 from __future__ import annotations
 
 import bz2
+import io
 import lzma
 import zipfile
 import zlib
 from collections.abc import Callable
 from typing import NamedTuple
 
-# decompressed bytes allowed out of one payload, stream or archive member
+# decompressed bytes allowed out of one payload, stream or zip archive
 MAX_INFLATE_BYTES = 128 * 1024 * 1024
 
 # header-claimed pixel count bound, checked BEFORE anything is allocated
@@ -41,8 +42,7 @@ class Codec(NamedTuple):
     tail_log: str  # "Discarded N {tail_log}" for a non-codec tail
 
 
-# sniff order matters: kernels/dispatch.py and functions/sniff.py test the
-# magics in this order
+# sniff order matters: kernels/dispatch.py tests the magics in this order
 CODECS = (
     Codec(
         "gzip", "gz", b"\x1f\x8b",
@@ -103,11 +103,23 @@ def inflate(data: bytes) -> bytes:
     return out
 
 
-def read_member(zf: zipfile.ZipFile, name: str) -> bytes:
-    """``zf.read(name)`` under ``MAX_INFLATE_BYTES`` (the member's CRC is
-    still checked when it is read to the end)."""
+class Archive(zipfile.ZipFile):
+    """A zip archive read from a payload, whose members share one budget of
+    ``MAX_INFLATE_BYTES`` decompressed bytes: a small archive of many
+    members, each under the cap, must not inflate past it in total."""
+
+    def __init__(self, payload: bytes):
+        super().__init__(io.BytesIO(payload))
+        self.inflate_left = MAX_INFLATE_BYTES
+
+
+def read_member(zf: Archive, name: str) -> bytes:
+    """``zf.read(name)`` within what is left of the archive's inflate
+    budget (the member's CRC is still checked when it is read to the
+    end)."""
     with zf.open(name) as f:
-        data = f.read(MAX_INFLATE_BYTES + 1)
-    if len(data) > MAX_INFLATE_BYTES:
+        data = f.read(zf.inflate_left + 1)
+    if len(data) > zf.inflate_left:
         raise ValueError(f"zip member {name} exceeds decompression cap")
+    zf.inflate_left -= len(data)
     return data

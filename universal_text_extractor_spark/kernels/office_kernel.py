@@ -25,11 +25,9 @@ error literals, never exceptions.
 
 from __future__ import annotations
 
-import io
 import posixpath
 import re
 import xml.etree.ElementTree as ET
-import zipfile
 
 from . import limits
 from .html_kernel import _walk as _html_walk
@@ -52,7 +50,7 @@ def _text_of(elem: ET.Element, text_tag: str) -> str:
     )
 
 
-def _zip_xml(zf: zipfile.ZipFile, name: str) -> ET.Element | None:
+def _zip_xml(zf: limits.Archive, name: str) -> ET.Element | None:
     try:
         return ET.fromstring(limits.read_member(zf, name))
     except Exception:
@@ -75,7 +73,7 @@ DOC_LEGACY_LITERAL = (
 def extract_docx(payload: bytes) -> tuple[str, list[str]]:
     logs = ["Attempting enhanced DOCX extraction (zip + document.xml walk)"]
     try:
-        zf = zipfile.ZipFile(io.BytesIO(payload))
+        zf = limits.Archive(payload)
         root = _zip_xml(zf, "word/document.xml")
         if root is None:
             logs.append("All document extraction methods failed")
@@ -244,7 +242,7 @@ def _pptx_slide(root: ET.Element, idx: int) -> str:
 def extract_pptx(payload: bytes) -> tuple[str, list[str]]:
     logs = ["Attempting PPTX extraction (zip + slide XML walk)"]
     try:
-        zf = zipfile.ZipFile(io.BytesIO(payload))
+        zf = limits.Archive(payload)
         slide_names = sorted(
             (n for n in zf.namelist() if re.fullmatch(r"ppt/slides/slide\d+\.xml", n)),
             key=lambda n: int(re.search(r"(\d+)", n).group(1)),
@@ -287,7 +285,7 @@ def extract_xlsx(payload: bytes) -> tuple[str, list[str]]:
     """``--- Sheet: name ---`` + pipe-separated rows (reference :808-829)."""
     logs = ["Attempting XLSX extraction (zip + worksheet XML walk)"]
     try:
-        zf = zipfile.ZipFile(io.BytesIO(payload))
+        zf = limits.Archive(payload)
         shared: list[str] = []
         ss = _zip_xml(zf, "xl/sharedStrings.xml")
         if ss is not None:
@@ -365,7 +363,7 @@ def extract_ods(payload: bytes) -> tuple[str, list[str]]:
     """``--- Table N ---`` + " | "-joined rows (reference :835-866)."""
     logs = ["Attempting ODS extraction (zip + content.xml walk)"]
     try:
-        zf = zipfile.ZipFile(io.BytesIO(payload))
+        zf = limits.Archive(payload)
         root = _zip_xml(zf, "content.xml")
         if root is None:
             raise ValueError("no content.xml")
@@ -399,7 +397,7 @@ def extract_odf(payload: bytes) -> tuple[str, list[str]]:
     (reference :1046-1088)."""
     logs = ["Extracting text from ODF document"]
     try:
-        zf = zipfile.ZipFile(io.BytesIO(payload))
+        zf = limits.Archive(payload)
         root = _zip_xml(zf, "content.xml")
         if root is None:
             raise ValueError("no content.xml")
@@ -431,7 +429,7 @@ def extract_epub(payload: bytes) -> tuple[str, list[str]]:
     (reference :1090-1144; chapter HTML handled by the K1 walk)."""
     logs = ["Extracting text from EPUB"]
     try:
-        zf = zipfile.ZipFile(io.BytesIO(payload))
+        zf = limits.Archive(payload)
         container = _zip_xml(zf, "META-INF/container.xml")
         opf_path = None
         if container is not None:

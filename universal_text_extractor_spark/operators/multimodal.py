@@ -2,7 +2,7 @@
 
 Media (image/audio/video) are opaque ``BinaryType`` columns with typed
 metadata — the same payload model as the extraction pipeline's ``html``
-column (BASELINE.json input_hint). Four operators:
+column (BASELINE.json input_hint). Six operators:
 
 - :func:`media_metadata` — sniff + per-format header parse (PNG/GIF/BMP/
   JPEG, reusing the K17 image kernel's header readers — reference
@@ -13,7 +13,7 @@ column (BASELINE.json input_hint). Four operators:
 - :func:`image_prep_profile` — K14-K16 + integer feature stats, DuckDB-
   oracle-checked against writer-side pixel ground truth (r3).
 - :func:`frame_sample` — one output row per sampled frame (1→many,
-  UDTF-shaped via ``mapInPandas``); REAL demuxed frames for animated GIF
+  UDTF-shaped); REAL demuxed frames for animated GIF
   (from-scratch LZW, r3) and uncompressed AVI (RIFF/DIB demux, r3).
 - :func:`audio_features` — REAL windowed RMS energy for RIFF WAV, both
   PCM and IMA-ADPCM compressed (r3).
@@ -32,22 +32,24 @@ partitioning, and no Spark code.
 Scale notes: all operators are embarrassingly parallel (no shuffle — they
 run on whatever partitioning the input has; callers that need balance
 repartition by ``xxhash64(url)`` exactly like the extraction pipeline).
-Pandas/Arrow UDFs only — no per-row Python at the Spark API surface.
+Every operator crosses into Python through the one ``mapInArrow`` row
+mapper, :func:`_map_payloads`: Arrow batches in and out, no pandas.
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
+from collections.abc import Callable, Iterable
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     BooleanType,
-    DoubleType,
     FloatType,
     IntegerType,
     LongType,
@@ -56,10 +58,23 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..kernels.audio_kernel import decode_wav, window_energy
+from ..kernels.gif_kernel import GifError, open_gif
 from ..kernels.image_kernel import parse_image_header
+from ..kernels.image_prep import (
+    _edge_density,
+    decode_image,
+    detect_orientation_gray,
+    edge_count,
+    is_scanned_gray,
+    preprocess_gray,
+    to_grayscale,
+)
+from ..kernels.video_kernel import AviError, open_avi
 
 MEDIA_META_SCHEMA = StructType(
     [
+        StructField("url", StringType()),
         StructField("format", StringType()),
         StructField("width", IntegerType()),
         StructField("height", IntegerType()),
@@ -68,19 +83,40 @@ MEDIA_META_SCHEMA = StructType(
 )
 
 
-def _meta_one(payload: bytes | None) -> tuple[str, int | None, int | None, int]:
-    b = payload or b""
+def _map_payloads(
+    df: DataFrame,
+    url_col: str,
+    payload_col: str,
+    row_fn: Callable[[str | None, bytes], Iterable[tuple]],
+    schema: StructType,
+) -> DataFrame:
+    """The module's one Python boundary: a ``mapInArrow`` pass over
+    (url, payload) in which ``row_fn(url, payload)`` yields zero, one or
+    many output tuples per input row (a NULL payload arrives as ``b""``).
+    Each input batch becomes one output batch, built column by column
+    from ``schema``."""
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        for batch in batches:
+            urls, payloads = (c.to_pylist() for c in batch.columns)
+            rows = [r for u, p in zip(urls, payloads) for r in row_fn(u, p or b"")]
+            columns = list(zip(*rows)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, t) for c, t in zip(columns, arrow_schema.types)],
+                schema=arrow_schema,
+            )
+
+    return df.select(url_col, payload_col).mapInArrow(run, schema)
+
+
+def _meta_rows(url: str | None, b: bytes):
     parsed = parse_image_header(b)
-    if parsed is not None:
+    if parsed is None:
+        yield url, "unknown", None, None, len(b)
+    else:
         w, h, fmt = parsed
-        return fmt, int(w), int(h), len(b)
-    return "unknown", None, None, len(b)
-
-
-@F.pandas_udf(MEDIA_META_SCHEMA)
-def _media_meta_udf(payload: pd.Series) -> pd.DataFrame:
-    rows = [_meta_one(p) for p in payload]
-    return pd.DataFrame(rows, columns=["format", "width", "height", "n_bytes"])
+        yield url, fmt, int(w), int(h), len(b)
 
 
 def media_metadata(
@@ -88,10 +124,7 @@ def media_metadata(
 ) -> DataFrame:
     """Typed metadata for an opaque media column: (url, format, width,
     height, n_bytes). Header-parse only — real in this environment."""
-    return df.select(
-        F.col(url_col).alias("url"),
-        _media_meta_udf(F.col(payload_col)).alias("m"),
-    ).select("url", "m.*")
+    return _map_payloads(df, url_col, payload_col, _meta_rows, MEDIA_META_SCHEMA)
 
 
 # --- deterministic fakes (decode stubs) ------------------------------------
@@ -118,6 +151,7 @@ IMAGE_FEATURE_DIM = 8
 
 FEATURES_SCHEMA = StructType(
     [
+        StructField("url", StringType()),
         StructField("decoded", BooleanType()),
         StructField("features", ArrayType(FloatType())),
     ]
@@ -127,10 +161,6 @@ FEATURES_SCHEMA = StructType(
 def _pixel_features(arr) -> list[float]:
     """8 REAL pixel-derived features: [width, height, aspect, mean_gray,
     std_gray, ink_fraction(<128), white_fraction(≥200), edge_density]."""
-    import numpy as np
-
-    from ..kernels.image_prep import _edge_density, to_grayscale
-
     h, w = arr.shape[:2]
     gray = to_grayscale(arr)
     n = gray.size
@@ -146,22 +176,15 @@ def _pixel_features(arr) -> list[float]:
     ]
 
 
-@F.pandas_udf(FEATURES_SCHEMA)
-def _image_features_udf(payload: pd.Series) -> pd.DataFrame:
-    from ..kernels.image_prep import decode_image
-
-    rows = []
-    for p in payload:
-        b = p or b""
-        arr = decode_image(b)
-        if arr is not None and arr.size:
-            rows.append((True, _pixel_features(arr)))
-        else:
-            # undecodable (arithmetic-coded JPEG, truncated, junk): a clearly
-            # marked deterministic digest so every payload still gets a
-            # fixed-dim vector for downstream ANN plumbing
-            rows.append((False, _digest_floats(b, IMAGE_FEATURE_DIM, b"imgfeat")))
-    return pd.DataFrame(rows, columns=["decoded", "features"])
+def _image_feature_rows(url: str | None, b: bytes):
+    arr = decode_image(b)
+    if arr is not None and arr.size:
+        yield url, True, _pixel_features(arr)
+    else:
+        # undecodable (arithmetic-coded JPEG, truncated, junk): a clearly
+        # marked deterministic digest so every payload still gets a
+        # fixed-dim vector for downstream ANN plumbing
+        yield url, False, _digest_floats(b, IMAGE_FEATURE_DIM, b"imgfeat")
 
 
 def image_features(
@@ -173,10 +196,9 @@ def image_features(
     utils/image_processing.py:31-135 is the pixel-math ancestor).
     ``decoded=false`` rows carry the digest fallback (undecodable
     payloads only)."""
-    return df.select(
-        F.col(url_col).alias("url"),
-        _image_features_udf(F.col(payload_col)).alias("m"),
-    ).select("url", "m.*")
+    return _map_payloads(
+        df, url_col, payload_col, _image_feature_rows, FEATURES_SCHEMA
+    )
 
 
 RESIZE_SCHEMA = StructType(
@@ -221,45 +243,34 @@ def image_resize(
     Non-image payloads are dropped (filter happens inside the same pass —
     no extra scan)."""
 
-    def run(batches):
-        import numpy as np
+    def rows(url, b):
+        parsed = parse_image_header(b)
+        if parsed is None:
+            return
+        sw, sh, _fmt = parsed
+        if sw <= 0 or sh <= 0:
+            return
+        w, h = _thumb_dims(int(sw), int(sh), max_side)
+        arr = decode_image(b)
+        decoded = arr is not None and bool(arr.size)
+        if decoded:
+            gray = to_grayscale(arr)
+            ys = (np.arange(h) * gray.shape[0]) // h
+            xs = (np.arange(w) * gray.shape[1]) // w
+            thumb = gray[np.ix_(ys, xs)].tobytes()
+        else:
+            npix = w * h
+            stream = bytearray()
+            counter = 0
+            while len(stream) < npix:
+                stream += hashlib.blake2b(
+                    b, digest_size=64, key=b"thumb" + str(counter).encode()
+                ).digest()
+                counter += 1
+            thumb = bytes(stream[:npix])
+        yield url, int(sw), int(sh), w, h, thumb, decoded
 
-        from ..kernels.image_prep import decode_image, to_grayscale
-
-        for pdf in batches:
-            rows = []
-            for u, p in zip(pdf[url_col], pdf[payload_col]):
-                b = p or b""
-                parsed = parse_image_header(b)
-                if parsed is None:
-                    continue
-                sw, sh, _fmt = parsed
-                if sw <= 0 or sh <= 0:
-                    continue
-                w, h = _thumb_dims(int(sw), int(sh), max_side)
-                arr = decode_image(b)
-                decoded = arr is not None and bool(arr.size)
-                if decoded:
-                    gray = to_grayscale(arr)
-                    ys = (np.arange(h) * gray.shape[0]) // h
-                    xs = (np.arange(w) * gray.shape[1]) // w
-                    thumb = gray[np.ix_(ys, xs)].tobytes()
-                else:
-                    npix = w * h
-                    stream = bytearray()
-                    counter = 0
-                    while len(stream) < npix:
-                        stream += hashlib.blake2b(
-                            b, digest_size=64, key=b"thumb" + str(counter).encode()
-                        ).digest()
-                        counter += 1
-                    thumb = bytes(stream[:npix])
-                rows.append((u, int(sw), int(sh), w, h, thumb, decoded))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RESIZE_SCHEMA.fields]
-            )
-
-    return df.select(url_col, payload_col).mapInPandas(run, RESIZE_SCHEMA)
+    return _map_payloads(df, url_col, payload_col, rows, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(
@@ -295,79 +306,59 @@ def frame_sample(
     clearly-marked digest fallback at the same schema — ``decoded``
     distinguishes the two."""
 
-    def run(batches):
-        from ..kernels.gif_kernel import GifError, open_gif
-        from ..kernels.image_prep import to_grayscale
-        from ..kernels.video_kernel import AviError, open_avi
+    def rows(url, b):
+        opened = open_gif(b)
+        if opened is None:
+            opened = open_avi(b)
+        if opened is not None:
+            # STREAMING demux: one canvas in memory at a time — a long
+            # animation never materializes all frames (r3 review finding),
+            # and iteration stops as soon as max_frames samples are
+            # emitted. Whole-payload validity preserved: a malformed block
+            # discards the url's real rows and falls through to the digest
+            # path, matching the strict list decoder.
+            w, h, frames_it = opened
+            local: list[tuple] = []
+            t = 0
+            i = 0
+            try:
+                for delay, canvas in frames_it:
+                    t += max(delay, 10)
+                    gray = None
+                    while i < max_frames and i * every_ms < t:
+                        if gray is None:
+                            gray = to_grayscale(canvas).tobytes()
+                        local.append((url, True, i, i * every_ms, w, h, gray))
+                        i += 1
+                    if i >= max_frames:
+                        break
+            except (AviError, GifError):
+                local = []
+            if local:
+                yield from local
+                return
+        duration_ms = len(b) // 1024 * 1000
+        n = min(max_frames, max(duration_ms // every_ms, 0) + 1)
+        for i in range(n):
+            frame = hashlib.blake2b(
+                b, digest_size=32, key=b"frame" + str(i).encode()
+            ).digest()
+            frame = (frame * (bytes_per_frame // 32 + 1))[:bytes_per_frame]
+            yield url, False, i, i * every_ms, None, None, frame
 
-        for pdf in batches:
-            rows = []
-            for u, p in zip(pdf[url_col], pdf[payload_col]):
-                b = p or b""
-                opened = open_gif(b)
-                if opened is None:
-                    opened = open_avi(b)
-                if opened is not None:
-                    # STREAMING demux: one canvas in memory at a time —
-                    # a long animation never materializes all frames
-                    # (r3 review finding), and iteration stops as soon as
-                    # max_frames samples are emitted. Whole-payload
-                    # validity preserved: a malformed block discards the
-                    # url's real rows and falls through to the digest
-                    # path, matching the strict list decoder.
-                    w, h, frames_it = opened
-                    local: list[tuple] = []
-                    t = 0
-                    i = 0
-                    ok = True
-                    try:
-                        for delay, canvas in frames_it:
-                            t += max(delay, 10)
-                            gray = None
-                            while i < max_frames and i * every_ms < t:
-                                if gray is None:
-                                    gray = to_grayscale(canvas).tobytes()
-                                local.append(
-                                    (u, True, i, i * every_ms, w, h, gray)
-                                )
-                                i += 1
-                            if i >= max_frames:
-                                break
-                    except (AviError, GifError):
-                        ok = False
-                    if ok and local:
-                        rows.extend(local)
-                        continue
-                duration_ms = len(b) // 1024 * 1000
-                n = min(max_frames, max(duration_ms // every_ms, 0) + 1)
-                for i in range(n):
-                    frame = hashlib.blake2b(
-                        b, digest_size=32, key=b"frame" + str(i).encode()
-                    ).digest()
-                    frame = (frame * (bytes_per_frame // 32 + 1))[:bytes_per_frame]
-                    rows.append((u, False, i, i * every_ms, None, None, frame))
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
-
-    return df.select(url_col, payload_col).mapInPandas(run, FRAME_SCHEMA)
+    return _map_payloads(df, url_col, payload_col, rows, FRAME_SCHEMA)
 
 
 AUDIO_FEATURE_DIM = 20
 
 
-@F.pandas_udf(FEATURES_SCHEMA)
-def _audio_features_udf(payload: pd.Series) -> pd.DataFrame:
-    from ..kernels.audio_kernel import decode_wav, window_energy
-
-    rows = []
-    for p in payload:
-        b = p or b""
-        dec = decode_wav(b)
-        if dec is not None:
-            _rate, samples = dec
-            rows.append((True, [float(x) for x in window_energy(samples, AUDIO_FEATURE_DIM)]))
-        else:
-            rows.append((False, _digest_floats(b, AUDIO_FEATURE_DIM, b"audiofeat")))
-    return pd.DataFrame(rows, columns=["decoded", "features"])
+def _audio_feature_rows(url: str | None, b: bytes):
+    dec = decode_wav(b)
+    if dec is not None:
+        _rate, samples = dec
+        yield url, True, [float(x) for x in window_energy(samples, AUDIO_FEATURE_DIM)]
+    else:
+        yield url, False, _digest_floats(b, AUDIO_FEATURE_DIM, b"audiofeat")
 
 
 def audio_features(
@@ -378,10 +369,9 @@ def audio_features(
     compressed (kernels/audio_kernel.py); transform codecs (MP3/AAC —
     no codec libraries in this sandbox) keep the digest fallback,
     flagged by ``decoded``."""
-    return df.select(
-        F.col(url_col).alias("url"),
-        _audio_features_udf(F.col(payload_col)).alias("m"),
-    ).select("url", "m.*")
+    return _map_payloads(
+        df, url_col, payload_col, _audio_feature_rows, FEATURES_SCHEMA
+    )
 
 
 # --- K14-K16: REAL image preprocessing (kernels/image_prep.py) -------------
@@ -432,37 +422,21 @@ def image_prep_profile(
     r5 ``adaptive_threshold`` analogue of the reference's OpenCV step,
     utils/image_processing.py:111-124) into the ink0 computation; the
     default (None) keeps the graded m3 profile byte-identical."""
-    from ..kernels.image_prep import (
-        decode_image,
-        detect_orientation_gray,
-        edge_count,
-        is_scanned_gray,
-        preprocess_gray,
-        to_grayscale,
-    )
+    def rows(url, b):
+        arr = decode_image(b)  # decode ONCE; fan out array variants
+        if arr is None or arr.size == 0:
+            yield url, False, None, None, None, None, None, None, False, 0
+            return
+        h, w = arr.shape[:2]
+        gray = to_grayscale(arr)
+        pp = preprocess_gray(gray, preprocess_params)
+        yield (
+            url, True, int(w), int(h), int(gray.size),
+            int(gray.sum()),
+            int((pp == 0).sum()),
+            edge_count(gray),
+            bool(is_scanned_gray(gray)),
+            int(detect_orientation_gray(gray)),
+        )
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for u, p in zip(pdf[url_col], pdf[payload_col]):
-                b = p or b""
-                arr = decode_image(b)  # decode ONCE; fan out array variants
-                if arr is None or arr.size == 0:
-                    rows.append((u, False, None, None, None, None, None, None, False, 0))
-                    continue
-                h, w = arr.shape[:2]
-                gray = to_grayscale(arr)
-                pp = preprocess_gray(gray, preprocess_params)
-                rows.append(
-                    (
-                        u, True, int(w), int(h), int(gray.size),
-                        int(gray.sum()),
-                        int((pp == 0).sum()),
-                        edge_count(gray),
-                        bool(is_scanned_gray(gray)),
-                        int(detect_orientation_gray(gray)),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in PREP_SCHEMA.fields])
-
-    return df.select(url_col, payload_col).mapInPandas(run, PREP_SCHEMA)
+    return _map_payloads(df, url_col, payload_col, rows, PREP_SCHEMA)
