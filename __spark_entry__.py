@@ -218,18 +218,12 @@ def _ws_trim(texpr: str) -> str:
 
 
 def _words(texpr: str = "text") -> str:
-    """Same normalized basis as ``_words_norm`` (r5 review batch 3: the
-    space-only-trim form gave leading-``\\n`` docs a phantom empty token;
-    Spark's ``words_col``/``token_count_col`` moved in lockstep)."""
-    return _words_norm(texpr)
-
-
-def _words_norm(texpr: str = "text") -> str:
-    """Words of the NORMALIZED text (whitespace collapsed before trim) —
-    the shingle basis (mirrors functions.normalized_text_col). ``_words``
-    trims only spaces, so leading/trailing newlines gave it an empty
-    first/last token; shingles must not carry that junk (rule-identical
-    to operators.dedup._shingles_flat)."""
+    """Words of the NORMALIZED text: lowered, whitespace runs collapsed,
+    trimmed, and no token for an empty text. One basis for token counts
+    and shingles, the twin of ``functions.normalized_text_col`` and
+    rule-identical to ``operators.dedup._shingles_flat`` (r5 review batch
+    3: trimming only spaces gave leading-``\\n`` docs a phantom empty
+    token)."""
     n = _ws_trim(f"lower({texpr})")
     return f"CASE WHEN {n} = '' THEN []::VARCHAR[] ELSE string_split({n}, ' ') END"
 
@@ -255,7 +249,7 @@ def _minhash_sig_sql() -> str:
         for seed in D.XOR_SEEDS
     )
     return (
-        f"WITH w AS (SELECT doc_id, {_words_norm()} AS ws FROM documents), "
+        f"WITH w AS (SELECT doc_id, {_words()} AS ws FROM documents), "
         f"sh AS (SELECT doc_id, {_SHINGLES} AS shingles FROM w), "
         "hs AS (SELECT doc_id, shingles, list_transform(shingles, s -> "
         + _H.format(x="s")
@@ -957,7 +951,7 @@ def oracle_sql() -> dict[str, str]:
             # to the Spark side's r5 hashed posting lists: the cap and the
             # self-join key are the same md5-long bridge, so even a hash
             # collision would move both engines identically.
-            f"WITH w AS (SELECT doc_id, {_words_norm()} AS ws FROM documents), "
+            f"WITH w AS (SELECT doc_id, {_words()} AS ws FROM documents), "
             f"sh AS (SELECT doc_id, {_SHINGLES} AS shingles FROM w), "
             f"ex0 AS (SELECT doc_id, {_H.format(x='unnest(shingles)')} AS h FROM sh), "
             "capped AS (SELECT doc_id, h FROM (SELECT doc_id, h, "

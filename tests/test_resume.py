@@ -6,19 +6,31 @@ and export-sink checks."""
 from __future__ import annotations
 
 import os
+from datetime import datetime
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from universal_text_extractor_spark.plans.pipeline import (
     read_extracted,
-    retention_cleanup,
     run_extraction,
 )
-from universal_text_extractor_spark.plans.storage import ParquetStorage
+from universal_text_extractor_spark.plans.storage import (
+    METRICS_SCHEMA,
+    ParquetStorage,
+)
 from universal_text_extractor_spark.sources.pages_gen import generate_pages_df
 
 N = 400
+STORE = ParquetStorage()
+
+METRICS_SCHEMA_DDL = (
+    "struct<partition_id:bigint,doc_count:bigint,input_bytes:bigint,"
+    "byte_range_start:bigint,byte_range_end:bigint,failure_count:bigint,"
+    "ocr_count:bigint,extraction_latency:double,run_id:string,"
+    "ts:timestamp,bucket:int>"
+)
 
 
 def _table(spark, out_dir):
@@ -32,18 +44,64 @@ def _bucket_count(spark, out_dir, bucket):
     return spark.read.parquet(f"{out_dir}/extracted/bucket={bucket}").count()
 
 
-def _crash_retention_before_publish(monkeypatch, out_dir):
-    """Make ``retention_cleanup``'s first publish rename (live metrics →
-    retired copy) crash: the scratch is fully written, the live table not
-    yet touched."""
-    real = os.rename
+def _crash_metrics_rename(monkeypatch, out_dir, nth):
+    """Make the ``nth`` rename under ``out_dir/metrics`` raise. A bucket
+    publish over a live dir renames twice (retire the live dir, promote
+    the new one), so an odd ``nth`` crashes one after its new rows are
+    written and an even one between its two renames."""
+    metrics, real, seen = f"{out_dir}/metrics/", os.rename, []
 
     def rename(src, dst):
-        if os.fspath(dst) == f"{out_dir}/metrics_old":
-            raise RuntimeError("injected crash before retention publish")
+        if os.fspath(src).startswith(metrics):
+            seen.append(src)
+            if len(seen) == nth:
+                raise RuntimeError("injected crash in metrics publish")
         return real(src, dst)
 
     monkeypatch.setattr(os, "rename", rename)
+
+
+# a synthetic metrics table, bucket → row timestamps (UTC, 2024-03-10):
+# bucket 0 holds the oldest rows, bucket 1's straddle 10:30, bucket 2
+# holds the newest; partition_id numbers the rows 0..6 in this order
+_SEED_TS = {0: ["08:00", "09:00"], 1: ["10:00", "10:30", "11:00"], 2: ["12:00", "13:00"]}
+
+
+def _seed_metrics(spark, out_dir, layout="driver"):
+    """Publish the synthetic metrics table under ``out_dir``, through
+    ``append_metrics`` (``driver``) or as the Spark-written
+    ``partitionBy("bucket")`` layout of earlier runs (``spark``)."""
+    cells = [(b, hm) for b, hms in _SEED_TS.items() for hm in hms]
+    table = pa.Table.from_pylist(
+        [
+            {
+                "partition_id": pid, "doc_count": 1, "input_bytes": 10,
+                "byte_range_start": 0, "byte_range_end": 10,
+                "failure_count": 0, "ocr_count": 0,
+                "extraction_latency": 0.5, "run_id": "seed",
+                "ts": datetime.fromisoformat(f"2024-03-10T{hm}+00:00"),
+                "bucket": b,
+            }
+            for pid, (b, hm) in enumerate(cells)
+        ],
+        schema=METRICS_SCHEMA,
+    )
+    if layout == "driver":
+        STORE.append_metrics(spark, table, out_dir)
+    else:
+        spark.createDataFrame(table).write.partitionBy("bucket").parquet(
+            f"{out_dir}/metrics"
+        )
+
+
+def _metrics_rows(spark, out_dir):
+    m = spark.read.parquet(f"{out_dir}/metrics")
+    assert m.schema.simpleString() == METRICS_SCHEMA_DDL
+    return sorted(tuple(r) for r in m.collect())
+
+
+def _hidden(out_dir):
+    return [e for e in os.listdir(f"{out_dir}/metrics") if e.startswith(".")]
 
 
 def test_kill_and_resume_equals_single_run(spark, tmp_path):
@@ -112,40 +170,85 @@ def test_metrics_and_retention(spark, tmp_path):
     metrics = spark.read.parquet(f"{out}/metrics")
     assert metrics.agg({"doc_count": "sum"}).collect()[0][0] == 200
     # nothing older than a past cutoff → delete 0; future cutoff → delete all
-    assert retention_cleanup(spark, out, "2000-01-01 00:00:00") == 0
+    assert STORE.delete_metrics_before(spark, out, "2000-01-01 00:00:00") == 0
     n = spark.read.parquet(f"{out}/metrics").count()
-    assert retention_cleanup(spark, out, "2100-01-01 00:00:00") == n
-
-
-def test_retention_crash_is_safe(spark, tmp_path, monkeypatch):
-    """Write-then-publish: a crash after the scratch write but before the
-    publish leaves the live metrics table fully intact, and the retried
-    cleanup completes. A crash BETWEEN the publish renames (live path
-    briefly absent) is recovered by the next invocation's preamble."""
-    import shutil
-
-    pages = generate_pages_df(spark, 100, partitions=2)
-    out = str(tmp_path / "retcrash")
-    run_extraction(spark, pages, out, n_buckets=2, num_partitions=2)
-    before = spark.read.parquet(f"{out}/metrics").count()
-    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected crash"):
-        _crash_retention_before_publish(m, out)
-        retention_cleanup(spark, out, "2100-01-01 00:00:00")
-    assert spark.read.parquet(f"{out}/metrics").count() == before  # untouched
-
-    # simulate the worst crash point: metrics renamed away, scratch not yet
-    # promoted (the state the reviewer's scenario leaves behind)
-    os.rename(f"{out}/metrics", f"{out}/metrics_old")
-    # next cleanup must first restore a live table, then do its delete —
-    # the scratch from the injected crash holds the post-delete (empty)
-    # table, so recovery promotes it and the delete-all is a no-op
-    assert retention_cleanup(spark, out, "2100-01-01 00:00:00") == 0
-    assert not os.path.exists(f"{out}/metrics_old")
-    # and with no committed scratch, the retired copy is restored instead
-    os.rename(f"{out}/metrics", f"{out}/metrics_old")
-    shutil.rmtree(f"{out}/metrics_tmp", ignore_errors=True)
-    assert retention_cleanup(spark, out, "2000-01-01 00:00:00") == 0
+    assert STORE.delete_metrics_before(spark, out, "2100-01-01 00:00:00") == n
     assert spark.read.parquet(f"{out}/metrics").count() == 0
+
+
+@pytest.mark.parametrize("layout", ["driver", "spark"])
+@pytest.mark.parametrize(
+    "zone, cutoff, deleted, kept",
+    [
+        # the counts and kept rows are what the earlier Spark-SQL retention
+        # (a filter on ``ts >= CAST(cutoff AS TIMESTAMP)``) left on this
+        # table; 02:30 is inside the zone's spring-forward gap → 10:30 UTC
+        ("America/Los_Angeles", "2024-03-10 02:30:00", 3, [3, 4, 5, 6]),
+        ("America/Los_Angeles", "2024-03-10 01:30:00", 2, [2, 3, 4, 5, 6]),
+        ("+05:30", "2024-03-10 15:30:00", 2, [2, 3, 4, 5, 6]),
+        ("America/Los_Angeles", "2024-03-10T20:00:00+09:00", 4, [4, 5, 6]),
+        ("Etc/UTC", "2024-03-10 02:30:00", 0, [0, 1, 2, 3, 4, 5, 6]),
+        ("America/Los_Angeles", "2000-01-01 00:00:00", 0, [0, 1, 2, 3, 4, 5, 6]),
+        ("America/Los_Angeles", "2100-01-01 00:00:00", 7, []),
+    ],
+)
+def test_retention_cutoff_matches_spark_cast(
+    spark, tmp_path, layout, zone, cutoff, deleted, kept
+):
+    """A cutoff without an offset is wall time in the session zone, as
+    Spark's string → timestamp cast reads it, on both metrics layouts.
+    Retention keeps the table bucket-partitioned: a bucket that loses
+    every row keeps a zero-row file, never a flat table."""
+    out = str(tmp_path / "cutoff")
+    _seed_metrics(spark, out, layout)
+    before = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        assert STORE.delete_metrics_before(spark, out, cutoff) == deleted
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)
+    assert [r[0] for r in _metrics_rows(spark, out)] == kept
+    visible = [
+        e for e in os.listdir(f"{out}/metrics") if not e.startswith((".", "_"))
+    ]
+    assert sorted(visible) == ["bucket=0", "bucket=1", "bucket=2"]
+
+
+def test_retention_rejects_unparsable_cutoff(spark, tmp_path):
+    out = str(tmp_path / "badcutoff")
+    _seed_metrics(spark, out)
+    with pytest.raises(ValueError):
+        STORE.delete_metrics_before(spark, out, "last tuesday")
+    assert len(_metrics_rows(spark, out)) == 7
+
+
+@pytest.mark.parametrize("nth", [1, 2, 3, 4])
+def test_retention_crash_is_safe(spark, tmp_path, monkeypatch, nth):
+    """Retention republishes each bucket that loses rows through the
+    per-bucket swap: two renames per bucket, four here (bucket 0 loses
+    every row, bucket 1 one). A crash at any of them is recovered by
+    running retention again: the table then equals a clean retention's,
+    no hidden leftover remains, and no row is counted twice."""
+    cutoff = "2024-03-10T10:15:00+00:00"
+    clean = str(tmp_path / "clean")
+    _seed_metrics(spark, clean)
+    with monkeypatch.context() as m:
+        _crash_metrics_rename(m, clean, 5)  # a clean run renames 4 times
+        assert STORE.delete_metrics_before(spark, clean, cutoff) == 3
+    out = str(tmp_path / "crashed")
+    _seed_metrics(spark, out)
+    with monkeypatch.context() as m, pytest.raises(
+        RuntimeError, match="injected crash"
+    ):
+        _crash_metrics_rename(m, out, nth)
+        STORE.delete_metrics_before(spark, out, cutoff)
+    # bucket 0 (renames 1-2) must be redone in full; after it, only
+    # bucket 1's one row is left to delete
+    assert STORE.delete_metrics_before(spark, out, cutoff) == (
+        3 if nth <= 2 else 1
+    )
+    assert _metrics_rows(spark, out) == _metrics_rows(spark, clean)
+    assert _hidden(out) == []
 
 
 def test_bucket_count_change_is_refused(spark, tmp_path):
@@ -213,18 +316,52 @@ def test_resume_with_different_input_warns(spark, tmp_path):
 
 
 def test_retention_noop_clears_stale_scratch(spark, tmp_path, monkeypatch):
-    """A committed scratch left by an earlier crash must not survive a
-    deleted==0 early return — a stale post-delete snapshot lingering on
-    disk could later be wrongly promoted over newer data (ADVICE r2 #3)."""
-    pages = generate_pages_df(spark, 100, partitions=2)
-    out = str(tmp_path / "staletmp")
-    run_extraction(spark, pages, out, n_buckets=2, num_partitions=2)
-    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected crash"):
-        _crash_retention_before_publish(m, out)
-        retention_cleanup(spark, out, "2100-01-01 00:00:00")
-    assert os.path.exists(f"{out}/metrics_tmp/_SUCCESS")  # committed scratch
-    assert retention_cleanup(spark, out, "2000-01-01 00:00:00") == 0  # no-op
-    assert not os.path.exists(f"{out}/metrics_tmp")  # scratch cleared
+    """A crashed retention leaves bucket 0's post-delete rows in
+    ``.tmp-bucket=0``, and after its first rename the live rows retired to
+    ``.old-bucket=0``. The post-delete copy must never be promoted: a
+    later retention that deletes nothing restores the retired rows, drops
+    the rest, and the table reads exactly as before the crash (ADVICE r2
+    #3). Both crash points of bucket 0's publish are checked."""
+    for nth in (1, 2):
+        out = str(tmp_path / f"staletmp{nth}")
+        _seed_metrics(spark, out)
+        before = _metrics_rows(spark, out)
+        with monkeypatch.context() as m, pytest.raises(
+            RuntimeError, match="injected crash"
+        ):
+            _crash_metrics_rename(m, out, nth)
+            STORE.delete_metrics_before(spark, out, "2100-01-01 00:00:00")
+        assert ".tmp-bucket=0" in _hidden(out)
+        assert STORE.delete_metrics_before(spark, out, "2000-01-01 00:00:00") == 0
+        assert _hidden(out) == []
+        assert _metrics_rows(spark, out) == before
+
+
+def test_retention_launches_no_spark_jobs(spark, tmp_path):
+    """Retention reads and republishes the metrics table on the driver:
+    a past, a straddling and a future cutoff launch no Spark job, counted
+    through the calls' job group as in
+    ``test_control_plane_launches_no_spark_jobs``. A Spark read of the
+    table in its own group is the positive control."""
+    sc = spark.sparkContext
+    out = str(tmp_path / "nojobs")
+    _seed_metrics(spark, out)
+    group, control = f"{tmp_path.name}-retention", f"{tmp_path.name}-control"
+    cutoffs = [
+        "2000-01-01 00:00:00", "2024-03-10T10:30:00+00:00", "2100-01-01 00:00:00"
+    ]
+    try:
+        sc.setJobGroup(group, "retention")
+        deleted = [STORE.delete_metrics_before(spark, out, c) for c in cutoffs]
+        sc.setJobGroup(control, "positive control")
+        assert spark.read.parquet(f"{out}/metrics").count() == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert deleted == [0, 3, 4]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert list(sc.statusTracker().getJobIdsForGroup(control))
 
 
 def test_resume_at_design_fanout(spark, tmp_path):
@@ -256,9 +393,6 @@ def test_resume_at_design_fanout(spark, tmp_path):
     # completed re-invoke is a pure manifest read even at 64 buckets
     again = run_extraction(spark, pages, out, n_buckets=64, num_partitions=2)
     assert again.rows_written == 0 and len(again.skipped_buckets) == 64
-
-
-import pytest
 
 
 @pytest.mark.parametrize("backend", ["parquet", "iceberg"])
@@ -371,19 +505,11 @@ def test_storage_smoke_scenario(spark, tmp_path, backend):
     assert checks["retention_deleted"] > 0
 
 
-METRICS_SCHEMA = (
-    "struct<partition_id:bigint,doc_count:bigint,input_bytes:bigint,"
-    "byte_range_start:bigint,byte_range_end:bigint,failure_count:bigint,"
-    "ocr_count:bigint,extraction_latency:double,run_id:string,"
-    "ts:timestamp,bucket:int>"
-)
-
-
 def _metrics_by_bucket(spark, out_dir):
     """bucket → set of run_ids in the metrics table, after checking it
     holds exactly one lineage row per (bucket, partition_id)."""
     m = spark.read.parquet(f"{out_dir}/metrics")
-    assert m.schema.simpleString() == METRICS_SCHEMA
+    assert m.schema.simpleString() == METRICS_SCHEMA_DDL
     dupes = m.groupBy("bucket", "partition_id").count().filter("count > 1")
     assert dupes.count() == 0
     got: dict[int, set] = {}
@@ -402,7 +528,8 @@ def test_metrics_not_duplicated_across_metrics_manifest_crash(
     consumer forever. The same holds for a crash inside the metrics
     publish itself (new rows written but not yet swapped in; live dir
     retired but the new one not yet promoted): the hidden leftovers are
-    never read, and the bucket's next publish removes them."""
+    never read, and the next publish restores a retired live dir, drops
+    the other leftovers, and then replaces the bucket."""
     pages = generate_pages_df(spark, 120, partitions=2)
     out = str(tmp_path / "mmwin")
     metrics = f"{out}/metrics"
@@ -416,18 +543,6 @@ def test_metrics_not_duplicated_across_metrics_manifest_crash(
         def append_manifest(self, *args, **kwargs):
             raise RuntimeError("injected failure between metrics and manifest")
 
-    def crash_on_metrics_rename(nth):
-        real, seen = os.rename, []
-
-        def rename(src, dst):
-            if os.fspath(src).startswith(metrics + "/"):
-                seen.append(src)
-                if len(seen) == nth:
-                    raise RuntimeError("injected crash in metrics publish")
-            return real(src, dst)
-
-        return rename
-
     with pytest.raises(RuntimeError, match="injected failure"):
         run("a1", fail_after_buckets=1)  # bucket 0 committed
     with pytest.raises(RuntimeError, match="between metrics and manifest"):
@@ -440,7 +555,7 @@ def test_metrics_not_duplicated_across_metrics_manifest_crash(
     assert not [e for e in os.listdir(metrics) if e.startswith(".")]
 
     # crash after the new rows are written, before the swap
-    monkeypatch.setattr(os, "rename", crash_on_metrics_rename(1))
+    _crash_metrics_rename(monkeypatch, out, 1)
     with pytest.raises(RuntimeError, match="injected crash in metrics publish"):
         run("a3")
     monkeypatch.undo()
@@ -448,7 +563,7 @@ def test_metrics_not_duplicated_across_metrics_manifest_crash(
     assert _metrics_by_bucket(spark, out) == {0: {"a1"}, 1: {"a2b"}}
 
     # crash between the renames: bucket 1 has no live dir, only leftovers
-    monkeypatch.setattr(os, "rename", crash_on_metrics_rename(2))
+    _crash_metrics_rename(monkeypatch, out, 2)
     with pytest.raises(RuntimeError, match="injected crash in metrics publish"):
         run("a4")
     monkeypatch.undo()
@@ -469,11 +584,10 @@ def test_spark_written_control_tables_resume(spark, tmp_path):
     """An out_dir whose _manifest and metrics/bucket=* were written as
     Spark jobs (the earlier layout, with _SUCCESS and .crc side files)
     resumes under the driver-side publish and reads as one table with the
-    same schema. Retention's delete-all → flat table → re-append path
-    keeps working on it, and a corrupt manifest raises."""
+    same schema. Retention's delete-all republishes each bucket as a
+    zero-row file, the next publish adds to that table, and a corrupt
+    manifest raises."""
     import shutil
-
-    import pyarrow as pa
 
     from universal_text_extractor_spark.plans.pipeline import committed_buckets
 
@@ -509,9 +623,13 @@ def test_spark_written_control_tables_resume(spark, tmp_path):
     assert committed_buckets(spark, out) == [0, 1]
     assert set(_metrics_by_bucket(spark, out)) == {0, 1}
 
-    # delete-all publishes a flat empty table; the next publish clears it
+    # delete-all keeps the bucket layout and the schema, with no rows
     n = spark.read.parquet(metrics).count()
-    assert retention_cleanup(spark, out, "2100-01-01 00:00:00") == n
+    assert STORE.delete_metrics_before(spark, out, "2100-01-01 00:00:00") == n
+    assert _metrics_by_bucket(spark, out) == {}
+    assert sorted(
+        e for e in os.listdir(metrics) if not e.startswith((".", "_"))
+    ) == ["bucket=0", "bucket=1"]
     r = run()
     assert r.committed_buckets == [2]
     assert set(_metrics_by_bucket(spark, out)) == {2}
@@ -597,7 +715,7 @@ def test_published_lineage_equals_spark_aggregate(spark, tmp_path):
     out = str(tmp_path / "lineage")
     r = run_extraction(spark, pages, out, n_buckets=3, num_partitions=16)
     m = spark.read.parquet(f"{out}/metrics")
-    assert m.schema.simpleString() == METRICS_SCHEMA
+    assert m.schema.simpleString() == METRICS_SCHEMA_DDL
     cols = [c for c in m.columns if c != "ts"]
     got = sorted(tuple(row) for row in m.select(*cols).collect())
     want = sorted(

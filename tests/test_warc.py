@@ -260,8 +260,8 @@ def test_warc_parser_emits_bounded_batches(monkeypatch):
     with tempfile.NamedTemporaryFile(suffix=".warc.gz") as tf:
         tf.write(make_warc(recs))
         tf.flush()
-        parse = warc_mod._warc_path_parser(("response",))
-        out = list(parse(iter([pd.DataFrame({"path": [tf.name]})])))
+        batches = iter([pd.DataFrame({"path": [tf.name]})])
+        out = list(warc_mod._parse_warc_paths(batches))
     assert [len(b) for b in out] == [2, 2, 1]
     assert list(out[0]["url"]) == [u for u, _, _ in recs[:2]]
 

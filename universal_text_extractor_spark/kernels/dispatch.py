@@ -25,7 +25,7 @@ from .charset import decode_utf8_replace, detect_and_decode
 from .csv_kernel import extract_csv
 from .eml_kernel import extract_eml
 from .html_kernel import extract_html
-from .image_kernel import extract_image_metadata
+from .image_kernel import HEIF_BRANDS, extract_image_metadata
 from .limits import CODEC_BY_TYPE, CODECS, decompress_streams
 from .office_kernel import (
     DOC_LEGACY_LITERAL,
@@ -61,7 +61,7 @@ for _cat, _exts in SUPPORTED_FILE_TYPES.items():
         EXT_TO_TYPE[_e] = _e
 for _e in ("htm",):
     EXT_TO_TYPE[_e] = "html"
-for _e in ("jpg", "jpeg", "png", "tiff", "tif", "bmp", "gif", "webp", "heic", "heif"):
+for _e in SUPPORTED_FILE_TYPES["Images"]:
     EXT_TO_TYPE[_e] = "image"
 # north-star extension beyond the reference taxonomy: crawls store
 # compressed bodies; the payload decompresses transparently and
@@ -90,10 +90,7 @@ def _sniff_magic(payload: bytes) -> str | None:
         or payload.startswith(b"\xff\xd8\xff")
         or payload.startswith(b"BM")
         or (payload.startswith(b"RIFF") and payload[8:12] == b"WEBP")
-        or (
-            payload[4:8] == b"ftyp"
-            and payload[8:12] in (b"heic", b"heix", b"heif", b"mif1", b"msf1")
-        )
+        or (payload[4:8] == b"ftyp" and payload[8:12] in HEIF_BRANDS)
     ):
         return "image"
     if payload.startswith(b"{\\rtf"):

@@ -101,14 +101,14 @@ def _webp_size(b: bytes):
     return None
 
 
-_HEIF_BRANDS = (b"heic", b"heix", b"heif", b"mif1", b"msf1")
+HEIF_BRANDS = (b"heic", b"heix", b"heif", b"mif1", b"msf1")
 
 
 def _heic_size(b: bytes):
     """ISOBMFF HEIC/HEIF dims via a real box walk to the 'ispe' item
     property: top-level boxes → meta (FullBox: +4 version/flags) → iprp →
     ipco → ispe (version/flags, width u32be, height u32be)."""
-    if len(b) < 16 or b[4:8] != b"ftyp" or b[8:12] not in _HEIF_BRANDS:
+    if len(b) < 16 or b[4:8] != b"ftyp" or b[8:12] not in HEIF_BRANDS:
         return None
     fmt = "HEIF" if b[8:12] in (b"heif", b"msf1") else "HEIC"
 
@@ -166,7 +166,7 @@ def parse_image_header(payload: bytes):
             return _tiff_size(payload)
         if payload.startswith(b"RIFF") and payload[8:12] == b"WEBP":
             return _webp_size(payload)
-        if payload[4:8] == b"ftyp" and payload[8:12] in _HEIF_BRANDS:
+        if payload[4:8] == b"ftyp" and payload[8:12] in HEIF_BRANDS:
             return _heic_size(payload)
     except Exception:
         return None

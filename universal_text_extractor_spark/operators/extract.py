@@ -101,17 +101,16 @@ class PartitionStatsParam(AccumulatorParam):
         return value1
 
 
-def salted_url_partition_key(url: Column, salt: int = DEFAULT_SALT) -> Column:
-    """xxhash64(url, salt) — breaks host-level skew (Zipfian hosts) because
-    the full url + salt is hashed, never the host (north rule; SURVEY.md
-    §7.2 skew note)."""
-    return F.xxhash64(url, F.lit(salt))
+def salted_url_partition_key(url: Column) -> Column:
+    """xxhash64(url, DEFAULT_SALT) — breaks host-level skew (Zipfian hosts)
+    because the full url + salt is hashed, never the host (north rule;
+    SURVEY.md §7.2 skew note)."""
+    return F.xxhash64(url, F.lit(DEFAULT_SALT))
 
 
 def extract_pages_fused(
     pages: DataFrame,
     num_partitions: int | None = None,
-    salt: int = DEFAULT_SALT,
     use_ocr: bool = False,
     main_content: bool = False,
     ocr_language: str = "eng",
@@ -149,7 +148,7 @@ def extract_pages_fused(
         spark.conf.get("spark.sql.shuffle.partitions", "200")
     )
     base = pages.select("url", "html").repartition(
-        n_parts, salted_url_partition_key(F.col("url"), salt)
+        n_parts, salted_url_partition_key(F.col("url"))
     )
 
     def dispatch(batches):

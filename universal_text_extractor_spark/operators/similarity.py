@@ -84,13 +84,6 @@ def _fold_norm(a_dbl: Column) -> Column:
     return F.sqrt(F.aggregate(a_dbl, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Σ a·b / (√Σa² · √Σb²) — the per-pair primitive. Prefer the
-    precomputed-norm shapes below on hot paths (norms per vector, not per
-    pair)."""
-    return _fold_dot(_dbl(a), _dbl(b)) / (_fold_norm(_dbl(a)) * _fold_norm(_dbl(b)))
-
-
 def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     """Exact top-k per query_id in two stages: prune to k within each
     (query_id, physical partition) first, THEN rank globally. A single

@@ -7,8 +7,11 @@ plain Parquet + a ``_manifest`` table of committed work units, with the
 SAME anti-join resume logic an Iceberg MERGE would use. The data plane
 goes through the :class:`~.storage.StorageBackend` seam (VERDICT r2 item
 9) — :class:`~.storage.ParquetStorage` is the default; an Iceberg backend
-implements the same nine operations as table/snapshot calls (the mapping
+implements the same ten operations as table/snapshot calls (the mapping
 is tabulated in ``storage.py``) without touching the resume algorithm.
+The backend is the only module that knows the metrics table's layout, so
+the retention delete (reference ``cleanup_old_data``) is one of them,
+``StorageBackend.delete_metrics_before``.
 
 Unit of commit: a url-hash *bucket* (``pmod(xxhash64(url, salt), n_buckets)``).
 Each bucket commits atomically: extracted parquet first, then metrics, then
@@ -52,7 +55,6 @@ from __future__ import annotations
 
 import dataclasses
 import os
-import shutil
 import time
 import uuid
 from datetime import datetime, timezone
@@ -66,27 +68,9 @@ from ..operators.extract import (
     PartitionStatsParam,
     extract_pages_fused,
 )
-from .storage import DEFAULT_STORAGE, StorageBackend
+from .storage import DEFAULT_STORAGE, METRICS_SCHEMA, StorageBackend
 
 BUCKET_SALT = 0xC0FFEE
-
-# the metrics table's rows: lineage_metrics' columns plus the bucket, with
-# the types and nullability its Spark aggregate gives them
-_METRICS_SCHEMA = pa.schema(
-    [
-        pa.field("partition_id", pa.int64()),
-        pa.field("doc_count", pa.int64(), nullable=False),
-        pa.field("input_bytes", pa.int64()),
-        pa.field("byte_range_start", pa.int64()),
-        pa.field("byte_range_end", pa.int64()),
-        pa.field("failure_count", pa.int64()),
-        pa.field("ocr_count", pa.int64()),
-        pa.field("extraction_latency", pa.float64()),
-        pa.field("run_id", pa.string(), nullable=False),
-        pa.field("ts", pa.timestamp("us", tz="UTC"), nullable=False),
-        pa.field("bucket", pa.int32(), nullable=False),
-    ]
-)
 
 
 def _require_local_out_dir(out_dir: str) -> None:
@@ -151,7 +135,7 @@ def _metrics_table(stats: dict, run_id: str, bucket: int) -> pa.Table:
             }
             for pid, values in sorted(stats.items())
         ],
-        schema=_METRICS_SCHEMA,
+        schema=METRICS_SCHEMA,
     )
 
 
@@ -336,67 +320,3 @@ def run_extraction(
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/extracted")
-
-
-def retention_cleanup(
-    spark: SparkSession,
-    out_dir: str,
-    cutoff_ts: str,
-) -> int:
-    """D7/A10 retention delete (reference utils/database.py:583-621) on the
-    metrics table. With Iceberg this is ``DELETE FROM metrics WHERE ts <
-    cutoff``; the parquet fallback is write-then-publish: the kept rows are
-    fully written to a scratch dir BEFORE the live table is touched, so the
-    data always exists on disk under SOME name — and the recovery preamble
-    below restores the live path if a crash lands between the two publish
-    renames (scratch committed → promote it; otherwise restore the retired
-    copy). Crash-injection both before and mid-publish:
-    tests/test_resume.py::test_retention_crash_is_safe.
-    Returns the deleted count (same observable semantics as the reference).
-
-    Cost: one combined count scan + one filtered write (the old
-    formulation ran three scans).
-    """
-    path = f"{out_dir}/metrics"
-    tmp = f"{out_dir}/metrics_tmp"
-    old = f"{out_dir}/metrics_old"
-    # crash recovery for an interrupted publish (between the two renames
-    # below the live path briefly does not exist): a fully-written scratch
-    # (_SUCCESS present) was the logically-committed post-delete table —
-    # promote it; otherwise restore the retired copy.
-    if not os.path.exists(path):
-        if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            os.rename(tmp, path)
-        elif os.path.exists(old):
-            os.rename(old, path)
-    # with a live table, any remaining retired copy OR scratch is garbage
-    # from an earlier crash — drop both here so a stale committed scratch
-    # cannot linger past deleted==0 early returns and later be wrongly
-    # promoted by the preamble above (ADVICE r2 #3)
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    df = spark.read.parquet(path)
-    keep_cond = F.col("ts") >= F.lit(cutoff_ts).cast("timestamp")
-    counts = df.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(keep_cond, 1).otherwise(0)).alias("kept"),
-    ).collect()[0]
-    deleted = int(counts["n"]) - int(counts["kept"] or 0)
-    if deleted == 0:
-        return 0
-    # keep the bucket-partitioned layout append_metrics writes — a flat
-    # rewrite here would mix layouts with later per-bucket publishes.
-    # EXCEPT delete-all: an empty PARTITIONED write emits no files at all
-    # (unreadable schema); publish a flat schema-bearing empty table, and
-    # append_metrics clears that shape before re-partitioning
-    kept_df = df.filter(keep_cond)
-    if int(counts["kept"] or 0) == 0:
-        kept_df.write.mode("overwrite").parquet(tmp)
-    else:
-        kept_df.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    # publish: retire old, promote new, then drop the retired copy
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return deleted

@@ -6,7 +6,8 @@ sandbox ships no iceberg-spark-runtime jar, so the seam test's Iceberg
 leg always auto-skips). This module makes the missing evidence a
 five-minute exercise for the first user WITH a jar: the exact scenario
 — stage, bucket commits with a crash between them, resume, idempotent
-re-invoke, retention delete — lives here once and is executed by
+re-invoke, retention delete through ``delete_metrics_before`` — lives
+here once, with no per-backend branch, and is executed by
 
 - ``tests/test_resume.py::test_storage_smoke_scenario`` — the pytest
   runner, parameterized over both backends (the parquet leg runs in
@@ -25,7 +26,7 @@ from pyspark.sql import SparkSession
 
 from ..sources.pages_gen import generate_pages_df
 from .pipeline import committed_buckets, run_extraction
-from .storage import IcebergStorage, StorageBackend
+from .storage import DEFAULT_STORAGE, StorageBackend
 
 
 def run_storage_smoke(
@@ -94,21 +95,14 @@ def run_storage_smoke(
     assert got == want, "backend output differs from the default backend"
     checks["rows_equal_reference"] = len(got)
 
-    # 5) retention delete on the metrics table. The parquet backend runs
-    # the write-then-publish rename dance; Iceberg is what the dance
-    # emulates — a snapshot-atomic SQL DELETE.
-    if isinstance(storage, IcebergStorage):
-        tbl = storage._tbl(out_dir, "metrics")  # noqa: SLF001 — same module family
-        before = spark.read.table(tbl).count()
-        spark.sql(f"DELETE FROM {tbl} WHERE ts < TIMESTAMP '2100-01-01'")
-        after = spark.read.table(tbl).count()
-    else:
-        from .pipeline import retention_cleanup
-
-        before = spark.read.parquet(f"{out_dir}/metrics").count()
-        deleted = retention_cleanup(spark, out_dir, "2100-01-01 00:00:00")
-        assert deleted == before
-        after = 0
-    assert before > 0 and after == 0, (before, after)
-    checks["retention_deleted"] = before
+    # 5) retention delete on the metrics table through the seam (an SQL
+    # DELETE in Iceberg, a per-bucket republish in parquet): a future
+    # cutoff deletes as many rows as on the default-backend run, and
+    # leaves none for a second pass
+    cutoff = "2100-01-01 00:00:00"
+    deleted = storage.delete_metrics_before(spark, out_dir, cutoff)
+    want = DEFAULT_STORAGE.delete_metrics_before(spark, reference_dir, cutoff)
+    assert deleted == want > 0, (deleted, want)
+    assert storage.delete_metrics_before(spark, out_dir, cutoff) == 0
+    checks["retention_deleted"] = deleted
     return checks

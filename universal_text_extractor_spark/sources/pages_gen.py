@@ -2863,13 +2863,6 @@ def make_page(i: int, seed: int = _SEED_DEFAULT) -> dict:
     }
 
 
-def pages_pandas(n: int, seed: int = _SEED_DEFAULT, start: int = 0):
-    """Small-scale driver-side generation (tests)."""
-    import pandas as pd
-
-    return pd.DataFrame([make_page(i, seed) for i in range(start, start + n)])
-
-
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 

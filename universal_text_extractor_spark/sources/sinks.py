@@ -1,5 +1,4 @@
-"""Export sinks S5-S8 (SURVEY.md §2.1; reference utils/export_utils.py and
-utils/database.py:446-477)."""
+"""Export sinks S5-S7 (SURVEY.md §2.1; reference utils/export_utils.py)."""
 
 from __future__ import annotations
 
@@ -37,15 +36,4 @@ def export_json(extracted: DataFrame, path: str) -> None:
         )
         .write.mode("overwrite")
         .json(path)
-    )
-
-
-def export_metrics_csv(metrics: DataFrame, path: str) -> None:
-    """S8: analytics CSV dump, timestamp-desc ordered
-    (reference utils/database.py:446-477)."""
-    (
-        metrics.orderBy(F.desc("ts"))
-        .write.mode("overwrite")
-        .option("header", True)
-        .csv(path)
     )

@@ -218,39 +218,36 @@ def _local_path(uri: str) -> str:
     )
 
 
-def _warc_path_parser(record_types: tuple[str, ...]):
+def _parse_warc_paths(batches):
+    """``mapInPandas`` body: archive paths in, ``response`` records out as
+    pages rows, flushed every ``_BATCH_ROWS`` rows or ``_BATCH_BYTES``
+    payload bytes."""
     import pandas as pd
 
     cols = ["url", "warc_ts", "html", "text", "lang"]
-
-    def parse(batches):
-        for pdf in batches:
-            for uri in pdf["path"]:
-                rows: list[tuple] = []
-                nbytes = 0
-                with open(_local_path(str(uri)), "rb") as f:
-                    for url, ts, payload in iter_warc_records_stream(
-                        f, record_types
-                    ):
-                        rows.append((url, ts, payload, "", ""))
-                        nbytes += len(payload)
-                        if len(rows) >= _BATCH_ROWS or nbytes >= _BATCH_BYTES:
-                            yield pd.DataFrame(rows, columns=cols)
-                            rows, nbytes = [], 0
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return parse
+    for pdf in batches:
+        for uri in pdf["path"]:
+            rows: list[tuple] = []
+            nbytes = 0
+            with open(_local_path(str(uri)), "rb") as f:
+                for url, ts, payload in iter_warc_records_stream(f):
+                    rows.append((url, ts, payload, "", ""))
+                    nbytes += len(payload)
+                    if len(rows) >= _BATCH_ROWS or nbytes >= _BATCH_BYTES:
+                        yield pd.DataFrame(rows, columns=cols)
+                        rows, nbytes = [], 0
+            if rows:
+                yield pd.DataFrame(rows, columns=cols)
 
 
-def read_warc(spark, path: str, record_types: tuple[str, ...] = ("response",)):
+def read_warc(spark, path: str):
     """Distributed WARC read: ``path`` (file / dir / glob of .warc[.gz])
     → pages DataFrame ``(url, warc_ts, html, text, lang)``. The listing
     distributes archive PATHS (binaryFile source, only ``path`` selected
     — content is never shipped through the JVM); each task streams its
     file record-at-a-time with bounded memory."""
     files = spark.read.format("binaryFile").load(path).select("path")
-    return files.mapInPandas(_warc_path_parser(record_types), PAGES_SCHEMA)
+    return files.mapInPandas(_parse_warc_paths, PAGES_SCHEMA)
 
 
 _BINARY_FILE_SCHEMA = (
@@ -258,9 +255,7 @@ _BINARY_FILE_SCHEMA = (
 )
 
 
-def read_warc_stream(
-    spark, path: str, record_types: tuple[str, ...] = ("response",)
-):
+def read_warc_stream(spark, path: str):
     """Streaming variant: a directory where .warc.gz archives keep
     arriving (a live crawl drop) → an unbounded pages stream for
     streaming/stream_extract. Same path-streaming parser, binaryFile
@@ -273,7 +268,7 @@ def read_warc_stream(
         .load(path)
         .select("path")
     )
-    return files.mapInPandas(_warc_path_parser(record_types), PAGES_SCHEMA)
+    return files.mapInPandas(_parse_warc_paths, PAGES_SCHEMA)
 
 
 # --- independent test-fixture writer --------------------------------------

@@ -27,7 +27,6 @@ def stream_extract_pages(
     output_dir: str,
     checkpoint_dir: str,
     num_partitions: int = 8,
-    available_now: bool = True,
 ):
     """Start (and return) a streaming query extracting newly-arrived page
     files. Restart with the same checkpoint dir → resumes exactly-once."""
@@ -37,15 +36,14 @@ def stream_extract_pages(
         .parquet(input_dir)
     )
     extracted = extract_pages_fused(pages, num_partitions=num_partitions)
-    writer = (
+    return (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_metrics(pages_stream: DataFrame, window: str = "1 day") -> DataFrame:
