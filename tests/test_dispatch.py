@@ -24,9 +24,25 @@ from conftest import FIXTURES
 from universal_text_extractor_spark.functions.sniff import content_type_col
 from universal_text_extractor_spark.kernels import detect_content_type
 from universal_text_extractor_spark.kernels.dispatch import EXT_TO_TYPE, extract_payload
+from universal_text_extractor_spark.kernels.image_kernel import (
+    IMAGE_FORMATS,
+    parse_image_header,
+)
+from universal_text_extractor_spark.kernels.image_prep import decode_image
 from universal_text_extractor_spark.kernels.limits import CODEC_BY_TYPE, CODECS
 from universal_text_extractor_spark.operators.extract import extract_pages_fused
-from universal_text_extractor_spark.sources.pages_gen import _pdf_doc_pages, make_page
+from universal_text_extractor_spark.sources.pages_gen import (
+    _pdf_doc_pages,
+    make_bmp,
+    make_gif,
+    make_heic,
+    make_jpeg,
+    make_jpeg_lossless,
+    make_page,
+    make_png,
+    make_tiff,
+    make_webp,
+)
 
 
 def test_sniff_parity_corpus(spark):
@@ -75,10 +91,15 @@ def test_sniff_parity_corpus(spark):
 
 _PKG = pathlib.Path(universal_text_extractor_spark.__file__).parent
 _CONTENT_TYPES = set(EXT_TO_TYPE.values()) | {"txt", "unknown"}
-_MAGICS = (
-    b"%PDF", b"\x89PNG", b"GIF87a", b"GIF89a", b"\xff\xd8\xff", b"BM",
-    b"RIFF", b"WEBP", b"ftyp", b"{\\rtf",
-) + tuple(c.magic for c in CODECS)
+# the first 4 bytes of every prefix of every row of the image-format table
+# (a literal holding just the start of a signature, b"\x89PNG", is magic too)
+_IMAGE_MAGICS = tuple(
+    p[:4]
+    for row in IMAGE_FORMATS
+    for _at, prefix in row.magic
+    for p in (prefix if isinstance(prefix, tuple) else (prefix,))
+)
+_MAGICS = (b"%PDF", b"{\\rtf") + _IMAGE_MAGICS + tuple(c.magic for c in CODECS)
 
 
 def _content_type_rule(node: ast.AST) -> bool:
@@ -102,12 +123,21 @@ def test_one_sniffer_one_arrow_boundary():
     content-type rules, and the Spark-facing modules (functions/,
     operators/) import no pandas and reference no sniff table
     (EXT_TO_TYPE, CODECS) or magic-byte literal: they reach the sniffer by
-    calling detect_content_type and cross into Python through Arrow."""
+    calling detect_content_type and cross into Python through Arrow.
+    dispatch.py itself holds no image magic: it asks
+    image_kernel.image_format, the one image recognizer."""
     offenders = []
     for p in sorted(_PKG.rglob("*.py")):
         rel = p.relative_to(_PKG).as_posix()
         src = p.read_text()
         spark_facing = rel.startswith(("functions/", "operators/"))
+        if rel == "kernels/dispatch.py":
+            offenders += [
+                f"{rel}:{n.lineno}: image magic literal {n.value!r}"
+                for n in ast.walk(ast.parse(src))
+                if isinstance(n, ast.Constant) and isinstance(n.value, bytes)
+                and n.value.startswith(_IMAGE_MAGICS)
+            ]
         if spark_facing:
             offenders += [
                 f"{rel}: {m}" for m in re.findall(r"\b(?:EXT_TO_TYPE|CODECS)\b", src)
@@ -131,6 +161,46 @@ def test_one_sniffer_one_arrow_boundary():
             ):
                 offenders.append(f"{where}: magic literal {node.value!r}")
     assert not offenders, offenders
+
+
+def test_image_formats_agree():
+    """The sniff, the header parser and the pixel decoder recognize images
+    by one table, so they agree on every format: an extensionless url
+    sniffs as image exactly when parse_image_header reads the header, and
+    every format with a pixel decoder decodes to the header's dims (WebP
+    and HEIC pixel decode stay declined). Extensionless TIFF once sniffed
+    as unknown while both the parser and the decoder read it."""
+    rgb = [[((x * 37 + y * 11) % 256, x * 5 % 256, y * 29 % 256) for x in range(13)]
+           for y in range(9)]
+    gray = [[(x * 19 + y * 7) % 256 for x in range(13)] for y in range(9)]
+    payloads = {
+        "png": make_png(rgb),
+        "bmp": make_bmp(rgb),
+        "gif": make_gif([gray]),
+        "jpeg baseline": make_jpeg(rgb),
+        "jpeg progressive": make_jpeg(rgb, progressive=True),
+        "jpeg lossless": make_jpeg_lossless(rgb),
+        "tiff II": make_tiff(rgb),
+        "tiff MM": make_tiff(rgb, byte_order=">"),
+        "webp": make_webp(13, 9),
+        "heic": make_heic(13, 9),
+        "text": b"II is not a TIFF header",
+        "html": b"<html><body>BM</body></html>",
+    }
+    for name, b in payloads.items():
+        header = parse_image_header(b)
+        sniffed = detect_content_type("https://h/img/123", b)
+        assert (sniffed == "image") == (header is not None), (name, sniffed)
+        if header is None:
+            assert name in ("text", "html") and decode_image(b) is None, name
+            continue
+        w, h, fmt = header
+        assert (w, h) == (13, 9), name
+        arr = decode_image(b)
+        if fmt in ("WEBP", "HEIC"):
+            assert arr is None, name
+        else:
+            assert arr is not None and arr.shape == (9, 13, 3), name
 
 
 # Transparent decompression (north-star crawl extension): one body per

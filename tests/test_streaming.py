@@ -173,7 +173,7 @@ def test_host_running_totals_stateful(spark, tmp_path):
     want = {
         r["host"]: (2 * r["c"], 2 * r["b"])
         for r in pages.groupBy(
-            F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host")
+            F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1).alias("host")
         )
         .agg(F.count("*").alias("c"), F.sum(F.length("html")).alias("b"))
         .collect()
@@ -313,3 +313,39 @@ def test_host_col_pathless_urls(spark):
     assert [r["h"] for r in rows] == [
         "example.com", "example.com", "other.org", "example.com:8080",
     ]
+
+
+def test_one_host_rule_corpus_and_stream(spark, tmp_path):
+    """The corpus ``source`` column and the streaming per-host state key
+    run one rule (functions.text_funcs.host_col): any scheme, and a
+    path-less url keeps its host. The streaming key once matched only
+    http(s), so every ftp url fell into the '' host."""
+    from universal_text_extractor_spark.plans.corpus import frame_documents
+    from universal_text_extractor_spark.streaming import host_running_totals
+
+    urls = ["ftp://h/x", "https://h"]
+    extracted = spark.createDataFrame(
+        [(u, True, f"doc {i}") for i, u in enumerate(urls)],
+        "url string, success boolean, text string",
+    )
+    sources = {r["url"]: r["source"] for r in frame_documents(extracted).collect()}
+    assert sources == {"ftp://h/x": "h", "https://h": "h"}
+
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(u, None, b"abc", "", "en") for u in urls], schema
+    ).write.parquet(src)
+    q = (
+        host_running_totals(spark.readStream.schema(schema).parquet(src))
+        .writeStream.format("memory")
+        .queryName("host_rule_totals")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    rows = spark.sql(
+        "SELECT host, max(doc_count) n FROM host_rule_totals GROUP BY host"
+    ).collect()
+    assert {r["host"]: r["n"] for r in rows} == {"h": 2}

@@ -1,9 +1,9 @@
 """Text-analysis Column expressions for training-data pipelines.
 
 All JVM-side (whole-stage-codegen-friendly): normalization, token
-counting, word lists and the quality-purge signals. Each has an ANSI-SQL
-twin used as the DuckDB oracle in __spark_entry__.py — keep
-rule-identical.
+counting, word lists, the quality-purge signals and the url host. Each
+text signal has an ANSI-SQL twin used as the DuckDB oracle in
+__spark_entry__.py — keep rule-identical.
 """
 
 from __future__ import annotations
@@ -67,3 +67,10 @@ def quality_keep_col(
     return (alpha_ratio_col(text) >= min_alpha_ratio) & (
         token_count_col(text) >= min_tokens
     )
+
+
+def host_col(url: Column) -> Column:
+    """Host portion of a url (any scheme): the corpus ``source`` column
+    and the streaming per-host state key. Path-less URIs
+    (``https://example.com``) yield their host, not ``''``."""
+    return F.regexp_extract(url, r"^[a-z]+://([^/]+)", 1)

@@ -25,8 +25,9 @@ from .charset import decode_utf8_replace, detect_and_decode
 from .csv_kernel import extract_csv
 from .eml_kernel import extract_eml
 from .html_kernel import extract_html
-from .image_kernel import HEIF_BRANDS, extract_image_metadata
+from .image_kernel import extract_image_metadata, image_format
 from .limits import CODEC_BY_TYPE, CODECS, decompress_streams
+from .msg_kernel import extract_msg
 from .office_kernel import (
     DOC_LEGACY_LITERAL,
     PPT_LEGACY_LITERAL,
@@ -39,6 +40,7 @@ from .office_kernel import (
 )
 from .pdf_kernel import extract_pdf
 from .rtf_kernel import extract_rtf
+from .xls_kernel import extract_xls
 from .xml_kernel import extract_xml
 
 # Reference taxonomy: 7 categories × 29 extensions
@@ -83,15 +85,7 @@ def _sniff_magic(payload: bytes) -> str | None:
     """Byte-level magic sniff."""
     if payload.startswith(b"%PDF"):
         return "pdf"
-    if (
-        payload.startswith(b"\x89PNG\r\n\x1a\n")
-        or payload.startswith(b"GIF87a")
-        or payload.startswith(b"GIF89a")
-        or payload.startswith(b"\xff\xd8\xff")
-        or payload.startswith(b"BM")
-        or (payload.startswith(b"RIFF") and payload[8:12] == b"WEBP")
-        or (payload[4:8] == b"ftyp" and payload[8:12] in HEIF_BRANDS)
-    ):
+    if image_format(payload) is not None:
         return "image"
     if payload.startswith(b"{\\rtf"):
         return "rtf"
@@ -136,6 +130,31 @@ def detect_content_type(url: str, payload: bytes) -> str:
     if len(payload) > 0 and _sniff_text(payload):
         return "txt"
     return "unknown"
+
+
+def _raw(payload: bytes) -> bytes:
+    return payload
+
+
+# content type → (payload decoder, kernel): every type whose branch is one
+# ``kernel(decode(payload))`` call
+_KERNELS = {
+    "rtf": (decode_utf8_replace, extract_rtf),
+    "xml": (decode_utf8_replace, extract_xml),
+    "csv": (decode_utf8_replace, extract_csv),
+    "eml": (decode_utf8_replace, extract_eml),
+    "docx": (_raw, extract_docx),
+    "pptx": (_raw, extract_pptx),
+    "xlsx": (_raw, extract_xlsx),
+    "ods": (_raw, extract_ods),
+    "odt": (_raw, extract_odf),
+    "odp": (_raw, extract_odf),
+    "epub": (_raw, extract_epub),
+    # reference :808-829 (pandas framing → CFB+BIFF8 walk; literal :870-872
+    # stays the parse-failure path)
+    "xls": (_raw, extract_xls),
+    "msg": (_raw, extract_msg),  # reference :1231-1252 (CFB + MAPI walk)
+}
 
 
 def extract_payload(
@@ -198,9 +217,6 @@ def extract_payload(
         elif file_type == "txt":
             text = decode_utf8_replace(payload or b"")
             logs.append("Extracted text from TXT file")  # reference :224
-        elif file_type == "rtf":
-            text, k_logs = extract_rtf(decode_utf8_replace(payload or b""))
-            logs.extend(k_logs)
         elif file_type == "html":
             if main_content:
                 from .html_kernel import extract_main_content
@@ -212,32 +228,9 @@ def extract_payload(
             else:
                 text, k_logs = extract_html(detect_and_decode(payload or b""))
                 logs.extend(k_logs)
-        elif file_type == "xml":
-            text, k_logs = extract_xml(decode_utf8_replace(payload or b""))
-            logs.extend(k_logs)
-        elif file_type == "csv":
-            text, k_logs = extract_csv(decode_utf8_replace(payload or b""))
-            logs.extend(k_logs)
-        elif file_type == "eml":
-            text, k_logs = extract_eml(decode_utf8_replace(payload or b""))
-            logs.extend(k_logs)
-        elif file_type == "docx":
-            text, k_logs = extract_docx(payload or b"")
-            logs.extend(k_logs)
-        elif file_type == "pptx":
-            text, k_logs = extract_pptx(payload or b"")
-            logs.extend(k_logs)
-        elif file_type == "xlsx":
-            text, k_logs = extract_xlsx(payload or b"")
-            logs.extend(k_logs)
-        elif file_type == "ods":
-            text, k_logs = extract_ods(payload or b"")
-            logs.extend(k_logs)
-        elif file_type in ("odt", "odp"):
-            text, k_logs = extract_odf(payload or b"")
-            logs.extend(k_logs)
-        elif file_type == "epub":
-            text, k_logs = extract_epub(payload or b"")
+        elif file_type in _KERNELS:
+            decode, kernel = _KERNELS[file_type]
+            text, k_logs = kernel(decode(payload or b""))
             logs.extend(k_logs)
         elif file_type == "doc":
             if legacy_office:
@@ -265,14 +258,6 @@ def extract_payload(
                 logs.append(
                     "Legacy PPT format detected, limited extraction support"
                 )
-        elif file_type == "xls":
-            # reference utils/file_handlers.py:808-829 (pandas path framing,
-            # re-expressed as a hand-rolled CFB+BIFF8 walk; the reference
-            # literal :870-872 remains the parse-failure path)
-            from .xls_kernel import extract_xls
-
-            text, k_logs = extract_xls(payload or b"")
-            logs.extend(k_logs)
         elif file_type in CODEC_BY_TYPE:
             # transparent crawl-payload decompression (north-star
             # extension; the reference has none): all concatenated
@@ -296,13 +281,6 @@ def extract_payload(
                 ocr_language=ocr_language, handwriting_mode=handwriting_mode,
                 legacy_office=legacy_office,
             )
-            logs.extend(k_logs)
-        elif file_type == "msg":
-            # reference utils/file_handlers.py:1231-1252 (extract_msg path,
-            # re-expressed as a CFB + MAPI-property-stream walk)
-            from .msg_kernel import extract_msg
-
-            text, k_logs = extract_msg(payload or b"")
             logs.extend(k_logs)
         else:
             # unknown AND declared-but-stubbed office formats

@@ -34,6 +34,7 @@ import struct
 import numpy as np
 
 from . import limits
+from .image_kernel import image_format
 
 
 # ---------------------------------------------------------------- decode
@@ -333,34 +334,42 @@ def _decode_png(b: bytes) -> np.ndarray | None:
         return None
 
 
+def _decode_gif(b: bytes) -> np.ndarray | None:
+    from .gif_kernel import decode_gif_frames
+
+    dec = decode_gif_frames(b, max_frames=1)
+    return dec[2][0][1] if dec else None
+
+
+def _decode_jpeg(b: bytes) -> np.ndarray | None:
+    from .jpeg_kernel import decode_jpeg
+
+    return decode_jpeg(b)
+
+
+def _decode_tiff(b: bytes) -> np.ndarray | None:
+    from .tiff_kernel import decode_tiff
+
+    return decode_tiff(b)
+
+
+# image_kernel.IMAGE_FORMATS name → pixel decoder (WEBP/HEIC/HEIF have none);
+# GIF is the LZW kernel, JPEG Huffman+IDCT, TIFF strip/LZW/PackBits
+_DECODERS = {"PNG": _decode_png, "GIF": _decode_gif, "BMP": _decode_bmp,
+             "JPEG": _decode_jpeg, "TIFF": _decode_tiff}
+
+
 def decode_image(payload: bytes) -> np.ndarray | None:
-    """(H, W, 3) uint8 RGB, or None for undecodable/unsupported payloads.
-    BMP/PNG decode here; GIF decodes via the LZW kernel (first frame —
-    K14-K16 and the feature/resize operators see a still image); JPEG
-    decodes via the Huffman+IDCT kernel (kernels/jpeg_kernel.py); TIFF
-    via the strip/LZW/PackBits kernel (kernels/tiff_kernel.py)."""
+    """(H, W, 3) uint8 RGB, or None for undecodable/unsupported payloads:
+    the :data:`_DECODERS` entry for :func:`image_format`'s name. GIF gives
+    its first frame (K14-K16 and the feature/resize operators see a still
+    image)."""
     b = payload or b""
     try:
-        if b.startswith(b"BM"):
-            return _decode_bmp(b)
-        if b.startswith(b"\x89PNG\r\n\x1a\n"):
-            return _decode_png(b)
-        if b[:6] in (b"GIF87a", b"GIF89a"):
-            from .gif_kernel import decode_gif_frames
-
-            dec = decode_gif_frames(b, max_frames=1)
-            return dec[2][0][1] if dec else None
-        if b[:2] == b"\xff\xd8":
-            from .jpeg_kernel import decode_jpeg
-
-            return decode_jpeg(b)
-        if b[:4] in (b"II*\x00", b"MM\x00*"):
-            from .tiff_kernel import decode_tiff
-
-            return decode_tiff(b)
+        decode = _DECODERS.get(image_format(b))
+        return None if decode is None else decode(b)
     except Exception:
         return None
-    return None
 
 
 # ------------------------------------------------------------ K14 pipeline

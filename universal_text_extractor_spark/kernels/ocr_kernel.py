@@ -77,8 +77,6 @@ FONT: dict[str, tuple[int, ...]] = {
 # bitmaps must be pairwise distinct or recognition is ill-posed
 assert len({v for v in FONT.values()}) == len(FONT)
 
-OCR_CHARSET = set(FONT) | {" "}
-
 _EXACT = {v: ch for ch, v in FONT.items()}
 _CHARS = sorted(FONT)
 _STACK = np.array(

@@ -25,17 +25,8 @@ from __future__ import annotations
 
 import struct
 
-from .cfb import CfbFile
+from .cfb import CfbFile, _u16, _u32
 from .office_kernel import XLS_LEGACY_LITERAL
-
-
-def _u16(b: bytes, o: int) -> int:
-    return struct.unpack_from("<H", b, o)[0]
-
-
-def _u32(b: bytes, o: int) -> int:
-    return struct.unpack_from("<I", b, o)[0]
-
 
 # ----------------------------------------------------------------- BIFF8
 

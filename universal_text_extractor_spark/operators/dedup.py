@@ -215,7 +215,15 @@ def ngram_jaccard_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
-    counts = _shingle_counts(kept)
+    return _jaccard_verified(inter, _shingle_counts(kept), threshold)
+
+
+def _jaccard_verified(
+    inter: DataFrame, counts: DataFrame, threshold: float
+) -> DataFrame:
+    """The Jaccard verify step shared by the n-gram and MinHash pair paths:
+    (doc_a, doc_b, inter) joined to each side's shingle count, |A∪B| =
+    na + nb − |∩|, rounded to 4 dp, kept at ≥ ``threshold``."""
     joined = (
         inter.join(
             counts.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("na")),
@@ -316,9 +324,8 @@ def minhash_lsh_pairs_from_flat(
         .distinct()
     )
     # verify with true Jaccard, flat-shingle formulation: |∩| via a join on
-    # the hashed shingle rows of only the candidate docs (semi-joined),
-    # then |A∪B| = na + nb − |∩|. No per-doc arrays are materialized.
-    counts = _shingle_counts(flat)
+    # the hashed shingle rows of only the candidate docs (semi-joined).
+    # No per-doc arrays are materialized.
     fa = flat.select(F.col("doc_id").alias("doc_a"), "h")
     fb = flat.select(F.col("doc_id").alias("doc_b"), "h")
     inter = (
@@ -327,17 +334,7 @@ def minhash_lsh_pairs_from_flat(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
-    joined = (
-        inter.join(counts.select(F.col("doc_id").alias("doc_a"),
-                                 F.col("n_shingles").alias("na")), "doc_a")
-        .join(counts.select(F.col("doc_id").alias("doc_b"),
-                            F.col("n_shingles").alias("nb")), "doc_b")
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        joined.select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_verified(inter, _shingle_counts(flat), threshold)
 
 
 def minhash_lsh_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFrame:

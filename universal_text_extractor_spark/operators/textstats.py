@@ -70,23 +70,32 @@ def language_id(documents: DataFrame) -> DataFrame:
     )
 
 
-def quality_filter(
+def quality_purge(
     documents: DataFrame,
     min_alpha_ratio: float = 0.81,
     min_tokens: int = 15,
 ) -> DataFrame:
     """The quality PURGE (companion to the t3 report — the operator a
-    training-data pipeline actually runs): keep documents whose
-    alphabetic-character ratio and token count clear the thresholds
-    (:func:`quality_keep_col`, the predicate the corpus purge runs too).
-    Language-agnostic signals only (length/punctuation class); the
-    stopword ratio stays a report metric because its list is
-    English-biased. Pure scan+filter — pushes to the source, no shuffle.
-    Returns (doc_id, lang, n_tokens, alpha_ratio)."""
-    text = F.col("text")
+    training-data pipeline actually runs; plans/corpus.py runs it on the
+    framed docs): keep documents whose alphabetic-character ratio and
+    token count clear the thresholds (:func:`quality_keep_col`), all
+    columns kept. Language-agnostic signals only (length/punctuation
+    class); the stopword ratio stays a report metric because its list is
+    English-biased. Pure scan+filter — pushes to the source, no shuffle."""
     return documents.filter(
-        quality_keep_col(text, min_alpha_ratio, min_tokens)
-    ).select(
+        quality_keep_col(F.col("text"), min_alpha_ratio, min_tokens)
+    )
+
+
+def quality_filter(
+    documents: DataFrame,
+    min_alpha_ratio: float = 0.81,
+    min_tokens: int = 15,
+) -> DataFrame:
+    """t6: :func:`quality_purge` projected to the graded columns
+    (doc_id, lang, n_tokens, alpha_ratio)."""
+    text = F.col("text")
+    return quality_purge(documents, min_alpha_ratio, min_tokens).select(
         "doc_id",
         "lang",
         token_count_col(text).alias("n_tokens"),

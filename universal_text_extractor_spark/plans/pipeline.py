@@ -83,9 +83,8 @@ def _require_local_out_dir(out_dir: str) -> None:
     control files would treat it as a literal relative path (a junk
     ``./file:`` tree), splitting the pin from the data — pass the plain
     path instead. Hard-fail instead of degrading (ADVICE r2 #1). The
-    production target is Iceberg, where every one of these checks is a
-    catalog/snapshot operation and this guard disappears with the parquet
-    fallback."""
+    guard holds for every storage backend: the control files stay local
+    files even when the data goes to Iceberg."""
     if "://" in out_dir:
         raise ValueError(
             f"out_dir {out_dir!r} is not a plain local filesystem path; "

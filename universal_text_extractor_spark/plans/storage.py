@@ -45,9 +45,10 @@ and readable.
 The crash-safety argument is unchanged: each bucket's publish order is
 data → metrics → manifest, and only the manifest row marks a bucket done.
 The n_buckets pin and the input fingerprint stay in
-:mod:`~universal_text_extractor_spark.plans.pipeline` — with Iceberg they
-become table properties, with parquet they are local control files (which
-is why the parquet backend is local-FS-only)."""
+:mod:`~universal_text_extractor_spark.plans.pipeline`, as local control
+files under out_dir for EVERY backend (Iceberg included) — which is why
+``run_extraction`` rejects a non-local out_dir whichever backend it is
+given."""
 
 from __future__ import annotations
 

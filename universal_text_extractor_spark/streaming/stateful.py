@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.text_funcs import host_col
+
 HOST_TOTALS_SCHEMA = StructType(
     [
         StructField("host", StringType()),
@@ -52,16 +54,6 @@ def stream_dedup_urls(pages_stream: DataFrame, watermark: str = "1 day") -> Data
     return pages_stream.withWatermark(
         "warc_ts", watermark
     ).dropDuplicatesWithinWatermark(["url"])
-
-
-def host_col(url) -> F.Column:
-    """Host portion of a url. No trailing-``/`` requirement: real crawl
-    URIs are frequently path-less (``https://example.com``), and the old
-    pattern's unmatched extract returned ``''`` — collapsing every
-    root-URL page of every domain into one empty-string state key (r5
-    review, batch 3; now rule-identical to plans/corpus.py's source
-    extraction)."""
-    return F.regexp_extract(url, r"^https?://([^/]+)", 1)
 
 
 def host_running_totals(
