@@ -93,6 +93,7 @@ def main() -> None:
     else:  # args.pages — guaranteed by the pre-session guard
         pages = spark.read.parquet(args.pages)
 
+    from universal_text_extractor_spark.kernels.options import ExtractOptions
     from universal_text_extractor_spark.plans.corpus import build_training_corpus
 
     stats = build_training_corpus(
@@ -105,8 +106,9 @@ def main() -> None:
         verify_jaccard=not args.no_verify_jaccard,
         near_dup_closure=args.near_dup_closure,
         num_partitions=args.partitions,
-        use_ocr=args.use_ocr,
-        main_content=args.main_content,
+        options=ExtractOptions(
+            use_ocr=args.use_ocr, main_content=args.main_content
+        ),
     )
     print(" -> ".join(f"{k}={v}" for k, v in stats.items()))
     spark.stop()

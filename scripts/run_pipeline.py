@@ -73,6 +73,7 @@ def main() -> None:
             args.pages
         )
 
+    from universal_text_extractor_spark.kernels.options import ExtractOptions
     from universal_text_extractor_spark.plans.pipeline import run_extraction
 
     if args.warc:
@@ -83,9 +84,12 @@ def main() -> None:
         pages = spark.read.parquet(args.pages)
     run = run_extraction(
         spark, pages, args.out, n_buckets=args.buckets,
-        num_partitions=args.partitions, use_ocr=args.use_ocr,
-        main_content=args.main_content, ocr_language=args.ocr_language,
-        handwriting_mode=args.handwriting, legacy_office=args.legacy_office,
+        num_partitions=args.partitions,
+        options=ExtractOptions(
+            use_ocr=args.use_ocr, main_content=args.main_content,
+            ocr_language=args.ocr_language, handwriting_mode=args.handwriting,
+            legacy_office=args.legacy_office,
+        ),
     )
     print(
         f"run {run.run_id}: committed {len(run.committed_buckets)} buckets "

@@ -15,7 +15,11 @@ import sys
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
-from universal_text_extractor_spark.kernels import extract_payload, detect_content_type
+from universal_text_extractor_spark.kernels import (
+    ExtractOptions,
+    detect_content_type,
+    extract_payload,
+)
 from universal_text_extractor_spark.kernels.html_kernel import extract_main_content
 from universal_text_extractor_spark.sources.pages_gen import _pdf_doc_pages
 
@@ -309,7 +313,7 @@ def main() -> None:
     for name, url, payload, use_ocr in todo:
         ct = detect_content_type(url, payload)
         text, ocr_used, success, error, logs = extract_payload(
-            url, payload, ct, use_ocr=use_ocr
+            url, payload, ct, ExtractOptions(use_ocr=use_ocr)
         )
         (FIX / f"{name}.bin").write_bytes(payload)
         (FIX / f"{name}.expected.txt").write_bytes(text.encode("utf-8"))

@@ -12,6 +12,7 @@ import pytest
 
 from conftest import FIXTURES
 from universal_text_extractor_spark.kernels import (
+    ExtractOptions,
     detect_content_type,
     extract_payload,
 )
@@ -31,7 +32,8 @@ def test_golden_byte_identity(entry):
     ct = detect_content_type(entry["url"], payload)
     assert ct == entry["content_type"]
     text, ocr_used, success, error, _logs = extract_payload(
-        entry["url"], payload, ct, use_ocr=entry.get("use_ocr", False)
+        entry["url"], payload, ct,
+        options=ExtractOptions(use_ocr=entry.get("use_ocr", False)),
     )
     assert text.encode("utf-8") == expected
     assert ocr_used == entry["ocr_used"]
@@ -133,7 +135,7 @@ def test_pdf_objstm_scanned_page_ocrs():
         random.Random(5), 1, False, scan_lines=[["OBJSTM SCAN 7"]], objstm=True
     )
     text, ocr_used, success, error, logs = extract_payload(
-        "https://h/m.pdf", b, "pdf", use_ocr=True
+        "https://h/m.pdf", b, "pdf", options=ExtractOptions(use_ocr=True)
     )
     assert "OBJSTM SCAN 7" in text and ocr_used and success
 

@@ -21,8 +21,11 @@ from universal_text_extractor_spark.kernels.office_kernel import (
     DOC_LEGACY_LITERAL,
     PPT_LEGACY_LITERAL,
 )
+from universal_text_extractor_spark.kernels.options import ExtractOptions
 from universal_text_extractor_spark.operators.extract import extract_pages_fused
 from universal_text_extractor_spark.sources.pages_gen import make_doc, make_ppt
+
+LEGACY = ExtractOptions(legacy_office=True)
 
 PARAS = [
     "Quarterly report: revenue grew 14% year over year.",
@@ -69,20 +72,20 @@ def test_default_keeps_reference_literals():
 
 def test_flag_swaps_to_real_parse_and_contains_corruption():
     doc, ppt = make_doc(PARAS), make_ppt(SLIDES)
-    t_doc = extract_payload("https://x/a.doc", doc, "doc", legacy_office=True)
-    t_ppt = extract_payload("https://x/a.ppt", ppt, "ppt", legacy_office=True)
+    t_doc = extract_payload("https://x/a.doc", doc, "doc", options=LEGACY)
+    t_ppt = extract_payload("https://x/a.ppt", ppt, "ppt", options=LEGACY)
     assert t_doc[0] == extract_doc(doc)[0] and t_doc[2]
     assert t_ppt[0] == extract_ppt(ppt)[0] and t_ppt[2]
     # D2 containment: junk bytes under the flag -> error literal
     t_bad, _, s_bad, err, _ = extract_payload(
-        "https://x/a.doc", b"\x00" * 64, "doc", legacy_office=True
+        "https://x/a.doc", b"\x00" * 64, "doc", options=LEGACY
     )
     assert t_bad.startswith("[Error extracting text:") and not s_bad and err
 
 
 def test_fused_matches_oracle_under_legacy_office(spark):
     """Under the flag the pipeline matches ``extract_payload(...,
-    legacy_office=True)`` row for row: doc/ppt payloads extract for real
+    options=LEGACY)`` row for row: doc/ppt payloads extract for real
     and every other type is untouched."""
     rows = [
         Row(url="https://x/r.doc", warc_ts=None, html=make_doc(PARAS),
@@ -103,14 +106,14 @@ def test_fused_matches_oracle_under_legacy_office(spark):
     stable = ["url", "content_type", "text", "ocr_used", "success", "error"]
     fused = {
         r["url"]: tuple(r)
-        for r in extract_pages_fused(pages, num_partitions=2, legacy_office=True)
+        for r in extract_pages_fused(pages, num_partitions=2, options=LEGACY)
         .select(*stable).collect()
     }
     oracle = {}
     for r in rows:
         ct = detect_content_type(r.url, r.html)
         text, ocr_used, success, error, _ = extract_payload(
-            r.url, r.html, ct, legacy_office=True
+            r.url, r.html, ct, options=LEGACY
         )
         oracle[r.url] = (r.url, ct, text, ocr_used, success, error)
     assert fused == oracle

@@ -27,6 +27,7 @@ from universal_text_extractor_spark.kernels import limits
 from universal_text_extractor_spark.kernels.dispatch import extract_payload
 from universal_text_extractor_spark.kernels.gif_kernel import open_gif
 from universal_text_extractor_spark.kernels.image_prep import decode_image
+from universal_text_extractor_spark.kernels.options import ExtractOptions
 
 CAP = 1 << 20  # the shrunk MAX_INFLATE_BYTES
 PIXELS = 1_000_000  # the shrunk MAX_PIXELS
@@ -229,7 +230,9 @@ CASES = [
     (
         "png-idat-ocr", "inflate", lambda: _png_blank(_PNG_SIDE, _PNG_SIDE),
         lambda: _png(_PNG_SIDE, _PNG_SIDE, _CORRUPT_STREAM),
-        lambda b: extract_payload("https://x/bomb.png", b, use_ocr=True),
+        lambda b: extract_payload(
+            "https://x/bomb.png", b, options=ExtractOptions(use_ocr=True)
+        ),
     ),
     (
         "png-header-pixels", "pixels", lambda: _png_blank(1200, 1000),

@@ -10,6 +10,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from universal_text_extractor_spark.kernels.dispatch import extract_payload
+from universal_text_extractor_spark.kernels.options import ExtractOptions
 from universal_text_extractor_spark.kernels.image_prep import (
     decode_image,
     preprocess_gray,
@@ -26,6 +27,7 @@ from universal_text_extractor_spark.sources.pages_gen import (
     make_ocr_page,
 )
 
+OCR = ExtractOptions(use_ocr=True)
 SAMPLE = "HELLO WORLD\nSPARK 12345\nOK? YES! A-B: C.D,E'F"
 
 
@@ -67,7 +69,7 @@ def test_dispatch_use_ocr_branch():
     rng = random.Random(11)
     payload = make_ocr_page(rng, ["SCANNED PAGE 1"])
     text, ocr_used, success, error, logs = extract_payload(
-        "https://h/scan.png", payload, "image", use_ocr=True
+        "https://h/scan.png", payload, "image", OCR
     )
     assert text == "SCANNED PAGE 1" and ocr_used and success and error is None
     assert "Performed OCR on image with language: eng" in logs
@@ -89,7 +91,7 @@ def test_scanned_pdf_ocr():
         rng, npages=0, flate=True,
         scan_lines=[["SCANNED INVOICE", "TOTAL: 99.50"], ["PAGE 2 HERE"]],
     )
-    text, ocr_used, logs = extract_pdf(payload, use_ocr=True)
+    text, ocr_used, logs = extract_pdf(payload, OCR)
     assert text == (
         "\n--- Page 1 (OCR) ---\nSCANNED INVOICE\nTOTAL: 99.50\n"
         "\n--- Page 2 (OCR) ---\nPAGE 2 HERE\n"
@@ -102,11 +104,11 @@ def test_scanned_pdf_ocr():
     # a no-image empty page under use_ocr: the (OCR) frame carries the
     # no-text literal (perform_ocr is never empty — reference observable)
     plain_empty = _pdf_doc_pages(rng, npages=1, flate=False, empty=True)
-    t, o, _ = extract_pdf(plain_empty, use_ocr=True)
+    t, o, _ = extract_pdf(plain_empty, OCR)
     assert "(OCR) ---\n[No text was detected in this image.]" in t and o
     # and through the dispatcher
     text2, ocr2, success, _err, logs2 = extract_payload(
-        "https://h/scan.pdf", payload, "pdf", use_ocr=True
+        "https://h/scan.pdf", payload, "pdf", OCR
     )
     assert "SCANNED INVOICE" in text2 and ocr2 and success
 
@@ -128,7 +130,7 @@ def test_scanned_pdf_ocr_dctdecode():
             random.Random(23), npages=0, flate=True,
             scan_lines=lines, scan_scale=scale, scan_codec="jpeg",
         )
-        text, ocr_used, _ = extract_pdf(payload, use_ocr=True)
+        text, ocr_used, _ = extract_pdf(payload, OCR)
         assert text == want and ocr_used, scale
         # without use_ocr: image-based literal, as for the flate scan
         t0, o0, _ = extract_pdf(payload)
@@ -192,14 +194,13 @@ def test_handwriting_mode_psm8_retry():
         NO_TEXT_LITERAL,
         perform_ocr,
         recognize_gray,
-        recognize_gray_words,
     )
     from universal_text_extractor_spark.sources.pages_gen import make_bmp
 
     words = ["HE", "AB", "NM", "WE", "HA", "BE"]
     gray = _render_ragged(words, [7, 9, 8, 7, 9])
     assert recognize_gray(gray) == ""  # fixed-pitch pass nets ≤ 0
-    assert recognize_gray_words(gray) == " ".join(words)
+    assert recognize_gray(gray, per_word=True) == " ".join(words)
 
     payload = make_bmp([[(v, v, v) for v in row] for row in gray.tolist()])
     # normal mode: empty pass → the reference's no-text literal
@@ -212,8 +213,9 @@ def test_ocr_language_option_parity():
     """Language threads through (validated against the reference's remap
     table, utils/ocr_utils.py:87-100): every mapped code recognizes, an
     unknown code ends the cascade with the no-text literal (the reference
-    observable when traineddata is missing and EasyOCR can't init), and
-    the dispatch log line carries the requested language."""
+    observable when traineddata is missing and EasyOCR can't init) — for
+    a scanned PDF page as for an image — and the dispatch log line
+    carries the requested language."""
     import random
 
     from universal_text_extractor_spark.kernels.ocr_kernel import (
@@ -221,6 +223,7 @@ def test_ocr_language_option_parity():
         perform_ocr,
     )
     from universal_text_extractor_spark.sources.pages_gen import (
+        _pdf_doc_pages,
         make_bmp,
         render_text_rows,
     )
@@ -235,21 +238,34 @@ def test_ocr_language_option_parity():
         assert perform_ocr(payload, language=code) == NO_TEXT_LITERAL, code
 
     t, ocr_used, s, _, logs = extract_payload(
-        "https://x/scan.bmp", payload, "image", use_ocr=True,
-        ocr_language="fra",
+        "https://x/scan.bmp", payload, "image",
+        ExtractOptions(use_ocr=True, ocr_language="fra"),
     )
     assert ocr_used and s and "LANG TEST" in t
     assert any("Performed OCR on image with language: fra" in l for l in logs)
+
+    pdf = _pdf_doc_pages(
+        random.Random(5), 0, True, scan_lines=[["HELLO WORLD", "SECOND LINE"]]
+    )
+    for lang, want_page in (("fra", "HELLO WORLD\nSECOND LINE"),
+                            ("zz", NO_TEXT_LITERAL)):
+        t, ocr_used, *_ = extract_payload(
+            "https://x/scan.pdf", pdf, "pdf",
+            ExtractOptions(use_ocr=True, ocr_language=lang),
+        )
+        assert t == f"\n--- Page 1 (OCR) ---\n{want_page}\n" and ocr_used, lang
 
 
 def test_handwriting_whitelist_filters_first_pass():
     """The PSM-6 whitelist analogue (reference :139 excludes ' and -):
     normal mode keeps the apostrophe/hyphen glyphs, handwriting mode
-    drops them from the recognized text."""
+    drops them from the recognized text — on a scanned PDF page exactly
+    as on an image."""
     import random
 
     from universal_text_extractor_spark.kernels.ocr_kernel import perform_ocr
     from universal_text_extractor_spark.sources.pages_gen import (
+        _pdf_doc_pages,
         make_bmp,
         render_text_rows,
     )
@@ -258,3 +274,12 @@ def test_handwriting_whitelist_filters_first_pass():
     payload = make_bmp(rows)
     assert perform_ocr(payload) == "DON'T STOP-NOW"
     assert perform_ocr(payload, handwriting_mode=True) == "DONT STOPNOW"
+
+    pdf = _pdf_doc_pages(random.Random(9), 0, True, scan_lines=[["DON'T STOP-NOW"]])
+    for handwriting, want_page in ((False, "DON'T STOP-NOW"),
+                                   (True, "DONT STOPNOW")):
+        t, ocr_used, *_ = extract_payload(
+            "https://x/scan.pdf", pdf, "pdf",
+            ExtractOptions(use_ocr=True, handwriting_mode=handwriting),
+        )
+        assert t == f"\n--- Page 1 (OCR) ---\n{want_page}\n" and ocr_used, handwriting

@@ -27,6 +27,7 @@ from universal_text_extractor_spark.kernels.pdf_crypt import (
     make_handler,
     rc4,
 )
+from universal_text_extractor_spark.kernels.options import ExtractOptions
 from universal_text_extractor_spark.kernels.pdf_kernel import (
     CORRUPT_LITERAL,
     extract_pdf,
@@ -86,12 +87,13 @@ def test_encrypted_scanned_pdf_ocr():
     """OCR must work THROUGH decryption (image XObject stream is
     enciphered too)."""
     lines = [["HELLO WORLD", "SECOND LINE"]]
+    ocr = ExtractOptions(use_ocr=True)
     ref = extract_pdf(
-        _pdf_doc_pages(random.Random(5), 0, True, scan_lines=lines), use_ocr=True
+        _pdf_doc_pages(random.Random(5), 0, True, scan_lines=lines), ocr
     )
     enc = extract_pdf(
         _pdf_doc_pages(random.Random(5), 0, True, scan_lines=lines, encrypt="aesv2"),
-        use_ocr=True,
+        ocr,
     )
     assert enc[0] == ref[0]
     assert "HELLO WORLD" in enc[0] and "(OCR)" in enc[0]

@@ -4,7 +4,11 @@ invariants, and the single-shuffle physical-plan property."""
 
 from __future__ import annotations
 
-from universal_text_extractor_spark.kernels import detect_content_type, extract_payload
+from universal_text_extractor_spark.kernels import (
+    ExtractOptions,
+    detect_content_type,
+    extract_payload,
+)
 from universal_text_extractor_spark.operators.extract import (
     PartitionStatsParam,
     extract_pages_fused,
@@ -32,11 +36,13 @@ EDGE_ROWS = [
 ]
 
 
-def _oracle(url: str, html: bytes | None, **options):
+def _oracle(
+    url: str, html: bytes | None, options: ExtractOptions = ExtractOptions()
+):
     """(content_type, text, ocr_used, success, error, logs) straight from
     the kernels — the definition of a correct pipeline row."""
     ct = detect_content_type(url, html)
-    return (ct, *extract_payload(url, html, ct, **options))
+    return (ct, *extract_payload(url, html, ct, options))
 
 
 def _stable(row) -> tuple:
@@ -199,7 +205,9 @@ def test_main_content_mode(spark):
     }
     fused = {
         r["url"]: r
-        for r in extract_pages_fused(pages, num_partitions=8, main_content=True)
+        for r in extract_pages_fused(
+            pages, num_partitions=8, options=ExtractOptions(main_content=True)
+        )
         .select(*stable)
         .collect()
     }
@@ -231,22 +239,25 @@ def test_fused_matches_oracle_under_ocr_options(spark):
     )
 
     pages = generate_pages_df(spark, 300, partitions=4)
-    options = dict(use_ocr=True, ocr_language="fra", handwriting_mode=True)
+    options = ExtractOptions(
+        use_ocr=True, ocr_language="fra", handwriting_mode=True
+    )
     rows = {
         r["url"]: _stable(r)
-        for r in extract_pages_fused(pages, num_partitions=4, **options)
+        for r in extract_pages_fused(pages, num_partitions=4, options=options)
         .collect()
     }
     payloads = {r["url"]: r["html"] for r in pages.collect()}
     assert set(rows) == set(payloads)
-    bad = [u for u, h in payloads.items() if rows[u] != _oracle(u, h, **options)]
+    bad = [u for u, h in payloads.items() if rows[u] != _oracle(u, h, options)]
     assert not bad, f"{len(bad)} oracle mismatches under OCR options, e.g. {bad[:3]}"
     assert any(r[2] for r in rows.values())  # OCR actually ran
 
     bad_lang = {
         r["url"]: r["text"]
         for r in extract_pages_fused(
-            pages, num_partitions=4, use_ocr=True, ocr_language="zz"
+            pages, num_partitions=4,
+            options=ExtractOptions(use_ocr=True, ocr_language="zz"),
         ).collect()
         if r["content_type"] == "image"
     }

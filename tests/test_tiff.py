@@ -22,6 +22,7 @@ from hypothesis import strategies as st
 
 from universal_text_extractor_spark.kernels.image_kernel import parse_image_header
 from universal_text_extractor_spark.kernels.image_prep import decode_image
+from universal_text_extractor_spark.kernels.options import ExtractOptions
 from universal_text_extractor_spark.kernels.tiff_kernel import (
     TiffError,
     _lzw,
@@ -211,7 +212,8 @@ def test_scanned_tiff_ocr_end_to_end():
         assert perform_ocr(payload) == "SCANNED TIFF PAGE\nSECOND LINE 42", comp
     payload = make_tiff(rows, compression="packbits")
     text, ocr_used, success, error, logs = extract_payload(
-        "https://h/scan.tiff", payload, "image", use_ocr=True
+        "https://h/scan.tiff", payload, "image",
+        options=ExtractOptions(use_ocr=True),
     )
     assert text == "SCANNED TIFF PAGE\nSECOND LINE 42"
     assert ocr_used and success and error is None

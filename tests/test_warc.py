@@ -83,12 +83,13 @@ def test_mixed_crawl_end_to_end(spark, tmp_path):
     """Capstone integration: one WARC crawl mixing the real-web shapes
     added this round — gzip-compressed HTML bodies, AES-256-encrypted
     ObjStm PDFs, CID-font PDFs, scanned TIFFs (OCR path), interlaced
-    PNGs — through read_warc → extract_pages_fused(use_ocr=True), each
+    PNGs — through read_warc → extract_pages_fused with use_ocr, each
     url's text equal to direct kernel extraction."""
     import gzip as _g
     import random
 
     from universal_text_extractor_spark.kernels.dispatch import extract_payload
+    from universal_text_extractor_spark.kernels.options import ExtractOptions
     from universal_text_extractor_spark.operators.extract import extract_pages_fused
     from universal_text_extractor_spark.sources.pages_gen import (
         _pdf_doc_pages,
@@ -97,6 +98,7 @@ def test_mixed_crawl_end_to_end(spark, tmp_path):
         render_text_rows,
     )
 
+    ocr = ExtractOptions(use_ocr=True)
     rng = random.Random(42)
     html = b"<html><head><title>T</title></head><body><p>crawl body</p></body></html>"
     scan_rows = render_text_rows(["MIXED CRAWL TEST"], rng, scale=1)
@@ -120,11 +122,11 @@ def test_mixed_crawl_end_to_end(spark, tmp_path):
     pages = read_warc(spark, str(warc))
     out = {
         r["url"]: r
-        for r in extract_pages_fused(pages, num_partitions=2, use_ocr=True).collect()
+        for r in extract_pages_fused(pages, num_partitions=2, options=ocr).collect()
     }
     assert set(out) == {u for u, _ in docs}
     for u, p in docs:
-        want = extract_payload(u, p, use_ocr=True)[0]
+        want = extract_payload(u, p, options=ocr)[0]
         assert out[u]["text"] == want, u
     # the OCR'd scan actually recognized the rendered text
     assert "MIXED CRAWL TEST" in out["https://m.example/scan.tiff"]["text"]

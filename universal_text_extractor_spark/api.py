@@ -78,8 +78,9 @@ class TextExtractor:
             }
 
     def extract_from_file(self, file_path: str) -> dict[str, Any]:
-        """Reference :30-78 contract, minus the OCR kwargs that have no
-        backend here."""
+        """Reference :30-78 contract, run with the default extraction
+        options (``kernels.options.ExtractOptions``); image OCR is
+        :meth:`extract_from_image`."""
         if not os.path.exists(file_path):
             return {
                 "success": False,
@@ -123,13 +124,12 @@ class TextExtractor:
                 payload = f.read()
             from .kernels.ocr_kernel import perform_ocr
 
-            # perform_ocr runs the identical language-check / decode /
-            # preprocess / recognize / literal pipeline; a params dict
-            # (defaults merged in preprocess_gray) selects the K14 chain,
-            # None skips it — the old hand-inlined preprocess branch was
-            # a drifting duplicate (r5 review, batch 4). preprocess_params
-            # mirrors the reference's dict (utils/image_processing.py:31)
-            # incl. the r5 adaptive_threshold analogue of its OpenCV stage
+            # perform_ocr decodes and runs ocr_gray, the one OCR cascade
+            # (language check / preprocess / recognize / literal); a
+            # params dict (defaults merged in preprocess_gray) selects the
+            # K14 chain, None skips it. preprocess_params mirrors the
+            # reference's dict (utils/image_processing.py:31) incl. the
+            # adaptive_threshold analogue of its OpenCV stage
             text = perform_ocr(
                 payload,
                 language,

@@ -8,6 +8,7 @@ pipeline is byte-identical to the oracle by construction (SURVEY.md §5,
 
 from .charset import decode_utf8_replace, detect_and_decode
 from .dispatch import detect_content_type, extract_payload, SUPPORTED_FILE_TYPES
+from .options import ExtractOptions
 from .html_kernel import extract_html, extract_main_content
 from .xml_kernel import extract_xml
 from .pdf_kernel import extract_pdf
@@ -29,6 +30,7 @@ __all__ = [
     "detect_and_decode",
     "detect_content_type",
     "extract_payload",
+    "ExtractOptions",
     "SUPPORTED_FILE_TYPES",
     "extract_html",
     "extract_main_content",

@@ -38,6 +38,7 @@ from .office_kernel import (
     extract_pptx,
     extract_xlsx,
 )
+from .options import ExtractOptions
 from .pdf_kernel import extract_pdf
 from .rtf_kernel import extract_rtf
 from .xls_kernel import extract_xls
@@ -161,11 +162,7 @@ def extract_payload(
     url: str,
     payload: bytes,
     content_type: str | None = None,
-    use_ocr: bool = False,
-    main_content: bool = False,
-    ocr_language: str = "eng",
-    handwriting_mode: bool = False,
-    legacy_office: bool = False,
+    options: ExtractOptions = ExtractOptions(),
 ) -> tuple[str, bool, bool, str | None, list[str]]:
     """The dispatcher (reference utils/file_handlers.py:147-259).
 
@@ -173,16 +170,16 @@ def extract_payload(
     ``success = no exception AND text.strip() != ""`` (D2+D3 semantics,
     reference :255-257 and app.py:494-500).
 
-    ``main_content=True`` swaps the HTML branch to Readability-style
-    boilerplate removal (north-star extension; BASELINE.json north_star
-    "DOM-tree boilerplate removal (text-density and link-density
-    heuristics)") — every other branch is unchanged, so the reference
-    byte-identity contract holds for all non-HTML types in this mode too.
-
-    ``legacy_office=True`` swaps the doc/ppt branches from the
-    reference's informative literals (:601, :769) to real [MS-DOC]/
-    [MS-PPT] parsers (kernels/legacy_office.py) — same default-off
-    pattern; defaults keep all goldens.
+    ``options`` (:class:`~.options.ExtractOptions`) reaches every branch
+    that reads it, the codec recursion included. ``main_content`` swaps
+    the HTML branch to Readability-style boilerplate removal (north-star
+    extension; BASELINE.json north_star "DOM-tree boilerplate removal
+    (text-density and link-density heuristics)") — every other branch is
+    unchanged, so the reference byte-identity contract holds for all
+    non-HTML types in this mode too. ``legacy_office`` swaps the doc/ppt
+    branches from the reference's informative literals (:601, :769) to
+    real [MS-DOC]/[MS-PPT] parsers (kernels/legacy_office.py) — same
+    default-off pattern; defaults keep all goldens.
     """
     logs: list[str] = []
     ocr_used = False
@@ -194,10 +191,10 @@ def extract_payload(
     text = ""
     try:
         if file_type == "pdf":
-            text, ocr_used, k_logs = extract_pdf(payload or b"", use_ocr=use_ocr)
+            text, ocr_used, k_logs = extract_pdf(payload or b"", options)
             logs.extend(k_logs)
         elif file_type == "image":
-            if use_ocr:
+            if options.use_ocr:
                 # K13 REAL since r3: deterministic glyph recognizer
                 # (kernels/ocr_kernel.py) standing in for the reference's
                 # Tesseract/EasyOCR cascade; ocr_used + log per reference
@@ -205,11 +202,13 @@ def extract_payload(
                 from .ocr_kernel import perform_ocr
 
                 text = perform_ocr(
-                    payload or b"", ocr_language, handwriting_mode
+                    payload or b"", options.ocr_language,
+                    options.handwriting_mode,
                 )
                 ocr_used = True
                 logs.append(
-                    f"Performed OCR on image with language: {ocr_language}"
+                    "Performed OCR on image with language: "
+                    f"{options.ocr_language}"
                 )
             else:
                 text, k_logs = extract_image_metadata(payload or b"")
@@ -218,7 +217,7 @@ def extract_payload(
             text = decode_utf8_replace(payload or b"")
             logs.append("Extracted text from TXT file")  # reference :224
         elif file_type == "html":
-            if main_content:
+            if options.main_content:
                 from .html_kernel import extract_main_content
 
                 text = extract_main_content(detect_and_decode(payload or b""))
@@ -233,7 +232,7 @@ def extract_payload(
             text, k_logs = kernel(decode(payload or b""))
             logs.extend(k_logs)
         elif file_type == "doc":
-            if legacy_office:
+            if options.legacy_office:
                 # beyond-reference opt-in: real [MS-DOC] piece-table walk
                 from .legacy_office import extract_doc
 
@@ -246,7 +245,7 @@ def extract_payload(
                     "Legacy DOC format detected, limited extraction support"
                 )
         elif file_type == "ppt":
-            if legacy_office:
+            if options.legacy_office:
                 # beyond-reference opt-in: real [MS-PPT] record walk
                 from .legacy_office import extract_ppt
 
@@ -276,10 +275,7 @@ def extract_payload(
                 f"({len(payload or b'')} -> {len(inner)} bytes)"
             )
             text, ocr_used, _s, error, k_logs = extract_payload(
-                inner_url, inner, inner_ct,
-                use_ocr=use_ocr, main_content=main_content,
-                ocr_language=ocr_language, handwriting_mode=handwriting_mode,
-                legacy_office=legacy_office,
+                inner_url, inner, inner_ct, options
             )
             logs.extend(k_logs)
         else:

@@ -185,55 +185,14 @@ def _row_bands(idxs) -> list[tuple[int, int]]:
     return groups
 
 
-def _recognize_grid(ink: np.ndarray) -> tuple[str, int]:
-    """Recognize at font-pixel resolution: group ink rows into line bands
-    (:func:`_row_bands`), then anchor each band's 7-row window by best
-    score."""
-    idxs = np.nonzero(ink.any(axis=1))[0]
-    if len(idxs) == 0:
-        return "", 0
-    groups = _row_bands(idxs)
-    lines: list[str] = []
-    total = 0
-    for r0, r1 in groups:
-        best = ("", -10**9)
-        for dy in range(7):  # a band may start below the glyph top (e.g. '.')
-            top = r0 - dy
-            if top < 0 or top + 7 > ink.shape[0]:
-                continue
-            if r1 >= top + 7:  # window must cover the whole band's ink
-                continue
-            cand = _recognize_line(ink[top : top + 7])
-            if cand[1] > best[1]:
-                best = cand
-        lines.append(best[0])
-        total += max(best[1], 0)
-    return "\n".join(lines).strip("\n"), total
-
-
-def recognize_gray(gray: np.ndarray) -> str:
-    """Recognize rendered text in a luma (or binarized) array. The glyph
-    grid may be rasterized at scale 1-3 with any sub-pixel phase (and may
-    have been median-filtered by K14) — search (scale, dy, dx), score by
-    matched glyph count, keep the best."""
-    ink_full = gray < 128
-    best_text, best_score = "", 0
-    for s in (1, 2, 3):
-        for dy in range(s):
-            for dx in range(s):
-                text, score = _recognize_grid(ink_full[dy::s, dx::s])
-                if score > best_score:
-                    best_text, best_score = text, score
-    return best_text if best_score > 0 else ""
-
-
-def _read_words(band: np.ndarray) -> tuple[list[str], int]:
+def _read_words(band: np.ndarray) -> tuple[str, int]:
     """Split one 7-row band into WORD segments on runs of ≥6 blank
     columns (a full empty cell), then anchor each word's glyph grid
-    independently via :func:`_recognize_line`."""
+    independently via :func:`_recognize_line`; words join with one
+    space."""
     nz = np.nonzero(band.any(axis=0))[0]
     if len(nz) == 0:
-        return [], 0
+        return "", 0
     segs: list[tuple[int, int]] = []
     s = p = int(nz[0])
     for c in nz[1:]:
@@ -251,48 +210,53 @@ def _read_words(band: np.ndarray) -> tuple[list[str], int]:
         if t:
             words.append(t)
         score += sc
-    return words, score
+    return " ".join(words), score
 
 
-def _recognize_grid_words(ink: np.ndarray) -> tuple[str, int]:
-    """PSM-8-analogue grid pass (r3 verdict item #5): like
-    :func:`_recognize_grid`, but every WORD anchors its own glyph grid.
-    The fixed-pitch reader assumes inter-word gaps are a multiple of the
-    6-px pitch; ragged spacing (hand-laid text) mis-anchors everything
-    after the first odd gap. Per-word anchoring is what Tesseract's
-    single-word page-segmentation mode buys on such input."""
+def _recognize_grid(ink: np.ndarray, read_band) -> tuple[str, int]:
+    """Recognize at font-pixel resolution: group ink rows into line bands
+    (:func:`_row_bands`), then anchor each band's 7-row window by the best
+    score of ``read_band`` over it."""
     idxs = np.nonzero(ink.any(axis=1))[0]
     if len(idxs) == 0:
         return "", 0
     lines: list[str] = []
     total = 0
     for r0, r1 in _row_bands(idxs):
-        best_words: list[str] = []
-        best_score = -(10**9)
-        for dy in range(7):
+        best = ("", -10**9)
+        for dy in range(7):  # a band may start below the glyph top (e.g. '.')
             top = r0 - dy
             if top < 0 or top + 7 > ink.shape[0]:
                 continue
-            if r1 >= top + 7:
+            if r1 >= top + 7:  # window must cover the whole band's ink
                 continue
-            words, score = _read_words(ink[top : top + 7])
-            if score > best_score:
-                best_words, best_score = words, score
-        lines.append(" ".join(best_words))
-        total += max(best_score, 0)
+            cand = read_band(ink[top : top + 7])
+            if cand[1] > best[1]:
+                best = cand
+        lines.append(best[0])
+        total += max(best[1], 0)
     return "\n".join(lines).strip("\n"), total
 
 
-def recognize_gray_words(gray: np.ndarray) -> str:
-    """Per-word-banded variant of :func:`recognize_gray` (the
-    handwriting-mode retry): same (scale, dy, dx) search, word-anchored
-    grids."""
+def recognize_gray(gray: np.ndarray, per_word: bool = False) -> str:
+    """Recognize rendered text in a luma (or binarized) array. The glyph
+    grid may be rasterized at scale 1-3 with any sub-pixel phase (and may
+    have been median-filtered by K14) — search (scale, dy, dx), score by
+    matched glyph count, keep the best.
+
+    ``per_word=True`` is the PSM-8 analogue (the handwriting-mode retry):
+    every WORD anchors its own glyph grid (:func:`_read_words`). The
+    fixed-pitch reader assumes inter-word gaps are a multiple of the 6-px
+    pitch; ragged spacing (hand-laid text) mis-anchors everything after
+    the first odd gap. Per-word anchoring is what Tesseract's single-word
+    page-segmentation mode buys on such input."""
+    read_band = _read_words if per_word else _recognize_line
     ink_full = gray < 128
     best_text, best_score = "", 0
     for s in (1, 2, 3):
         for dy in range(s):
             for dx in range(s):
-                text, score = _recognize_grid_words(ink_full[dy::s, dx::s])
+                text, score = _recognize_grid(ink_full[dy::s, dx::s], read_band)
                 if score > best_score:
                     best_text, best_score = text, score
     return best_text if best_score > 0 else ""
@@ -321,9 +285,45 @@ HANDWRITING_WHITELIST = set(
 
 def normalize_language(language: str | None) -> str:
     """Tesseract-style code → the reference's EasyOCR remap; unknown codes
-    pass through (and end the cascade empty-handed, see perform_ocr)."""
+    pass through (and end the cascade empty-handed, see ocr_gray)."""
     lang = (language or "").strip().lower() or "eng"
     return LANG_MAP.get(lang, lang)
+
+
+def ocr_gray(
+    gray: np.ndarray | None,
+    language: str = "eng",
+    handwriting_mode: bool = False,
+    preprocess_params: dict | None = None,
+) -> str:
+    """The OCR cascade over one luma page (reference ``perform_ocr``,
+    utils/ocr_utils.py:112-208), shared by :func:`perform_ocr` and the
+    scanned-page branch of ``pdf_kernel.extract_pdf``. In order:
+
+    - ``language`` is validated against the reference's remap table
+      (:data:`LANG_MAP`); an UNKNOWN code ends the cascade with the
+      no-text literal like the reference (missing traineddata, failed
+      EasyOCR init → empty ``ocr_text`` → reference :208).
+    - ``preprocess_params``, when given, runs the K14 chain (incl. the
+      ``adaptive_threshold`` analogue of the reference's OpenCV stage).
+    - recognition (:func:`recognize_gray`).
+    - ``handwriting_mode``: the PSM-6 char whitelist (reference :139),
+      and on an empty result the PSM-8 analogue, per-word grid anchoring
+      (reference :158-168).
+    - the no-text literal if nothing was read, or ``gray`` is None."""
+    if normalize_language(language) not in _KNOWN_LANGS or gray is None:
+        return NO_TEXT_LITERAL
+    if preprocess_params is not None:
+        from .image_prep import preprocess_gray
+
+        gray = preprocess_gray(gray, preprocess_params)
+    text = recognize_gray(gray)
+    if handwriting_mode:
+        text = "".join(c for c in text if c in HANDWRITING_WHITELIST)
+        if not text.strip():
+            retry = recognize_gray(gray, per_word=True)
+            text = "".join(c for c in retry if c in HANDWRITING_WHITELIST)
+    return text if text.strip() else NO_TEXT_LITERAL
 
 
 def perform_ocr(
@@ -332,47 +332,11 @@ def perform_ocr(
     handwriting_mode: bool = False,
     preprocess_params: dict | None = None,
 ) -> str:
-    """Reference ``perform_ocr`` observable (utils/ocr_utils.py:112-208):
-    recognized text, or the no-text literal — including for undecodable
-    payloads, where the reference's cascade also ends empty-handed.
-
-    ``language`` (r4, r3 verdict item #5) is validated against the
-    reference's remap table (:data:`LANG_MAP`); an UNKNOWN code ends the
-    cascade with the no-text literal exactly like the reference (Tesseract
-    raises on missing traineddata, EasyOCR's reader fails to initialize,
-    ``ocr_text`` stays empty → reference :208). ``handwriting_mode``
-    mirrors the reference's two-pass shape: first pass applies the PSM-6
-    char whitelist (reference :139), and an empty result retries with the
-    PSM-8 analogue — per-word grid anchoring
-    (:func:`recognize_gray_words`), reference :158-168.
-
-    ``preprocess_params`` (r5, r4 verdict item #5) mirrors the
-    reference's preprocess-then-OCR flow (utils/ocr_utils.py passes the
-    image through utils/image_processing.preprocess_image first): when
-    given, the K14 chain — including the ``adaptive_threshold`` analogue
-    of the reference's OpenCV stage — runs before recognition. Default
-    None keeps every OCR golden byte-identical."""
-    if normalize_language(language) not in _KNOWN_LANGS:
-        return NO_TEXT_LITERAL
-    from .image_prep import decode_image, preprocess_gray, to_grayscale
+    """Reference ``perform_ocr`` observable: :func:`ocr_gray` over the
+    decoded payload's luma, so an undecodable payload ends empty-handed
+    (the no-text literal) like the reference's cascade."""
+    from .image_prep import decode_image, to_grayscale
 
     rgb = decode_image(payload or b"")
-    if rgb is None or rgb.size == 0:
-        return NO_TEXT_LITERAL
-    gray = to_grayscale(rgb)
-    if preprocess_params is not None:
-        gray = preprocess_gray(gray, preprocess_params)
-    text = recognize_gray_opts(gray, handwriting_mode)
-    return text if text.strip() else NO_TEXT_LITERAL
-
-
-def recognize_gray_opts(gray: np.ndarray, handwriting_mode: bool = False) -> str:
-    """recognize_gray plus the handwriting two-pass (whitelist → per-word
-    retry); shared by perform_ocr and the API's preprocess path."""
-    text = recognize_gray(gray)
-    if handwriting_mode:
-        text = "".join(c for c in text if c in HANDWRITING_WHITELIST)
-        if not text.strip():
-            retry = recognize_gray_words(gray)
-            text = "".join(c for c in retry if c in HANDWRITING_WHITELIST)
-    return text
+    gray = to_grayscale(rgb) if rgb is not None and rgb.size else None
+    return ocr_gray(gray, language, handwriting_mode, preprocess_params)

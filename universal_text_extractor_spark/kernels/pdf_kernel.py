@@ -31,9 +31,11 @@ from __future__ import annotations
 import re
 
 from . import limits
+from .options import ExtractOptions
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b", re.S)
 _ROOT_RE = re.compile(rb"/Root\s+(\d+)\s+\d+\s+R")
+_STREAM_KW_RE = re.compile(rb"stream\r?\n")
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
 
@@ -368,9 +370,9 @@ def _stream_bytes(payload: bytes, objs, num: int, crypt=None) -> bytes | None:
     d, end = entry
     if not isinstance(d, dict) or end is None:
         return None  # ObjStm-embedded objects never carry streams
-    m = re.compile(rb"stream\r?\n").search(payload, end - 2, end + 32)
+    m = _STREAM_KW_RE.search(payload, end - 2, end + 32)
     if not m:
-        m = re.compile(rb"stream\r?\n").search(payload, end - 2)
+        m = _STREAM_KW_RE.search(payload, end - 2)
         if not m:
             return None
     start = m.end()
@@ -594,7 +596,7 @@ def _scan_cmap_items(body: bytes) -> list[bytes | list[bytes]]:
             j = body.find(b">", i)
             if j < 0:
                 break
-            hx = re.sub(rb"[^0-9A-Fa-f]", b"", body[i + 1 : j])
+            hx = _HEX_JUNK_RE.sub(b"", body[i + 1 : j])
             if len(hx) % 2 == 0 and hx:
                 items.append(bytes.fromhex(hx.decode("ascii")))
             i = j + 1
@@ -603,7 +605,7 @@ def _scan_cmap_items(body: bytes) -> list[bytes | list[bytes]]:
             if j < 0:
                 break
             arr = [
-                bytes.fromhex(re.sub(rb"[^0-9A-Fa-f]", b"", t).decode("ascii"))
+                bytes.fromhex(_HEX_JUNK_RE.sub(b"", t).decode("ascii"))
                 for t in _CMAP_HEX.findall(body[i + 1 : j])
             ]
             items.append(arr)
@@ -625,7 +627,7 @@ def _parse_cmap(data: bytes) -> tuple[int, dict[int, str]] | None:
             toks = _CMAP_HEX.findall(m.group(1))
             if toks:
                 clen = max(
-                    1, len(re.sub(rb"[^0-9A-Fa-f]", b"", toks[0])) // 2
+                    1, len(_HEX_JUNK_RE.sub(b"", toks[0])) // 2
                 )
         mp: dict[int, str] = {}
 
@@ -751,16 +753,19 @@ def _page_image_gray(payload: bytes, objs, page_dict, crypt=None):
     return None
 
 
-def extract_pdf(payload: bytes, use_ocr: bool = False) -> tuple[str, bool, list[str]]:
+def extract_pdf(
+    payload: bytes, options: ExtractOptions = ExtractOptions()
+) -> tuple[str, bool, list[str]]:
     """Returns (text, ocr_used, logs). Never raises.
 
-    ``use_ocr=True`` mirrors reference utils/file_handlers.py:305-345: a
-    page without text operators is rasterized (here: its embedded scan
-    image decoded) and run through the K13 recognizer; recognized pages
-    get the ``--- Page N (OCR) ---`` framing. Like the reference's
-    ``perform_ocr``, the OCR result is never empty (the no-text literal
-    stands in), so an OCR'd page always lands in the (OCR) branch —
-    preserved observable."""
+    ``options.use_ocr`` mirrors reference utils/file_handlers.py:305-345:
+    a page without text operators is rasterized (here: its embedded scan
+    image decoded) and run through ``ocr_kernel.ocr_gray`` — the cascade
+    image payloads get, with the options' language and handwriting mode;
+    recognized pages get the ``--- Page N (OCR) ---`` framing. Like the
+    reference's ``perform_ocr``, the OCR result is never empty (the
+    no-text literal stands in), so an OCR'd page always lands in the
+    (OCR) branch — preserved observable."""
     logs = ["Attempting to extract text using content-stream parser"]
     try:
         if not payload.startswith(b"%PDF"):
@@ -811,17 +816,18 @@ def extract_pdf(payload: bytes, use_ocr: bool = False) -> tuple[str, bool, list[
                 pages_with_text += 1
                 # reference utils/file_handlers.py:303
                 extracted.append(f"\n--- Page {idx} ---\n{page_text}\n")
-            elif use_ocr:
+            elif options.use_ocr:
                 # reference :305-334 (PyMuPDF pixmap → perform_ocr), with
                 # the embedded-scan-image decode as the rasterizer
                 logs.append(f"Page {idx} has no text, attempting OCR")
                 try:
-                    from .ocr_kernel import NO_TEXT_LITERAL, recognize_gray
+                    from .ocr_kernel import ocr_gray
 
                     gray = _page_image_gray(payload, objs, d, crypt)
-                    ocr_text = recognize_gray(gray) if gray is not None else ""
-                    ocr_text = ocr_text if ocr_text.strip() else NO_TEXT_LITERAL
-                    # perform_ocr never returns empty (reference
+                    ocr_text = ocr_gray(
+                        gray, options.ocr_language, options.handwriting_mode
+                    )
+                    # ocr_gray never returns empty (reference
                     # ocr_utils.py:208) → always the (OCR) branch
                     extracted.append(f"\n--- Page {idx} (OCR) ---\n{ocr_text}\n")
                     ocr_used = True

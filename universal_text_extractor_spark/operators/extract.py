@@ -25,7 +25,8 @@ Scale design notes:
   lineage stats, so a caller that writes the output gets its lineage rows
   without a second job over it (plans/pipeline.py).
 - ``spark.sql.execution.arrow.maxRecordsPerBatch`` should be lowered for
-  large html blobs (SURVEY.md §4.3); see plans/pipeline.py defaults.
+  large html blobs (SURVEY.md §4.3); scripts/run_pipeline.py and
+  scripts/run_corpus.py set it to 256.
 
 The per-row work happens in ``kernels.dispatch.detect_content_type`` and
 ``extract_payload`` — the functions the pytest oracle calls, so pipeline
@@ -51,6 +52,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernels.dispatch import detect_content_type, extract_payload
+from ..kernels.options import ExtractOptions
 
 DEFAULT_SALT = 0x5EED
 
@@ -111,11 +113,7 @@ def salted_url_partition_key(url: Column) -> Column:
 def extract_pages_fused(
     pages: DataFrame,
     num_partitions: int | None = None,
-    use_ocr: bool = False,
-    main_content: bool = False,
-    ocr_language: str = "eng",
-    handwriting_mode: bool = False,
-    legacy_office: bool = False,
+    options: ExtractOptions = ExtractOptions(),
     lineage: Accumulator | None = None,
 ) -> DataFrame:
     """pages(url, warc_ts, html, …) → extracted DataFrame
@@ -125,13 +123,9 @@ def extract_pages_fused(
     is byte-identical to the kernel oracle (locked by
     tests/test_pipeline.py::test_pipeline_byte_identity).
 
-    ``use_ocr=True`` runs the K13 glyph recognizer on image payloads (the
-    D8 consequent — reference extract_text_from_file's use_ocr flag);
-    default False preserves the metadata-only image path and the locked
-    goldens. ``main_content=True`` swaps the HTML kernel to Readability-style
-    boilerplate removal (north-star extension; all other types unchanged).
-    ``ocr_language``, ``handwriting_mode`` and ``legacy_office`` pass
-    through to ``extract_payload`` unchanged.
+    ``options`` (:class:`~..kernels.options.ExtractOptions`) passes
+    through to ``extract_payload`` unchanged; the defaults keep the
+    metadata-only image path and the locked goldens.
 
     ``lineage`` is an accumulator made with :class:`PartitionStatsParam`,
     or None. When set, each task that emits rows adds its partition's
@@ -167,10 +161,7 @@ def extract_pages_fused(
                 ct = detect_content_type(u, payload)
                 t0 = time.perf_counter_ns()
                 text, ocr_used, success, error, log = extract_payload(
-                    u, payload, ct, use_ocr=use_ocr, main_content=main_content,
-                    ocr_language=ocr_language,
-                    handwriting_mode=handwriting_mode,
-                    legacy_office=legacy_office,
+                    u, payload, ct, options
                 )
                 us.append((time.perf_counter_ns() - t0) // 1000)
                 cts.append(ct)

@@ -44,6 +44,7 @@ from ..operators.dedup import (
     minhash_lsh_pairs_from_flat,
     minhash_signatures_from_flat,
 )
+from ..kernels.options import ExtractOptions
 from ..operators.extract import extract_pages_fused
 from ..operators.textstats import lang_id_col, quality_purge
 from ..functions.text_funcs import host_col
@@ -163,8 +164,7 @@ def build_training_corpus(
     verify_jaccard: bool = True,
     near_dup_closure: bool = False,
     num_partitions: int | None = None,
-    use_ocr: bool = False,
-    main_content: bool = False,
+    options: ExtractOptions = ExtractOptions(),
 ) -> dict:
     """Run the full crawl→corpus pipeline; writes ``out_dir/corpus`` and
     ``out_dir/stats`` parquet, returns the stage-count dict.
@@ -173,7 +173,9 @@ def build_training_corpus(
     ``spark.read.parquet(f"{run_dir}/extracted")`` from a committed
     resumable :func:`..plans.pipeline.run_extraction` run) skips the
     extraction stage — the expensive, resumable part happens once, and
-    corpus rebuilds with different thresholds reuse it.
+    corpus rebuilds with different thresholds reuse it. ``options``
+    configures the extraction stage, so it has no effect with
+    ``extracted``.
 
     ``verify_jaccard=False`` switches the near-dup stage to the
     bucket-min kill: a document dies when any of its LSH band-buckets
@@ -197,10 +199,7 @@ def build_training_corpus(
         if pages is None:
             raise ValueError("need pages or extracted")
         extracted = extract_pages_fused(
-            pages,
-            num_partitions=num_partitions,
-            use_ocr=use_ocr,
-            main_content=main_content,
+            pages, num_partitions=num_partitions, options=options
         )
     import time
 

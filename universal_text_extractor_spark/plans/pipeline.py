@@ -63,6 +63,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..kernels.options import ExtractOptions
 from ..operators.extract import (
     LINEAGE_STATS,
     PartitionStatsParam,
@@ -116,6 +117,14 @@ def _rm_f(path: str) -> None:
         pass
 
 
+def _write_atomic(path: str, text: str) -> None:
+    """Write-then-rename, so a crash never leaves a truncated control
+    file behind."""
+    with open(path + ".tmp", "w") as f:
+        f.write(text)
+    os.replace(path + ".tmp", path)
+
+
 def _metrics_table(stats: dict, run_id: str, bucket: int) -> pa.Table:
     """One bucket's metrics rows, built on the driver from the
     ``{partition_id: [LINEAGE_STATS values]}`` its extraction tasks
@@ -152,11 +161,7 @@ def run_extraction(
     num_partitions: int | None = None,
     run_id: str | None = None,
     fail_after_buckets: int | None = None,
-    use_ocr: bool = False,
-    main_content: bool = False,
-    legacy_office: bool = False,
-    ocr_language: str = "eng",
-    handwriting_mode: bool = False,
+    options: ExtractOptions = ExtractOptions(),
     storage: StorageBackend = DEFAULT_STORAGE,
 ) -> ExtractionRun:
     """Execute (or resume) an extraction run over ``pages`` into
@@ -164,6 +169,7 @@ def run_extraction(
     continues from the last committed bucket; completed runs are no-ops.
 
     ``fail_after_buckets`` injects a crash after N commits (resume tests).
+    ``options`` configures every bucket's extraction.
     Each bucket runs :func:`extract_pages_fused` with a ``lineage``
     accumulator, so ``spark`` must be a classic (py4j) session:
     accumulators do not exist under Spark Connect.
@@ -204,11 +210,8 @@ def run_extraction(
                 "so resuming could silently mis-cover — use a fresh out_dir"
             )
         os.makedirs(out_dir, exist_ok=True)
-        # atomic pin: write-then-rename so a crash never leaves a truncated
-        # file that bricks every later resume
-        with open(meta + ".tmp", "w") as f:
-            f.write(str(n_buckets))
-        os.replace(meta + ".tmp", meta)
+        # atomic pin: a truncated pin would brick every later resume
+        _write_atomic(meta, str(n_buckets))
     pending_buckets = [b for b in range(n_buckets) if b not in done]
 
     if not pending_buckets:  # completed run: pure manifest read, no input scan
@@ -254,9 +257,7 @@ def run_extraction(
             pages.withColumn("bucket", _bucket_col(n_buckets)), out_dir
         )
         if plan_fp is not None:
-            with open(fp_file + ".tmp", "w") as f:
-                f.write(plan_fp)
-            os.replace(fp_file + ".tmp", fp_file)
+            _write_atomic(fp_file, plan_fp)
     else:
         # committed stage → the passed `pages` DataFrame is NOT re-read;
         # the crashed run's staged snapshot is. Say so, and flag a caller
@@ -289,9 +290,7 @@ def run_extraction(
         # this accumulator, so the bucket write is the commit's only job
         lineage = spark.sparkContext.accumulator({}, PartitionStatsParam())
         extracted = extract_pages_fused(
-            chunk, num_partitions=num_partitions, use_ocr=use_ocr,
-            main_content=main_content, ocr_language=ocr_language,
-            handwriting_mode=handwriting_mode, legacy_office=legacy_office,
+            chunk, num_partitions=num_partitions, options=options,
             lineage=lineage,
         )
         # write-then-publish: data, metrics, manifest — in that order
