@@ -10,7 +10,9 @@ path). Package the library once, then submit:
 
 On a cluster, add --master / executor confs as usual; in this sandbox it
 runs on local[*]. Re-running with the same --out resumes from the last
-committed bucket (anti-join manifest; Iceberg snapshots in production).
+committed bucket (anti-join manifest; Iceberg snapshots in production),
+but only with the same --buckets and extraction flags: --out/_run.json
+records them, and a re-run with others is refused.
 """
 
 from __future__ import annotations

@@ -12,6 +12,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from universal_text_extractor_spark.kernels.options import ExtractOptions
 from universal_text_extractor_spark.plans.pipeline import (
     read_extracted,
     run_extraction,
@@ -20,7 +21,10 @@ from universal_text_extractor_spark.plans.storage import (
     METRICS_SCHEMA,
     ParquetStorage,
 )
-from universal_text_extractor_spark.sources.pages_gen import generate_pages_df
+from universal_text_extractor_spark.sources.pages_gen import (
+    generate_pages_df,
+    make_doc,
+)
 
 N = 400
 STORE = ParquetStorage()
@@ -266,6 +270,65 @@ def test_bucket_count_change_is_refused(spark, tmp_path):
         run_extraction(spark, pages, out, n_buckets=4, num_partitions=2)
     run_extraction(spark, pages, out, n_buckets=8, num_partitions=2)
     assert read_extracted(spark, out).select("url").distinct().count() == 200
+
+
+def test_options_change_is_refused(spark, tmp_path):
+    """Every committed bucket was extracted under the first run's options:
+    a resume under other options would mix two option sets in one output
+    (legacy .doc literals next to parsed text), so it is refused, naming
+    both records; resuming under the recorded options equals a clean
+    run."""
+    pages = spark.createDataFrame(
+        [
+            (f"https://x/{i}.doc", None, make_doc([f"paragraph {i}"]), "", "en")
+            for i in range(16)
+        ],
+        schema="url string, warc_ts timestamp, html binary, text string, "
+        "lang string",
+    )
+    clean = str(tmp_path / "clean")
+    run_extraction(spark, pages, clean, n_buckets=4, num_partitions=2)
+    out = str(tmp_path / "optchange")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extraction(
+            spark, pages, out, n_buckets=4, num_partitions=2, fail_after_buckets=2
+        )
+    with pytest.raises(
+        ValueError, match="'legacy_office': False.*'legacy_office': True"
+    ):
+        run_extraction(
+            spark, pages, out, n_buckets=4, num_partitions=2,
+            options=ExtractOptions(legacy_office=True),
+        )
+    run_extraction(spark, pages, out, n_buckets=4, num_partitions=2)
+    assert _table(spark, out) == _table(spark, clean)
+
+
+def test_run_record_publish_crash_is_safe(spark, tmp_path, monkeypatch):
+    """The run record is published (renamed into place) before the stage
+    and any commit, so a crash at that rename leaves nothing to resume:
+    the next run starts over and equals a clean run."""
+    pages = generate_pages_df(spark, 100, partitions=2)
+    clean = str(tmp_path / "clean")
+    run_extraction(spark, pages, clean, n_buckets=3, num_partitions=2)
+    out = str(tmp_path / "recordcrash")
+    record, real, seen = os.path.join(out, "_run.json"), os.replace, []
+
+    def replace(src, dst):
+        if os.fspath(dst) == record and not seen:
+            seen.append(dst)
+            raise RuntimeError("injected crash in run record publish")
+        return real(src, dst)
+
+    with monkeypatch.context() as m, pytest.raises(
+        RuntimeError, match="run record publish"
+    ):
+        m.setattr(os, "replace", replace)
+        run_extraction(spark, pages, out, n_buckets=3, num_partitions=2)
+    assert not os.path.exists(record)
+    r = run_extraction(spark, pages, out, n_buckets=3, num_partitions=2)
+    assert r.rows_written == 100 and not r.skipped_buckets
+    assert _table(spark, out) == _table(spark, clean)
 
 
 def test_non_local_out_dir_refused(spark):
@@ -746,6 +809,6 @@ def test_unpinned_dir_with_commits_refused(spark, tmp_path):
             spark, pages, out, n_buckets=8, num_partitions=2,
             fail_after_buckets=1,
         )
-    os.remove(os.path.join(out, "_n_buckets"))  # simulate a pre-pin dir
+    os.remove(os.path.join(out, "_run.json"))  # simulate a pre-pin dir
     with pytest.raises(ValueError, match="no n_buckets pin"):
         run_extraction(spark, pages, out, n_buckets=4, num_partitions=2)

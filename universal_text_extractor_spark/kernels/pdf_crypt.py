@@ -199,41 +199,8 @@ def _aes_encrypt_block(words, nr: int, block: bytes) -> bytes:
     return struct.pack(">4I", *_encrypt_words(rk, nr, *w))
 
 
-def _aes_decrypt_block(words, nr: int, block: bytes) -> bytes:
-    s = list(block)
-
-    def add_round_key(s, rnd):
-        for c in range(4):
-            w = words[4 * rnd + c]
-            for r in range(4):
-                s[4 * c + r] ^= w[r]
-
-    add_round_key(s, nr)
-    for rnd in range(nr - 1, -1, -1):
-        # InvShiftRows: row r rotates right by r
-        t = s[:]
-        for r in range(1, 4):
-            for c in range(4):
-                t[4 * c + r] = s[4 * ((c - r) % 4) + r]
-        s = [_INV_SBOX[b] for b in t]
-        add_round_key(s, rnd)
-        if rnd != 0:
-            m9, m11, m13, m14 = _MUL[9], _MUL[11], _MUL[13], _MUL[14]
-            for c in range(4):
-                a0, a1, a2, a3 = s[4 * c : 4 * c + 4]
-                s[4 * c + 0] = m14[a0] ^ m11[a1] ^ m13[a2] ^ m9[a3]
-                s[4 * c + 1] = m9[a0] ^ m14[a1] ^ m11[a2] ^ m13[a3]
-                s[4 * c + 2] = m13[a0] ^ m9[a1] ^ m14[a2] ^ m11[a3]
-                s[4 * c + 3] = m11[a0] ^ m13[a1] ^ m9[a2] ^ m14[a3]
-    return bytes(s)
-
-
 def aes_encrypt_block(key: bytes, block: bytes) -> bytes:
     return _aes_encrypt_block(_expand_key(key), {16: 10, 24: 12, 32: 14}[len(key)], block)
-
-
-def aes_decrypt_block(key: bytes, block: bytes) -> bytes:
-    return _aes_decrypt_block(_expand_key(key), {16: 10, 24: 12, 32: 14}[len(key)], block)
 
 
 def _cbc_encrypt_raw(key: bytes, iv: bytes, data: bytes) -> bytes:
@@ -306,6 +273,12 @@ def _aes_decrypt_blocks_np(key: bytes, blocks: "_np.ndarray") -> "_np.ndarray":
                 axis=2,
             ).reshape(-1, 16)
     return s
+
+
+def aes_decrypt_block(key: bytes, block: bytes) -> bytes:
+    """One block through the numpy inverse cipher (the V=5 /Perms check)."""
+    blocks = _np.frombuffer(block, dtype=_np.uint8).reshape(1, 16)
+    return _aes_decrypt_blocks_np(key, blocks).tobytes()
 
 
 def aes_cbc_decrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:

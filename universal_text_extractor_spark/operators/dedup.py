@@ -51,15 +51,29 @@ def md5_long(col: Column, prefix: str = "") -> Column:
     return F.conv(F.substring(F.md5(src), 1, 15), 16, 10).cast("long")
 
 
+def _text_key() -> Column:
+    """The exact-dedup key: md5_long of the normalized text."""
+    return md5_long(normalized_text_col(F.col("text"))).alias("text_key")
+
+
+def _kept_ids(documents: DataFrame) -> DataFrame:
+    """The kept set's doc_ids: the min doc_id per exact-dedup key."""
+    return (
+        documents.select("doc_id", _text_key())
+        .groupBy("text_key")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+
+
 def exact_dedup_groups(documents: DataFrame) -> DataFrame:
     """Exact duplicate groups on normalized text: group key, group size,
     canonical (min) doc_id — only groups of size > 1 (the dd1 oracle's
     ``HAVING COUNT(*) > 1``); singletons are by definition not duplicate
     groups. (r5 review: the docstring previously claimed size-1 groups
     were included — the code, the oracle, and this text now agree.)"""
-    key = md5_long(normalized_text_col(F.col("text")))
     return (
-        documents.select(F.col("doc_id"), key.alias("text_key"))
+        documents.select("doc_id", _text_key())
         .groupBy("text_key")
         .agg(
             F.count("*").alias("group_size"),
@@ -72,13 +86,7 @@ def exact_dedup_groups(documents: DataFrame) -> DataFrame:
 def exact_dedup_keep(documents: DataFrame) -> DataFrame:
     """The kept set: min doc_id per normalized-text key — aggregate count
     only (SQL-checkable summary)."""
-    key = md5_long(normalized_text_col(F.col("text")))
-    kept = (
-        documents.select("doc_id", key.alias("text_key"))
-        .groupBy("text_key")
-        .agg(F.min("doc_id").alias("doc_id"))
-    )
-    return kept.agg(F.count("*").alias("kept_count"))
+    return _kept_ids(documents).agg(F.count("*").alias("kept_count"))
 
 
 def exact_unique(quality: DataFrame) -> DataFrame:
@@ -89,15 +97,7 @@ def exact_unique(quality: DataFrame) -> DataFrame:
     map-combinable hash aggregate on the 8-byte key plus a LEFT SEMI join
     back (no row multiplication, no document bytes through the second
     shuffle)."""
-    kept_ids = (
-        quality.select(
-            "doc_id", md5_long(normalized_text_col(F.col("text"))).alias("k")
-        )
-        .groupBy("k")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    return quality.join(kept_ids, "doc_id", "left_semi")
+    return quality.join(_kept_ids(quality), "doc_id", "left_semi")
 
 
 def exact_dedup_purge(documents: DataFrame) -> DataFrame:

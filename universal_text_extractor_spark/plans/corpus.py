@@ -87,6 +87,18 @@ def frame_documents(extracted: DataFrame) -> DataFrame:
 quality_filter = quality_purge
 
 
+def _require_verified_closure(verify_jaccard: bool, closure: bool) -> None:
+    """ADVICE r4: closure semantics are defined over the VERIFIED pair
+    graph; silently falling back to bucket-min surprised
+    `--near-dup-closure --no-verify-jaccard` callers."""
+    if closure and not verify_jaccard:
+        raise ValueError(
+            "near_dup_closure requires verify_jaccard=True (closure is "
+            "defined over the verified-pair graph; the bucket-min fast "
+            "path materializes no pairs)"
+        )
+
+
 def near_dup_purged(
     exact: DataFrame,
     threshold: float = 0.7,
@@ -113,15 +125,7 @@ def near_dup_purged(
     exchange) — a staged 1-row-per-doc signatures parquet makes each
     reference a cheap re-scan + explode instead of a full re-derivation
     of the shingle pipeline (r5 review, batch 3)."""
-    if closure and not verify_jaccard:
-        # ADVICE r4: closure semantics are defined over the VERIFIED pair
-        # graph; silently falling back to bucket-min here surprised
-        # `--near-dup-closure --no-verify-jaccard` callers.
-        raise ValueError(
-            "near_dup_closure requires verify_jaccard=True (closure is "
-            "defined over the verified-pair graph; the bucket-min fast "
-            "path materializes no pairs)"
-        )
+    _require_verified_closure(verify_jaccard, closure)
     if flat is None:
         flat = _shingle_hashes_flat(exact)
     if verify_jaccard:
@@ -188,13 +192,8 @@ def build_training_corpus(
     can kill a non-duplicate); production crawls take it at 100 TB,
     which is why it exists here. Default stays the exact verified path
     (``near_dup_threshold`` applies there)."""
-    if near_dup_closure and not verify_jaccard:
-        # fail before any staging work — same contract as near_dup_purged
-        raise ValueError(
-            "near_dup_closure requires verify_jaccard=True (closure is "
-            "defined over the verified-pair graph; the bucket-min fast "
-            "path materializes no pairs)"
-        )
+    # fail before any staging work
+    _require_verified_closure(verify_jaccard, near_dup_closure)
     if extracted is None:
         if pages is None:
             raise ValueError("need pages or extracted")

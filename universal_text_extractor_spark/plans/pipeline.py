@@ -34,6 +34,12 @@ amortized across every commit and every resume (a crashed run's stage is
 reused, not rebuilt). With Iceberg the stage is a MERGE-managed scratch
 table; the _SUCCESS check below is the snapshot-commit check.
 
+What a resume must match is ONE run record, ``out_dir/_run.json``:
+``n_buckets``, the ``options`` and the input's plan fingerprint, written
+whenever the stage is (re)built (before any commit) and read once per
+run. Another ``n_buckets`` or ``options`` is refused, another input only
+warns; the record outlives completion, so a re-invoke is checked too.
+
 Scale: n_buckets bounds the blast radius of a failure (work lost ≤ 1/n of
 the job), and each bucket is itself partition-parallel inside
 ``extract_pages_fused``.
@@ -54,9 +60,12 @@ publishes that follow are driver-side file writes of those few rows (see
 from __future__ import annotations
 
 import dataclasses
+import hashlib
+import json
 import os
 import time
 import uuid
+import warnings
 from datetime import datetime, timezone
 
 import pyarrow as pa
@@ -75,17 +84,18 @@ BUCKET_SALT = 0xC0FFEE
 
 
 def _require_local_out_dir(out_dir: str) -> None:
-    """The commit-protocol control files (n_buckets pin, _SUCCESS probes,
-    publish renames, stage cleanup) use local-FS primitives. On a remote
-    URI (hdfs://, s3a://…) those would silently no-op: the pin would never
-    engage — so resuming with a LARGER n_buckets would silently skip
-    never-extracted buckets — and stage reuse/cleanup would misbehave.
-    ``file://`` is rejected too: Spark resolves the URI but the os-level
-    control files would treat it as a literal relative path (a junk
-    ``./file:`` tree), splitting the pin from the data — pass the plain
-    path instead. Hard-fail instead of degrading (ADVICE r2 #1). The
-    guard holds for every storage backend: the control files stay local
-    files even when the data goes to Iceberg."""
+    """The commit protocol's control files (the run record, _SUCCESS
+    probes, publish renames, stage cleanup) use local-FS primitives. On a
+    remote URI (hdfs://, s3a://…) those would silently no-op: the run
+    record would never engage — so resuming with a LARGER n_buckets or
+    other options would silently mis-cover or mix outputs — and stage
+    reuse/cleanup would misbehave. ``file://`` is rejected too: Spark
+    resolves the URI but the os-level control files would treat it as a
+    literal relative path (a junk ``./file:`` tree), splitting the record
+    from the data — pass the plain path instead. Hard-fail instead of
+    degrading (ADVICE r2 #1). The guard holds for every storage backend:
+    the run record stays a local file even when the data goes to
+    Iceberg."""
     if "://" in out_dir:
         raise ValueError(
             f"out_dir {out_dir!r} is not a plain local filesystem path; "
@@ -108,13 +118,6 @@ def _bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("url"), F.lit(BUCKET_SALT)), F.lit(n_buckets)).cast(
         "int"
     )
-
-
-def _rm_f(path: str) -> None:
-    try:
-        os.remove(path)
-    except OSError:
-        pass
 
 
 def _write_atomic(path: str, text: str) -> None:
@@ -167,6 +170,7 @@ def run_extraction(
     """Execute (or resume) an extraction run over ``pages`` into
     ``out_dir/extracted`` + ``out_dir/metrics``. Re-invoking after a crash
     continues from the last committed bucket; completed runs are no-ops.
+    Both must pass the out_dir's recorded ``n_buckets`` and ``options``.
 
     ``fail_after_buckets`` injects a crash after N commits (resume tests).
     ``options`` configures every bucket's extraction.
@@ -177,48 +181,51 @@ def run_extraction(
     t0 = time.time()
     _require_local_out_dir(out_dir)
     run_id = run_id or uuid.uuid4().hex[:12]
-    # bucket ids in the manifest AND the stage are functions of n_buckets:
-    # resuming the same out_dir with a different n would silently mis-cover
-    # (old manifest rows mark new ids done that were never extracted under
-    # the new numbering). Pin n_buckets per out_dir and refuse a mismatch.
-    meta = os.path.join(out_dir, "_n_buckets")
-    pinned: int | None = None
-    if os.path.exists(meta):
-        try:
-            with open(meta) as f:
-                pinned = int(f.read().strip())
-        except ValueError:
-            pinned = None  # crash mid-write truncated the pin → re-pin below
-    if pinned is not None and pinned != n_buckets:
-        raise ValueError(
-            f"out_dir was created with n_buckets={pinned}; resuming with "
-            f"{n_buckets} would silently skip work — pass n_buckets="
-            f"{pinned} or use a fresh out_dir"
-        )
-    done = set(committed_buckets(spark, out_dir, storage))
-    if pinned is None:
-        # unpinned dir (truncated pin or created pre-pinning) with
-        # committed buckets: the original n_buckets is unknowable, so ANY
-        # resume could mis-cover — the old max(done) >= n_buckets check
-        # only caught dirs built under a LARGER bucket universe and let a
-        # smaller-universe dir re-pin to the new count, silently skipping
-        # the low bucket ids' unextracted urls (r5 review, batch 3)
-        if done:
+    # bucket ids in the manifest AND the stage are functions of n_buckets,
+    # and every committed bucket was extracted under `options`: resuming
+    # under another n would silently mis-cover (old manifest rows mark new
+    # ids done that were never extracted under the new numbering), under
+    # other options would mix two option sets in one output. The run
+    # record holds both; refuse a mismatch.
+    record_path = os.path.join(out_dir, "_run.json")
+    try:
+        with open(record_path) as f:
+            record = json.load(f)
+    except (OSError, ValueError):
+        record = None  # missing, or unreadable
+    opts = dataclasses.asdict(options)
+    if record is not None:
+        pinned = record.get("n_buckets")
+        if pinned != n_buckets:
             raise ValueError(
-                f"out_dir has committed bucket ids {sorted(done)} but no "
-                "n_buckets pin; its original bucket count is unknowable, "
-                "so resuming could silently mis-cover — use a fresh out_dir"
+                f"out_dir was created with n_buckets={pinned}; resuming with "
+                f"{n_buckets} would silently skip work — pass n_buckets="
+                f"{pinned} or use a fresh out_dir"
             )
-        os.makedirs(out_dir, exist_ok=True)
-        # atomic pin: a truncated pin would brick every later resume
-        _write_atomic(meta, str(n_buckets))
+        if record.get("options") != opts:
+            raise ValueError(
+                f"out_dir was run with options {record.get('options')}; "
+                f"resuming with options {opts} would mix two option sets "
+                "in one output — pass the recorded options or use a fresh "
+                "out_dir"
+            )
+    done = set(committed_buckets(spark, out_dir, storage))
+    if record is None and done:
+        # a lost record, or an out_dir of an earlier layout: the original
+        # n_buckets is unknowable, so ANY resume could mis-cover (r5
+        # review, batch 3)
+        raise ValueError(
+            f"out_dir has committed bucket ids {sorted(done)} but no "
+            "n_buckets pin (no readable _run.json); its original bucket "
+            "count is unknowable, so resuming could silently mis-cover — "
+            "use a fresh out_dir"
+        )
     pending_buckets = [b for b in range(n_buckets) if b not in done]
 
     if not pending_buckets:  # completed run: pure manifest read, no input scan
         # a crash after the final manifest commit but before stage cleanup
         # would otherwise leave the orphan copy forever
         storage.drop_stage(out_dir)
-        _rm_f(os.path.join(out_dir, "_staged_input_fp"))
         return ExtractionRun(
             run_id=run_id,
             committed_buckets=[],
@@ -229,43 +236,25 @@ def run_extraction(
 
     # ONE scan of the input per run: stage the pages bucketed, written
     # partitionBy("bucket"), so each commit below reads only bucket=b via
-    # partition pruning. A crashed run's committed stage is reused (safe:
-    # n_buckets is pinned per out_dir above, and the pages INPUT is assumed
-    # immutable between crash and resume — the Iceberg-snapshot assumption
-    # the module docstring states); an uncommitted stage (_SUCCESS missing)
-    # is rebuilt.
-    # input-identity fingerprint (ADVICE r2 #2): the logical plan of the
-    # pages DataFrame, hashed. Cheap (no scan), and a caller that resumes
-    # with a DIFFERENT input (other path, other filter) almost certainly
-    # changes the plan. Mismatch warns rather than refuses — plan strings
-    # may legitimately differ across sessions (UDF object reprs, view
-    # names) while the data is the same snapshot.
-    import hashlib
-    import warnings
-
+    # partition pruning. A crashed run's committed stage is reused only
+    # under its record (the pages INPUT is assumed immutable between crash
+    # and resume — the Iceberg-snapshot assumption); otherwise it is
+    # rebuilt, the record written first. The record's input identity
+    # (ADVICE r2 #2) is the pages' logical plan, hashed: no scan, and
+    # another path or filter almost surely changes it. Plan strings may
+    # differ across sessions for the same snapshot, so a mismatch only
+    # warns, and `_jdf` is absent under Spark Connect, so it may be None.
     try:
         plan_fp: str | None = hashlib.sha256(
             pages._jdf.queryExecution().logical().toString().encode()
         ).hexdigest()
     except Exception:
-        # _jdf is py4j-only (absent under Spark Connect); the fingerprint
-        # is advisory — skip it rather than fail the run
         plan_fp = None
-    fp_file = os.path.join(out_dir, "_staged_input_fp")
-    if not storage.stage_is_committed(out_dir):
-        storage.stage_pages(
-            pages.withColumn("bucket", _bucket_col(n_buckets)), out_dir
-        )
-        if plan_fp is not None:
-            _write_atomic(fp_file, plan_fp)
-    else:
-        # committed stage → the passed `pages` DataFrame is NOT re-read;
-        # the crashed run's staged snapshot is. Say so, and flag a caller
-        # that appears to be passing a different input on resume.
-        old_fp = None
-        if os.path.exists(fp_file):
-            with open(fp_file) as f:
-                old_fp = f.read().strip()
+    if storage.stage_is_committed(out_dir) and record is not None:
+        # the passed `pages` DataFrame is NOT re-read; the crashed run's
+        # staged snapshot is. Flag a caller that appears to be passing a
+        # different input on resume.
+        old_fp = record.get("input")
         if old_fp is not None and plan_fp is not None and old_fp != plan_fp:
             warnings.warn(
                 f"resuming {out_dir}: the staged input snapshot from the "
@@ -275,6 +264,16 @@ def run_extraction(
                 "out_dir (the staged snapshot wins)",
                 stacklevel=2,
             )
+    else:
+        os.makedirs(out_dir, exist_ok=True)
+        # atomic: a truncated record would brick every later resume
+        _write_atomic(
+            record_path,
+            json.dumps({"n_buckets": n_buckets, "options": opts, "input": plan_fp}),
+        )
+        storage.stage_pages(
+            pages.withColumn("bucket", _bucket_col(n_buckets)), out_dir
+        )
     staged = storage.read_stage(spark, out_dir)
 
     committed: list[int] = []
@@ -305,7 +304,6 @@ def run_extraction(
     # all buckets committed → the stage has served its purpose; drop it so a
     # completed output dir carries no second copy of the input
     storage.drop_stage(out_dir)
-    _rm_f(fp_file)
 
     return ExtractionRun(
         run_id=run_id,

@@ -44,11 +44,12 @@ and readable.
 
 The crash-safety argument is unchanged: each bucket's publish order is
 data → metrics → manifest, and only the manifest row marks a bucket done.
-The n_buckets pin and the input fingerprint stay in
-:mod:`~universal_text_extractor_spark.plans.pipeline`, as local control
-files under out_dir for EVERY backend (Iceberg included) — which is why
-``run_extraction`` rejects a non-local out_dir whichever backend it is
-given."""
+What a resume must match (n_buckets, extraction options, input
+fingerprint) is not a storage operation: it is the run record that
+:mod:`~universal_text_extractor_spark.plans.pipeline` keeps as one local
+file, ``out_dir/_run.json``, for EVERY backend (Iceberg included) — which
+is why ``run_extraction`` rejects a non-local out_dir whichever backend
+it is given."""
 
 from __future__ import annotations
 
