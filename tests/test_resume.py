@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from universal_text_extractor_spark.kernels.options import ExtractOptions
 from universal_text_extractor_spark.plans.pipeline import (
+    committed_buckets,
     read_extracted,
     run_extraction,
 )
@@ -108,6 +109,54 @@ def _hidden(out_dir):
     return [e for e in os.listdir(f"{out_dir}/metrics") if e.startswith(".")]
 
 
+class GroupRecording(ParquetStorage):
+    """Records the buckets of every ``write_bucket`` call: one call is one
+    commit group's extraction job."""
+
+    def __init__(self):
+        self.groups: list[list[int]] = []
+
+    def write_bucket(self, extracted, out_dir, buckets):
+        self.groups.append(list(buckets))
+        super().write_bucket(extracted, out_dir, buckets)
+
+
+def _manifest_rows(spark, out_dir):
+    rows = spark.read.parquet(f"{out_dir}/_manifest").collect()
+    return sorted(r["bucket"] for r in rows)
+
+
+def _dispatch_stages(spark, group):
+    """How many stages of the jobs in ``group`` ran the ``mapInArrow``
+    dispatch, from the stages' operation graphs in Spark's status store."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+
+    def names(cluster):
+        found, it = [cluster.name()], cluster.childClusters().iterator()
+        while it.hasNext():
+            found += names(it.next())
+        return found
+
+    stages = {
+        sid
+        for job in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(job).stageIds
+    }
+    return sum(
+        "MapInArrow" in names(store.operationGraphForStage(sid).rootCluster())
+        for sid in stages
+    )
+
+
+def _full_table(spark, out_dir):
+    """Every column of the extracted table but the two a rerun cannot
+    reproduce: ``extracted_at`` and the kernel timing ``extract_us``."""
+    ext = read_extracted(spark, out_dir).drop("extracted_at", "extract_us")
+    return sorted(tuple(r) for r in ext.collect())
+
+
 def test_kill_and_resume_equals_single_run(spark, tmp_path):
     pages = generate_pages_df(spark, N, partitions=4)
 
@@ -125,6 +174,197 @@ def test_kill_and_resume_equals_single_run(spark, tmp_path):
     r2 = run_extraction(spark, pages, crashy, n_buckets=6, num_partitions=4)
     assert len(r2.skipped_buckets) == 2  # the committed-before-crash buckets
     assert _table(spark, crashy) == _table(spark, single)
+
+
+class CrashAfterGroupWrite(GroupRecording):
+    def write_bucket(self, extracted, out_dir, buckets):
+        super().write_bucket(extracted, out_dir, buckets)
+        raise RuntimeError("injected failure after the group's data write")
+
+
+class CrashBeforeManifestOf2(GroupRecording):
+    def append_manifest(self, spark, out_dir, bucket, run_id):
+        if bucket == 2:
+            raise RuntimeError("injected failure between metrics and manifest")
+        super().append_manifest(spark, out_dir, bucket, run_id)
+
+
+@pytest.mark.parametrize(
+    "crashing, committed",
+    [(CrashAfterGroupWrite, []), (CrashBeforeManifestOf2, [0, 1])],
+    ids=["after-data-write", "mid-group-metrics-manifest"],
+)
+def test_group_crash_resume_equals_single_run(spark, tmp_path, crashing, committed):
+    """One commit group extracts and writes all its buckets in one job,
+    then commits them one by one. A crash after the group's data write
+    (nothing committed) or between bucket 2's metrics and its manifest
+    (buckets 0-1 committed, 2 and 3 written but pending) resumes to the
+    single run's table, with one metrics row per (bucket, partition) and
+    each bucket once in the manifest."""
+    pages = generate_pages_df(spark, 200, partitions=2)
+    single = str(tmp_path / "single")
+    run_extraction(spark, pages, single, n_buckets=4, num_partitions=2)
+    out = str(tmp_path / "crashed")
+    store = crashing()
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extraction(
+            spark, pages, out, n_buckets=4, num_partitions=2, run_id="a",
+            storage=store,
+        )
+    assert store.groups == [[0, 1, 2, 3]]  # the whole run is one group
+    assert {f"bucket={b}" for b in range(4)} <= set(os.listdir(f"{out}/extracted"))
+    published = {b: {"a"} for b in committed}
+    if committed:  # bucket 2's metrics were published before the crash
+        published[2] = {"a"}
+        assert _metrics_by_bucket(spark, out) == published
+    assert committed_buckets(spark, out) == committed
+
+    resumed = GroupRecording()
+    r = run_extraction(
+        spark, pages, out, n_buckets=4, num_partitions=2, run_id="b",
+        storage=resumed,
+    )
+    pending = [b for b in range(4) if b not in committed]
+    assert resumed.groups == [pending]
+    assert r.committed_buckets == pending and r.skipped_buckets == committed
+    assert _table(spark, out) == _table(spark, single)
+    assert _metrics_by_bucket(spark, out) == {
+        b: {"a" if b in committed else "b"} for b in range(4)
+    }
+    assert _manifest_rows(spark, out) == [0, 1, 2, 3]
+    total = spark.read.parquet(f"{out}/metrics").agg(F.sum("doc_count"))
+    assert total.collect()[0][0] == 200
+
+
+def test_commit_groups_follow_max_partition_bytes(spark, tmp_path):
+    """A group closes before the bucket that would take its staged bytes
+    past maxPartitionBytes x defaultParallelism. By default the 4 small
+    buckets of a run are one group: one write, one dispatch stage. With
+    maxPartitionBytes lowered until every bucket is over the bound, each
+    bucket is a group of its own, with its own dispatch stage, and the
+    output equals the grouped run's on every reproducible column."""
+    sc = spark.sparkContext
+    pages = generate_pages_df(spark, 200, partitions=2)
+    sizing = str(tmp_path / "sizing")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extraction(
+            spark, pages, sizing, n_buckets=4, num_partitions=2,
+            fail_after_buckets=0,
+        )
+    staged = f"{sizing}/_staged"
+    smallest = min(
+        sum(
+            os.path.getsize(f"{staged}/{d}/{f}")
+            for f in os.listdir(f"{staged}/{d}")
+            if f.endswith(".parquet")
+        )
+        for d in os.listdir(staged)
+        if d.startswith("bucket=")
+    )
+    # half the smallest bucket over the bound, and a handful of scan
+    # splits per bucket rather than one per byte
+    max_bytes = smallest // (2 * sc.defaultParallelism)
+
+    def run(name, max_partition_bytes=None):
+        store, group = GroupRecording(), f"{tmp_path.name}-{name}"
+        conf = "spark.sql.files.maxPartitionBytes"
+        default = spark.conf.get(conf)
+        if max_partition_bytes is not None:
+            spark.conf.set(conf, str(max_partition_bytes))
+        sc.setJobGroup(group, name)
+        try:
+            run_extraction(
+                spark, pages, str(tmp_path / name), n_buckets=4,
+                num_partitions=2, storage=store,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            spark.conf.set(conf, default)
+        return store.groups, _dispatch_stages(spark, group)
+
+    assert run("grouped") == ([[0, 1, 2, 3]], 1)
+    assert run("per-bucket", max_bytes) == ([[0], [1], [2], [3]], 4)
+    assert _full_table(spark, str(tmp_path / "per-bucket")) == _full_table(
+        spark, str(tmp_path / "grouped")
+    )
+
+
+@pytest.mark.parametrize(
+    "sizes, groups",
+    [
+        # 3+3+4 fills the bound exactly; bucket 3 would pass it
+        ({0: 3, 1: 3, 2: 4, 3: 1}, [[0, 1, 2], [3]]),
+        # a bucket over the bound is a group of its own
+        ({0: 2, 1: 12, 2: 2, 3: 2}, [[0], [1], [2, 3]]),
+        # a bucket with no staged file is empty and joins its group
+        ({0: 9, 3: 1}, [[0, 1, 2, 3]]),
+        # unknown sizes: one group per bucket, as before grouping
+        (None, [[0], [1], [2], [3]]),
+    ],
+)
+def test_commit_group_rule(sizes, groups):
+    from universal_text_extractor_spark.plans.pipeline import _commit_groups
+
+    assert _commit_groups([0, 1, 2, 3], sizes, 10) == groups
+
+
+def test_staged_bytes_unknown_off_local_stage(tmp_path):
+    """Sizes come from the stage's local ``bucket=b`` files; a stage the
+    driver cannot size (a remote warehouse, another layout) gives None,
+    so every bucket becomes its own group."""
+    from universal_text_extractor_spark.plans.pipeline import _staged_bytes
+
+    class Listing:
+        def __init__(self, files):
+            self.files = files
+
+        def inputFiles(self):
+            return self.files
+
+    for b, n in ((1, 5), (1, 7), (2, 3)):
+        os.makedirs(tmp_path / f"bucket={b}", exist_ok=True)
+        (tmp_path / f"bucket={b}" / f"part-{n}.parquet").write_bytes(b"x" * n)
+    local = [f"file://{p}" for p in sorted(tmp_path.glob("bucket=*/*"))]
+    assert _staged_bytes(Listing(local)) == {1: 12, 2: 3}
+    assert _staged_bytes(Listing(["s3a://wh/stage/bucket=1/f.parquet"])) is None
+    assert _staged_bytes(Listing([f"file://{tmp_path}/flat.parquet"])) is None
+
+
+def test_resume_runs_one_dispatch_stage(spark, tmp_path):
+    """A resume over k small pending buckets extracts them in one job: one
+    write_bucket call and exactly one mapInArrow dispatch stage, where a
+    job per bucket would run k."""
+    sc = spark.sparkContext
+    pages = generate_pages_df(spark, N, partitions=4)
+    out = str(tmp_path / "onestage")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extraction(
+            spark, pages, out, n_buckets=6, num_partitions=4, fail_after_buckets=2
+        )
+    store, group = GroupRecording(), f"{tmp_path.name}-resume"
+    sc.setJobGroup(group, "resume")
+    try:
+        r = run_extraction(
+            spark, pages, out, n_buckets=6, num_partitions=4, storage=store
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert r.committed_buckets == [2, 3, 4, 5]
+    assert store.groups == [[2, 3, 4, 5]]
+    assert _dispatch_stages(spark, group) == 1
+
+
+def test_empty_bucket_of_a_group_reads_empty(spark, tmp_path):
+    """A bucket that holds no page still commits, and reads back as an
+    empty table, though a group's partitioned write makes no dir for it."""
+    pages = generate_pages_df(spark, 6, partitions=1)
+    out = str(tmp_path / "sparse")
+    r = run_extraction(spark, pages, out, n_buckets=16, num_partitions=2)
+    assert r.committed_buckets == list(range(16))
+    sizes = [STORE.read_bucket(spark, out, b).count() for b in range(16)]
+    assert sum(sizes) == 6 and 0 in sizes
 
 
 def test_staged_commit_prunes_partitions(spark, tmp_path):
@@ -652,8 +892,6 @@ def test_spark_written_control_tables_resume(spark, tmp_path):
     manifest raises."""
     import shutil
 
-    from universal_text_extractor_spark.plans.pipeline import committed_buckets
-
     pages = generate_pages_df(spark, 120, partitions=2)
     out = str(tmp_path / "compat")
     metrics, manifest = f"{out}/metrics", f"{out}/_manifest"
@@ -708,7 +946,7 @@ def test_spark_written_control_tables_resume(spark, tmp_path):
 
 
 def test_control_plane_launches_no_spark_jobs(spark, tmp_path):
-    """A bucket commit is one Spark job family: the extraction write. The
+    """A commit group is one Spark job family: its extraction write. The
     lineage rows come from that job, and the metrics publish, the manifest
     publish and the manifest read run on the driver, so a crashed run and
     its resume launch no Spark job outside the stage_pages, read_stage and
@@ -764,37 +1002,61 @@ def test_control_plane_launches_no_spark_jobs(spark, tmp_path):
 
 
 def test_published_lineage_equals_spark_aggregate(spark, tmp_path):
-    """Each bucket's metrics rows come from its extraction tasks, not from
-    an aggregate over the written bucket: they must equal
-    ``lineage_metrics(read_bucket(b))`` on every column but ``ts`` (the
-    latency too — both sum the same ``extract_us``), including having no
-    row for a partition that received no pages."""
+    """Each bucket's metrics rows come from its group's extraction tasks,
+    not from an aggregate over the written bucket: for every bucket of a
+    group they must equal ``lineage_metrics(read_bucket(b))`` on every
+    column but ``ts`` (the latency too — both sum the same
+    ``extract_us``), including having no row for a partition that
+    received no pages of that bucket."""
     from universal_text_extractor_spark.operators.extract import (
         lineage_metrics,
     )
-    from universal_text_extractor_spark.plans.storage import DEFAULT_STORAGE
 
-    pages = generate_pages_df(spark, 60, partitions=2)
+    pages = generate_pages_df(spark, 80, partitions=2)
     out = str(tmp_path / "lineage")
-    r = run_extraction(spark, pages, out, n_buckets=3, num_partitions=16)
+    # ~5 rows per task in batches of 2: each task folds several batches,
+    # each holding rows of several buckets
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(batch)
+    spark.conf.set(batch, "2")
+    try:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_extraction(
+                spark, pages, out, n_buckets=4, num_partitions=16,
+                run_id="a", fail_after_buckets=1,
+            )
+        store = GroupRecording()
+        r = run_extraction(
+            spark, pages, out, n_buckets=4, num_partitions=16, run_id="b",
+            storage=store,
+        )
+    finally:
+        spark.conf.set(batch, default)
+    assert store.groups == [[1, 2, 3]]  # the resume is one group
     m = spark.read.parquet(f"{out}/metrics")
     assert m.schema.simpleString() == METRICS_SCHEMA_DDL
     cols = [c for c in m.columns if c != "ts"]
-    got = sorted(tuple(row) for row in m.select(*cols).collect())
-    want = sorted(
-        tuple(row)
-        for b in range(3)
-        for row in lineage_metrics(
-            DEFAULT_STORAGE.read_bucket(spark, out, b), r.run_id
+    published = 0
+    for b in range(4):
+        got = sorted(
+            tuple(row)
+            for row in m.filter(F.col("bucket") == b).select(*cols).collect()
         )
-        .withColumn("bucket", F.lit(b))
-        .select(*cols)
-        .collect()
-    )
-    assert got == want
-    # ~20 pages per bucket over 16 partitions: some partitions stay empty
-    assert len(got) < 3 * 16
-    assert r.rows_written == sum(row[1] for row in got) == 60
+        want = sorted(
+            tuple(row)
+            for row in lineage_metrics(
+                STORE.read_bucket(spark, out, b), "a" if b == 0 else "b"
+            )
+            .withColumn("bucket", F.lit(b))
+            .select(*cols)
+            .collect()
+        )
+        assert got == want, b
+        # ~20 pages per bucket over 16 partitions: some partitions stay empty
+        assert 0 < len(got) < 16
+        published += sum(row[1] for row in got)
+    assert published == 80
+    assert r.rows_written == 80 - STORE.read_bucket(spark, out, 0).count()
 
 
 def test_unpinned_dir_with_commits_refused(spark, tmp_path):

@@ -3,8 +3,13 @@ source, exactly-once resume via checkpoint, byte-identity vs batch."""
 
 from __future__ import annotations
 
+from universal_text_extractor_spark.kernels.options import ExtractOptions
 from universal_text_extractor_spark.operators.extract import extract_pages_fused
-from universal_text_extractor_spark.sources.pages_gen import generate_pages_df
+from universal_text_extractor_spark.sources.pages_gen import (
+    PAGES_SCHEMA,
+    generate_pages_df,
+    make_doc,
+)
 from universal_text_extractor_spark.streaming import (
     stream_extract_pages,
     windowed_metrics,
@@ -36,6 +41,43 @@ def test_stream_matches_batch(spark, tmp_path):
     q2.awaitTermination(300)
     total = spark.read.parquet(out).count()
     assert total == N + 50  # no reprocessing of the first N (exactly-once)
+
+
+def test_stream_honours_options(spark, tmp_path):
+    """A stream runs the options it is given, as batch extraction does:
+    under legacy_office and main_content its rows equal the batch rows
+    under the same options, and the legacy .doc bodies are parsed where
+    the defaults leave their literal."""
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    docs = spark.createDataFrame(
+        [
+            (f"https://x/{i}.doc", None, make_doc([f"paragraph {i}"]), "", "en")
+            for i in range(12)
+        ],
+        schema=PAGES_SCHEMA,
+    )
+    docs.unionByName(generate_pages_df(spark, 60, partitions=2)).write.parquet(src)
+    options = ExtractOptions(legacy_office=True, main_content=True)
+
+    q = stream_extract_pages(
+        spark, src, out, str(tmp_path / "ckpt"), num_partitions=4,
+        options=options,
+    )
+    q.awaitTermination(300)
+
+    def batch(opts):
+        ext = extract_pages_fused(
+            spark.read.parquet(src), num_partitions=4, options=opts
+        )
+        return {r["url"]: r["text"] for r in ext.collect()}
+
+    got = {r["url"]: r["text"] for r in spark.read.parquet(out).collect()}
+    assert got == batch(options)
+    defaults = batch(ExtractOptions())
+    for i in range(12):
+        url = f"https://x/{i}.doc"
+        assert f"paragraph {i}" in got[url] and got[url] != defaults[url]
 
 
 def test_windowed_metrics_batch_semantics(spark):

@@ -23,7 +23,10 @@ Scale design notes:
   expression in the plan.
 - With a ``lineage`` accumulator the same tasks report per-partition
   lineage stats, so a caller that writes the output gets its lineage rows
-  without a second job over it (plans/pipeline.py).
+  without a second job over it (plans/pipeline.py). A caller that
+  extracts several url-hash buckets in one job passes ``keep_bucket``:
+  the int ``bucket`` then crosses the shuffle too, comes out as a column,
+  and the stats are reported per (bucket, partition).
 - ``spark.sql.execution.arrow.maxRecordsPerBatch`` should be lowered for
   large html blobs (SURVEY.md §4.3); scripts/run_pipeline.py and
   scripts/run_corpus.py set it to 256.
@@ -36,8 +39,10 @@ output is byte-identical to the oracle by construction.
 from __future__ import annotations
 
 import time
+from operator import add
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -45,6 +50,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -77,8 +83,14 @@ _OUT_SCHEMA = StructType(
     + RESULT_SCHEMA.fields
 )
 
+# with ``keep_bucket`` the dispatch passes the input's bucket through
+_BUCKETED_SCHEMA = StructType(
+    _OUT_SCHEMA.fields + [StructField("bucket", IntegerType())]
+)
+
 # the dispatch's output batches, column for column as _OUT_SCHEMA
 _ARROW_SCHEMA = to_arrow_schema(_OUT_SCHEMA)
+_BUCKETED_ARROW_SCHEMA = to_arrow_schema(_BUCKETED_SCHEMA)
 
 # per-partition stats the dispatch reports to a ``lineage`` accumulator,
 # in this order; lineage_metrics computes the same numbers as a Spark
@@ -87,11 +99,35 @@ LINEAGE_STATS = (
     "doc_count", "input_bytes", "byte_range_start", "byte_range_end",
     "failure_count", "ocr_count", "extract_us",
 )
+# each stat as the (column, aggregate) of one output batch that gives it,
+# and how two batches' values of it combine
+_STATS_AGGS = (
+    ("input_bytes", "count"), ("input_bytes", "sum"), ("input_bytes", "min"),
+    ("input_bytes", "max"), ("failed", "sum"), ("ocr_used", "sum"),
+    ("extract_us", "sum"),
+)
+_STATS_MERGE = (add, add, min, max, add, add, add)
+
+
+def _add_batch_stats(stats: dict, out: pa.RecordBatch, keep_bucket: bool) -> None:
+    """Fold one output batch's ``LINEAGE_STATS`` into ``stats``, keyed by
+    bucket (None without ``keep_bucket``): one Arrow group-by per batch,
+    outside the row loop."""
+    keys = ["bucket"] if keep_bucket else []
+    table = pa.Table.from_batches([out]).append_column(
+        "failed", pc.invert(out.column("success"))
+    )
+    for row in table.group_by(keys).aggregate(list(_STATS_AGGS)).to_pylist():
+        new = [row[f"{c}_{a}"] for c, a in _STATS_AGGS]
+        old = stats.get(row.get("bucket"))
+        stats[row.get("bucket")] = new if old is None else [
+            f(x, y) for f, x, y in zip(_STATS_MERGE, old, new)
+        ]
 
 
 class PartitionStatsParam(AccumulatorParam):
-    """Accumulator of ``{partition_id: [LINEAGE_STATS values]}``, merged by
-    partition id with overwrite, not sum: every task attempt reports its
+    """Accumulator of ``{(bucket, partition_id): [LINEAGE_STATS values]}``,
+    merged by key with overwrite, not sum: every task attempt reports its
     whole partition, so a retried, speculative or recomputed attempt
     replaces the first report instead of counting the partition twice."""
 
@@ -115,6 +151,7 @@ def extract_pages_fused(
     num_partitions: int | None = None,
     options: ExtractOptions = ExtractOptions(),
     lineage: Accumulator | None = None,
+    keep_bucket: bool = False,
 ) -> DataFrame:
     """pages(url, warc_ts, html, …) → extracted DataFrame
     (_OUT_SCHEMA's columns + extracted_at). One salted shuffle, then one
@@ -131,26 +168,38 @@ def extract_pages_fused(
     or None. When set, each task that emits rows adds its partition's
     lineage stats (``LINEAGE_STATS``, from the same values it emits), so
     the caller gets :func:`lineage_metrics`'s numbers from the job that
-    runs the extraction instead of a second aggregate job.
+    runs the extraction instead of a second aggregate job. The stats are
+    keyed ``(bucket, partition_id)``, the bucket None unless
+    ``keep_bucket``.
 
-    Column pruning matters here: only (url, html) cross the shuffle and
-    the Arrow boundary; everything else is computed in the dispatch or
-    attached after.
+    ``keep_bucket=True`` requires an int ``bucket`` column in ``pages``:
+    it crosses the shuffle with (url, html), is emitted as the output's
+    ``bucket`` column, and splits the lineage stats per bucket, so one
+    job can extract several buckets that are committed one by one.
+
+    Column pruning matters here: only (url, html), plus the bucket when
+    asked for, cross the shuffle and the Arrow boundary; everything else
+    is computed in the dispatch or attached after.
     """
     spark = pages.sparkSession
     n_parts = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    base = pages.select("url", "html").repartition(
+    cols = ["url", "html", "bucket"] if keep_bucket else ["url", "html"]
+    base = pages.select(*cols).repartition(
         n_parts, salted_url_partition_key(F.col("url"))
+    )
+    out_schema, arrow_schema = (
+        (_BUCKETED_SCHEMA, _BUCKETED_ARROW_SCHEMA)
+        if keep_bucket
+        else (_OUT_SCHEMA, _ARROW_SCHEMA)
     )
 
     def dispatch(batches):
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        docs = nbytes = hi = failed = ocr = kernel_us = 0
-        lo = float("inf")
+        stats: dict = {}
         for batch in batches:
             urls = batch.column("url")
             payloads = batch.column("html").to_pylist()
@@ -171,28 +220,26 @@ def extract_pages_fused(
                 oks.append(success)
                 errors.append(error)
                 logs.append(log)
-            if sizes:
-                lo, hi = min(lo, min(sizes)), max(hi, max(sizes))
-            docs += len(sizes)
-            nbytes += sum(sizes)
-            failed += oks.count(False)
-            ocr += ocrs.count(True)
-            kernel_us += sum(us)
             columns = (
                 cts, [pid] * len(sizes), sizes, texts, ocrs, oks, errors,
                 logs, us,
             )
-            yield pa.RecordBatch.from_arrays(
-                [urls] + [
+            out = pa.RecordBatch.from_arrays(
+                [urls]
+                + [
                     pa.array(c, t)
                     for c, t in zip(columns, _ARROW_SCHEMA.types[1:])
-                ],
-                schema=_ARROW_SCHEMA,
+                ]
+                + ([batch.column("bucket")] if keep_bucket else []),
+                schema=arrow_schema,
             )
-        if lineage is not None and docs:
-            lineage.add({pid: [docs, nbytes, lo, hi, failed, ocr, kernel_us]})
+            if lineage is not None and sizes:
+                _add_batch_stats(stats, out, keep_bucket)
+            yield out
+        if lineage is not None and stats:
+            lineage.add({(b, pid): v for b, v in stats.items()})
 
-    fused = base.mapInArrow(dispatch, _OUT_SCHEMA)
+    fused = base.mapInArrow(dispatch, out_schema)
     return fused.withColumn("extracted_at", F.current_timestamp())
 
 

@@ -14,17 +14,23 @@ the retention delete (reference ``cleanup_old_data``) is one of them,
 ``StorageBackend.delete_metrics_before``.
 
 Unit of commit: a url-hash *bucket* (``pmod(xxhash64(url, salt), n_buckets)``).
-Each bucket commits atomically: extracted parquet first, then metrics, then
-the manifest row — a crash between leaves an orphan data dir that the next
-run simply overwrites (write-then-publish). The manifest records EVERY
+Unit of extraction: a *commit group* of consecutive pending buckets, one
+Spark job that extracts and writes them all. A group closes before the
+bucket that would take its staged bytes past
+``spark.sql.files.maxPartitionBytes × defaultParallelism``, so a bucket
+over that bound (the design point's) is a group of its own. The group's
+buckets then commit one by one, in order, each atomically: its extracted
+parquet is already written, then its metrics, then its manifest row — a
+crash between leaves orphan data dirs that the next run simply overwrites
+(write-then-publish). The manifest records EVERY
 bucket id 0..n_buckets-1 (empty ones too), so a completed run's re-invoke
 is a pure manifest read — the reference's batch loop
 (text_extractor_api.py:142-159) replaced by restartable partition-parallel
 units.
 
 Input is scanned ONCE per run: the pending pages are staged to
-``out_dir/_staged`` written ``partitionBy("bucket")``, and every per-bucket
-commit then reads only its own ``bucket=b`` directory (partition pruning —
+``out_dir/_staged`` written ``partitionBy("bucket")``, and every commit
+group then reads only its own ``bucket=b`` directories (partition pruning —
 locked by tests/test_resume.py::test_staged_commit_prunes_partitions).
 The earlier formulation filtered ``xxhash64(url)%n`` per bucket against the
 raw input, which nothing can push down: n_buckets full scans of the input
@@ -40,21 +46,26 @@ whenever the stage is (re)built (before any commit) and read once per
 run. Another ``n_buckets`` or ``options`` is refused, another input only
 warns; the record outlives completion, so a re-invoke is checked too.
 
-Scale: n_buckets bounds the blast radius of a failure (work lost ≤ 1/n of
-the job), and each bucket is itself partition-parallel inside
-``extract_pages_fused``.
+Scale: a failure loses at most one commit group's extraction: one bucket
+(≤ 1/n of the job) at the design point, or at most ``maxPartitionBytes ×
+defaultParallelism`` of staged input when buckets are small. Each group
+is itself partition-parallel inside ``extract_pages_fused``.
 At 10^12 docs: n_buckets ~ 10^3, bucket ~ 10^9 docs.
 
-Per bucket, the only Spark job is the one whose cost grows with the
-data: the extraction + bucket write. Its tasks also report each
-partition's lineage stats into an accumulator (``extract_pages_fused``'s
-``lineage``), merged by partition id with overwrite so a retried or
-recomputed task attempt cannot count twice. The driver builds the
-bucket's metrics rows from those stats — the rows ``lineage_metrics``
-would aggregate over the written bucket — and the metrics and manifest
-publishes that follow are driver-side file writes of those few rows (see
-``storage.py``), not further Spark jobs. Accumulators need a classic
-(py4j) session; Spark Connect has none.
+Grouping exists because every Spark job of Python tasks pays a fixed cost
+per task before it reads a row (SURVEY.md §8, "per-Python-task floor"):
+a job per small bucket pays it n times for documents one job holds.
+
+Per commit group, the only Spark job is the one whose cost grows with the
+data: the extraction + group write. Its tasks also report each (bucket,
+partition)'s lineage stats into an accumulator (``extract_pages_fused``'s
+``lineage``), merged by key with overwrite so a retried or recomputed
+task attempt cannot count twice. The driver builds each bucket's metrics
+rows from those stats — the rows ``lineage_metrics`` would aggregate over
+the written bucket — and the metrics and manifest publishes that follow
+are driver-side file writes of those few rows (see ``storage.py``), not
+further Spark jobs. Accumulators need a classic (py4j) session; Spark
+Connect has none.
 """
 
 from __future__ import annotations
@@ -67,6 +78,7 @@ import time
 import uuid
 import warnings
 from datetime import datetime, timezone
+from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -128,11 +140,51 @@ def _write_atomic(path: str, text: str) -> None:
     os.replace(path + ".tmp", path)
 
 
+def _staged_bytes(staged: DataFrame) -> dict[int, int] | None:
+    """Each staged bucket's bytes on disk, summed over the stage's file
+    listing on the driver (no Spark job). None when a file is not a
+    local ``bucket=b`` file the driver can size (a remote warehouse)."""
+    sizes: dict[int, int] = {}
+    for f in staged.inputFiles():
+        url = urlparse(f)
+        path = unquote(url.path)
+        part = os.path.basename(os.path.dirname(path))
+        if url.scheme not in ("", "file") or not part.startswith("bucket="):
+            return None
+        try:
+            size = os.path.getsize(path)
+        except OSError:
+            return None
+        b = int(part.removeprefix("bucket="))
+        sizes[b] = sizes.get(b, 0) + size
+    return sizes
+
+
+def _commit_groups(
+    pending: list[int], sizes: dict[int, int] | None, bound: int
+) -> list[list[int]]:
+    """The pending buckets, in order, cut into commit groups: a group
+    closes before the bucket that would take its staged bytes past
+    ``bound``, so a bucket larger than ``bound`` is a group of its own,
+    and so is every bucket when the sizes are unknown."""
+    groups: list[list[int]] = []
+    size = 0
+    for b in pending:
+        s = bound + 1 if sizes is None else sizes.get(b, 0)
+        if groups and size + s <= bound:
+            groups[-1].append(b)
+            size += s
+        else:
+            groups.append([b])
+            size = s
+    return groups
+
+
 def _metrics_table(stats: dict, run_id: str, bucket: int) -> pa.Table:
     """One bucket's metrics rows, built on the driver from the
-    ``{partition_id: [LINEAGE_STATS values]}`` its extraction tasks
-    reported: the rows ``lineage_metrics`` aggregates from the written
-    bucket, ``ts`` aside."""
+    ``{(bucket, partition_id): [LINEAGE_STATS values]}`` its group's
+    extraction tasks reported: the rows ``lineage_metrics`` aggregates
+    from the written bucket, ``ts`` aside."""
     ts = datetime.now(timezone.utc)
     return pa.Table.from_pylist(
         [
@@ -144,7 +196,8 @@ def _metrics_table(stats: dict, run_id: str, bucket: int) -> pa.Table:
                 "ts": ts,
                 "bucket": bucket,
             }
-            for pid, values in sorted(stats.items())
+            for (b, pid), values in sorted(stats.items())
+            if b == bucket
         ],
         schema=METRICS_SCHEMA,
     )
@@ -173,8 +226,11 @@ def run_extraction(
     Both must pass the out_dir's recorded ``n_buckets`` and ``options``.
 
     ``fail_after_buckets`` injects a crash after N commits (resume tests).
+    The crash fires before the next bucket's metrics publish, so a crash
+    run has already extracted and written that bucket's whole commit
+    group, committed buckets included.
     ``options`` configures every bucket's extraction.
-    Each bucket runs :func:`extract_pages_fused` with a ``lineage``
+    Each commit group runs :func:`extract_pages_fused` with a ``lineage``
     accumulator, so ``spark`` must be a classic (py4j) session:
     accumulators do not exist under Spark Connect.
     """
@@ -235,11 +291,11 @@ def run_extraction(
         )
 
     # ONE scan of the input per run: stage the pages bucketed, written
-    # partitionBy("bucket"), so each commit below reads only bucket=b via
-    # partition pruning. A crashed run's committed stage is reused only
-    # under its record (the pages INPUT is assumed immutable between crash
-    # and resume — the Iceberg-snapshot assumption); otherwise it is
-    # rebuilt, the record written first. The record's input identity
+    # partitionBy("bucket"), so each group below reads only its bucket=b
+    # dirs via partition pruning. A crashed run's committed stage is
+    # reused only under its record (the pages INPUT is assumed immutable
+    # between crash and resume — the Iceberg-snapshot assumption);
+    # otherwise it is rebuilt, the record written first. The record's input identity
     # (ADVICE r2 #2) is the pages' logical plan, hashed: no scan, and
     # another path or filter almost surely changes it. Plan strings may
     # differ across sessions for the same snapshot, so a mismatch only
@@ -275,31 +331,39 @@ def run_extraction(
             pages.withColumn("bucket", _bucket_col(n_buckets)), out_dir
         )
     staged = storage.read_stage(spark, out_dir)
+    bound = (
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        * spark.sparkContext.defaultParallelism
+    )
 
     committed: list[int] = []
     rows_written = 0
-    for i, b in enumerate(pending_buckets):
-        if fail_after_buckets is not None and i >= fail_after_buckets:
-            raise RuntimeError(
-                f"injected failure after {fail_after_buckets} buckets (run {run_id})"
-            )
-        # partition-pruned: only the bucket=b directory of the stage is read
-        chunk = staged.filter(F.col("bucket") == b).drop("bucket")
-        # the extraction tasks report their partitions' lineage stats into
-        # this accumulator, so the bucket write is the commit's only job
+    for group in _commit_groups(pending_buckets, _staged_bytes(staged), bound):
+        # partition-pruned: only the group's bucket=b directories are read.
+        # The extraction tasks report each (bucket, partition)'s lineage
+        # stats into this accumulator, so the group's write is the only
+        # job of its buckets' commits
         lineage = spark.sparkContext.accumulator({}, PartitionStatsParam())
         extracted = extract_pages_fused(
-            chunk, num_partitions=num_partitions, options=options,
-            lineage=lineage,
+            staged.filter(F.col("bucket").isin(group)),
+            num_partitions=num_partitions, options=options, lineage=lineage,
+            keep_bucket=True,
         )
-        # write-then-publish: data, metrics, manifest — in that order
-        storage.write_bucket(extracted, out_dir, b)
-        metrics = _metrics_table(lineage.value, run_id, b)
-        if metrics.num_rows:
-            storage.append_metrics(spark, metrics, out_dir)
-        storage.append_manifest(spark, out_dir, b, run_id)
-        rows_written += sum(metrics["doc_count"].to_pylist())
-        committed.append(b)
+        # write-then-publish: the group's data, then bucket by bucket its
+        # metrics and its manifest row — in that order
+        storage.write_bucket(extracted, out_dir, group)
+        for b in group:
+            if fail_after_buckets is not None and len(committed) >= fail_after_buckets:
+                raise RuntimeError(
+                    f"injected failure after {fail_after_buckets} buckets "
+                    f"(run {run_id})"
+                )
+            metrics = _metrics_table(lineage.value, run_id, b)
+            if metrics.num_rows:
+                storage.append_metrics(spark, metrics, out_dir)
+            storage.append_manifest(spark, out_dir, b, run_id)
+            rows_written += sum(metrics["doc_count"].to_pylist())
+            committed.append(b)
 
     # all buckets committed → the stage has served its purpose; drop it so a
     # completed output dir carries no second copy of the input

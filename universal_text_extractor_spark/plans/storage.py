@@ -8,25 +8,32 @@ default :class:`ParquetStorage` implements them as plain parquet +
 fallback, SURVEY.md §7.0). An Iceberg backend implements the same
 protocol:
 
-=====================  ==================================  ==========================================
-operation              parquet form                        Iceberg form
-=====================  ==================================  ==========================================
-stage_pages            Spark write, partitionBy bucket     CTAS / REPLACE a staging table by bucket
-stage_is_committed     the stage's ``_SUCCESS`` exists     the staging table exists in the catalog
-read_stage             spark.read (pruned by bucket)       SELECT * FROM stage (pruned by bucket)
-write_bucket           Spark write to ``bucket=b``         writeTo(tbl).overwritePartitions()
-read_bucket            spark.read of ``bucket=b``          SELECT ... WHERE bucket = b
-append_metrics         driver: pyarrow write + dir swap    writeTo(metrics).overwritePartitions()
-delete_metrics_before  driver: pyarrow read + dir swap     DELETE FROM metrics WHERE ts < cutoff
-append_manifest        driver: one file, write + rename    writeTo(manifest).append()
-read_manifest_buckets  driver: pyarrow read                SELECT DISTINCT bucket FROM manifest
-drop_stage             rm -r ``_staged``                   DROP TABLE stage
-=====================  ==================================  ==========================================
+=====================  ======================================  ==========================================
+operation              parquet form                            Iceberg form
+=====================  ======================================  ==========================================
+stage_pages            Spark write, partitionBy bucket         CTAS / REPLACE a staging table by bucket
+stage_is_committed     the stage's ``_SUCCESS`` exists         the staging table exists in the catalog
+read_stage             spark.read (pruned by bucket)           SELECT * FROM stage (pruned by bucket)
+write_bucket           a group's rows: partitionBy bucket,     writeTo(tbl).overwritePartitions()
+                       dynamic overwrite of their buckets
+                       (one bucket: a write to ``bucket=b``)
+read_bucket            spark.read (pruned to ``bucket=b``)     SELECT ... WHERE bucket = b
+append_metrics         driver: pyarrow write + dir swap        writeTo(metrics).overwritePartitions()
+delete_metrics_before  driver: pyarrow read + dir swap         DELETE FROM metrics WHERE ts < cutoff
+append_manifest        driver: one file, write + rename        writeTo(manifest).append()
+read_manifest_buckets  driver: pyarrow read                    SELECT DISTINCT bucket FROM manifest
+drop_stage             rm -r ``_staged``                       DROP TABLE stage
+=====================  ======================================  ==========================================
+
+``write_bucket`` takes one commit group's extracted rows, which carry
+their ``bucket``, and replaces exactly those buckets: the pipeline
+extracts a group of small buckets in one Spark job, then commits them
+one by one.
 
 ``read_bucket`` is not on the commit path: the pipeline takes each
-bucket's lineage rows from its extraction job, not from a read-back. It
-stays on the protocol for readers of one bucket (``storage_smoke``, the
-resume tests, the benchmark's timing proxy).
+bucket's lineage rows from its group's extraction job, not from a
+read-back. It stays on the protocol for readers of one bucket
+(``storage_smoke``, the resume tests, the benchmark's timing proxy).
 
 ``append_metrics`` takes the lineage rows the pipeline has already
 built on the driver, as an Arrow table. The parquet backend keeps
@@ -63,6 +70,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # the metrics table's rows: lineage_metrics' columns plus the bucket, with
 # the types and nullability its Spark aggregate gives them
@@ -108,7 +116,9 @@ class StorageBackend(Protocol):
 
     def read_stage(self, spark: SparkSession, out_dir: str) -> DataFrame: ...
 
-    def write_bucket(self, extracted: DataFrame, out_dir: str, bucket: int) -> None: ...
+    def write_bucket(
+        self, extracted: DataFrame, out_dir: str, buckets: list[int]
+    ) -> None: ...
 
     def read_bucket(self, spark: SparkSession, out_dir: str, bucket: int) -> DataFrame: ...
 
@@ -161,13 +171,31 @@ class ParquetStorage:
     def read_stage(self, spark: SparkSession, out_dir: str) -> DataFrame:
         return spark.read.parquet(self._staged(out_dir))
 
-    def write_bucket(self, extracted: DataFrame, out_dir: str, bucket: int) -> None:
-        extracted.write.mode("overwrite").parquet(
-            f"{out_dir}/extracted/bucket={bucket}"
-        )
+    def write_bucket(
+        self, extracted: DataFrame, out_dir: str, buckets: list[int]
+    ) -> None:
+        if len(buckets) == 1:
+            # a bucket of its own, as at the design point: written straight
+            # into its dir, each task streaming its rows out
+            extracted.drop("bucket").write.mode("overwrite").parquet(
+                f"{out_dir}/extracted/bucket={buckets[0]}"
+            )
+            return
+        # several: one partitioned write (each task sorts its rows by
+        # bucket) with dynamic partition overwrite, which replaces exactly
+        # the buckets in the rows and leaves every other bucket=b dir as is
+        extracted.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(f"{out_dir}/extracted")
 
     def read_bucket(self, spark: SparkSession, out_dir: str, bucket: int) -> DataFrame:
-        return spark.read.parquet(f"{out_dir}/extracted/bucket={bucket}")
+        # through the table, pruned to bucket=b: a group's partitioned
+        # write makes no dir for a bucket that holds no page
+        return (
+            spark.read.parquet(f"{out_dir}/extracted")
+            .filter(F.col("bucket") == bucket)
+            .drop("bucket")
+        )
 
     @staticmethod
     def _metrics(out_dir: str) -> str:
@@ -310,7 +338,7 @@ class IcebergStorage:
     key) maps to a table-name prefix ``run_<sha1(out_dir)[:12]>_`` under
     ``catalog.namespace``. Crash-safety mapping: write_bucket is
     ``overwritePartitions`` on a bucket-partitioned table (idempotent
-    re-commit of a crashed bucket), metrics/manifest appends are snapshot
+    re-commit of a crashed group), metrics/manifest appends are snapshot
     commits, and drop_stage is a catalog DROP."""
 
     def __init__(self, catalog: str = "iceberg", namespace: str = "utes"):
@@ -346,8 +374,6 @@ class IcebergStorage:
 
     # -- protocol ------------------------------------------------------------
     def stage_pages(self, pages_with_bucket: DataFrame, out_dir: str) -> None:
-        from pyspark.sql import functions as F
-
         self._ensure_ns(pages_with_bucket.sparkSession)
         (
             pages_with_bucket.writeTo(self._tbl(out_dir, "staged"))
@@ -365,26 +391,23 @@ class IcebergStorage:
         return spark.read.table(self._tbl(out_dir, "staged"))
 
     def write_bucket(
-        self, extracted: DataFrame, out_dir: str, bucket: int
+        self, extracted: DataFrame, out_dir: str, buckets: list[int]
     ) -> None:
-        from pyspark.sql import functions as F
-
         spark = extracted.sparkSession
         self._ensure_ns(spark)
         tbl = self._tbl(out_dir, "extracted")
-        df = extracted.withColumn("bucket", F.lit(bucket))
+        # the rows carry their bucket: overwritePartitions replaces exactly
+        # the buckets they hold
         if spark.catalog.tableExists(tbl):
-            df.writeTo(tbl).overwritePartitions()
+            extracted.writeTo(tbl).overwritePartitions()
         else:
-            df.writeTo(tbl).using("iceberg").partitionedBy(
+            extracted.writeTo(tbl).using("iceberg").partitionedBy(
                 F.col("bucket")
             ).create()
 
     def read_bucket(
         self, spark: SparkSession, out_dir: str, bucket: int
     ) -> DataFrame:
-        from pyspark.sql import functions as F
-
         return (
             spark.read.table(self._tbl(out_dir, "extracted"))
             .filter(F.col("bucket") == bucket)
@@ -403,8 +426,6 @@ class IcebergStorage:
         if spark.catalog.tableExists(tbl):
             metrics.writeTo(tbl).overwritePartitions()
         else:
-            from pyspark.sql import functions as F
-
             (
                 metrics.writeTo(tbl)
                 .using("iceberg")

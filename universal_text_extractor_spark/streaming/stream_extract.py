@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..kernels.options import ExtractOptions
 from ..operators.extract import extract_pages_fused
 from ..sources.pages_gen import PAGES_SCHEMA
 
@@ -27,15 +28,19 @@ def stream_extract_pages(
     output_dir: str,
     checkpoint_dir: str,
     num_partitions: int = 8,
+    options: ExtractOptions = ExtractOptions(),
 ):
     """Start (and return) a streaming query extracting newly-arrived page
-    files. Restart with the same checkpoint dir → resumes exactly-once."""
+    files under ``options``, as batch extraction does. Restart with the
+    same checkpoint dir → resumes exactly-once."""
     pages = (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
     )
-    extracted = extract_pages_fused(pages, num_partitions=num_partitions)
+    extracted = extract_pages_fused(
+        pages, num_partitions=num_partitions, options=options
+    )
     return (
         extracted.writeStream.format("parquet")
         .option("path", output_dir)
