@@ -4,6 +4,8 @@ invariants, and the single-shuffle physical-plan property."""
 
 from __future__ import annotations
 
+import pytest
+
 from universal_text_extractor_spark.kernels import (
     ExtractOptions,
     detect_content_type,
@@ -110,6 +112,15 @@ def test_partition_stats_merge_overwrites():
     for update in ({0: first}, {1: [1, 7, 7, 7, 0, 0, 40]}, {0: list(first)}):
         acc = param.addInPlace(acc, update)
     assert acc == {0: first, 1: [1, 7, 7, 7, 0, 0, 40]}
+
+
+def test_lineage_requires_keep_bucket(spark):
+    """Lineage stats are keyed by bucket, so an accumulator without
+    ``keep_bucket`` is refused before any plan is built."""
+    acc = spark.sparkContext.accumulator({}, PartitionStatsParam())
+    pages = generate_pages_df(spark, 4, partitions=1)
+    with pytest.raises(ValueError, match="keep_bucket"):
+        extract_pages_fused(pages, lineage=acc)
 
 
 def _exchange_inputs(node) -> list[list[str]]:

@@ -218,6 +218,12 @@ def test_group_crash_resume_equals_single_run(spark, tmp_path, crashing, committ
         published[2] = {"a"}
         assert _metrics_by_bucket(spark, out) == published
     assert committed_buckets(spark, out) == committed
+    # what a group write killed mid-job leaves: its hidden staging dir,
+    # which no later write reuses
+    leftover = f"{out}/extracted/.spark-staging-0b7e/bucket=1"
+    os.makedirs(leftover)
+    with open(f"{leftover}/part-00000.snappy.parquet", "wb") as f:
+        f.write(b"x" * 64)
 
     resumed = GroupRecording()
     r = run_extraction(
@@ -234,6 +240,9 @@ def test_group_crash_resume_equals_single_run(spark, tmp_path, crashing, committ
     assert _manifest_rows(spark, out) == [0, 1, 2, 3]
     total = spark.read.parquet(f"{out}/metrics").agg(F.sum("doc_count"))
     assert total.collect()[0][0] == 200
+    assert not any(
+        e.startswith(".spark-staging-") for e in os.listdir(f"{out}/extracted")
+    )
 
 
 def test_commit_groups_follow_max_partition_bytes(spark, tmp_path):
@@ -309,10 +318,22 @@ def test_commit_group_rule(sizes, groups):
     assert _commit_groups([0, 1, 2, 3], sizes, 10) == groups
 
 
-def test_staged_bytes_unknown_off_local_stage(tmp_path):
-    """Sizes come from the stage's local ``bucket=b`` files; a stage the
-    driver cannot size (a remote warehouse, another layout) gives None,
-    so every bucket becomes its own group."""
+class TableStage(GroupRecording):
+    """Records each group, and reads the stage back as a source with no
+    file listing, as an Iceberg table is."""
+
+    def read_stage(self, spark, out_dir):
+        from pyspark.sql import DataFrame
+
+        jdf = super().read_stage(spark, out_dir)._jdf
+        rows = spark._jsparkSession.createDataFrame(jdf.rdd(), jdf.schema())
+        return DataFrame(rows, spark)
+
+
+def test_staged_bytes_unknown_off_local_stage(spark, tmp_path):
+    """Sizes come from the stage's ``bucket=b`` files; a stage the driver
+    cannot size (no file listing, another layout, a file gone) gives
+    None, so every bucket becomes its own group."""
     from universal_text_extractor_spark.plans.pipeline import _staged_bytes
 
     class Listing:
@@ -327,8 +348,18 @@ def test_staged_bytes_unknown_off_local_stage(tmp_path):
         (tmp_path / f"bucket={b}" / f"part-{n}.parquet").write_bytes(b"x" * n)
     local = [f"file://{p}" for p in sorted(tmp_path.glob("bucket=*/*"))]
     assert _staged_bytes(Listing(local)) == {1: 12, 2: 3}
-    assert _staged_bytes(Listing(["s3a://wh/stage/bucket=1/f.parquet"])) is None
+    assert _staged_bytes(Listing([])) is None
     assert _staged_bytes(Listing([f"file://{tmp_path}/flat.parquet"])) is None
+    assert _staged_bytes(Listing([f"file://{tmp_path}/bucket=3/gone"])) is None
+
+    pages = generate_pages_df(spark, 40, partitions=1)
+    store = TableStage()
+    out = str(tmp_path / "table")
+    r = run_extraction(
+        spark, pages, out, n_buckets=3, num_partitions=2, storage=store
+    )
+    assert store.groups == [[0], [1], [2]]
+    assert r.rows_written == 40
 
 
 def test_resume_runs_one_dispatch_stage(spark, tmp_path):

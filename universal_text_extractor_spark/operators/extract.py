@@ -21,12 +21,12 @@ Scale design notes:
 - The dispatch reads and writes Arrow batches directly: no pandas frame on
   either side of the Python boundary, and no driver-built JVM sniff
   expression in the plan.
-- With a ``lineage`` accumulator the same tasks report per-partition
-  lineage stats, so a caller that writes the output gets its lineage rows
-  without a second job over it (plans/pipeline.py). A caller that
-  extracts several url-hash buckets in one job passes ``keep_bucket``:
-  the int ``bucket`` then crosses the shuffle too, comes out as a column,
-  and the stats are reported per (bucket, partition).
+- A caller that extracts several url-hash buckets in one job passes
+  ``keep_bucket``: the int ``bucket`` then crosses the shuffle too and
+  comes out as a column. With a ``lineage`` accumulator as well, the same
+  tasks report lineage stats per (bucket, partition), so a caller that
+  writes the output gets each bucket's lineage rows without a second job
+  over it (plans/pipeline.py).
 - ``spark.sql.execution.arrow.maxRecordsPerBatch`` should be lowered for
   large html blobs (SURVEY.md §4.3); scripts/run_pipeline.py and
   scripts/run_corpus.py set it to 256.
@@ -109,18 +109,16 @@ _STATS_AGGS = (
 _STATS_MERGE = (add, add, min, max, add, add, add)
 
 
-def _add_batch_stats(stats: dict, out: pa.RecordBatch, keep_bucket: bool) -> None:
+def _add_batch_stats(stats: dict, out: pa.RecordBatch) -> None:
     """Fold one output batch's ``LINEAGE_STATS`` into ``stats``, keyed by
-    bucket (None without ``keep_bucket``): one Arrow group-by per batch,
-    outside the row loop."""
-    keys = ["bucket"] if keep_bucket else []
+    bucket: one Arrow group-by per batch, outside the row loop."""
     table = pa.Table.from_batches([out]).append_column(
         "failed", pc.invert(out.column("success"))
     )
-    for row in table.group_by(keys).aggregate(list(_STATS_AGGS)).to_pylist():
+    for row in table.group_by("bucket").aggregate(list(_STATS_AGGS)).to_pylist():
         new = [row[f"{c}_{a}"] for c, a in _STATS_AGGS]
-        old = stats.get(row.get("bucket"))
-        stats[row.get("bucket")] = new if old is None else [
+        old = stats.get(row["bucket"])
+        stats[row["bucket"]] = new if old is None else [
             f(x, y) for f, x, y in zip(_STATS_MERGE, old, new)
         ]
 
@@ -169,7 +167,7 @@ def extract_pages_fused(
     lineage stats (``LINEAGE_STATS``, from the same values it emits), so
     the caller gets :func:`lineage_metrics`'s numbers from the job that
     runs the extraction instead of a second aggregate job. The stats are
-    keyed ``(bucket, partition_id)``, the bucket None unless
+    keyed ``(bucket, partition_id)``, so ``lineage`` requires
     ``keep_bucket``.
 
     ``keep_bucket=True`` requires an int ``bucket`` column in ``pages``:
@@ -181,6 +179,8 @@ def extract_pages_fused(
     asked for, cross the shuffle and the Arrow boundary; everything else
     is computed in the dispatch or attached after.
     """
+    if lineage is not None and not keep_bucket:
+        raise ValueError("lineage stats are keyed by bucket: pass keep_bucket=True")
     spark = pages.sparkSession
     n_parts = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "200")
@@ -234,7 +234,7 @@ def extract_pages_fused(
                 schema=arrow_schema,
             )
             if lineage is not None and sizes:
-                _add_batch_stats(stats, out, keep_bucket)
+                _add_batch_stats(stats, out)
             yield out
         if lineage is not None and stats:
             lineage.add({(b, pid): v for b, v in stats.items()})

@@ -142,14 +142,17 @@ def _write_atomic(path: str, text: str) -> None:
 
 def _staged_bytes(staged: DataFrame) -> dict[int, int] | None:
     """Each staged bucket's bytes on disk, summed over the stage's file
-    listing on the driver (no Spark job). None when a file is not a
-    local ``bucket=b`` file the driver can size (a remote warehouse)."""
+    listing on the driver (no Spark job). None when the stage is not
+    ``bucket=b`` files the driver can size: a table source that is not a
+    file table, such as Iceberg's, lists no files at all."""
+    files = staged.inputFiles()
+    if not files:
+        return None
     sizes: dict[int, int] = {}
-    for f in staged.inputFiles():
-        url = urlparse(f)
-        path = unquote(url.path)
+    for f in files:
+        path = unquote(urlparse(f).path)
         part = os.path.basename(os.path.dirname(path))
-        if url.scheme not in ("", "file") or not part.startswith("bucket="):
+        if not part.startswith("bucket="):
             return None
         try:
             size = os.path.getsize(path)

@@ -16,7 +16,6 @@ stage_is_committed     the stage's ``_SUCCESS`` exists         the staging table
 read_stage             spark.read (pruned by bucket)           SELECT * FROM stage (pruned by bucket)
 write_bucket           a group's rows: partitionBy bucket,     writeTo(tbl).overwritePartitions()
                        dynamic overwrite of their buckets
-                       (one bucket: a write to ``bucket=b``)
 read_bucket            spark.read (pruned to ``bucket=b``)     SELECT ... WHERE bucket = b
 append_metrics         driver: pyarrow write + dir swap        writeTo(metrics).overwritePartitions()
 delete_metrics_before  driver: pyarrow read + dir swap         DELETE FROM metrics WHERE ts < cutoff
@@ -174,19 +173,20 @@ class ParquetStorage:
     def write_bucket(
         self, extracted: DataFrame, out_dir: str, buckets: list[int]
     ) -> None:
-        if len(buckets) == 1:
-            # a bucket of its own, as at the design point: written straight
-            # into its dir, each task streaming its rows out
-            extracted.drop("bucket").write.mode("overwrite").parquet(
-                f"{out_dir}/extracted/bucket={buckets[0]}"
-            )
-            return
-        # several: one partitioned write (each task sorts its rows by
-        # bucket) with dynamic partition overwrite, which replaces exactly
-        # the buckets in the rows and leaves every other bucket=b dir as is
+        # one partitioned write with dynamic partition overwrite: it
+        # replaces exactly the buckets in the rows and leaves every other
+        # bucket=b dir as is. It stages its files in a hidden
+        # .spark-staging-<job> dir, which a driver killed mid-write leaves
+        # behind for good; no other write into extracted/ runs now, so
+        # drop every such leftover first
+        path = f"{out_dir}/extracted"
+        if os.path.isdir(path):
+            for e in os.listdir(path):
+                if e.startswith(".spark-staging-"):
+                    shutil.rmtree(f"{path}/{e}")
         extracted.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
-        ).partitionBy("bucket").parquet(f"{out_dir}/extracted")
+        ).partitionBy("bucket").parquet(path)
 
     def read_bucket(self, spark: SparkSession, out_dir: str, bucket: int) -> DataFrame:
         # through the table, pruned to bucket=b: a group's partitioned
